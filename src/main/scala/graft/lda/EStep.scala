@@ -1,25 +1,22 @@
 package graft.lda
 
-import graft.functions.GammaFuncs.{digamma, logAdd, logGamma}
+import graft.functions.GammaFuncs.logAdd
+import graft.lda.EmCore.{DocShape, Join, Keys, Lookup, Sweeps}
 import graft.model.Doc
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.functions.{col, lit}
 
 /**
- * One row of E-step output. Two shapes share the schema (the Spark-native
- * version of the reference's MultipleOutputs side-outputs,
+ * One row of vanilla E-step output. Two shapes share the schema (the
+ * Spark-native version of the reference's MultipleOutputs side-outputs,
  * cc/mrlda/DocumentMapper.java:341-346):
  *  - doc rows (`isDoc`): updated gamma + per-document log-likelihood;
  *  - phi rows: partition-combined log-space phi sufficient statistics —
  *    ONE row per termId carrying the K-length per-topic array
- *    (`logphi(i)` ↔ topic i+1), the reference's in-mapper combiner
- *    (DocumentMapper.java:263-339) generalized to whole-partition
- *    combining. Through r15 the combiner emitted one row per
- *    (topic, termId); the K-array row (r16) cuts the encoder row count
- *    K× per partition — at K=100 that is the difference between 10^10
- *    and 10^8 rows per iteration at corpus scale. Consumers posexplode
- *    back to (topic, termId, logphi) via [[MStep.explodePhi]] before the
- *    cross-partition fold, so the per-key value multiset is unchanged.
+ *    (`logphi(i)` ↔ topic i+1). Consumers posexplode back to
+ *    (topic, termId, logphi) via [[MStep.explodePhi]] before the
+ *    cross-partition fold.
  */
 case class EStepRow(
     isDoc: Boolean,
@@ -30,18 +27,35 @@ case class EStepRow(
     logphi: Array[Double],
     /** doc rows carry the full document (counts + token total) so the next
       * iteration's corpus is a projection of the E-step output — no
-      * corpus-sized rotation join per iteration. Mirrors the reference's
+      * corpus-sized rotation join per iteration, like the reference's
       * gamma side-output, which emits the whole Document
       * (DocumentMapper.java:341-346). Null on phi rows. */
     counts: Map[Int, Int] = null,
     numTokens: Long = 0L)
 
+/** Vanilla LDA's documents and E-step rows as the EM core sees them: one
+  * language, lang 0, keyed by `termId` alone. */
+private[graft] object VanillaDocs extends DocShape[Doc, EStepRow](
+    Keys(Nil), Seq("docId", "counts", "numTokens", "gamma"), "numTokens") {
+  lazy val docEncoder: Encoder[Doc] = Encoders.product[Doc]
+  lazy val rowEncoder: Encoder[EStepRow] = Encoders.product[EStepRow]
+  def langCountsColumns(docs: DataFrame): DataFrame =
+    docs.select(col("docId"), lit(0).as("lang"), col("counts").as("langCounts"))
+  def langCounts(d: Doc): Iterable[(Int, Map[Int, Int])] = Seq(0 -> d.counts)
+  def tokens(d: Doc): Long = d.numTokens
+  def gamma(d: Doc): Option[Array[Double]] = d.gamma
+  def fromTerms(docId: Long, tokens: Long, terms: Seq[TermBeta]): Doc =
+    Doc(docId, terms.map(t => t.termId -> t.cnt).toMap, tokens)
+  def docRow(d: Doc, gamma: Array[Double], ll: Double): EStepRow =
+    EStepRow(isDoc = true, d.docId, gamma, ll, -1, null, d.counts, d.numTokens)
+  def phiRow(key: Long, logphi: Array[Double]): EStepRow =
+    EStepRow(isDoc = false, -1L, null, 0.0, EmCore.termOf(key), logphi)
+}
+
 /**
- * The per-document variational fixed point (reference semantics:
- * cc/mrlda/DocumentMapper.java:180-260 and updatePhi :402-429; SURVEY.md
- * §2.7). Runs as one `mapPartitions` over the encoded corpus with the model
- * (alpha, E[log beta]) broadcast — the Spark equivalent of the reference's
- * DistributedCache model shipping.
+ * The vanilla E-step with the model broadcast — the Spark equivalent of
+ * the reference's DistributedCache model shipping. The fixed point itself
+ * is [[EmCore.estep]]'s kernel.
  */
 object EStep {
 
@@ -54,8 +68,7 @@ object EStep {
    * folds into the gamma accumulator. `dgamma` must already be ψ(γ);
    * `lp` is the term's scratch/output phi row; `logC` must be
    * math.log(cnt) — hoisted by callers so the (sweeps × terms) hot loop
-   * doesn't recompute a per-term constant (r15). Returns the likelihood
-   * term.
+   * doesn't recompute a per-term constant. Returns the likelihood term.
    */
   private[graft] def updatePhiTerm(k: Int, cnt: Int, logC: Double, lb: Array[Double],
       dgamma: Array[Double], lp: Array[Double], updateLogGamma: Array[Double]): Double = {
@@ -91,26 +104,11 @@ object EStep {
   }
 
   /**
-   * @param beta termId -> E[log β_·w] over topics (0-based array). Empty on
-   *             the first iteration: unseen terms get the reference's random
-   *             init log(2·rand/V + rand) from a per-term seeded RNG so the
-   *             run is reproducible (reference used unseeded Math.random,
-   *             DocumentMapper.java:456 — divergence documented in SURVEY §7.5).
+   * @param betaBc termId -> E[log β_·w] over topics (0-based array). Empty on
+   *               the first iteration: unseen terms get the seeded random
+   *               init ([[randomElogBeta]]).
    * @param learning when false (held-out inference, reference D5) phi rows
    *                 are not emitted.
-   */
-  /**
-   * @param anchorGammaDp when > 0, round each sweep's gamma handoff to
-   *                      this many decimals (HALF_UP — the repo's anchor
-   *                      convention, mirrors DuckDB round()); 0 = off.
-   *                      Only the planted-fixture replay
-   *                      ([[PlantedLda]]) sets it — the production
-   *                      100-sweep path stays unanchored and
-   *                      golden-pinned.
-   * @param anchorPhiDp   when > 0, round emitted log-phi values before
-   *                      the partition combiner folds them, so a SQL
-   *                      replay can reproduce the fold from identical
-   *                      inputs regardless of fold order.
    */
   def run(
       docs: Dataset[Doc],
@@ -120,170 +118,39 @@ object EStep {
       localIterations: Int = 100,
       randomStartGamma: Boolean = false,
       learning: Boolean = true,
+      seed: Long = 42L): Dataset[EStepRow] =
+    EmCore.estep(docs, VanillaDocs, alphaBc, Lookup.terms(betaBc), _ => numTerms,
+      Sweeps(localIterations, randomStartGamma, learning, seed))
+}
+
+/**
+ * The vanilla E-step with beta as a distributed `(termId, elogbeta
+ * array<double>)` table: the scale path for models too large to broadcast
+ * (SURVEY.md §7.5 — at V=1M, K=100 the K×V beta is ~800 MB; the reference
+ * hits the same wall loading whole beta per mapper, DocumentMapper.java:116).
+ * The corpus is exploded to (doc, term) rows, shuffle-joined with beta on
+ * termId and regrouped per doc; the kernel is [[EmCore.estep]]'s. Cost: two
+ * extra shuffles per iteration (join + regroup).
+ */
+object EStepShuffle {
+
+  /** The corpus exploded to its beta-join shape: (docId, termId, cnt),
+    * hash-partitioned by termId. EM-loop-invariant: pass it back via
+    * `run(preExploded = ...)` so the corpus-nnz-sized exchange happens once
+    * per training run instead of once per iteration. */
+  def explodeDocs(docs: Dataset[Doc]): DataFrame = EmCore.explodeDocs(docs.toDF(), VanillaDocs)
+
+  /** @param beta (termId INT, elogbeta ARRAY<DOUBLE> length K) */
+  def run(
+      docs: Dataset[Doc],
+      alphaBc: Broadcast[Array[Double]],
+      beta: DataFrame,
+      numTerms: Int,
+      localIterations: Int = 100,
+      randomStartGamma: Boolean = false,
+      learning: Boolean = true,
       seed: Long = 42L,
-      phiFlushEntries: Int = 1 << 20,
-      anchorGammaDp: Int = 0,
-      anchorPhiDp: Int = 0): Dataset[EStepRow] = {
-    import docs.sparkSession.implicits._
-
-    docs.mapPartitions { it =>
-      val alpha = alphaBc.value
-      val k = alpha.length
-      val beta = betaBc.value
-      // per-partition cache of random-init vectors for unseen terms
-      val betaFallback = new java.util.HashMap[Int, Array[Double]]()
-      def elogbeta(termId: Int): Array[Double] = {
-        val hit = beta.getOrElse(termId, null)
-        if (hit != null) hit
-        else {
-          var v = betaFallback.get(termId)
-          if (v == null) {
-            v = randomElogBeta(k, termId, numTerms, seed)
-            betaFallback.put(termId, v)
-          }
-          v
-        }
-      }
-
-      // L_α = lnΓ(Σα) − Σ lnΓ(α_k), added once per document
-      // (reference DocumentMapper.java:121-126)
-      val alphaSum = alpha.sum
-      val likelihoodAlpha = logGamma(alphaSum) - alpha.map(logGamma).sum
-      // ln α is constant across the whole partition — hoisted out of the
-      // per-sweep gamma reset (r15; same math.log, bit-identical)
-      val logAlpha = alpha.map(math.log)
-
-      // partition-level combiner: termId -> K-length log-space phi sums
-      // (slot i ↔ topic i+1). One probe per (doc, term) instead of K boxed
-      // probes per (doc, term, topic) (r16); the per-slot fold sequence is
-      // the r15 per-(topic, term) sequence verbatim — first touch writes
-      // the value, later docs logAdd in document order — so the combined
-      // values are bit-identical. Flushed to output rows under the same
-      // memory budget (`phiFlushEntries` counts (topic, term) ENTRIES, so
-      // the trigger is size × K; the reference flushes its in-mapper
-      // combiner under memory pressure, DocumentMapper.java:263-313 +
-      // Settings.java:76); the downstream fold re-combines flush chunks.
-      val phiAcc = new java.util.HashMap[Int, Array[Double]]()
-      def drainPhi(): Vector[EStepRow] = {
-        val b = Vector.newBuilder[EStepRow]
-        phiAcc.forEach { (termId, arr) =>
-          b += EStepRow(isDoc = false, -1L, null, 0.0, termId, arr)
-        }
-        phiAcc.clear()
-        b.result()
-      }
-
-      val docRows = it.flatMap { doc =>
-        val nnz = doc.counts.size
-        val termIds = new Array[Int](nnz)
-        val termCnt = new Array[Int](nnz)
-        var j = 0
-        doc.counts.foreach { case (t, c) => termIds(j) = t; termCnt(j) = c; j += 1 }
-        // resolve each term's E[log β] row and ln(count) ONCE per document
-        // (r15): both are sweep-invariant, and the old inner-loop map
-        // lookup paid a boxed hash probe per (term × sweep) — identical
-        // arrays and doubles, so the trajectory is bit-identical
-        val lb = new Array[Array[Double]](nnz)
-        val logCnt = new Array[Double](nnz)
-        j = 0
-        while (j < nnz) {
-          lb(j) = elogbeta(termIds(j))
-          logCnt(j) = math.log(termCnt(j).toDouble)
-          j += 1
-        }
-
-        val gamma: Array[Double] =
-          doc.gamma match {
-            case Some(g) if g.length == k && !randomStartGamma => g.clone()
-            case _ => Array.tabulate(k)(i => alpha(i) + doc.numTokens.toDouble / k)
-          }
-        val updateLogGamma = new Array[Double](k)
-        val logPhi = Array.ofDim[Double](nnz, k)
-        var likelihoodPhi = 0.0
-
-        // fixed-sweep gamma/phi fixed point; do-while semantics replicate the
-        // reference's iteration count exactly (DocumentMapper.java:204-242)
-        var sweep = 1
-        var continue = true
-        while (continue) {
-          likelihoodPhi = 0.0
-          var i = 0
-          while (i < k) {
-            gamma(i) = digamma(gamma(i))
-            updateLogGamma(i) = logAlpha(i)
-            i += 1
-          }
-          var w = 0
-          while (w < nnz) {
-            likelihoodPhi += updatePhiTerm(k, termCnt(w), logCnt(w), lb(w),
-              gamma, logPhi(w), updateLogGamma)
-            w += 1
-          }
-          i = 0
-          while (i < k) {
-            gamma(i) = math.exp(updateLogGamma(i))
-            if (anchorGammaDp > 0)
-              gamma(i) = BigDecimal(gamma(i))
-                .setScale(anchorGammaDp, BigDecimal.RoundingMode.HALF_UP).toDouble
-            i += 1
-          }
-          sweep += 1
-          continue = sweep < localIterations
-        }
-
-        // document log-likelihood L_α + L_γ + L_φ (DocumentMapper.java:244-254)
-        var sumGamma = 0.0
-        var likelihoodGamma = 0.0
-        var i = 0
-        while (i < k) { sumGamma += gamma(i); likelihoodGamma += logGamma(gamma(i)); i += 1 }
-        likelihoodGamma -= logGamma(sumGamma)
-        val docLL = likelihoodAlpha + likelihoodGamma + likelihoodPhi
-
-        // fold this document's phi (from the final sweep, already scaled by
-        // log(count)) into the partition combiner
-        if (learning) {
-          var w = 0
-          while (w < nnz) {
-            val lp = logPhi(w)
-            val acc = phiAcc.get(termIds(w))
-            if (acc == null) {
-              val arr = new Array[Double](k)
-              i = 0
-              while (i < k) {
-                arr(i) = if (anchorPhiDp > 0)
-                  BigDecimal(lp(i)).setScale(anchorPhiDp,
-                    BigDecimal.RoundingMode.HALF_UP).toDouble
-                else lp(i)
-                i += 1
-              }
-              phiAcc.put(termIds(w), arr)
-            } else {
-              i = 0
-              while (i < k) {
-                val v = if (anchorPhiDp > 0)
-                  BigDecimal(lp(i)).setScale(anchorPhiDp,
-                    BigDecimal.RoundingMode.HALF_UP).toDouble
-                else lp(i)
-                acc(i) = logAdd(acc(i), v)
-                i += 1
-              }
-            }
-            w += 1
-          }
-        }
-
-        val row = EStepRow(isDoc = true, doc.docId, gamma, docLL, -1, null,
-          doc.counts, doc.numTokens)
-        if (phiAcc.size.toLong * k > phiFlushEntries) row +: drainPhi() else Vector(row)
-      }
-
-      // remaining phi rows emitted once the partition's documents are exhausted
-      val phiRows = new Iterator[EStepRow] {
-        private lazy val inner = drainPhi().iterator
-        def hasNext: Boolean = inner.hasNext
-        def next(): EStepRow = inner.next()
-      }
-      docRows ++ phiRows
-    }
-  }
+      preExploded: Option[DataFrame] = None): Dataset[EStepRow] =
+    EmCore.estep(docs, VanillaDocs, alphaBc, Join(beta, preExploded), _ => numTerms,
+      Sweeps(localIterations, randomStartGamma, learning, seed))
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
  * SequenceFiles; doubles round-trip exactly, so a resumed run continues the
  * same trajectory as an uninterrupted one.
  *
- * Layout under `dir`:
+ * Layout under `dir`, vanilla LDA ([[Trainer]]):
  *   alpha-<i>/  (topic INT 1..K, alpha DOUBLE)
  *   beta-<i>/   (topic INT 1..K, termId INT, elogbeta DOUBLE)
  *   gamma-<i>/  the full gamma-annotated corpus
@@ -18,6 +18,14 @@ import org.apache.spark.sql.functions._
  *                gamma ARRAY<DOUBLE>) — like the reference, whose gamma
  *               output dir IS the next iteration's document input
  *   state-<i>.json  {"iteration":i,"llHistory":[...]}
+ *
+ * Polylingual LDA ([[graft.polylda.PolyTrainer]]) keeps alpha-<i> and
+ * state-<i>.json and adds the language to the others:
+ *   beta-<i>/   (lang INT, topic INT 1..K, termId INT, elogbeta DOUBLE) —
+ *               the reference writes one beta_lang<l>-<i> file per
+ *               language; here one table
+ *   gamma-<i>/  (docId LONG, counts MAP<INT,MAP<INT,INT>>,
+ *                numTokens MAP<INT,LONG>, totalTokens LONG, gamma ARRAY<DOUBLE>)
  */
 object LdaCheckpoint {
 
@@ -28,12 +36,15 @@ object LdaCheckpoint {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/alpha-$iter")
   }
 
+  /** ([lang,] topic, termId, elogbeta) rows; `lang` is written when the
+    * rows carry it (polylingual models). */
   def saveBeta(betaRows: DataFrame, dir: String, iter: Int): Unit =
-    betaRows.select(col("topic"), col("termId"), col("elogbeta"))
+    betaRows.select(Seq("lang", "topic", "termId", "elogbeta")
+        .filter(betaRows.columns.contains).map(col): _*)
       .write.mode("overwrite").parquet(s"$dir/beta-$iter")
 
-  /** `gamma` should be the full gamma-annotated corpus (docId, counts,
-    * numTokens, gamma); written as-is. */
+  /** `gamma` should be the full gamma-annotated corpus (the model's
+    * document columns plus gamma); written as-is. */
   def saveGamma(gamma: DataFrame, dir: String, iter: Int): Unit =
     gamma.write.mode("overwrite").parquet(s"$dir/gamma-$iter")
 
@@ -59,7 +70,7 @@ object LdaCheckpoint {
     a
   }
 
-  /** (topic, termId, elogbeta) rows — feed Trainer.betaRowsToMap or packBeta. */
+  /** ([lang,] topic, termId, elogbeta) rows, as written by `saveBeta`. */
   def loadBeta(spark: SparkSession, dir: String, iter: Int): DataFrame =
     spark.read.parquet(s"$dir/beta-$iter")
 

@@ -1,21 +1,17 @@
 package graft.lda
 
-import graft.functions.LogSumExp.logsumexp
-import graft.functions.gfunctions.{digamma, log_add}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import graft.functions.gfunctions.digamma
+import graft.lda.EmCore.Smoothing
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /**
- * M-step: fold the E-step's log-space phi statistics into the new topic–word
- * posterior λ and emit E[log β_kw] = ψ(λ_kw) − ψ(Σ_w λ_kw).
- *
- * Declarative rewrite of the reference's shuffle-sorted streaming reducer
- * (cc/mrlda/TermReducer.java:134-238 with TermCombiner + TermPartitioner):
- * the two-level groupBy replaces the custom partitioner + sort-order
- * boundary detection, and Catalyst's partial aggregation replaces the
- * combiner. Eta smoothing follows InformedPrior.java:172-177 /
- * Settings.java:58: log(1000) for seeded (topic, term) pairs, log(0.001)
- * for the rest when a prior is supplied, log(1e-12) otherwise.
+ * Vanilla M-step: fold the E-step's log-space phi statistics into the new
+ * topic–word posterior λ and emit E[log β_kw] = ψ(λ_kw) − ψ(Σ_w λ_kw) — the
+ * EM core's keyed helpers with the vanilla key (`termId`) and eta smoothing
+ * (InformedPrior.java:172-177 / Settings.java:58: log(1000) for seeded
+ * (topic, term) pairs, log(0.001) for the rest when a prior is supplied,
+ * log(1e-12) otherwise).
  */
 object MStep {
 
@@ -23,18 +19,10 @@ object MStep {
   val InformedLogEta: Double = math.log(1000.0).toFloat.toDouble
   val UninformedLogEta: Double = math.log(0.001).toFloat.toDouble
 
-  /** K-array phi rows (the r16 E-step combiner output: one row per termId
-    * with `logphi(i)` ↔ topic i+1) → scalar (topic, termId, logphi) rows.
-    * The posexplode runs codegen'd on K× fewer input rows than the old
-    * per-(topic, term) encoder emission; the per-key value multiset into
-    * the downstream fold is unchanged. */
-  def explodePhi(estep: DataFrame): DataFrame = {
-    val spark = estep.sparkSession
-    import spark.implicits._
-    estep.filter(!$"isDoc")
-      .select($"termId", posexplode($"logphi").as(Seq("pos", "lp")))
-      .select(($"pos" + 1).cast("int").as("topic"), $"termId", $"lp".as("logphi"))
-  }
+  private def keys = VanillaDocs.keys
+
+  /** K-array phi rows → scalar (topic, termId, logphi) rows. */
+  def explodePhi(estep: DataFrame): DataFrame = EmCore.explodePhi(estep, keys)
 
   /**
    * @param phi   (topic, termId, logphi) partition-combined E-step rows
@@ -42,139 +30,48 @@ object MStep {
    * @param prior optional informed prior (topic, termId) seed pairs
    * @return      (topic, termId, elogbeta)
    */
-  def run(phi: DataFrame, prior: Option[DataFrame] = None): DataFrame = {
-    val spark = phi.sparkSession
-    import spark.implicits._
+  def run(phi: DataFrame, prior: Option[DataFrame] = None): DataFrame =
+    EmCore.lambdaToBeta(phi, keys, Smoothing.eta(prior))
 
-    // final log-space fold per (topic, term); Catalyst splits partial/final
-    val lambdaBase = phi
-      .groupBy($"topic", $"termId")
-      .agg(logsumexp($"logphi").as("lp"))
-
-    val withEta = prior match {
-      case Some(p) =>
-        lambdaBase.join(broadcast(p.select($"topic", $"termId", lit(true).as("seeded"))),
-            Seq("topic", "termId"), "left")
-          .withColumn("eta", when($"seeded", lit(InformedLogEta)).otherwise(lit(UninformedLogEta)))
-      case None =>
-        lambdaBase.withColumn("eta", lit(DefaultLogEta))
-    }
-    val lambda = withEta.withColumn("loglambda", log_add($"lp", $"eta"))
-
-    // per-topic normalizer ψ(Σ_w λ_kw), computed in log space then joined back
-    val norms = lambda.groupBy($"topic").agg(logsumexp($"loglambda").as("lognorm"))
-    lambda.join(broadcast(norms), "topic")
-      .select($"topic", $"termId",
-        (digamma(exp($"loglambda")) - digamma(exp($"lognorm"))).as("elogbeta"))
-  }
-
-  /**
-   * Broadcast-mode fused per-iteration reduce: the phi side's necessary
-   * cross-partition fold to (topic, termId, λ) and the doc side's ll/alpha
-   * statistics run as two branches of ONE union — a single action per EM
-   * iteration where the unfused trainer ran two. The second aggregation
-   * stage (per-topic normalizer) and its broadcast join disappear entirely:
-   * `finishBetaOnDriver` does that O(K×V) tail on the collected rows, which
-   * are model-sized by the broadcast-mode contract anyway.
-   *
-   * Row encoding: tag 0 = (topic, termId, λ in v1); tag 1 = (topic = slot k,
-   * ss_k in v1, Σll in v2 — every slot carries the same Σll).
-   */
-  def fusedIterationRows(estep: DataFrame): DataFrame = {
-    val spark = estep.sparkSession
-    import spark.implicits._
-    val lambda = explodePhi(estep)
-      .groupBy($"topic", $"termId")
-      .agg(logsumexp($"logphi").as("v1"))
-      .select(lit(0).as("tag"), $"topic", $"termId", $"v1", lit(0.0).as("v2"))
-    val stats = estep.filter($"isDoc")
-      .select($"ll", posexplode($"gamma").as(Seq("k", "g")),
-        aggregate($"gamma", lit(0.0), (acc, x) => acc + x).as("gsum"))
-      .groupBy($"k")
-      .agg(sum(digamma($"g") - digamma($"gsum")).as("v1"), sum($"ll").as("v2"))
-      .select(lit(1).as("tag"), $"k".as("topic"), lit(-1).as("termId"), $"v1", $"v2")
-    lambda.unionByName(stats)
-  }
+  /** Broadcast-mode fused per-iteration reduce (see
+    * [[EmCore.fusedIterationRows]]): tag 0 = (topic, termId, λ in v1);
+    * tag 1 = (topic = slot k, ss_k in v1, Σll in v2). */
+  def fusedIterationRows(estep: DataFrame): DataFrame = EmCore.fusedIterationRows(estep, keys)
 
   /** Split `fusedIterationRows` output: (corpus LL, alpha stats, λ rows). */
-  def splitFused(rows: Array[org.apache.spark.sql.Row], numTopics: Int)
+  def splitFused(rows: Array[Row], numTopics: Int)
       : (Double, Array[Double], Array[(Int, Int, Double)]) = {
-    val ss = new Array[Double](numTopics)
-    var ll = 0.0
-    val lambda = Array.newBuilder[(Int, Int, Double)]
-    rows.foreach { r =>
-      if (r.getAs[Int]("tag") == 0)
-        lambda += ((r.getAs[Int]("topic"), r.getAs[Int]("termId"), r.getAs[Double]("v1")))
-      else {
-        val k = r.getAs[Int]("topic")
-        ss(k) = r.getAs[Double]("v1")
-        if (k == 0) ll = r.getAs[Double]("v2")
-      }
-    }
-    (ll, ss, lambda.result())
+    val (ll, ss, lambda) = EmCore.splitFused(rows, numTopics)
+    (ll, ss, lambda.map { case (_, topic, termId, v) => (topic, termId, v) })
   }
 
   /**
-   * Driver-side tail of the broadcast-mode M-step: eta smoothing, per-topic
-   * log-normalizer, E[log β] = ψ(λ) − ψ(Σ_w λ) — the same math
-   * `run` evaluates distributed (identical GammaFuncs kernels), done in one
-   * deterministic pass over the collected model (sorted by termId so the
-   * log-space fold order is reproducible). Returns the E-step's broadcast
-   * map and the (topic, termId, elogbeta) rows for checkpointing.
+   * Driver-side tail of the broadcast-mode M-step (see
+   * [[EmCore.finishBetaOnDriver]]): returns the E-step's broadcast map and
+   * the (topic, termId, elogbeta) rows for checkpointing.
    *
    * @param seeded informed-prior (topic, termId) pairs; None = no prior
    */
   def finishBetaOnDriver(lambda: Array[(Int, Int, Double)], numTopics: Int,
       seeded: Option[Set[(Int, Int)]])
       : (scala.collection.Map[Int, Array[Double]], Seq[(Int, Int, Double)]) = {
-    import graft.functions.GammaFuncs.{digamma => dg, logAdd}
-    def eta(topic: Int, termId: Int): Double = seeded match {
-      case Some(s) => if (s((topic, termId))) InformedLogEta else UninformedLogEta
-      case None => DefaultLogEta
-    }
-    val byTopic = lambda.groupBy(_._1)
-    val betaMap = new java.util.HashMap[Int, Array[Double]]()
-    val rows = Seq.newBuilder[(Int, Int, Double)]
-    byTopic.foreach { case (topic, entries) =>
-      val smoothed = entries.sortBy(_._2)
-        .map { case (_, w, lp) => (w, logAdd(lp, eta(topic, w))) }
-      var lognorm = Double.NegativeInfinity
-      smoothed.foreach { case (_, v) => lognorm = logAdd(lognorm, v) }
-      val dgNorm = dg(math.exp(lognorm))
-      smoothed.foreach { case (w, v) =>
-        val e = dg(math.exp(v)) - dgNorm
-        var arr = betaMap.get(w)
-        if (arr == null) { arr = new Array[Double](numTopics); betaMap.put(w, arr) }
-        arr(topic - 1) = e
-        rows += ((topic, w, e))
-      }
-    }
-    (scala.jdk.CollectionConverters.MapHasAsScala(betaMap).asScala, rows.result())
+    val (betaMap, rows) = EmCore.finishBetaOnDriver(
+      lambda.map { case (topic, termId, v) => (0, topic, termId, v) }, numTopics,
+      Smoothing.etaDriver(seeded))
+    (betaMap.map { case (w, arr) => EmCore.termOf(w) -> arr },
+      rows.map { case (_, topic, termId, e) => (topic, termId, e) })
   }
 
   /** Alpha sufficient statistics ss_k = Σ_d ψ(γ_dk) − ψ(Σ_k γ_dk) from the
     * E-step's gamma rows (reference computes this in-mapper,
     * DocumentMapper.java:256-258; here it is a small declarative agg).
-    * Needs only a `gamma` column — trainers use `llAndAlphaStats` to fold
-    * the log-likelihood into the same job. */
-  def alphaSufficientStatistics(gammaDocs: DataFrame, numTopics: Int): Array[Double] = {
-    val spark = gammaDocs.sparkSession
-    import spark.implicits._
-    val rows = gammaDocs
-      .select(posexplode($"gamma").as(Seq("k", "g")),
-        aggregate($"gamma", lit(0.0), (acc, x) => acc + x).as("gsum"))
-      .groupBy($"k")
-      .agg(sum(digamma($"g") - digamma($"gsum")).as("ss"))
-      .collect()
-    val ss = new Array[Double](numTopics)
-    rows.foreach(r => ss(r.getAs[Int]("k")) = r.getAs[Double]("ss"))
-    ss
-  }
+    * Needs only a `gamma` column. */
+  def alphaSufficientStatistics(gammaDocs: DataFrame, numTopics: Int): Array[Double] =
+    llAndAlphaStats(gammaDocs.withColumn("ll", lit(0.0)), numTopics)._2
 
   /** The pre-collect aggregation behind `llAndAlphaStats`: one row per
-    * topic slot k with (k, ss, llsum). Exposed so the shuffle-mode trainer
-    * can union it into its fused per-iteration action instead of running a
-    * separate stats job. */
+    * topic slot k with (k, ss, llsum). The trainers union it into their
+    * per-iteration action instead of running a separate stats job. */
   def llAndAlphaStatsRows(gammaDocs: DataFrame): DataFrame = {
     val spark = gammaDocs.sparkSession
     import spark.implicits._
@@ -189,14 +86,17 @@ object MStep {
     * log-likelihood and the per-topic alpha sufficient statistics: the ll
     * column rides the gamma explosion and is summed per topic slot (every
     * doc contributes exactly once per k), so slot 0's sum is the corpus LL. */
-  def llAndAlphaStats(gammaDocs: DataFrame, numTopics: Int): (Double, Array[Double]) = {
-    val rows = llAndAlphaStatsRows(gammaDocs).collect()
+  def llAndAlphaStats(gammaDocs: DataFrame, numTopics: Int): (Double, Array[Double]) =
+    statsOf(llAndAlphaStatsRows(gammaDocs).select("k", "ss", "llsum").collect(), numTopics)
+
+  /** (k, ss_k, llsum) rows → (corpus LL, alpha stats). */
+  private[lda] def statsOf(rows: Array[Row], numTopics: Int): (Double, Array[Double]) = {
     val ss = new Array[Double](numTopics)
     var ll = 0.0
     rows.foreach { r =>
-      val k = r.getAs[Int]("k")
-      ss(k) = r.getAs[Double]("ss")
-      if (k == 0) ll = r.getAs[Double]("llsum")
+      val k = r.getInt(0)
+      ss(k) = r.getDouble(1)
+      if (k == 0) ll = r.getDouble(2)
     }
     (ll, ss)
   }

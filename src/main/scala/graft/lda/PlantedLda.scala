@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
  * Settings.java:54 is engine-replay-infeasible — see CATALOG.md).
  *
  * The run IS the broadcast-mode trainer skeleton on real operators:
- * [[EStep.run]] (with the fixture-only anchor knobs) for every sweep,
+ * the EM core's E-step (with the fixture-only anchor knobs) for every sweep,
  * the distributed `logsumexp` phi fold, and
  * [[MStep.finishBetaOnDriver]] for the smoothing/normalizer tail —
  * only alpha stays FIXED (the alpha Newton update is a driver-side
@@ -45,12 +45,18 @@ object PlantedLda {
       gammaDp: Int = 8,
       phiDp: Int = 10,
       betaDp: Int = 8,
-      /** run the E-step through [[EStepShuffle]] (the 100 TB
-        * beta-as-table path) instead of the broadcast kernel. The
+      /** supply beta to the E-step as a joined table (the 100 TB
+        * beta-as-table path) instead of a broadcast lookup. The
         * anchored trajectory is execution-path-independent, so the
         * SAME DuckDB oracle verifies both — and broadcast ≡ shuffle
         * equality is pinned in PlantedLdaSpec. */
       useShuffle: Boolean = false)
+
+  /** The anchored E-step: localIterations - 1 sweeps (do-while parity
+    * with the reference), fixed seed. */
+  private def sweeps(cfg: Cfg, learning: Boolean): EmCore.Sweeps =
+    EmCore.Sweeps(cfg.sweeps + 1, randomStartGamma = false, learning, seed = 42L,
+      anchorGammaDp = cfg.gammaDp, anchorPhiDp = cfg.phiDp)
 
   private def rnd(x: Double, dp: Int): Double =
     BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -106,19 +112,12 @@ object PlantedLda {
 
     for (iter <- 1 to cfg.emIters) {
       val betaBc = spark.sparkContext.broadcast(beta)
-      // EStep.run executes localIterations - 1 sweeps (do-while parity
-      // with the reference); anchor knobs on, production path untouched
-      val estep = (if (cfg.useShuffle) {
-        val betaDf = beta.toSeq.map { case (w, arr) => (w, arr) }
-          .toDF("termId", "elogbeta")
-        EStepShuffle.run(docs.toDS(), alphaBc, betaDf, numTerms = cfg.vocab,
-          localIterations = cfg.sweeps + 1,
-          anchorGammaDp = cfg.gammaDp, anchorPhiDp = cfg.phiDp)
-      } else
-        EStep.run(docs.toDS(), alphaBc, betaBc, numTerms = cfg.vocab,
-          localIterations = cfg.sweeps + 1,
-          anchorGammaDp = cfg.gammaDp, anchorPhiDp = cfg.phiDp))
-        .persist()
+      // anchor knobs on, production path untouched
+      val supply =
+        if (cfg.useShuffle) EmCore.Join(beta.toSeq.toDF("termId", "elogbeta"), None)
+        else EmCore.Lookup.terms(betaBc)
+      val estep = EmCore.estep(docs.toDS(), VanillaDocs, alphaBc, supply, _ => cfg.vocab,
+        sweeps(cfg, learning = true)).persist()
       // the real distributed lambda fold, anchored at collect
       val lambda = MStep.explodePhi(estep.toDF())
         .groupBy($"topic", $"termId").agg(logsumexp($"logphi").as("lp"))
@@ -168,7 +167,7 @@ object PlantedLda {
 
   /**
    * Held-out inference (reference D5, `Trainer.infer`'s semantics) on
-   * the planted model: the corpus re-enters [[EStep.run]] with
+   * the planted model: the corpus re-enters the E-step with
    * `learning = false` (no phi side-output) and a FRESH gamma init
    * against the FINAL trained beta — the production inference shape,
    * anchored the same way so DuckDB replays it as three more sweep
@@ -181,9 +180,9 @@ object PlantedLda {
     val alphaBc = spark.sparkContext.broadcast(Array.fill(cfg.k)(cfg.alpha))
     val betaBc = spark.sparkContext.broadcast(beta)
     val fresh = corpus(spark, dir, cfg) // no carried gamma: fresh init
-    val estep = EStep.run(fresh.toDS(), alphaBc, betaBc, numTerms = cfg.vocab,
-      localIterations = cfg.sweeps + 1, learning = false,
-      anchorGammaDp = cfg.gammaDp, anchorPhiDp = cfg.phiDp)
+    val estep = EmCore.estep(fresh.toDS(), VanillaDocs, alphaBc,
+      EmCore.Lookup.terms(betaBc), _ => cfg.vocab,
+      sweeps(cfg, learning = false))
     val rows = estep.filter($"isDoc")
       .select($"docId", $"gamma").as[(Long, Array[Double])].collect()
       .sortBy(_._1)

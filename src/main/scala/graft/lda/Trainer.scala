@@ -1,11 +1,8 @@
 package graft.lda
 
-import graft.util.Ckpt._
+import graft.lda.EmCore.{Lookup, Model, Smoothing}
 import graft.model.Doc
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Trained model state after an EM run (or one resumable snapshot of it). */
 case class LdaModel(
@@ -19,22 +16,8 @@ case class LdaModel(
     llHistory: Seq[Double])
 
 /**
- * EM driver loop (reference: cc/mrlda/VariationalInference.java:181-394,
- * SURVEY.md §3.2). One Spark job per iteration instead of one MR job + one
- * merge job + JVM restarts: the corpus stays cached in executor memory across
- * iterations — the reference's dominant per-iteration fixed cost
- * (CONFIG_TIME counter) disappears.
- *
- * Scale posture: below `betaBroadcastMaxEntries` the K×V beta is collected
- * and broadcast (the reference's DistributedCache path,
- * DocumentMapper.java:116); above it the trainer switches to the shuffle-join
- * E-step (EStepShuffle) where beta stays a distributed table end-to-end and
- * nothing model-sized moves through the driver. With `checkpointDir` set,
- * alpha/beta/gamma snapshot to parquet per `checkpointEvery` iterations
- * (reference's alpha-i/beta-i/gamma-i rotation) and gamma re-reads from
- * parquet — reliable lineage truncation; without it, `localCheckpoint`
- * (fast, not fault-tolerant). Convergence: |ΔLL/LL| ≤ 1e-6 or
- * `maxIterations` (Settings.java:56,43).
+ * Vanilla LDA: the EM core ([[EmCore.fit]]) with one language, eta
+ * smoothing (optionally an informed prior) and a fixed alpha init.
  */
 object Trainer {
 
@@ -60,273 +43,22 @@ object Trainer {
       checkpointEvery: Int = 1,
       /** Resume from `(dir, iteration)` — the reference's `-modelindex`
         * (VariationalInference.java:169-174). */
-      resumeFrom: Option[(String, Int)] = None)
-
-  /** (topic, termId, elogbeta) rows → termId -> per-topic array. */
-  private[lda] def betaRowsToMap(rows: Array[org.apache.spark.sql.Row], k: Int)
-      : scala.collection.Map[Int, Array[Double]] = {
-    val betaMap = new java.util.HashMap[Int, Array[Double]]()
-    rows.foreach { r =>
-      val t = r.getAs[Int]("topic") - 1
-      val w = r.getAs[Int]("termId")
-      var arr = betaMap.get(w)
-      if (arr == null) { arr = new Array[Double](k); betaMap.put(w, arr) }
-      arr(t) = r.getAs[Double]("elogbeta")
-    }
-    scala.jdk.CollectionConverters.MapHasAsScala(betaMap).asScala
-  }
-
-  /** (topic, termId, elogbeta) rows → (termId, elogbeta array<double>[K])
-    * table for the shuffle-join E-step. Every observed term carries all K
-    * topics (the E-step emits the full topic range per term), so the packed
-    * array is dense. */
-  private[lda] def packBeta(betaRows: DataFrame): DataFrame = {
-    val spark = betaRows.sparkSession
-    import spark.implicits._
-    betaRows.groupBy($"termId")
-      .agg(array_sort(collect_list(struct($"topic", $"elogbeta"))).as("te"))
-      .select($"termId", transform($"te", x => x.getField("elogbeta")).as("elogbeta"))
-  }
-
-  private def emptyBetaTable(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("termId", IntegerType, nullable = false),
-        StructField("elogbeta", ArrayType(DoubleType), nullable = true))))
+      resumeFrom: Option[(String, Int)] = None) extends EmCore.Settings
 
   def train(docs: Dataset[Doc], numTerms: Int, cfg: Config): LdaModel = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val k = cfg.numTopics
-    val useShuffleEStep = k.toLong * numTerms.toLong > cfg.betaBroadcastMaxEntries
-
-    var alpha = Array.fill(k)(cfg.alphaInit)
-    var beta: scala.collection.Map[Int, Array[Double]] = Map.empty
-    var betaTable: DataFrame = emptyBetaTable(spark)
-    var history = List.empty[Double]
-    var startIter = 0
-
-    var corpus = docs.persist(StorageLevel.MEMORY_AND_DISK)
-
-    cfg.resumeFrom.foreach { case (dir, i) =>
-      alpha = LdaCheckpoint.loadAlpha(spark, dir, i)
-      val betaRows = LdaCheckpoint.loadBeta(spark, dir, i)
-      if (useShuffleEStep) betaTable = packBeta(betaRows).persist(StorageLevel.MEMORY_AND_DISK)
-      else beta = betaRowsToMap(betaRows.collect(), k)
-      // gamma-<i> is the full gamma-annotated corpus — resume reads it
-      // directly (the reference resumes from the gamma-i document dir)
-      corpus = LdaCheckpoint.loadGamma(spark, dir, i)
-        .select($"docId", $"counts", $"numTokens", $"gamma")
-        .as[Doc]
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      history = LdaCheckpoint.loadLlHistory(spark, dir, i).reverse.toList
-      startIter = i
-    }
-
-    val numDocs = corpus.count()
-    // the (docId, termId, cnt) explode is loop-invariant (gamma rotation
-    // never touches counts): materialize it once, partitioned by the beta
-    // join key, so each iteration's E-step shuffles only the model-sized
-    // beta table — not the corpus-nnz-sized exploded frame
-    val explodedShuffle: Option[DataFrame] =
-      if (useShuffleEStep)
-        Some(EStepShuffle.explodeDocs(corpus).persist(StorageLevel.MEMORY_AND_DISK))
-      else None
-    // informed-prior seed pairs are iteration-invariant: collect once here
-    // (broadcast mode smooths driver-side; shuffle mode joins the DataFrame)
-    val seededPrior: Option[Set[(Int, Int)]] =
-      if (useShuffleEStep) None
-      else cfg.prior.map(_.select($"topic", $"termId").collect()
-        .map(r => (r.getInt(0), r.getInt(1))).toSet)
-    var lastLL = history.headOption.getOrElse(0.0)
-    var iter = startIter
-    var converged = false
-
-    while (iter < cfg.maxIterations && !converged) {
-      val alphaBc = spark.sparkContext.broadcast(alpha)
-      // captured so the (model-sized) beta broadcast can be destroyed at
-      // iteration end — otherwise broadcast memory grows linearly with
-      // iterations on the driver and every executor
-      val betaBc = if (useShuffleEStep) None
-        else Some(spark.sparkContext.broadcast(beta))
-
-      val estep = (if (useShuffleEStep)
-        EStepShuffle.run(corpus, alphaBc, betaTable, numTerms,
-          localIterations = cfg.localIterations,
-          randomStartGamma = cfg.randomStartGamma,
-          learning = true, seed = cfg.seed,
-          preExploded = explodedShuffle)
-      else
-        EStep.run(corpus, alphaBc, betaBc.get, numTerms,
-          localIterations = cfg.localIterations,
-          randomStartGamma = cfg.randomStartGamma,
-          learning = true, seed = cfg.seed))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-
-      val snapIdx = iter + 1
-      val doCheckpoint = cfg.checkpointDir.isDefined &&
-        (snapIdx % cfg.checkpointEvery == 0 || snapIdx == cfg.maxIterations)
-      val docSide = estep.filter($"isDoc").toDF()
-
-      // M-step + likelihood + alpha sufficient statistics. Broadcast mode:
-      // the phi reduce and the doc-side stats are union branches of a
-      // single collect, and the normalizer/digamma tail runs on the driver
-      // over the (model-sized) rows. Shuffle mode: TWO localCheckpoints
-      // over the shared cached `estep` — (1) the MODEL-sized one here
-      // (packed beta + the k-row ll/alpha statistics as union branches),
-      // consumed by the stats collect and by every E-step beta join of the
-      // next iteration; (2) the CORPUS-sized gamma rotation below. Keeping
-      // the doc side out of (1) means the per-iteration beta scans never
-      // re-read corpus blocks — the doc side grows with the corpus while
-      // beta stays K×V, so at scale the tag-filter-over-one-fused-
-      // checkpoint shape multiplied exactly the wrong scan. Both
-      // checkpoints also truncate lineage (a plain persist would nest each
-      // iteration's plan inside the next E-step join, growing analysis
-      // cost superlinearly).
-      var betaRowsDriver: Seq[(Int, Int, Double)] = Nil // broadcast mode only
-      var fused: Option[DataFrame] = None               // shuffle mode only
-      val prevBetaTable = betaTable
-      val (ll, ss) = if (useShuffleEStep) {
-        val nullInt = lit(null).cast("int")
-        val nullDouble = lit(null).cast("double")
-        val nullArr = lit(null).cast(ArrayType(DoubleType))
-        val packed = packBeta(MStep.run(MStep.explodePhi(estep.toDF()), cfg.prior))
-        val fusedDf = packed
-          .select(lit(0).as("tag"), $"termId", $"elogbeta",
-            nullDouble.as("ll"), nullInt.as("k"), nullDouble.as("ss"))
-          .unionByName(MStep.llAndAlphaStatsRows(docSide)
-            .select(lit(2).as("tag"), nullInt.as("termId"), nullArr.as("elogbeta"),
-              $"llsum".as("ll"), $"k", $"ss"))
-          .ckptSer()
-        fused = Some(fusedDf)
-        betaTable = fusedDf.filter($"tag" === 0).select($"termId", $"elogbeta")
-        val statsRows = fusedDf.filter($"tag" === 2).select($"k", $"ss", $"ll").collect()
-        val ssArr = new Array[Double](k)
-        var llSum = 0.0
-        statsRows.foreach { r =>
-          val kk = r.getInt(0)
-          ssArr(kk) = r.getDouble(1)
-          if (kk == 0) llSum = r.getDouble(2)
-        }
-        (llSum, ssArr)
-      } else {
-        val (llF, ssF, lambda) = MStep.splitFused(
-          MStep.fusedIterationRows(estep.toDF()).collect(), k)
-        val (betaMap, rows) = MStep.finishBetaOnDriver(lambda, k, seededPrior)
-        beta = betaMap
-        betaRowsDriver = rows
-        (llF, ssF)
-      }
-      if (cfg.updateAlpha) {
-        if (cfg.symmetricAlpha) {
-          val a = AlphaUpdate.updateScalarAlpha(k, numDocs, alpha(0), ss.sum)
-          alpha = Array.fill(k)(a)
-        } else {
-          alpha = AlphaUpdate.updateVectorAlpha(k, numDocs, alpha, ss)
-        }
-      }
-      history = ll :: history
-
-      // convergence decided HERE so an early-converging run still snapshots
-      // its final state (doCheckpoint alone would skip it when
-      // checkpointEvery > 1 and the converged iteration isn't a multiple)
-      val willConverge = (iter > startIter || cfg.resumeFrom.isDefined) &&
-        math.abs((ll - lastLL) / lastLL) <= cfg.convergence
-      val doSnapshot = doCheckpoint || (cfg.checkpointDir.isDefined && willConverge)
-
-      // gamma-<i> holds the FULL gamma-annotated corpus — exactly the
-      // reference's layout, where the gamma output dir IS the next
-      // iteration's document input (VariationalInference.java:358-379).
-      // snapIdx computed above (1-based: iteration i produces snapshot i+1,
-      // matching the reference's alpha-(i+1)).
-      if (doSnapshot) {
-        val dir = cfg.checkpointDir.get
-        LdaCheckpoint.saveAlpha(spark, dir, snapIdx, alpha)
-        // shuffle mode: unpack (topic, termId, elogbeta) rows back out of
-        // the materialized packed table (array position p ↔ topic p+1 —
-        // packBeta sorts its struct list by topic, and the E-step emits
-        // every topic 1..k for each term it touches)
-        val snapshotBeta = fused match {
-          case Some(f) =>
-            f.filter($"tag" === 0)
-              .select($"termId", posexplode($"elogbeta").as(Seq("pos", "v")))
-              .select(($"pos" + 1).as("topic"), $"termId", $"v".as("elogbeta"))
-          case None => betaRowsDriver.toDF("topic", "termId", "elogbeta")
-        }
-        LdaCheckpoint.saveBeta(snapshotBeta, dir, snapIdx)
-        LdaCheckpoint.saveGamma(
-          docSide.select($"docId", $"counts", $"numTokens", $"gamma"), dir, snapIdx)
-        LdaCheckpoint.saveState(spark, dir, snapIdx, history.reverse)
-      }
-
-      // rotate gamma into the corpus for the next iteration's warm start:
-      // the doc side already carries the full document, so the next corpus
-      // is a projection of the E-step output — no per-iteration join.
-      // Skipped entirely under randomStartGamma (the E-step would ignore the
-      // stored gamma anyway; reference gates the side-output the same way).
-      // Parquet-backed when checkpointing (reliable lineage truncation),
-      // localCheckpoint otherwise (fast).
-      if (!cfg.randomStartGamma) {
-        val nextCorpus =
-          if (doSnapshot) {
-            LdaCheckpoint.loadGamma(spark, cfg.checkpointDir.get, snapIdx)
-              .select($"docId", $"counts", $"numTokens", $"gamma")
-              .as[Doc]
-              .persist(StorageLevel.MEMORY_AND_DISK)
-          } else {
-            // both modes: eager localCheckpoint over the cached E-step —
-            // in shuffle mode this is checkpoint (2) of the split (the
-            // corpus-sized half; beta+stats went into (1) above)
-            docSide
-              .select($"docId", $"counts", $"numTokens", $"gamma")
-              .as[Doc]
-              .ckptSer()
-          }
-        corpus.unpersist()
-        corpus = nextCorpus
-      }
-
-      estep.unpersist()
-      if (useShuffleEStep) prevBetaTable.unpersist()
-      // every action reading these completed above (the fused collect /
-      // stats job, and the eager localCheckpoint or parquet snapshot).
-      // destroy() is non-blocking in Spark 4 (delegates to destroy(false)),
-      // so this adds no per-iteration driver latency
-      alphaBc.destroy()
-      betaBc.foreach(_.destroy())
-
-      converged = willConverge
-      lastLL = ll
-      iter += 1
-    }
-    explodedShuffle.foreach(_.unpersist(blocking = false))
-
-    // in shuffle mode the model map is materialized once at the end (callers
-    // needing beta bigger than driver memory should read the checkpointed
-    // beta-<i> parquet instead)
-    if (useShuffleEStep) {
-      import spark.implicits._
-      val rows = betaTable.select($"termId", $"elogbeta").as[(Int, Seq[Double])].collect()
-      beta = rows.map { case (w, arr) => w -> arr.toArray }.toMap
-    }
-
-    LdaModel(k, numTerms, alpha, beta, lastLL, iter, history.reverse)
+    val fit = EmCore.fit(docs, Model(VanillaDocs, Smoothing.eta(cfg.prior),
+      Array.fill(cfg.numTopics)(cfg.alphaInit), cfg.symmetricAlpha, _ => numTerms, numTerms), cfg)
+    LdaModel(cfg.numTopics, numTerms, fit.alpha,
+      fit.beta.iterator.map { case (w, arr) => EmCore.termOf(w) -> arr }.toMap,
+      fit.logLikelihood, fit.iterations, fit.llHistory)
   }
 
   /** Held-out inference (reference D5): frozen model, one map-only E-step,
     * returns per-doc gamma and the held-out log-likelihood. */
   def infer(docs: Dataset[Doc], model: LdaModel, localIterations: Int = 100,
       seed: Long = 42L): (DataFrame, Double) = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val out = EStep.run(docs,
-      spark.sparkContext.broadcast(model.alpha),
-      spark.sparkContext.broadcast(model.beta),
-      model.numTerms, localIterations, randomStartGamma = false,
-      learning = false, seed = seed)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val gamma = out.filter($"isDoc").select($"docId", $"gamma")
-    val ll = out.filter($"isDoc").agg(sum($"ll")).as[Double].head()
-    (gamma, ll)
+    val betaBc = docs.sparkSession.sparkContext.broadcast(model.beta)
+    EmCore.infer(docs, VanillaDocs, model.alpha, Lookup.terms(betaBc), _ => model.numTerms,
+      localIterations, seed)
   }
 }

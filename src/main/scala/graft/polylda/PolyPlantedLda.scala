@@ -1,6 +1,7 @@
 package graft.polylda
 
 import graft.functions.LogSumExp.logsumexp
+import graft.lda.EmCore
 import graft.model.PolyDoc
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -9,9 +10,9 @@ import org.apache.spark.sql.functions._
  * The polylingual twin of [[graft.lda.PlantedLda]]: a planted two-
  * "language" micro-corpus (language 0 = words lexicographically below
  * "n", language 1 = the rest — a deterministic SQL-expressible split)
- * run through the REAL polylda operators — [[PolyEStep.run]] with the
+ * run through the REAL polylda operators — the EM core's E-step with the
  * fixture-only anchor knobs, the distributed (lang, topic, term)
- * logsumexp fold, and [[PolyTrainer.finishBetaOnDriver]] (eta-FREE
+ * logsumexp fold, and the driver-side M-step tail (eta-FREE
  * M-step with the -700 underflow floor, the polylda reducer's
  * semantics per cc/mrlda/polylda/TermReducer.java:84-119) — with every
  * handoff rounding-anchored so DuckDB replays the trajectory
@@ -29,7 +30,7 @@ object PolyPlantedLda {
       gammaDp: Int = 8,
       phiDp: Int = 10,
       betaDp: Int = 8,
-      /** route the E-step through [[PolyEStepShuffle]] (the per-language
+      /** supply beta to the E-step as a joined table (the per-language
         * beta-as-table scale path); same oracle — see
         * [[graft.lda.PlantedLda.Cfg.useShuffle]]. */
       useShuffle: Boolean = false)
@@ -94,28 +95,27 @@ object PolyPlantedLda {
 
     for (iter <- 1 to cfg.emIters) {
       val betaBc = spark.sparkContext.broadcast(beta)
-      val estep = (if (cfg.useShuffle) {
-        val betaDf = beta.toSeq.flatMap { case (l, m) =>
-          m.toSeq.map { case (w, arr) => (l, w, arr) }
-        }.toDF("lang", "termId", "elogbeta")
-        PolyEStepShuffle.run(docs.toDS(), alphaBc, betaDf, numTermsPerLang,
-          localIterations = cfg.sweeps + 1,
-          anchorGammaDp = cfg.gammaDp, anchorPhiDp = cfg.phiDp)
-      } else
-        PolyEStep.run(docs.toDS(), alphaBc, betaBc, numTermsPerLang,
-          localIterations = cfg.sweeps + 1,
+      val supply =
+        if (cfg.useShuffle)
+          EmCore.Join(beta.toSeq.flatMap { case (l, m) =>
+            m.toSeq.map { case (w, arr) => (l, w, arr) }
+          }.toDF("lang", "termId", "elogbeta"), None)
+        else PolyTrainer.lookup(betaBc)
+      val estep = EmCore.estep(docs.toDS(), PolyDocs, alphaBc, supply,
+        PolyTrainer.vocab(numTermsPerLang),
+        EmCore.Sweeps(cfg.sweeps + 1, randomStartGamma = false, learning = true, seed = 42L,
           anchorGammaDp = cfg.gammaDp, anchorPhiDp = cfg.phiDp))
         .persist()
-      // the real distributed fold, then the polylda reducer's -700
-      // underflow floor (PolyTrainer.mstep/fusedIterationRows) and the
-      // anchor, both on the model-sized collect
-      val lambda = PolyTrainer.explodePhi(estep.toDF())
+      // the real distributed fold, anchored at collect; the driver tail
+      // applies the polylda reducer's -700 underflow floor
+      // (EmCore.Smoothing.floor)
+      val lambda = EmCore.explodePhi(estep.toDF(), PolyDocs.keys)
         .groupBy($"lang", $"topic", $"termId")
         .agg(logsumexp($"logphi").as("lp"))
         .collect()
         .map(r => (r.getAs[Int]("lang"), r.getAs[Int]("topic"), r.getAs[Int]("termId"),
-          rnd(math.max(r.getAs[Double]("lp"), -700.0), cfg.betaDp)))
-      val (_, rows) = PolyTrainer.finishBetaOnDriver(lambda, cfg.k)
+          rnd(r.getAs[Double]("lp"), cfg.betaDp)))
+      val (_, rows) = EmCore.finishBetaOnDriver(lambda, cfg.k, EmCore.Smoothing.floor.driver)
       val nextBeta = scala.collection.mutable.Map.empty[Int, scala.collection.mutable.Map[Int, Array[Double]]]
       rows.foreach { case (l, t, w, e) =>
         nextBeta.getOrElseUpdate(l, scala.collection.mutable.Map.empty)

@@ -1,13 +1,11 @@
 package graft.polylda
 
-import graft.util.Ckpt._
-import graft.functions.LogSumExp.logsumexp
-import graft.functions.gfunctions.digamma
-import graft.lda.{AlphaUpdate, MStep}
+import graft.lda.{EmCore, TermBeta}
+import graft.lda.EmCore.{DocShape, Keys, Lookup, Model, Smoothing}
 import graft.model.PolyDoc
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Trained polylingual model: shared alpha, one beta matrix per language
   * (reference: cc/mrlda/polylda/VariationalInference.java:359-372 writes
@@ -23,16 +21,63 @@ case class PolyLdaModel(
     llHistory: Seq[Double])
 
 /**
- * Polylingual EM driver (reference: cc/mrlda/polylda/VariationalInference.java
- * :330-580). Differences from the vanilla Trainer are exactly the reference's:
- * the M-step aggregates per (language, topic, term) with a per-(language,
- * topic) normalizer and NO eta smoothing (polylda/TermReducer.java:84-119
- * adds no prior), and alpha is initialized randomly (reference unseeded
- * Math.random at polylda/VariationalInference.java:387 — here seeded for
+ * One polylingual E-step output row: doc rows carry the tied gamma, phi rows
+ * are keyed (lang 0.., termId) and carry the K-length per-topic log-phi
+ * array (`logphi(i)` ↔ topic i+1) — the reference's TripleOfInts stream
+ * (polylda/DocumentMapper.java:290-296) packed K-per-row.
+ */
+case class PolyEStepRow(
+    isDoc: Boolean,
+    docId: Long,
+    gamma: Array[Double],
+    ll: Double,
+    lang: Int,
+    termId: Int,
+    logphi: Array[Double],
+    /** doc rows carry the full document (like the reference's gamma side
+      * output) so next iteration's corpus needs no rotation join. */
+    counts: Map[Int, Map[Int, Int]] = null,
+    numTokens: Map[Int, Long] = null,
+    totalTokens: Long = 0L)
+
+/** Polylingual documents and E-step rows as the EM core sees them: terms
+  * keyed (lang, termId), one tied gamma per document. */
+private[graft] object PolyDocs extends DocShape[PolyDoc, PolyEStepRow](
+    Keys(Seq("lang")), Seq("docId", "counts", "numTokens", "totalTokens", "gamma"),
+    "totalTokens") {
+  lazy val docEncoder: Encoder[PolyDoc] = Encoders.product[PolyDoc]
+  lazy val rowEncoder: Encoder[PolyEStepRow] = Encoders.product[PolyEStepRow]
+  def langCountsColumns(docs: DataFrame): DataFrame =
+    docs.select(col("docId"), explode_outer(col("counts")).as(Seq("lang", "langCounts")))
+  def langCounts(d: PolyDoc): Iterable[(Int, Map[Int, Int])] = d.counts.toSeq.sortBy(_._1)
+  def tokens(d: PolyDoc): Long = d.totalTokens
+  def gamma(d: PolyDoc): Option[Array[Double]] = d.gamma
+  def fromTerms(docId: Long, tokens: Long, terms: Seq[TermBeta]): PolyDoc = {
+    val byLang = terms.groupBy(_.lang)
+    PolyDoc(docId,
+      byLang.map { case (l, ts) => l -> ts.map(t => t.termId -> t.cnt).toMap },
+      byLang.map { case (l, ts) => l -> ts.map(_.cnt.toLong).sum },
+      tokens)
+  }
+  def docRow(d: PolyDoc, gamma: Array[Double], ll: Double): PolyEStepRow =
+    PolyEStepRow(isDoc = true, d.docId, gamma, ll, -1, -1, null, d.counts, d.numTokens,
+      d.totalTokens)
+  def phiRow(key: Long, logphi: Array[Double]): PolyEStepRow =
+    PolyEStepRow(isDoc = false, -1L, null, 0.0, EmCore.langOf(key), EmCore.termOf(key), logphi)
+}
+
+/**
+ * Polylingual LDA (reference: cc/mrlda/polylda/VariationalInference.java
+ * :330-580): the EM core ([[EmCore.fit]]) with (lang, termId) keys. The
+ * differences from vanilla LDA are exactly the reference's: the M-step
+ * aggregates per (language, topic, term) with a per-(language, topic)
+ * normalizer and NO eta smoothing (polylda/TermReducer.java:84-119 adds no
+ * prior), and alpha is initialized randomly (reference unseeded Math.random
+ * at polylda/VariationalInference.java:387 — here seeded for
  * reproducibility). Alpha sufficient statistics use ψ(γ_dk) − ψ(Σγ_d) as in
  * the vanilla mapper (the polylda mapper passes its log-space gamma
  * accumulator to digamma at polylda/DocumentMapper.java:301 — a reference
- * quirk we deliberately do not reproduce; divergence documented here).
+ * quirk we deliberately do not reproduce).
  */
 object PolyTrainer {
 
@@ -53,370 +98,38 @@ object PolyTrainer {
         * (polylda/VariationalInference.java:396-404). */
       resumeFrom: Option[(String, Int)] = None,
       /** Σ_l K×V_l threshold above which per-language beta is NOT collected
-        * and broadcast; the shuffle-join E-step (PolyEStepShuffle) runs
-        * instead. The reference loads every language's beta per mapper —
-        * L× the vanilla wall. */
-      betaBroadcastMaxEntries: Long = 4L << 20)
+        * and broadcast; the shuffle-join E-step runs instead. The reference
+        * loads every language's beta per mapper — L× the vanilla wall. */
+      betaBroadcastMaxEntries: Long = 4L << 20) extends EmCore.Settings
 
-  /** (lang, topic, termId, elogbeta) rows → (lang, termId, elogbeta[K]). */
-  private[polylda] def packBeta(betaRows: DataFrame): DataFrame = {
-    val spark = betaRows.sparkSession
-    import spark.implicits._
-    betaRows.groupBy($"lang", $"termId")
-      .agg(array_sort(collect_list(struct($"topic", $"elogbeta"))).as("te"))
-      .select($"lang", $"termId", transform($"te", x => x.getField("elogbeta")).as("elogbeta"))
-  }
+  /** language → vocabulary size: the random-init scale of unseen terms, per
+    * language like the reference's numberOfTerms[languageIndex]. */
+  private[graft] def vocab(numTermsPerLang: Map[Int, Int]): Int => Int =
+    l => numTermsPerLang.getOrElse(l, 1).max(1)
 
-  private def emptyBetaTable(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("lang", IntegerType, nullable = false),
-        StructField("termId", IntegerType, nullable = false),
-        StructField("elogbeta", ArrayType(DoubleType), nullable = true))))
-  }
-
-  private def toNestedMap(
-      betaMaps: java.util.HashMap[Int, java.util.HashMap[Int, Array[Double]]])
-      : Map[Int, scala.collection.Map[Int, Array[Double]]] =
-    scala.jdk.CollectionConverters.MapHasAsScala(betaMaps).asScala.map {
-      case (l, m) =>
-        val langMap: scala.collection.Map[Int, Array[Double]] =
-          scala.jdk.CollectionConverters.MapHasAsScala(m).asScala
-            .map { case (a, b) => (a.intValue(), b) }
-        l.intValue() -> langMap
-    }.toMap
-
-  /** (lang, topic, termId, elogbeta) rows → lang -> termId -> topic array. */
-  private def betaRowsToNestedMap(rows: Array[org.apache.spark.sql.Row], k: Int)
-      : Map[Int, scala.collection.Map[Int, Array[Double]]] = {
-    val betaMaps = new java.util.HashMap[Int, java.util.HashMap[Int, Array[Double]]]()
-    rows.foreach { r =>
-      val l = r.getAs[Int]("lang")
-      val t = r.getAs[Int]("topic") - 1
-      val w = r.getAs[Int]("termId")
-      var langMap = betaMaps.get(l)
-      if (langMap == null) { langMap = new java.util.HashMap(); betaMaps.put(l, langMap) }
-      var arr = langMap.get(w)
-      if (arr == null) { arr = new Array[Double](k); langMap.put(w, arr) }
-      arr(t) = r.getAs[Double]("elogbeta")
-    }
-    toNestedMap(betaMaps)
-  }
-
-  /** K-array phi rows (the r16 E-step combiner output: one row per
-    * (lang, termId) with `logphi(i)` ↔ topic i+1) → scalar
-    * (lang, topic, termId, logphi) rows — see [[graft.lda.MStep.explodePhi]]. */
-  def explodePhi(estep: DataFrame): DataFrame = {
-    val spark = estep.sparkSession
-    import spark.implicits._
-    estep.filter(!$"isDoc")
-      .select($"lang", $"termId", posexplode($"logphi").as(Seq("pos", "lp")))
-      .select($"lang", ($"pos" + 1).cast("int").as("topic"), $"termId",
-        $"lp".as("logphi"))
-  }
-
-  /** Per-(lang, topic, term) M-step: logsumexp fold + per-(lang, topic)
-    * normalizer in log space; E[log β] = ψ(λ) − ψ(Σ_w λ). Two-level groupBy
-    * replaces the reference's lang×topic partitioner + sorted streaming
-    * reducer (polylda/TermPartitioner.java:10-12, TermReducer.java:84-119).
-    * Input: scalar (lang, topic, termId, logphi) rows (use [[explodePhi]]). */
-  def mstep(phi: DataFrame): DataFrame = {
-    val spark = phi.sparkSession
-    import spark.implicits._
-    // The floor at -700 is the one numerical deviation from the reference's
-    // eta-free reducer: a topic whose phi mass for a term fully underflows
-    // would hit digamma(exp(-inf)) = -Inf and poison the next E-step with
-    // 0·(−Inf−(−Inf)) = NaN. exp(-700) is the smallest normal-range double
-    // whose digamma is still finite; values above the floor are untouched.
-    val lambda = phi
-      .groupBy($"lang", $"topic", $"termId")
-      .agg(greatest(logsumexp($"logphi"), lit(-700.0)).as("loglambda"))
-    val norms = lambda.groupBy($"lang", $"topic").agg(logsumexp($"loglambda").as("lognorm"))
-    lambda.join(broadcast(norms), Seq("lang", "topic"))
-      .select($"lang", $"topic", $"termId",
-        (digamma(exp($"loglambda")) - digamma(exp($"lognorm"))).as("elogbeta"))
-  }
-
-  /**
-   * Broadcast-mode fused per-iteration reduce, mirroring
-   * [[graft.lda.MStep.fusedIterationRows]] with the polylingual key: the
-   * (lang, topic, termId) phi fold and the doc-side ll/alpha statistics are
-   * two branches of one union — a single action per EM iteration. The
-   * per-(lang, topic) normalizer runs driver-side over the collected
-   * (model-sized) rows. The -700 floor applies here, exactly as in `mstep`.
-   *
-   * Row encoding: tag 0 = (lang, topic, termId, floored log λ in v1);
-   * tag 1 = (topic = slot k, ss_k in v1, Σll in v2).
-   */
-  def fusedIterationRows(estep: DataFrame): DataFrame = {
-    val spark = estep.sparkSession
-    import spark.implicits._
-    val lambda = explodePhi(estep)
-      .groupBy($"lang", $"topic", $"termId")
-      .agg(greatest(logsumexp($"logphi"), lit(-700.0)).as("v1"))
-      .select(lit(0).as("tag"), $"lang", $"topic", $"termId", $"v1", lit(0.0).as("v2"))
-    val stats = estep.filter($"isDoc")
-      .select($"ll", posexplode($"gamma").as(Seq("k", "g")),
-        aggregate($"gamma", lit(0.0), (acc, x) => acc + x).as("gsum"))
-      .groupBy($"k")
-      .agg(sum(digamma($"g") - digamma($"gsum")).as("v1"), sum($"ll").as("v2"))
-      .select(lit(1).as("tag"), lit(-1).as("lang"), $"k".as("topic"),
-        lit(-1).as("termId"), $"v1", $"v2")
-    lambda.unionByName(stats)
-  }
-
-  /** Split `fusedIterationRows` output: (corpus LL, alpha stats, λ rows). */
-  private[polylda] def splitFused(rows: Array[org.apache.spark.sql.Row], numTopics: Int)
-      : (Double, Array[Double], Array[(Int, Int, Int, Double)]) = {
-    val ss = new Array[Double](numTopics)
-    var ll = 0.0
-    val lambda = Array.newBuilder[(Int, Int, Int, Double)]
-    rows.foreach { r =>
-      if (r.getAs[Int]("tag") == 0)
-        lambda += ((r.getAs[Int]("lang"), r.getAs[Int]("topic"),
-          r.getAs[Int]("termId"), r.getAs[Double]("v1")))
-      else {
-        val k = r.getAs[Int]("topic")
-        ss(k) = r.getAs[Double]("v1")
-        if (k == 0) ll = r.getAs[Double]("v2")
-      }
-    }
-    (ll, ss, lambda.result())
-  }
-
-  /** Driver-side tail of the broadcast-mode polylingual M-step: per-(lang,
-    * topic) log-normalizer and E[log β] = ψ(λ) − ψ(Σ_w λ) over the collected
-    * λ rows (no eta — faithful to the reference's smoothing-free reducer;
-    * inputs are already floored). Sorted by termId per group so the
-    * log-space fold order is deterministic. */
-  private[polylda] def finishBetaOnDriver(
-      lambda: Array[(Int, Int, Int, Double)], numTopics: Int)
-      : (Map[Int, scala.collection.Map[Int, Array[Double]]], Seq[(Int, Int, Int, Double)]) = {
-    import graft.functions.GammaFuncs.{digamma => dg, logAdd}
-    val betaMaps = new java.util.HashMap[Int, java.util.HashMap[Int, Array[Double]]]()
-    val rows = Seq.newBuilder[(Int, Int, Int, Double)]
-    lambda.groupBy(e => (e._1, e._2)).foreach { case ((lang, topic), entries) =>
-      val sorted = entries.sortBy(_._3)
-      var lognorm = Double.NegativeInfinity
-      sorted.foreach { case (_, _, _, v) => lognorm = logAdd(lognorm, v) }
-      val dgNorm = dg(math.exp(lognorm))
-      var langMap = betaMaps.get(lang)
-      if (langMap == null) { langMap = new java.util.HashMap(); betaMaps.put(lang, langMap) }
-      sorted.foreach { case (_, _, w, v) =>
-        val e = dg(math.exp(v)) - dgNorm
-        var arr = langMap.get(w)
-        if (arr == null) { arr = new Array[Double](numTopics); langMap.put(w, arr) }
-        arr(topic - 1) = e
-        rows += ((lang, topic, w, e))
-      }
-    }
-    (toNestedMap(betaMaps), rows.result())
-  }
+  /** A broadcast lang -> termId -> row model as the E-step's lookup. */
+  private[graft] def lookup(bc: Broadcast[Map[Int, scala.collection.Map[Int, Array[Double]]]]): Lookup =
+    Lookup(w => bc.value.get(EmCore.langOf(w)).flatMap(_.get(EmCore.termOf(w))).orNull)
 
   def train(docs: Dataset[PolyDoc], numTermsPerLang: Map[Int, Int], cfg: Config): PolyLdaModel = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val k = cfg.numTopics
-
-    val totalVocab = numTermsPerLang.values.map(_.toLong).sum
-    val useShuffleEStep = k.toLong * totalVocab > cfg.betaBroadcastMaxEntries
-
     val rng = new java.util.Random(cfg.seed)
-    var alpha = Array.fill(k)(rng.nextDouble())
-    var beta: Map[Int, scala.collection.Map[Int, Array[Double]]] = Map.empty
-    var betaTable: DataFrame = emptyBetaTable(spark)
-    var history = List.empty[Double]
-    var startIter = 0
-    var corpus = docs.persist(StorageLevel.MEMORY_AND_DISK)
-
-    cfg.resumeFrom.foreach { case (dir, i) =>
-      alpha = graft.lda.LdaCheckpoint.loadAlpha(spark, dir, i)
-      val betaRows = graft.lda.LdaCheckpoint.loadBeta(spark, dir, i)
-      if (useShuffleEStep) betaTable = packBeta(betaRows).persist(StorageLevel.MEMORY_AND_DISK)
-      else beta = betaRowsToNestedMap(betaRows.collect(), k)
-      corpus = graft.lda.LdaCheckpoint.loadGamma(spark, dir, i)
-        .select($"docId", $"counts", $"numTokens", $"totalTokens", $"gamma")
-        .as[PolyDoc]
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      history = graft.lda.LdaCheckpoint.loadLlHistory(spark, dir, i).reverse.toList
-      startIter = i
+    val fit = EmCore.fit(docs, Model(PolyDocs, Smoothing.floor,
+      Array.fill(cfg.numTopics)(rng.nextDouble()), symmetricAlpha = false,
+      vocab(numTermsPerLang), numTermsPerLang.values.map(_.toLong).sum), cfg)
+    val beta = fit.beta.groupBy { case (w, _) => EmCore.langOf(w) }.map { case (l, m) =>
+      l -> (m.map { case (w, arr) => EmCore.termOf(w) -> arr }: scala.collection.Map[Int, Array[Double]])
     }
-
-    val numDocs = corpus.count()
-    // loop-invariant (docId, lang, termId, cnt) explode, partitioned by
-    // the beta-join key — materialized once so each iteration's E-step
-    // shuffles only the model-sized beta table (see graft.lda.Trainer)
-    val explodedShuffle: Option[DataFrame] =
-      if (useShuffleEStep)
-        Some(PolyEStepShuffle.explodeDocs(corpus).persist(StorageLevel.MEMORY_AND_DISK))
-      else None
-    var lastLL = history.headOption.getOrElse(0.0)
-    var iter = startIter
-    var converged = false
-
-    while (iter < cfg.maxIterations && !converged) {
-      val alphaBc = spark.sparkContext.broadcast(alpha)
-      // captured so the per-language beta broadcast can be destroyed at
-      // iteration end (see Trainer)
-      val betaBc = if (useShuffleEStep) None
-        else Some(spark.sparkContext.broadcast(beta))
-
-      val estep = (if (useShuffleEStep)
-        PolyEStepShuffle.run(corpus, alphaBc, betaTable, numTermsPerLang,
-          localIterations = cfg.localIterations,
-          randomStartGamma = cfg.randomStartGamma,
-          learning = true, seed = cfg.seed,
-          preExploded = explodedShuffle)
-      else
-        PolyEStep.run(corpus, alphaBc, betaBc.get, numTermsPerLang,
-          localIterations = cfg.localIterations,
-          randomStartGamma = cfg.randomStartGamma,
-          learning = true, seed = cfg.seed))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-
-      val snapIdx = iter + 1
-      val doCheckpoint = cfg.checkpointDir.isDefined &&
-        (snapIdx % cfg.checkpointEvery == 0 || snapIdx == cfg.maxIterations)
-      val docSide = estep.filter($"isDoc").toDF()
-
-      // M-step + likelihood + alpha sufficient statistics — the same
-      // two-checkpoint-by-size-class shape as graft.lda.Trainer: broadcast
-      // mode collects the fused rows; shuffle mode materializes (1) the
-      // MODEL-sized packed per-language beta + k-row ll/alpha stats here
-      // and (2) the CORPUS-sized gamma rotation below, both reading the
-      // one cached E-step. Keeping the doc side out of (1) means the
-      // per-iteration beta scans never re-read corpus blocks; both
-      // checkpoints truncate lineage.
-      var betaRowsDriver: Seq[(Int, Int, Int, Double)] = Nil // broadcast mode
-      var fused: Option[DataFrame] = None                    // shuffle mode
-      val prevBetaTable = betaTable
-      val (ll, ss) = if (useShuffleEStep) {
-        val nullInt = lit(null).cast("int")
-        val nullDouble = lit(null).cast("double")
-        val nullArr = lit(null).cast("array<double>")
-        val packed = packBeta(mstep(explodePhi(estep.toDF())))
-        val fusedDf = packed
-          .select(lit(0).as("tag"), $"lang", $"termId", $"elogbeta",
-            nullDouble.as("ll"), nullInt.as("k"), nullDouble.as("ss"))
-          .unionByName(MStep.llAndAlphaStatsRows(docSide)
-            .select(lit(2).as("tag"), nullInt.as("lang"), nullInt.as("termId"),
-              nullArr.as("elogbeta"), $"llsum".as("ll"), $"k", $"ss"))
-          .ckptSer()
-        fused = Some(fusedDf)
-        betaTable = fusedDf.filter($"tag" === 0).select($"lang", $"termId", $"elogbeta")
-        val statsRows = fusedDf.filter($"tag" === 2).select($"k", $"ss", $"ll").collect()
-        val ssArr = new Array[Double](k)
-        var llSum = 0.0
-        statsRows.foreach { r =>
-          val kk = r.getInt(0)
-          ssArr(kk) = r.getDouble(1)
-          if (kk == 0) llSum = r.getDouble(2)
-        }
-        (llSum, ssArr)
-      } else {
-        val (llF, ssF, lambda) = splitFused(
-          fusedIterationRows(estep.toDF()).collect(), k)
-        val (betaMap, rows) = finishBetaOnDriver(lambda, k)
-        beta = betaMap
-        betaRowsDriver = rows
-        (llF, ssF)
-      }
-      if (cfg.updateAlpha) {
-        alpha = AlphaUpdate.updateVectorAlpha(k, numDocs, alpha, ss)
-      }
-      history = ll :: history
-
-      // convergence decided here so an early-converging run still snapshots
-      // its final state (see Trainer)
-      val willConverge = (iter > startIter || cfg.resumeFrom.isDefined) &&
-        math.abs((ll - lastLL) / lastLL) <= cfg.convergence
-      val doSnapshot = doCheckpoint || (cfg.checkpointDir.isDefined && willConverge)
-
-      // snapshots share the vanilla layout; beta-<i> keeps its lang column
-      // (the reference writes one beta_lang<l>-<i> file per language —
-      // here one partitionable table)
-      if (doSnapshot) {
-        val dir = cfg.checkpointDir.get
-        graft.lda.LdaCheckpoint.saveAlpha(spark, dir, snapIdx, alpha)
-        // shuffle mode: unpack (lang, topic, termId, elogbeta) rows from
-        // the materialized packed table (array position p ↔ topic p+1;
-        // packBeta sorts by topic and the E-step emits every topic 1..k)
-        val snapshotBeta = fused match {
-          case Some(f) =>
-            f.filter($"tag" === 0)
-              .select($"lang", $"termId", posexplode($"elogbeta").as(Seq("pos", "v")))
-              .select($"lang", ($"pos" + 1).as("topic"), $"termId", $"v".as("elogbeta"))
-          case None => betaRowsDriver.toDF("lang", "topic", "termId", "elogbeta")
-        }
-        snapshotBeta.select($"lang", $"topic", $"termId", $"elogbeta")
-          .write.mode("overwrite").parquet(s"$dir/beta-$snapIdx")
-        graft.lda.LdaCheckpoint.saveGamma(
-          docSide.select($"docId", $"counts", $"numTokens", $"totalTokens", $"gamma"),
-          dir, snapIdx)
-        graft.lda.LdaCheckpoint.saveState(spark, dir, snapIdx, history.reverse)
-      }
-
-      // doc side carries the full document — next corpus is a projection
-      if (!cfg.randomStartGamma) {
-        val nextCorpus =
-          if (doSnapshot) {
-            graft.lda.LdaCheckpoint.loadGamma(spark, cfg.checkpointDir.get, snapIdx)
-              .select($"docId", $"counts", $"numTokens", $"totalTokens", $"gamma")
-              .as[PolyDoc]
-              .persist(StorageLevel.MEMORY_AND_DISK)
-          } else {
-            // both modes: eager localCheckpoint over the cached E-step —
-            // in shuffle mode this is checkpoint (2) of the split
-            docSide
-              .select($"docId", $"counts", $"numTokens", $"totalTokens", $"gamma")
-              .as[PolyDoc]
-              .ckptSer()
-          }
-        corpus.unpersist()
-        corpus = nextCorpus
-      }
-
-      estep.unpersist()
-      if (useShuffleEStep) prevBetaTable.unpersist()
-      alphaBc.destroy()
-      betaBc.foreach(_.destroy())
-
-      converged = willConverge
-      lastLL = ll
-      iter += 1
-    }
-    explodedShuffle.foreach(_.unpersist(blocking = false))
-
-    // shuffle mode materializes the driver-side map only once at the end
-    if (useShuffleEStep) {
-      val rows = betaTable.select($"lang", $"termId", $"elogbeta")
-        .as[(Int, Int, Seq[Double])].collect()
-      beta = rows.groupBy(_._1).map { case (l, rs) =>
-        val langMap: scala.collection.Map[Int, Array[Double]] =
-          rs.map { case (_, w, arr) => w -> arr.toArray }.toMap
-        l -> langMap
-      }
-    }
-
-    PolyLdaModel(k, numTermsPerLang, alpha, beta, lastLL, iter, history.reverse)
+    PolyLdaModel(cfg.numTopics, numTermsPerLang, fit.alpha, beta, fit.logLikelihood,
+      fit.iterations, fit.llHistory)
   }
 
   /** Held-out inference with a frozen polylingual model (map-only,
     * reference: training=false path of polylda/VariationalInference.java). */
   def infer(docs: Dataset[PolyDoc], model: PolyLdaModel, localIterations: Int = 100,
       seed: Long = 42L): (DataFrame, Double) = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val out = PolyEStep.run(docs,
-      spark.sparkContext.broadcast(model.alpha),
-      spark.sparkContext.broadcast(model.beta),
-      model.numTermsPerLang, localIterations, randomStartGamma = false,
-      learning = false, seed = seed)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val gamma = out.filter($"isDoc").select($"docId", $"gamma")
-    val ll = out.filter($"isDoc").agg(sum($"ll")).as[Double].head()
-    (gamma, ll)
+    val betaBc = docs.sparkSession.sparkContext.broadcast(model.beta)
+    EmCore.infer(docs, PolyDocs, model.alpha, lookup(betaBc),
+      vocab(model.numTermsPerLang), localIterations, seed)
   }
 
   /** Top-k terms per (language, topic) — the polylingual DisplayTopic

@@ -352,7 +352,7 @@ object LdaPlantedOracle {
    * The polylingual twin ([[graft.polylda.PolyPlantedLda]]): language =
    * word < 'n' split, per-language vocabularies and betas, shared
    * gamma; M-step is the polylda reducer's — NO eta smoothing, log
-   * lambda floored at -700 (PolyTrainer.mstep) — replayed per
+   * lambda floored at -700 (EmCore.Smoothing.floor) — replayed per
    * (lang, topic, term).
    */
   def polySql(k: Int = 2, vocabPerLang: Int = 10, maxDocId: Long = 30,

@@ -102,7 +102,7 @@ object PolyldaQueries {
       None),
 
     /** The same polylingual training through the SHUFFLE-JOIN E-step
-      * (PolyEStepShuffle — per-language beta-as-table, the Σ_l K×V_l
+      * (per-language beta-as-table, the Σ_l K×V_l
       * scale path), forced via betaBroadcastMaxEntries = 0. Benched so
       * the poly scale path has a timed row (the poly twin of
       * lda_top_terms_shuffle); path parity with the broadcast E-step is
@@ -130,7 +130,7 @@ object PolyldaQueries {
       Some(LdaPlantedOracle.polySql())),
 
     /** Same planted trajectory through the polylingual SHUFFLE-JOIN
-      * E-step (PolyEStepShuffle, the per-language beta-as-table scale
+      * E-step (the per-language beta-as-table scale
       * path) — identical oracle by anchored path-independence. */
     "q_polylda_planted_em_shuffle" -> QueryDef(
       (s, dir) => PolyPlantedLda.run(s, dir,

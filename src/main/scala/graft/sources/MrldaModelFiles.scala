@@ -214,11 +214,9 @@ object MrldaModelFiles {
     require(betaPathsByLang.nonEmpty,
       "betaPathsByLang is empty — no beta_lang<l> files matched; check the model path/glob")
     graft.lda.LdaCheckpoint.saveAlpha(spark, outDir, iter, readAlpha(spark, alphaPath))
-    betaPathsByLang.zipWithIndex
+    graft.lda.LdaCheckpoint.saveBeta(betaPathsByLang.zipWithIndex
       .map { case (p, lang) => readBeta(spark, p).withColumn("lang", lit(lang)) }
-      .reduce(_.unionByName(_))
-      .select(col("lang"), col("topic"), col("termId"), col("elogbeta"))
-      .write.mode("overwrite").parquet(s"$outDir/beta-$iter")
+      .reduce(_.unionByName(_)), outDir, iter)
     corpusPath.foreach { cp =>
       graft.lda.LdaCheckpoint.saveGamma(
         MrldaSequenceFile.readPolyDocs(spark, cp).toDF()

@@ -120,6 +120,45 @@ class PolyldaSpec extends SparkSpec {
     }
   }
 
+  test("a document with no language slots trains alike on both beta paths") {
+    // the shuffle path keeps it through the explode_outer sentinel, the
+    // broadcast path as an empty term list. Beta is checked for
+    // finiteness only: the eta-free M-step's E[log β] = ψ(λ) − ψ(Σλ) is
+    // ≈ −1/λ for the tiny λ this corpus leaves some (lang, topic, term)
+    // entries, so the paths' different partition folds can put those
+    // entries far apart in absolute terms
+    val r = PolyParseCorpus.run(corpus, PolyParseCorpus.Config(numLanguages = 2))
+    val numTerms = r.terms.collect().groupBy(_.lang).map { case (l, ts) => l -> ts.length }
+    val docs = r.docs.union(Seq(graft.model.PolyDoc(99L, Map.empty, Map.empty, 0L, None)).toDS())
+    val base = PolyTrainer.Config(numTopics = 2, maxIterations = 3, localIterations = 15,
+      seed = 3L, convergence = 0.0)
+    def trainTo(cfg: PolyTrainer.Config) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_poly_nolang_").toString
+      val m = PolyTrainer.train(docs, numTerms, cfg.copy(checkpointDir = Some(dir)))
+      val gamma = graft.lda.LdaCheckpoint.loadGamma(spark, dir, 3)
+        .select($"docId", $"gamma").as[(Long, Array[Double])].collect().toMap
+      (m, gamma)
+    }
+    val (broadcastM, broadcastG) = trainTo(base)
+    val (shuffleM, shuffleG) = trainTo(base.copy(betaBroadcastMaxEntries = 0L))
+    assert(broadcastM.llHistory.length == 3 && shuffleM.llHistory.length == 3)
+    broadcastM.llHistory.zip(shuffleM.llHistory).foreach { case (a, b) =>
+      assert(!a.isNaN && !a.isInfinite && math.abs((a - b) / a) < 1e-8,
+        s"LL drift between paths: $a vs $b") }
+    broadcastM.alpha.zip(shuffleM.alpha).foreach { case (a, b) =>
+      assert(a > 0 && math.abs((a - b) / a) < 1e-6, s"alpha drift between paths: $a vs $b") }
+    assert(broadcastG.keySet == shuffleG.keySet && broadcastG.contains(99L))
+    broadcastG.foreach { case (d, g) =>
+      g.zip(shuffleG(d)).foreach { case (a, b) =>
+        assert(math.abs((a - b) / a) < 1e-8, s"gamma drift doc=$d: $a vs $b") }
+    }
+    assert(broadcastM.beta.keySet == shuffleM.beta.keySet)
+    Seq(broadcastM, shuffleM).foreach(_.beta.foreach { case (l, tm) =>
+      tm.foreach { case (w, arr) =>
+        assert(arr.forall(v => !v.isNaN && !v.isInfinite && v <= 0), s"beta lang=$l term=$w") }
+    })
+  }
+
   test("polylingual train 2 + resume 2 ≡ train 4 straight") {
     val r = PolyParseCorpus.run(corpus, PolyParseCorpus.Config(numLanguages = 2))
     val numTerms = r.terms.collect().groupBy(_.lang).map { case (l, ts) => l -> ts.length }
