@@ -1,30 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line (driver contract). */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE size partitions INSIDE cached plans by bytes instead of
-      // freezing them at spark.sql.shuffle.partitions as of cache time
-      // (r16): the EM trainers iterate over persisted corpora whose
-      // cache otherwise carries `cpus` near-empty partitions through
-      // every iteration — task count is data-sized either way now, at
-      // sf0.1 and at 100 TB. A/B on the three LDA bench rows (min-of-2,
-      // alternated same-window): 13.3→8.7 / 18.6→11.9 / 15.2→11.8 s;
-      // tasks 1358→91, executor CPU 36→7 s, GC 15→1 s per row.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-bench", GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // warm the JVM/codegen on the smallest SF — run every headline query

@@ -18,6 +18,9 @@ import org.apache.spark.sql.SparkSession
  *     DuckDB oracles assume it).
  *   - `GraftExtensions` installed: the library's SQL functions and the
  *     opt-in range-join binning rule are available on every session.
+ *
+ * Every session in the library, its tools (Bench, Verify, PlanProfile,
+ * ScaleRehearsal, the CLI) and its test suites is built here.
  */
 object GraftSession {
 
@@ -36,8 +39,13 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.GraftExtensions")
 
+  /** Cores for the local tools: `SPARK_GRAFT_CPUS`, or every core of the
+    * host. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   /** Local session for tests/tools: `local[n]` master on top of the same
     * tuned defaults. */
-  def local(appName: String = "graft", cores: Int = 4): SparkSession =
+  def local(appName: String, cores: Int): SparkSession =
     builder(appName, cores).master(s"local[$cores]").getOrCreate()
 }

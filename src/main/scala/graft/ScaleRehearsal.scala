@@ -54,16 +54,7 @@ object ScaleRehearsal {
     if (args.contains("notchLp")) { notchLp(); return }
     // brand-comparison pair-generation shape at sf1 (r16, VERDICT item 6)
     if (args.contains("notchBrand")) { notchBrand(); return }
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scale-rehearsal")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-scale-rehearsal")
     import spark.implicits._
 
     generateSf1(spark, sf01, sf1Dir)
@@ -105,6 +96,14 @@ object ScaleRehearsal {
     spark.stop()
   }
 
+  /** The library session on `GraftSession.cpus` cores, WARN logging. The
+    * committed ratios were measured with SPARK_GRAFT_CPUS=32. */
+  private def session(appName: String): SparkSession = {
+    val spark = GraftSession.local(appName, GraftSession.cpus)
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Second notch: q_pagerank at sf0.1/sf1/sf3 and the video-pHash
     * path at 100/1000/3000 videos. Prints per-hop ratios — a linear
     * plan shows hop-2 ratio ≈ 3 (sf1→sf3 is 3× data); superlinear
@@ -112,16 +111,7 @@ object ScaleRehearsal {
     * see) shows as a hop-2 ratio well above its data ratio. */
   private def notch2(sf01: String, sf1Dir: String): Unit = {
     val sf3Dir = sys.env.getOrElse("SPARK_GRAFT_SF3_DIR", "target/sf3")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scale-rehearsal-notch2")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-scale-rehearsal-notch2")
     import spark.implicits._
     generate(spark, sf01, sf1Dir, 10, Set("orders", "lineitem"))
     generate(spark, sf01, sf3Dir, 30, Set("orders", "lineitem"))
@@ -148,16 +138,7 @@ object ScaleRehearsal {
 
   private def notch3(sf01: String, sf1Dir: String): Unit = {
     val sf3Dir = sys.env.getOrElse("SPARK_GRAFT_SF3_DIR", "target/sf3")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scale-rehearsal-notch3")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-scale-rehearsal-notch3")
     // both rows read only `documents`; the 30-copy bijective token
     // rename keeps per-copy dedup/EM structure exact while growing the
     // vocabulary 30x — the hard direction for the shuffle-EM beta table
@@ -229,16 +210,7 @@ object ScaleRehearsal {
     *      (1 exchange, combined rows — the pre-aggregate candidate)
     * Output equality is asserted by checksum before any timing counts. */
   private def notchLp(): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scale-rehearsal-lp")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-scale-rehearsal-lp")
     import spark.implicits._
     import graft.util.Ckpt._
     import org.apache.spark.sql.DataFrame
@@ -339,19 +311,10 @@ object ScaleRehearsal {
     * copies. Both shapes end in the same wins aggregate; equality is
     * checksum-gated before timing. */
   private def notchBrand(): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val sf01 = "/root/testdata/sf0.1"
     val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "target/sf1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-rehearsal-brand")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-scale-rehearsal-brand")
     import spark.implicits._
     generate(spark, sf01, sf1Dir, 10, Set("lineitem"))
 
@@ -427,16 +390,7 @@ object ScaleRehearsal {
   }
 
   private def notchWebm(): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scale-rehearsal-webm")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-scale-rehearsal-webm")
     webmRun(spark, 20) // warm codegen + classloading
     val a = timedMin2(spark, "webm_ingest[100]", None)(webmRun(spark, 100))
     val b = timedMin2(spark, "webm_ingest[1000]", None)(webmRun(spark, 1000))

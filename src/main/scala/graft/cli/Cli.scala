@@ -1,5 +1,6 @@
 package graft.cli
 
+import graft.GraftSession
 import graft.corpus.ParseCorpus
 import graft.lda.{Display, InformedPrior, LdaCheckpoint, Trainer}
 import graft.model.{Doc, TermEntry}
@@ -63,11 +64,8 @@ object Args {
     val existing = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .filterNot(_.sparkContext.isStopped)
     val s = existing.getOrElse {
-      val created = SparkSession.builder()
+      val created = GraftSession.builder(name)
         .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-        .appName(name)
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
         .getOrCreate()
       created.sparkContext.setLogLevel("WARN")
       created

@@ -69,14 +69,4 @@ object gfunctions {
   def trigamma(c: Column): Column = shim.toColumn(Trigamma(dbl(c)))
   def lgamma(c: Column): Column = shim.toColumn(LogGammaExpr(dbl(c)))
   def log_add(a: Column, b: Column): Column = shim.toColumn(LogAdd(dbl(a), dbl(b)))
-
-  /** Register the SQL names (digamma, trigamma, lgamma, log_add) on a session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def c(e: Expression): Expression = Cast(e, DoubleType)
-    reg.createOrReplaceTempFunction("digamma", es => Digamma(c(es.head)), "scala_udf")
-    reg.createOrReplaceTempFunction("trigamma", es => Trigamma(c(es.head)), "scala_udf")
-    reg.createOrReplaceTempFunction("lgamma", es => LogGammaExpr(c(es.head)), "scala_udf")
-    reg.createOrReplaceTempFunction("log_add", es => LogAdd(c(es(0)), c(es(1))), "scala_udf")
-  }
 }

@@ -90,8 +90,13 @@ case class RangeJoinBinRewrite(spark: SparkSession)
       // containment predicate, and sequence(start, stop) would throw where
       // the original non-equi join just produced no match
       val wellFormed = Filter(LessThanOrEqual(lo, hi), intervalSide)
+      // the time zone is set here because the analyzer that would fill it
+      // in does not run again on the optimizer's output; without it the
+      // sequence stays unresolved and plan validation fails the query
+      val bins = Sequence(binOf(lo), binOf(hi), Some(Literal(1L)),
+        Some(conf.sessionLocalTimeZone))
       val gen = Generate(
-        Explode(Sequence(binOf(lo), binOf(hi), Some(Literal(1L)), None)),
+        Explode(bins),
         unrequiredChildIndex = Nil, outer = false, qualifier = None,
         generatorOutput = Seq(binIAttr), child = wellFormed)
 

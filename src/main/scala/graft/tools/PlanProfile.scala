@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.shim
 
 /**
  * Optimization-round measurement harness (guide §1): for each named bench
@@ -20,15 +20,9 @@ object PlanProfile {
     val sfDir = args(0)
     val outDir = args(1)
     val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var builder = SparkSession.builder()
+    val cpus = graft.GraftSession.cpus
+    var builder = graft.GraftSession.builder("graft-planprofile", cpus)
       .master(s"local[$cpus]")
-      .appName("graft-planprofile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // A/B experiment hook: SPARK_GRAFT_EXTRA_CONF="k1=v1,k2=v2" lets a
     // config candidate be profiled without editing the Bench contract
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { s =>
@@ -86,10 +80,10 @@ object PlanProfile {
           java.nio.file.Paths.get(outDir, s"$name.txt"),
           df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode))
-        // listener-bus events are asynchronous: give the final stages'
-        // onStageCompleted a moment to land before aggregating, so late
-        // events are neither dropped nor attributed to the next label
-        Thread.sleep(400)
+        // listener-bus events are asynchronous: deliver every stage event
+        // posted so far before aggregating, so late events are neither
+        // dropped nor attributed to the next label
+        shim.drainListenerBus(spark, 10000)
         val mine = stages.toArray(Array.empty[(String, Long, Long, Long, Long, Long, Long)])
           .filter(_._1 == name)
         val runMs = mine.map(_._2).sum

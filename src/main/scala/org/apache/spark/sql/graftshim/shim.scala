@@ -23,6 +23,12 @@ object shim {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Block until every listener-bus event posted so far has reached every
+    * listener (`listenerBus` is private[spark]); throws a
+    * TimeoutException after `timeoutMs`. */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession, timeoutMs: Long): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
+
   /** Register a function into an EXISTING session's registry (the
     * `spark.sql.extensions` path only applies at session construction;
     * `sessionState` is private[sql], hence here). */

@@ -1,10 +1,28 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, Paths}
 
-/** The tuned session builder: configs land, extensions register. */
-class GraftSessionSpec extends AnyFunSuite {
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.SparkSession
+
+/** The tuned session builder: configs land, extensions register, and it is
+  * the only builder the library and its suites use. */
+class GraftSessionSpec extends SparkSpec {
+
+  private val MaxPartitionBytes = (256L * 1024 * 1024).toString
+
+  test("the suites' session carries the tuned defaults and the SQL functions") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.conf.get("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
+    assert(spark.conf.get("spark.sql.files.maxPartitionBytes") == MaxPartitionBytes)
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    // the functions come from the session's extensions, not from
+    // GraftExtensions.register: a new session on the same context starts
+    // from the extensions alone, whatever earlier suites registered
+    val d = spark.newSession().sql("SELECT digamma(2.5) AS d").head().getDouble(0)
+    assert(d == graft.functions.GammaFuncs.digamma(2.5))
+  }
 
   test("local session carries the tuned defaults and the SQL functions") {
     // spark.sql.extensions is a static conf — getOrCreate would silently
@@ -17,7 +35,9 @@ class GraftSessionSpec extends AnyFunSuite {
     try {
       assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
       assert(spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
+      assert(spark.conf.get("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
       assert(spark.conf.get("spark.sql.shuffle.partitions") == "8")
+      assert(spark.conf.get("spark.sql.files.maxPartitionBytes") == MaxPartitionBytes)
       assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
       // extensions installed at construction: graft SQL functions resolve
       val d = spark.sql("SELECT digamma(2.5) AS d").head().getDouble(0)
@@ -29,5 +49,20 @@ class GraftSessionSpec extends AnyFunSuite {
       val rules = spark.sessionState.optimizer.extendedOperatorOptimizationRules
       assert(rules.exists(_.getClass.getName.contains("RangeJoinBinRewrite")), rules.map(_.getClass.getName))
     } finally spark.stop()
+  }
+
+  test("no session builder outside GraftSession.scala (source gate)") {
+    val builderCall = """SparkSession\s*\.\s*builder\b""".r
+    val offenders = Seq("src/main/scala", "src/test/scala").flatMap { dir =>
+      Files.walk(Paths.get(dir)).iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filterNot(_.getFileName.toString == "GraftSession.scala")
+        .flatMap { p =>
+          new String(Files.readAllBytes(p), "UTF-8").linesIterator.zipWithIndex
+            .collect { case (line, i) if builderCall.findFirstIn(line).nonEmpty => s"$p:${i + 1}" }
+        }
+    }
+    assert(offenders.isEmpty,
+      s"build sessions with GraftSession.local or GraftSession.builder: $offenders")
   }
 }

@@ -51,6 +51,25 @@ class RangeJoinBinRewriteSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.rangeJoin.binWidth")
   }
 
+  test("the session's injected rule bins a range join run directly") {
+    val (points, intervals) = data
+    val cond = intervals("lo") <= points("pt") && points("pt") <= intervals("hi")
+    val expected = points.join(intervals, cond)
+      .select($"pid", $"iid").as[(Long, Long)].collect().toSet
+
+    spark.conf.set("spark.graft.rangeJoin.binWidth", "64")
+    try {
+      // no manual rule call: the session's own optimizer applies it
+      val out = points.join(intervals, cond)
+      assert(out.queryExecution.optimizedPlan.toString.contains("__graft_bin"),
+        "the injected rule should have introduced bin columns")
+      assert(out.select($"pid", $"iid").as[(Long, Long)].collect().toSet == expected)
+      assert(expected.nonEmpty)
+      val physical = out.queryExecution.executedPlan.toString
+      assert(!physical.contains("NestedLoop"), physical.take(500))
+    } finally spark.conf.unset("spark.graft.rangeJoin.binWidth")
+  }
+
   test("rewrite applies without any equi key (pure interval join)") {
     val (points, intervals) = data
     val j = points.join(intervals,

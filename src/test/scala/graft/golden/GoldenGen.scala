@@ -52,13 +52,8 @@ object GoldenGen {
     val dir = if (args.nonEmpty) args(0) else SfDir
     val out = Paths.get("src/test/resources/golden")
     Files.createDirectories(out)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-golden-gen")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the test session's setup, so regenerated goldens match the suites
+    val spark = graft.GraftSession.local("graft-golden-gen", cores = 4)
     try {
       Queries.foreach { case (name, file) =>
         val lines = render(spark, name, dir)
