@@ -1,8 +1,9 @@
 package graft.corpus
 
 import graft.model.{CorpusStats, Doc, TermEntry, TitleEntry}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -16,10 +17,17 @@ import org.apache.spark.storage.StorageLevel
  * Catalyst supplies partial aggregation, predicate pushdown, and column
  * pruning that the reference hand-wired with combiners and custom key types.
  *
+ * The plan is the one parse core ([[parse]]) for both topic models, the way
+ * Mr.LDA's polylda parser generalizes the vanilla one: it works on
+ * (docId, lang, text) rows, and vanilla parsing is polylingual parsing with
+ * every document in language 0. [[graft.polylda.PolyParseCorpus]] is only
+ * the per-language fan-out in front of it and the regrouping behind it.
+ *
  * Scale posture (100 TB): the only global sort is the dictionary ranking
  * over the *aggregated* term table (size = |V|, not corpus size); it uses
- * sort + zipWithIndex rather than the reference's single-reducer ranking
- * (ParseCorpus.java:475-490) so no single task sees the whole vocabulary.
+ * sort + per-partition offsets rather than the reference's single-reducer
+ * ranking (ParseCorpus.java:475-490) so no single task sees the whole
+ * vocabulary.
  */
 object ParseCorpus {
 
@@ -199,22 +207,74 @@ object ParseCorpus {
     result
   }
 
-  /** Parse a (docId, title, text) DataFrame (e.g. the `documents` table). */
+  /** Parse a (docId, title, text) DataFrame (e.g. the `documents` table):
+    * the parse core with every document in language 0. */
   def run(input: DataFrame, cfg: Config = Config()): Result = {
     val spark = input.sparkSession
     import spark.implicits._
-
     val base = input.select($"docId".cast("long"), $"title", $"text")
-    val numDocsTotal = base.count()
+    val p = parse(base.select($"docId", lit(0).as("lang"), $"text"), numLanguages = 1, cfg,
+      Shapes[Doc, TermEntry](
+        _.select($"docId", $"langCounts".as("counts"), $"langTokens".as("numTokens"),
+          lit(null).cast("array<double>").as("gamma")).as[Doc],
+        _.select($"termId", $"term", $"df", $"tf").as[TermEntry],
+        _.select(lit(0).as("lang"), $"termId", $"term")))
+    Result(p.docs, p.terms, base.select($"docId", $"title").as[TitleEntry],
+      CorpusStats(p.numDocs, p.numTerms, p.docsPerLanguage.sum - p.numDocs, p.lowDf, p.highDf))
+  }
+
+  /** How one model reads the parse core's rows back: (docId, lang,
+    * langCounts, langTokens) rows → its documents, (lang, termId, term, df,
+    * tf) rows → its dictionary, and that dictionary → the (lang, termId,
+    * term) rows the encode joins. */
+  private[graft] final case class Shapes[D, T](
+      docs: DataFrame => Dataset[D],
+      terms: DataFrame => Dataset[T],
+      encodeKeys: Dataset[T] => DataFrame)
+
+  /** The parse core's output: the shaped documents and dictionary, both
+    * persisted and computed, and the pipeline's counters. */
+  private[graft] final case class Parsed[D, T](
+      docs: Dataset[D],
+      numDocs: Long,
+      terms: Dataset[T],
+      numTerms: Long,
+      /** input rows per language, 0 until numLanguages */
+      docsPerLanguage: Seq[Long],
+      lowDf: Long,
+      highDf: Long)
+
+  /**
+   * The one parse core. Input: (docId, lang, text) rows, lang in
+   * [0, numLanguages), one row per (document, language). Output, through
+   * the caller's [[Shapes]]: (docId, lang, langCounts, langTokens) rows — a
+   * document's count map and token total in one language, for every
+   * (document, language) with a term left — and the (lang, termId, term,
+   * df, tf) dictionary with ids dense and 1-based within each language.
+   * The df band is a fraction of each language's document count (reference
+   * polylda/ParseCorpus.java:242-245; with one language it is the vanilla
+   * corpus-wide rule, ParseCorpus.java:455-467).
+   */
+  private[graft] def parse[D, T](input: DataFrame, numLanguages: Int, cfg: Config,
+      shapes: Shapes[D, T]): Parsed[D, T] = {
+    val spark = input.sparkSession
+    import spark.implicits._
+
+    // documents per language: one aggregate with no grouping (count, so
+    // zero input rows give 0, not null; a constant lang folds to count(1))
+    val docsPerLanguage = {
+      val r = input.select((0 until numLanguages).map(l => count(when($"lang" === l, 1))): _*).head()
+      (0 until numLanguages).map(r.getLong)
+    }
 
     // P1-P5: tokenize (pluggable analyzer or regex split), optional
-    // lowercase, stopword filter, per-doc tf
+    // lowercase, stopword filter, per-(doc, language) tf
     val rawTok = (cfg.analyzer match {
       case Some(an) =>
         val tokenize = udf((text: String) => if (text == null) Seq.empty[String] else an(text))
-        base.select($"docId", explode(tokenize($"text")).as("term"))
+        input.select($"docId", $"lang", explode(tokenize($"text")).as("term"))
       case None =>
-        base.select($"docId",
+        input.select($"docId", $"lang",
           explode(split(if (cfg.lowercase) lower($"text") else $"text",
             cfg.tokenSplitPattern)).as("term"))
     })
@@ -223,72 +283,65 @@ object ParseCorpus {
       val sw = cfg.stopwords.toDF("term")
       rawTok.join(broadcast(sw), Seq("term"), "left_anti")
     } else rawTok)
-      .groupBy($"docId", $"term").agg(count(lit(1)).as("cnt"))
+      .groupBy($"docId", $"lang", $"term").agg(count(lit(1)).as("cnt"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // A1: per-term document frequency / collection frequency
-    val termAgg = tokens.groupBy($"term")
-      .agg(count(lit(1)).as("df"), sum($"cnt").as("tf"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // P6: df band filter (fractions of corpus size, ParseCorpus.java:455-467).
-    // With the default full-width band this is a no-op — skip the filter and
-    // the counter job entirely. Otherwise both band counters come from ONE
-    // aggregation pass instead of two filter+count jobs.
-    val lo = cfg.minDfFraction * numDocsTotal
-    val hi = cfg.maxDfFraction * numDocsTotal
+    // A1/A2: per-(language, term) document frequency / collection frequency;
+    // cached only when the band counters below read it a second time
     val banding = cfg.minDfFraction > 0.0 || cfg.maxDfFraction < 1.0
+    val termAgg = tokens.groupBy($"lang", $"term")
+      .agg(count(lit(1)).as("df"), sum($"cnt").as("tf"))
+    if (banding) termAgg.persist(StorageLevel.MEMORY_AND_DISK)
+
+    // P6: df band filter, bounds per language. With the default full-width
+    // band this is a no-op — skip the filter and the counter job entirely.
+    // Otherwise both band counters come from ONE aggregation pass.
+    def bound(fraction: Double): Column =
+      element_at(typedLit(docsPerLanguage.map(fraction * _)), $"lang" + 1)
+    val lo = bound(cfg.minDfFraction)
+    val hi = bound(cfg.maxDfFraction)
     val banded = if (banding) termAgg.filter($"df" >= lo && $"df" <= hi) else termAgg
     val (lowDf, highDf) = if (banding) {
-      val r = termAgg.agg(
-        sum(when($"df" < lo, 1L).otherwise(0L)).as("lo"),
-        sum(when($"df" > hi, 1L).otherwise(0L)).as("hi")).head()
-      (r.getAs[Long]("lo"), r.getAs[Long]("hi"))
+      val r = termAgg.agg(count_if($"df" < lo), count_if($"df" > hi)).head()
+      (r.getLong(0), r.getLong(1))
     } else (0L, 0L)
 
-    // O1: dense 1-based ranking by (df desc, tf desc, term asc — the term
-    // tiebreak makes the dictionary deterministic where the reference
-    // depended on shuffle order)
-    val (rankedTerms, termRankCache) =
-      rankByIndexWithCache(banded, Seq($"df".desc, $"tf".desc, $"term".asc), "termId")
-    val terms = rankedTerms
-      .select($"termId".cast("int").as("termId"), $"term", $"df", $"tf")
-      .as[TermEntry]
+    // O1/O3: dense 1-based ranking within each language by (df desc, tf
+    // desc, term asc — the term tiebreak makes the dictionary deterministic
+    // where the reference depended on shuffle order)
+    val (rankedTerms, termRankCache) = rankByIndexWithCache(banded,
+      Seq($"df".desc, $"tf".desc, $"term".asc), "termId", group = Some("lang"))
+    val terms = shapes.terms(rankedTerms.select($"lang", $"termId".cast("int").as("termId"),
+        $"term", $"df", $"tf"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val numTerms = terms.count() // materializes terms → rank cache droppable
     termRankCache.unpersist()
 
-    // J1/P7: dictionary-encode; broadcast for any realistic vocabulary
-    // (a few hundred MB — beyond `dictBroadcastMaxTerms` drop the hint and
-    // let AQE pick a shuffle join)
-    val dict = terms.select($"termId", $"term")
+    // J1/P7: dictionary-encode on (term, lang); broadcast for any realistic
+    // vocabulary (a few hundred MB — beyond `dictBroadcastMaxTerms` drop the
+    // hint and let AQE pick a shuffle join)
+    val dict = shapes.encodeKeys(terms)
     val encoded = tokens
-      .join(if (numTerms <= cfg.dictBroadcastMaxTerms) broadcast(dict) else dict, "term")
-      .groupBy($"docId")
+      .join(if (numTerms <= cfg.dictBroadcastMaxTerms) broadcast(dict) else dict, Seq("term", "lang"))
+      .groupBy($"docId", $"lang")
       .agg(
-        map_from_entries(array_sort(collect_list(struct($"termId", $"cnt".cast("int"))))).as("counts"),
-        sum($"cnt").as("numTokens"))
-      .select($"docId", $"counts", $"numTokens", lit(null).cast("array<double>").as("gammaRaw"))
-
-    val docs = encoded
-      .select($"docId", $"counts", $"numTokens",
-        $"gammaRaw".as("gamma"))
-      .as[Doc]
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val encodedCount = docs.count()
-
-    val titles = base.select($"docId", $"title").as[TitleEntry]
+        map_from_entries(array_sort(collect_list(struct($"termId", $"cnt".cast("int"))))).as("langCounts"),
+        sum($"cnt").as("langTokens"))
+    val docs = shapes.docs(encoded).persist(StorageLevel.MEMORY_AND_DISK)
+    val numDocs = docs.count()
 
     tokens.unpersist()
     termAgg.unpersist()
-    Result(docs, terms, titles,
-      CorpusStats(encodedCount, numTerms, numDocsTotal - encodedCount, lowDf, highDf))
+    Parsed(docs, numDocs, terms, numTerms, docsPerLanguage, lowDf, highDf)
   }
 
   /**
    * Dense 1-based ranking without a single-partition window: global sort
    * (range-partitioned shuffle), then per-partition offsets. Deterministic
-   * given a total ordering.
+   * given a total ordering. With a `group` column the ids are dense and
+   * 1-based within each group value (the sort then leads with the group, so
+   * a group's rows are contiguous in every partition); the group column
+   * must not be null.
    *
    * Stays in Tungsten end to end (the old shape dropped to
    * `rdd.zipWithIndex` + `createDataFrame`, paying InternalRow↔Row
@@ -299,14 +352,15 @@ object ParseCorpus {
    * projection see identical partitions (two separate executions of an
    * orderBy may sample different boundaries; a cached plan re-reads — or
    * on eviction recomputes through the same exchange, whose shuffle
-   * output is reused). The per-partition local index comes from
-   * `monotonically_increasing_id` (partition id in the top 31 bits,
-   * consecutive local index in the low 33 — partitions are capped at
-   * 2^33 rows, far past any sane partition), and the offset join
-   * broadcasts one row per partition — same role as zipWithIndex's
-   * internal count job, minus the row conversions.
+   * output is reused). The local index comes from
+   * `monotonically_increasing_id`, consecutive within a partition. One
+   * collect counts the rows and takes the first id per (partition, group);
+   * a row's id is then the group's rows in earlier partitions + its id −
+   * that first id + 1, joined from a broadcast table of one row per
+   * (partition, group) — same role as zipWithIndex's internal count job,
+   * minus the row conversions.
    */
-  private[graft] def rankByIndex(df: DataFrame, order: Seq[org.apache.spark.sql.Column],
+  private[graft] def rankByIndex(df: DataFrame, order: Seq[Column],
       idName: String): DataFrame =
     rankByIndexWithCache(df, order, idName)._1
 
@@ -316,22 +370,28 @@ object ParseCorpus {
     * cleanup). Unpersisting is determinism-safe: an eviction-triggered
     * recompute replays the same physical exchange and reuses its shuffle
     * output, so partitions — and therefore the assigned ids — repeat. */
-  private[graft] def rankByIndexWithCache(df: DataFrame,
-      order: Seq[org.apache.spark.sql.Column], idName: String): (DataFrame, DataFrame) = {
+  private[graft] def rankByIndexWithCache(df: DataFrame, order: Seq[Column], idName: String,
+      group: Option[String] = None): (DataFrame, DataFrame) = {
     val spark = df.sparkSession
-    import spark.implicits._
-    val localBits = 1L << 33
-    val marked = df.orderBy(order: _*)
+    val marked = df.orderBy(group.map(col(_).asc).toSeq ++ order: _*)
       .withColumn("__pid", spark_partition_id())
       .withColumn("__mid", monotonically_increasing_id())
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val counts = marked.groupBy($"__pid").agg(count(lit(1)).as("__n"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets = counts.map(_._1)
-      .zip(counts.scanLeft(0L)(_ + _._2)) // cumulative count of earlier partitions
-      .toSeq.toDF("__pid", "__off")
-    val ranked = marked.join(broadcast(offsets), "__pid")
-      .withColumn(idName, $"__off" + $"__mid" % localBits + 1L)
+    val keys = "__pid" +: group.toSeq
+    val firsts = marked.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("__n"), min(col("__mid")).as("__first"))
+      .collect().sortBy(_.getInt(0))
+    val earlier = scala.collection.mutable.Map.empty[Option[Any], Long].withDefaultValue(0L)
+    val offsets = firsts.map { r =>
+      val g = group.map(_ => r.get(1))
+      val off = earlier(g) - r.getAs[Long]("__first") + 1L
+      earlier(g) += r.getAs[Long]("__n")
+      Row.fromSeq(keys.indices.map(r.get) :+ off)
+    }
+    val offsetTable = spark.createDataFrame(java.util.Arrays.asList(offsets: _*),
+      StructType(keys.map(marked.schema(_)) :+ StructField("__off", LongType)))
+    val ranked = marked.join(broadcast(offsetTable), keys)
+      .withColumn(idName, col("__mid") + col("__off"))
       .select(col(idName) +: df.columns.map(col): _*)
     (ranked, marked)
   }

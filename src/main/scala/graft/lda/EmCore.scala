@@ -584,6 +584,10 @@ private[graft] object EmCore {
     }
 
     val numDocs = corpus.count()
+    // with no document the alpha update divides by zero and training would
+    // return NaN alpha and a flat zero likelihood
+    if (numDocs == 0)
+      throw new IllegalArgumentException("cannot train a topic model on an empty corpus (0 documents)")
     // the explode is loop-invariant (gamma rotation never touches counts):
     // materialized once, partitioned by the beta join key, so each
     // iteration's E-step shuffles only the model-sized beta table

@@ -2,7 +2,7 @@ package graft.lda
 
 import graft.functions.LogSumExp.logsumexp
 import graft.model.Doc
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
  * The run IS the broadcast-mode trainer skeleton on real operators:
  * the EM core's E-step (with the fixture-only anchor knobs) for every sweep,
  * the distributed `logsumexp` phi fold, and
- * [[MStep.finishBetaOnDriver]] for the smoothing/normalizer tail —
+ * [[EmCore.finishBetaOnDriver]] for the smoothing/normalizer tail —
  * only alpha stays FIXED (the alpha Newton update is a driver-side
  * scalar routine already pinned verbatim against the reference's 8
  * golden cases in AlphaUpdateSpec; a condition-based Newton loop has
@@ -98,54 +98,71 @@ object PlantedLda {
       .collect().toSeq.sortBy(_.docId)
   }
 
-  /** The shared anchored-EM loop: final (beta, (docId, gamma, docLL)
-    * rows from the last E-step). Both the run()/alphaRows()/llRows()
-    * surfaces derive from this. */
-  private def emState(spark: SparkSession, dir: String, cfg: Cfg)
-      : (scala.collection.Map[Int, Array[Double]], Array[(Long, Array[Double], Double)]) = {
+  /**
+   * The anchored EM loop both planted replays run, over packed (lang,
+   * termId) keys — vanilla is lang 0 with eta smoothing: broadcast or
+   * joined beta → the anchored E-step → the distributed `logsumexp` phi
+   * fold, rounded at collect → the real M-step tail
+   * ([[EmCore.finishBetaOnDriver]]) with the handoff re-anchored → the
+   * anchored gammas carried forward (reference semantics: the next
+   * iteration's corpus is the gamma side-output; `withGamma` sets one
+   * document's). Returns the final beta and the last E-step's
+   * (docId, gamma, docLL) rows, docId-sorted.
+   */
+  private[graft] def anchoredEm[D, R](spark: SparkSession, corpus: Seq[D],
+      shape: EmCore.DocShape[D, R], smoothing: EmCore.Smoothing,
+      init: scala.collection.Map[Long, Array[Double]], vocab: Int => Int,
+      withGamma: (D, Map[Long, Array[Double]]) => D, alpha: Array[Double], emIters: Int,
+      sweeps: EmCore.Sweeps, betaDp: Int, useShuffle: Boolean)
+      : (scala.collection.Map[Long, Array[Double]], Array[(Long, Array[Double], Double)]) = {
     import spark.implicits._
-    val alpha = Array.fill(cfg.k)(cfg.alpha)
+    val k = alpha.length
+    val keys = shape.keys
     val alphaBc = spark.sparkContext.broadcast(alpha)
-    var beta: scala.collection.Map[Int, Array[Double]] = initBeta(cfg)
-    var docs: Seq[Doc] = corpus(spark, dir, cfg)
+    var beta = init
+    var docs = corpus
     var finalRows: Array[(Long, Array[Double], Double)] = Array.empty
 
-    for (iter <- 1 to cfg.emIters) {
+    for (iter <- 1 to emIters) {
       val betaBc = spark.sparkContext.broadcast(beta)
-      // anchor knobs on, production path untouched
       val supply =
-        if (cfg.useShuffle) EmCore.Join(beta.toSeq.toDF("termId", "elogbeta"), None)
-        else EmCore.Lookup.terms(betaBc)
-      val estep = EmCore.estep(docs.toDS(), VanillaDocs, alphaBc, supply, _ => cfg.vocab,
-        sweeps(cfg, learning = true)).persist()
-      // the real distributed lambda fold, anchored at collect
-      val lambda = MStep.explodePhi(estep.toDF())
-        .groupBy($"topic", $"termId").agg(logsumexp($"logphi").as("lp"))
+        if (useShuffle) EmCore.Join(beta.toSeq.map { case (w, arr) =>
+          (EmCore.langOf(w), EmCore.termOf(w), arr)
+        }.toDF("lang", "termId", "elogbeta"), None)
+        else EmCore.Lookup.packed(betaBc)
+      val estep = EmCore.estep(spark.createDataset(docs)(shape.docEncoder), shape, alphaBc,
+        supply, vocab, sweeps).persist()
+      val lambda = EmCore.explodePhi(estep.toDF(), keys)
+        .groupBy(keys.lambda.map(col): _*).agg(logsumexp($"logphi").as("lp"))
+        .select(keys.lang, $"topic", $"termId", $"lp")
         .collect()
-        .map(r => (r.getAs[Int]("topic"), r.getAs[Int]("termId"),
-          rnd(r.getAs[Double]("lp"), cfg.betaDp)))
-      // real M-step tail (eta smoothing + per-topic normalizer +
-      // E[log beta]), then anchor the handoff into the next iteration
-      val (_, rows) = MStep.finishBetaOnDriver(lambda, cfg.k, seeded = None)
-      val rowsR = rows.map { case (t, w, e) => (t, w, rnd(e, cfg.betaDp)) }
-      val nextBeta = new scala.collection.mutable.HashMap[Int, Array[Double]]()
-      rowsR.foreach { case (t, w, e) =>
-        nextBeta.getOrElseUpdate(w, new Array[Double](cfg.k))(t - 1) = e
+        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), rnd(r.getDouble(3), betaDp)))
+      val (_, rows) = EmCore.finishBetaOnDriver(lambda, k, smoothing.driver)
+      val nextBeta = new scala.collection.mutable.HashMap[Long, Array[Double]]()
+      rows.foreach { case (l, t, w, e) =>
+        nextBeta.getOrElseUpdate(EmCore.key(l, w), new Array[Double](k))(t - 1) = rnd(e, betaDp)
       }
       beta = nextBeta
-      // carry anchored gammas forward (reference semantics: the next
-      // iteration's corpus is the gamma side-output)
       val docRows = estep.filter($"isDoc")
         .select($"docId", $"gamma", $"ll")
         .as[(Long, Array[Double], Double)].collect()
       estep.unpersist()
       betaBc.destroy()
       val gmap = docRows.map(r => r._1 -> r._2).toMap
-      docs = docs.map(d => d.copy(gamma = Some(gmap(d.docId))))
-      if (iter == cfg.emIters) finalRows = docRows.sortBy(_._1)
+      docs = docs.map(withGamma(_, gmap))
+      if (iter == emIters) finalRows = docRows.sortBy(_._1)
     }
     (beta, finalRows)
   }
+
+  /** The vanilla planted run: final (packed-key beta, last E-step rows). */
+  private def emState(spark: SparkSession, dir: String, cfg: Cfg)
+      : (scala.collection.Map[Long, Array[Double]], Array[(Long, Array[Double], Double)]) =
+    anchoredEm(spark, corpus(spark, dir, cfg), VanillaDocs, EmCore.Smoothing.eta(None),
+      initBeta(cfg).map { case (w, arr) => EmCore.key(0, w) -> arr }, _ => cfg.vocab,
+      (d: Doc, g: Map[Long, Array[Double]]) => d.copy(gamma = Some(g(d.docId))),
+      Array.fill(cfg.k)(cfg.alpha), cfg.emIters, sweeps(cfg, learning = true), cfg.betaDp,
+      cfg.useShuffle)
 
   /** Run the anchored EM and return tidy rows:
     * ('beta', topic 1-based, termId, E[log beta] 8dp) for the final
@@ -155,7 +172,7 @@ object PlantedLda {
     import spark.implicits._
     val (beta, finalRows) = emState(spark, dir, cfg)
     val betaRows = beta.toSeq.flatMap { case (w, arr) =>
-      arr.zipWithIndex.map { case (e, t) => ("beta", t + 1, w.toLong, e) }
+      arr.zipWithIndex.map { case (e, t) => ("beta", t + 1, EmCore.termOf(w).toLong, e) }
     }
     val gammaRows = finalRows.toSeq.flatMap { case (d, g, _) =>
       g.zipWithIndex.map { case (v, t) => ("gamma", t + 1, d, v) }
@@ -181,7 +198,7 @@ object PlantedLda {
     val betaBc = spark.sparkContext.broadcast(beta)
     val fresh = corpus(spark, dir, cfg) // no carried gamma: fresh init
     val estep = EmCore.estep(fresh.toDS(), VanillaDocs, alphaBc,
-      EmCore.Lookup.terms(betaBc), _ => cfg.vocab,
+      EmCore.Lookup.packed(betaBc), _ => cfg.vocab,
       sweeps(cfg, learning = false))
     val rows = estep.filter($"isDoc")
       .select($"docId", $"gamma").as[(Long, Array[Double])].collect()

@@ -4,7 +4,6 @@ import graft.corpus.ParseCorpus
 import graft.model.{PolyDoc, PolyTermEntry}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Polylingual corpus pipeline: raw `title \t lang1-text \t ... \t langL-text`
@@ -12,14 +11,14 @@ import org.apache.spark.storage.StorageLevel
  * dictionaries + per-language dictionary-encoded documents sharing one docId.
  *
  * Spark-native rebuild of the reference's multilingual three-job pipeline
- * (reference: cc/mrlda/polylda/ParseCorpus.java:309-616): the per-language
- * fan-out (P9) is a `posexplode` over the language columns, the per-language
- * df/tf aggregate (A2) is one `groupBy(lang, term)`, and the per-language
- * 1-based dense ranking (O3, reference one-reducer-with-MultipleOutputs
- * polylda/ParseCorpus.java:578-616) is a single global sort + zipWithIndex
- * with per-language offsets subtracted — no single task ever holds more than
- * a partition of the combined vocabulary, and ids stay dense and 1-based
- * within each language.
+ * (reference: cc/mrlda/polylda/ParseCorpus.java:309-616). Everything after
+ * the per-language fan-out (P9, a `posexplode` over the language columns) is
+ * the one parse core, [[ParseCorpus.parse]]: the per-language df/tf
+ * aggregate (A2), the per-language df band, and the per-language 1-based
+ * dense ranking (O3, reference one-reducer-with-MultipleOutputs
+ * polylda/ParseCorpus.java:578-616) as one global sort ranked within each
+ * language. This object adds the fan-out and regroups the core's
+ * per-language rows into one [[PolyDoc]] per document.
  */
 object PolyParseCorpus {
 
@@ -61,88 +60,38 @@ object PolyParseCorpus {
 
   /**
    * Parse a (docId, title, texts array<string>) DataFrame; texts(l) null or
-   * the literal "null" marks a missing language.
+   * the literal "null" marks a missing language, and slots past
+   * `numLanguages` are not read.
    */
   def run(input: DataFrame, cfg: Config): Result = {
     val spark = input.sparkSession
     import spark.implicits._
 
-    val base = input.select($"docId".cast("long").as("docId"), $"texts")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val numDocsTotal = base.count()
-
     // P9: per-language fan-out; 0-based lang index internally (the reference
     // prints 1-based language indicators only in file names)
-    val perLang = base
-      .select($"docId", posexplode($"texts").as(Seq("lang", "text")))
+    val perLang = input
+      .select($"docId".cast("long").as("docId"),
+        posexplode(slice($"texts", 1, cfg.numLanguages)).as(Seq("lang", "text")))
       .filter($"text".isNotNull && lower(trim($"text")) =!= MissingLanguage)
 
-    val tokens = perLang
-      .select($"docId", $"lang",
-        explode(split(if (cfg.lowercase) lower($"text") else $"text", "\\s+")).as("term"))
-      .filter(length($"term") >= 1)
-      .groupBy($"docId", $"lang", $"term").agg(count(lit(1)).as("cnt"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val docsPerLanguage = perLang.groupBy($"lang").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getAs[Int]("lang") -> r.getAs[Long]("n")).toMap
-
-    // A2: per-(language, term) df/tf
-    val termAgg = tokens.groupBy($"lang", $"term")
-      .agg(count(lit(1)).as("df"), sum($"cnt").as("tf"))
-
-    // df band thresholds are PER LANGUAGE — fractions of that language's
-    // document count, not the corpus total (reference computes
-    // minimumDocumentCount per languageIndex from TOTAL_DOCS_IN_LANGUAGE,
-    // polylda/ParseCorpus.java:242-245). Skipped entirely at the default
-    // full-width band.
-    val banding = cfg.minDfFraction > 0.0 || cfg.maxDfFraction < 1.0
-    val banded = if (banding) {
-      val thresholds = docsPerLanguage.toSeq.map { case (l, n) =>
-        (l, cfg.minDfFraction * n, cfg.maxDfFraction * n)
-      }.toDF("lang", "lo", "hi")
-      termAgg.join(broadcast(thresholds), "lang")
-        .filter($"df" >= $"lo" && $"df" <= $"hi")
-        .drop("lo", "hi")
-    } else termAgg
-
-    // O3: per-language dense 1-based ranking by (df desc, tf desc, term asc)
-    // via ONE global sort keyed language-first + per-language offset — scales
-    // to any vocabulary without a per-language single task.
-    val (globallyRanked, rankCache) = ParseCorpus.rankByIndexWithCache(banded,
-      Seq($"lang".asc, $"df".desc, $"tf".desc, $"term".asc), "grank")
-    val offsets = globallyRanked.groupBy($"lang").agg(min($"grank").as("goff"))
-    val terms = globallyRanked.join(broadcast(offsets), "lang")
-      .select($"lang", ($"grank" - $"goff" + 1L).cast("int").as("termId"),
-        $"term", $"df", $"tf")
-      .as[PolyTermEntry]
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    terms.count() // materializes terms → rank cache droppable
-    rankCache.unpersist()
-
-    // J1/P7 per language: encode + pack per-language count maps; languages a
-    // doc is missing simply have no key in `counts`
-    val encoded = tokens
-      .join(terms.select($"lang", $"termId", $"term"), Seq("lang", "term"))
-      .groupBy($"docId", $"lang")
-      .agg(
-        map_from_entries(array_sort(collect_list(struct($"termId", $"cnt".cast("int"))))).as("langCounts"),
-        sum($"cnt").as("langTokens"))
-      .groupBy($"docId")
-      .agg(
-        // no array_sort here: structs holding maps aren't orderable, and
-        // map_from_entries doesn't need sorted input (map semantics)
-        map_from_entries(collect_list(struct($"lang", $"langCounts"))).as("counts"),
-        map_from_entries(collect_list(struct($"lang", $"langTokens"))).as("numTokens"),
-        sum($"langTokens").as("totalTokens"))
-      .select($"docId", $"counts", $"numTokens", $"totalTokens",
-        lit(null).cast("array<double>").as("gamma"))
-      .as[PolyDoc]
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    encoded.count()
-
-    tokens.unpersist()
-    base.unpersist()
-    Result(encoded, terms, docsPerLanguage)
+    val p = ParseCorpus.parse(perLang, cfg.numLanguages, ParseCorpus.Config(
+        minDfFraction = cfg.minDfFraction, maxDfFraction = cfg.maxDfFraction,
+        lowercase = cfg.lowercase),
+      ParseCorpus.Shapes[PolyDoc, PolyTermEntry](
+        // languages a doc is missing simply have no key in `counts`
+        _.groupBy($"docId")
+          .agg(
+            // no array_sort here: structs holding maps aren't orderable, and
+            // map_from_entries doesn't need sorted input (map semantics)
+            map_from_entries(collect_list(struct($"lang", $"langCounts"))).as("counts"),
+            map_from_entries(collect_list(struct($"lang", $"langTokens"))).as("numTokens"),
+            sum($"langTokens").as("totalTokens"))
+          .select($"docId", $"counts", $"numTokens", $"totalTokens",
+            lit(null).cast("array<double>").as("gamma"))
+          .as[PolyDoc],
+        _.as[PolyTermEntry],
+        _.select($"lang", $"termId", $"term")))
+    Result(p.docs, p.terms,
+      p.docsPerLanguage.zipWithIndex.collect { case (n, l) if n > 0 => l -> n }.toMap)
   }
 }

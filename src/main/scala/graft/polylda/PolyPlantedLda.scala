@@ -1,7 +1,6 @@
 package graft.polylda
 
-import graft.functions.LogSumExp.logsumexp
-import graft.lda.EmCore
+import graft.lda.{EmCore, PlantedLda}
 import graft.model.PolyDoc
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -38,16 +37,13 @@ object PolyPlantedLda {
   private def rnd(x: Double, dp: Int): Double =
     BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** Planted per-language init:
+  /** Planted per-language init, packed (lang, termId) keys:
     * round(-ln V_l + ((7w + 3t + 5l) mod 11 - 5)/100, 8). */
-  private[polylda] def initBeta(cfg: Cfg): Map[Int, scala.collection.Map[Int, Array[Double]]] =
-    (0 until 2).map { l =>
-      l -> (0 until cfg.vocabPerLang).map { w =>
-        w -> Array.tabulate(cfg.k)(t =>
-          rnd(-math.log(cfg.vocabPerLang.toDouble) +
-            ((w * 7 + t * 3 + l * 5) % 11 - 5) / 100.0, cfg.betaDp))
-      }.toMap.asInstanceOf[scala.collection.Map[Int, Array[Double]]]
-    }.toMap
+  private[polylda] def initBeta(cfg: Cfg): Map[Long, Array[Double]] =
+    (for (l <- 0 until 2; w <- 0 until cfg.vocabPerLang) yield
+      EmCore.key(l, w) -> Array.tabulate(cfg.k)(t =>
+        rnd(-math.log(cfg.vocabPerLang.toDouble) +
+          ((w * 7 + t * 3 + l * 5) % 11 - 5) / 100.0, cfg.betaDp))).toMap
 
   private[polylda] def corpus(spark: SparkSession, dir: String, cfg: Cfg): Seq[PolyDoc] = {
     import spark.implicits._
@@ -87,58 +83,22 @@ object PolyPlantedLda {
     * per-language model and ('gamma', -1, k+1, docId, gamma_k 8dp). */
   def run(spark: SparkSession, dir: String, cfg: Cfg = Cfg()): DataFrame = {
     import spark.implicits._
-    val alphaBc = spark.sparkContext.broadcast(Array.fill(cfg.k)(cfg.alpha))
-    var beta = initBeta(cfg)
-    var docs: Seq[PolyDoc] = corpus(spark, dir, cfg)
-    var finalGammas: Array[(Long, Array[Double])] = Array.empty
-    val numTermsPerLang = Map(0 -> cfg.vocabPerLang, 1 -> cfg.vocabPerLang)
+    // the driver tail applies the polylda reducer's -700 underflow floor
+    val (beta, finalRows) = PlantedLda.anchoredEm(spark, corpus(spark, dir, cfg), PolyDocs,
+      EmCore.Smoothing.floor, initBeta(cfg),
+      PolyTrainer.vocab(Map(0 -> cfg.vocabPerLang, 1 -> cfg.vocabPerLang)),
+      (d: PolyDoc, g: Map[Long, Array[Double]]) => d.copy(gamma = Some(g(d.docId))),
+      Array.fill(cfg.k)(cfg.alpha), cfg.emIters,
+      EmCore.Sweeps(cfg.sweeps + 1, randomStartGamma = false, learning = true, seed = 42L,
+        anchorGammaDp = cfg.gammaDp, anchorPhiDp = cfg.phiDp),
+      cfg.betaDp, cfg.useShuffle)
 
-    for (iter <- 1 to cfg.emIters) {
-      val betaBc = spark.sparkContext.broadcast(beta)
-      val supply =
-        if (cfg.useShuffle)
-          EmCore.Join(beta.toSeq.flatMap { case (l, m) =>
-            m.toSeq.map { case (w, arr) => (l, w, arr) }
-          }.toDF("lang", "termId", "elogbeta"), None)
-        else PolyTrainer.lookup(betaBc)
-      val estep = EmCore.estep(docs.toDS(), PolyDocs, alphaBc, supply,
-        PolyTrainer.vocab(numTermsPerLang),
-        EmCore.Sweeps(cfg.sweeps + 1, randomStartGamma = false, learning = true, seed = 42L,
-          anchorGammaDp = cfg.gammaDp, anchorPhiDp = cfg.phiDp))
-        .persist()
-      // the real distributed fold, anchored at collect; the driver tail
-      // applies the polylda reducer's -700 underflow floor
-      // (EmCore.Smoothing.floor)
-      val lambda = EmCore.explodePhi(estep.toDF(), PolyDocs.keys)
-        .groupBy($"lang", $"topic", $"termId")
-        .agg(logsumexp($"logphi").as("lp"))
-        .collect()
-        .map(r => (r.getAs[Int]("lang"), r.getAs[Int]("topic"), r.getAs[Int]("termId"),
-          rnd(r.getAs[Double]("lp"), cfg.betaDp)))
-      val (_, rows) = EmCore.finishBetaOnDriver(lambda, cfg.k, EmCore.Smoothing.floor.driver)
-      val nextBeta = scala.collection.mutable.Map.empty[Int, scala.collection.mutable.Map[Int, Array[Double]]]
-      rows.foreach { case (l, t, w, e) =>
-        nextBeta.getOrElseUpdate(l, scala.collection.mutable.Map.empty)
-          .getOrElseUpdate(w, new Array[Double](cfg.k))(t - 1) = rnd(e, cfg.betaDp)
-      }
-      beta = nextBeta.map { case (l, m) =>
-        l -> (m.toMap: scala.collection.Map[Int, Array[Double]])
-      }.toMap
-      val docRows = estep.filter($"isDoc")
-        .select($"docId", $"gamma").as[(Long, Array[Double])].collect()
-      estep.unpersist()
-      betaBc.destroy()
-      val gmap = docRows.toMap
-      docs = docs.map(d => d.copy(gamma = Some(gmap(d.docId))))
-      if (iter == cfg.emIters) finalGammas = docRows.sortBy(_._1)
-    }
-
-    val betaRows = beta.toSeq.flatMap { case (l, m) =>
-      m.toSeq.flatMap { case (w, arr) =>
-        arr.zipWithIndex.map { case (e, t) => ("beta", l, t + 1, w.toLong, e) }
+    val betaRows = beta.toSeq.flatMap { case (w, arr) =>
+      arr.zipWithIndex.map { case (e, t) =>
+        ("beta", EmCore.langOf(w), t + 1, EmCore.termOf(w).toLong, e)
       }
     }
-    val gammaRows = finalGammas.toSeq.flatMap { case (d, g) =>
+    val gammaRows = finalRows.toSeq.flatMap { case (d, g, _) =>
       g.zipWithIndex.map { case (v, t) => ("gamma", -1, t + 1, d, v) }
     }
     (betaRows ++ gammaRows)

@@ -16,6 +16,20 @@ import org.apache.spark.sql.graftshim.shim
  * noop-sink seconds + stage aggregate lines to stdout.
  */
 object PlanProfile {
+
+  /** `k1=v1,k2=v2` → (key, value) pairs. An entry ends only at a comma
+    * followed by `key=` with the key starting with a letter, so a value may
+    * hold commas (`spark.driver.extraJavaOptions=-Da=1,-Db=2` is one entry);
+    * an entry without `key=` is an error, not dropped. */
+  private[graft] def extraConf(s: String): Seq[(String, String)] =
+    s.split(",(?=\\s*[A-Za-z][\\w.-]*\\s*=)").toSeq.filter(_.trim.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => (k.trim, v.trim)
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_EXTRA_CONF entry is not key=value: '$kv'")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
@@ -26,10 +40,7 @@ object PlanProfile {
     // A/B experiment hook: SPARK_GRAFT_EXTRA_CONF="k1=v1,k2=v2" lets a
     // config candidate be profiled without editing the Bench contract
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { s =>
-      s.split(',').filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder = builder.config(k.trim, v.trim)
-      }
+      extraConf(s).foreach { case (k, v) => builder = builder.config(k, v) }
     }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

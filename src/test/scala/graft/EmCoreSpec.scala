@@ -117,4 +117,20 @@ class EmCoreSpec extends SparkSpec {
       finite(pm.llHistory, pm.alpha)
     }
   }
+
+  test("both trainers refuse an empty corpus instead of returning NaN") {
+    val blank = parse(Seq("", "   "))
+    assert(blank.stats == graft.model.CorpusStats(0, 0, 2, 0, 0))
+    for (parsed <- Seq(parse(Nil), blank)) {
+      val v = parsed.stats.numTerms.toInt
+      val e = intercept[IllegalArgumentException](Trainer.train(parsed.docs, v,
+        Trainer.Config(numTopics = 3, maxIterations = 2, localIterations = 5)))
+      assert(e.getMessage.contains("empty corpus"), e.getMessage)
+      val poly = parsed.docs.map(d =>
+        PolyDoc(d.docId, Map(0 -> d.counts), Map(0 -> d.numTokens), d.numTokens, d.gamma))
+      val pe = intercept[IllegalArgumentException](PolyTrainer.train(poly, Map(0 -> v),
+        PolyTrainer.Config(numTopics = 3, maxIterations = 2, localIterations = 5)))
+      assert(pe.getMessage.contains("empty corpus"), pe.getMessage)
+    }
+  }
 }

@@ -1,6 +1,9 @@
 package graft
 
 import graft.corpus.ParseCorpus
+import graft.model.CorpusStats
+import graft.polylda.PolyParseCorpus
+import org.apache.spark.sql.functions.array
 
 class ParseCorpusSpec extends SparkSpec {
   import spark.implicits._
@@ -97,6 +100,70 @@ class ParseCorpusSpec extends SparkSpec {
     // ids dense and 1-based
     val ids = r.terms.collect().map(_.termId).sorted
     assert(ids.head == 1 && ids.last == ids.length)
+  }
+
+  /** A seeded Zipf corpus, 120 documents of 30 tokens over a 200-word
+    * vocabulary plus one blank document: (docId, title, text). */
+  private def corpusRows: Seq[(Long, String, String)] = {
+    val rnd = new scala.util.Random(7)
+    val cum = (1 to 200).map(1.0 / _).scanLeft(0.0)(_ + _).tail
+    def word(): String = { val u = rnd.nextDouble() * cum.last; s"w${cum.indexWhere(_ >= u)}" }
+    (1 to 120).map(i => (i.toLong, f"d$i%03d", Seq.fill(30)(word()).mkString(" "))) :+
+      ((121L, "d121", ""))
+  }
+
+  private def documents = corpusRows.toDF("docId", "title", "text")
+
+  /** A vanilla parse and a polylingual parse with one language give the
+    * same ids, df, tf, count maps and token totals. */
+  private def assertSameParse(v: ParseCorpus.Result, p: PolyParseCorpus.Result): Unit = {
+    val vTerms = v.terms.collect().map(t => (t.termId, t.term, t.df, t.tf)).sorted.toSeq
+    val pTerms = p.terms.collect().map { t =>
+      assert(t.lang == 0)
+      (t.termId, t.term, t.df, t.tf)
+    }.sorted.toSeq
+    assert(vTerms.nonEmpty && vTerms == pTerms)
+    val vDocs = v.docs.collect().map(d => (d.docId, d.counts, d.numTokens)).sortBy(_._1).toSeq
+    val pDocs = p.docs.collect().map { d =>
+      assert(d.counts.keySet == Set(0) && d.totalTokens == d.numTokens(0))
+      (d.docId, d.counts(0), d.numTokens(0))
+    }.sortBy(_._1).toSeq
+    assert(vDocs.nonEmpty && vDocs == pDocs)
+    assert(v.stats.numTerms == vTerms.length && v.stats.numDocs == vDocs.length)
+    // the blank document is counted and collapses on both models
+    assert(v.stats.collapsedDocs >= 1)
+    assert(p.docsPerLanguage == Map(0 -> (v.stats.numDocs + v.stats.collapsedDocs)))
+  }
+
+  for ((name, band, polyBand) <- Seq(
+      ("the default config", ParseCorpus.Config(), PolyParseCorpus.Config(numLanguages = 1)),
+      ("a df band", ParseCorpus.Config(minDfFraction = 0.06, maxDfFraction = 0.78),
+        PolyParseCorpus.Config(numLanguages = 1, minDfFraction = 0.06, maxDfFraction = 0.78)))) {
+    test(s"vanilla run == polylingual run with one language, $name") {
+      val v = ParseCorpus.run(documents, band)
+      if (band.maxDfFraction < 1.0) assert(v.stats.highDfTerms > 0 && v.stats.lowDfTerms > 0)
+      assertSameParse(v, PolyParseCorpus.run(
+        documents.select($"docId", $"title", array($"text").as("texts")), polyBand))
+    }
+
+    test(s"vanilla fromRawLines == polylingual fromRawLines with one language, $name") {
+      val dir = java.nio.file.Files.createTempDirectory("graft_raw_")
+      val f = java.nio.file.Files.writeString(dir.resolve("corpus.txt"),
+        corpusRows.map { case (_, title, text) => s"$title\t$text" }.mkString("\n"))
+      assertSameParse(ParseCorpus.fromRawLines(spark, f.toString, band),
+        PolyParseCorpus.fromRawLines(spark, f.toString, polyBand))
+    }
+  }
+
+  test("an empty input parses to empty results on both models") {
+    for (cfg <- Seq(ParseCorpus.Config(), ParseCorpus.Config(minDfFraction = 0.1, maxDfFraction = 0.9))) {
+      val v = ParseCorpus.run(tiny.limit(0), cfg)
+      assert(v.docs.count() == 0 && v.terms.count() == 0 && v.titles.count() == 0)
+      assert(v.stats == CorpusStats(0, 0, 0, 0, 0))
+    }
+    val p = PolyParseCorpus.run(Seq.empty[(Long, String, Seq[String])].toDF("docId", "title", "texts"),
+      PolyParseCorpus.Config(numLanguages = 2, minDfFraction = 0.1))
+    assert(p.docs.count() == 0 && p.terms.count() == 0 && p.docsPerLanguage.isEmpty)
   }
 }
 

@@ -152,6 +152,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("dictionary encode degrades to a shuffle join above the broadcast cap") {
     import graft.corpus.ParseCorpus
+    import org.apache.spark.sql.functions.{array, col}
     val docs = Registry.t(spark, dir, "documents")
       .selectExpr("doc_id as docId", "cast(doc_id as string) as title", "text")
     // pin the planner: no size-based auto-broadcast and no AQE runtime
@@ -182,6 +183,14 @@ class PlanShapeSpec extends SparkSpec {
       // and the fallback path produces the identical corpus
       val b = fallback.docs.collect().map(_.toString).sorted
       assert(a.toSeq == b.toSeq)
+      // the polylingual parse runs the same core: below the cap its
+      // dictionary join on (term, lang) broadcasts too
+      val poly = graft.polylda.PolyParseCorpus.run(docs.select(col("docId"), col("title"),
+        array(col("text"), col("text")).as("texts")),
+        graft.polylda.PolyParseCorpus.Config(numLanguages = 2))
+      val polyPlan = poly.docs.queryExecution.executedPlan.toString
+      assert("BroadcastHashJoin \\[term#\\d+, lang#\\d+\\]".r.findFirstIn(polyPlan).isDefined,
+        polyPlan)
     } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
