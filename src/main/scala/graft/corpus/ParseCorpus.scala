@@ -39,14 +39,12 @@ object ParseCorpus {
     * option ParseCorpusOptions.java:147-151, e.g. SmartChineseAnalyzer for
     * CJK text the whitespace split mangles). Any `String => Seq[String]` —
     * shipped to executors as a serialized closure driving a flatMap UDF;
-    * when set it replaces the regex split + lowercase path entirely. */
+    * when set it replaces the whitespace split + lowercase path entirely. */
   case class Config(
       minDfFraction: Double = 0.0,
       maxDfFraction: Double = 1.0,
       stopwords: Seq[String] = Seq.empty,
-      tokenSplitPattern: String = "\\s+",
       lowercase: Boolean = false,
-      minTokenLength: Int = 1,
       analyzer: Option[String => Seq[String]] = None,
       /** Vocabulary size above which the dictionary-encode join drops its
         * broadcast hint and lets the planner shuffle-join instead (a 20M+
@@ -267,18 +265,18 @@ object ParseCorpus {
       (0 until numLanguages).map(r.getLong)
     }
 
-    // P1-P5: tokenize (pluggable analyzer or regex split), optional
-    // lowercase, stopword filter, per-(doc, language) tf
+    // P1-P5: tokenize (pluggable analyzer or whitespace split), optional
+    // lowercase, stopword filter, per-(doc, language) tf. Leading or
+    // trailing whitespace splits off empty strings: they are not tokens
     val rawTok = (cfg.analyzer match {
       case Some(an) =>
         val tokenize = udf((text: String) => if (text == null) Seq.empty[String] else an(text))
         input.select($"docId", $"lang", explode(tokenize($"text")).as("term"))
       case None =>
         input.select($"docId", $"lang",
-          explode(split(if (cfg.lowercase) lower($"text") else $"text",
-            cfg.tokenSplitPattern)).as("term"))
+          explode(split(if (cfg.lowercase) lower($"text") else $"text", "\\s+")).as("term"))
     })
-      .filter(length($"term") >= cfg.minTokenLength)
+      .filter($"term" =!= "")
     val tokens = (if (cfg.stopwords.nonEmpty) {
       val sw = cfg.stopwords.toDF("term")
       rawTok.join(broadcast(sw), Seq("term"), "left_anti")

@@ -54,11 +54,9 @@ private[graft] object EmCore {
     def localIterations: Int
     def convergence: Double
     def randomStartGamma: Boolean
-    def updateAlpha: Boolean
     def seed: Long
     def betaBroadcastMaxEntries: Long
     def checkpointDir: Option[String]
-    def checkpointEvery: Int
     def resumeFrom: Option[(String, Int)]
   }
 
@@ -546,12 +544,15 @@ private[graft] object EmCore {
    * broadcast (the reference's DistributedCache path,
    * DocumentMapper.java:116); above it beta stays a distributed table
    * end-to-end and nothing model-sized moves through the driver. With
-   * `checkpointDir` set, alpha/beta/gamma snapshot to parquet every
-   * `checkpointEvery` iterations (the reference's alpha-i/beta-i/gamma-i
-   * rotation) and gamma re-reads from parquet — reliable lineage
-   * truncation; without it, `localCheckpoint` (fast, not fault-tolerant).
-   * Convergence: |ΔLL/LL| ≤ `convergence` or `maxIterations`
-   * (Settings.java:56,43).
+   * `checkpointDir` set, alpha/beta/gamma snapshot to parquet after every
+   * iteration (the reference's alpha-i/beta-i/gamma-i rotation) and gamma
+   * re-reads from parquet — reliable lineage truncation; without it,
+   * `localCheckpoint` (fast, not fault-tolerant). Alpha takes one Newton
+   * update per iteration. Convergence: |ΔLL/LL| ≤ `convergence` or
+   * `maxIterations` (Settings.java:56,43).
+   *
+   * The caller's cache is the caller's: `docs` is cached here only when
+   * the caller has not cached it, and fit releases only what it cached.
    */
   def fit[D, R](docs: Dataset[D], model: Model[D, R], cfg: Settings): Fit = {
     val spark = docs.sparkSession
@@ -568,17 +569,27 @@ private[graft] object EmCore {
     var betaTable: DataFrame = emptyBetaTable(spark, keys)
     var history = List.empty[Double]
     var startIter = 0
-    var corpus = docs.persist(StorageLevel.MEMORY_AND_DISK)
+    var ownsCorpus = cfg.resumeFrom.isEmpty && docs.storageLevel == StorageLevel.NONE
+    var corpus = if (ownsCorpus) docs.persist(StorageLevel.MEMORY_AND_DISK) else docs
+    def rotate(next: Dataset[D]): Unit = {
+      if (ownsCorpus) corpus.unpersist()
+      corpus = next
+      ownsCorpus = true
+    }
 
     cfg.resumeFrom.foreach { case (dir, i) =>
       alpha = LdaCheckpoint.loadAlpha(spark, dir, i)
+      // a K mismatch would otherwise surface as an index error in the E-step
+      if (alpha.length != k)
+        throw new IllegalArgumentException(
+          s"cannot resume from $dir iteration $i: the checkpoint has K=${alpha.length} topics, " +
+            s"the configuration numTopics=$k")
       val betaRows = LdaCheckpoint.loadBeta(spark, dir, i)
       if (useShuffle) betaTable = packBeta(betaRows, keys).persist(StorageLevel.MEMORY_AND_DISK)
       else beta = betaRowsToMap(betaRows, keys, k)
       // gamma-<i> is the full gamma-annotated corpus — resume reads it
       // directly (the reference resumes from the gamma-i document dir)
-      corpus = gammaDocs(LdaCheckpoint.loadGamma(spark, dir, i))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      rotate(gammaDocs(LdaCheckpoint.loadGamma(spark, dir, i)).persist(StorageLevel.MEMORY_AND_DISK))
       history = LdaCheckpoint.loadLlHistory(spark, dir, i).reverse.toList
       startIter = i
     }
@@ -586,8 +597,10 @@ private[graft] object EmCore {
     val numDocs = corpus.count()
     // with no document the alpha update divides by zero and training would
     // return NaN alpha and a flat zero likelihood
-    if (numDocs == 0)
+    if (numDocs == 0) {
+      if (ownsCorpus) corpus.unpersist()
       throw new IllegalArgumentException("cannot train a topic model on an empty corpus (0 documents)")
+    }
     // the explode is loop-invariant (gamma rotation never touches counts):
     // materialized once, partitioned by the beta join key, so each
     // iteration's E-step shuffles only the model-sized beta table
@@ -613,8 +626,6 @@ private[graft] object EmCore {
         .persist(StorageLevel.MEMORY_AND_DISK)
 
       val snapIdx = iter + 1
-      val doCheckpoint = cfg.checkpointDir.isDefined &&
-        (snapIdx % cfg.checkpointEvery == 0 || snapIdx == cfg.maxIterations)
       val docSide = estep.toDF().filter($"isDoc")
 
       // M-step + likelihood + alpha sufficient statistics. Broadcast mode:
@@ -653,28 +664,18 @@ private[graft] object EmCore {
         betaRowsDriver = rows
         (llF, ssF)
       }
-      if (cfg.updateAlpha) {
-        alpha =
-          if (model.symmetricAlpha) {
-            val a = AlphaUpdate.updateScalarAlpha(k, numDocs, alpha(0), ss.sum)
-            Array.fill(k)(a)
-          } else AlphaUpdate.updateVectorAlpha(k, numDocs, alpha, ss)
-      }
+      alpha =
+        if (model.symmetricAlpha) {
+          val a = AlphaUpdate.updateScalarAlpha(k, numDocs, alpha(0), ss.sum)
+          Array.fill(k)(a)
+        } else AlphaUpdate.updateVectorAlpha(k, numDocs, alpha, ss)
       history = ll :: history
-
-      // convergence decided HERE so an early-converging run still snapshots
-      // its final state (doCheckpoint alone would skip it when
-      // checkpointEvery > 1 and the converged iteration isn't a multiple)
-      val willConverge = (iter > startIter || cfg.resumeFrom.isDefined) &&
-        math.abs((ll - lastLL) / lastLL) <= cfg.convergence
-      val doSnapshot = doCheckpoint || (cfg.checkpointDir.isDefined && willConverge)
 
       // snapshot i+1 after iteration i (the reference's alpha-(i+1)).
       // gamma-<i> holds the FULL gamma-annotated corpus — exactly the
       // reference's layout, where the gamma output dir IS the next
       // iteration's document input (VariationalInference.java:358-379)
-      if (doSnapshot) {
-        val dir = cfg.checkpointDir.get
+      cfg.checkpointDir.foreach { dir =>
         // shuffle mode unpacks the materialized packed table (array
         // position p ↔ topic p+1: packBeta sorts by topic and the E-step
         // emits every topic for each term it touches)
@@ -697,15 +698,12 @@ private[graft] object EmCore {
       // is a projection of the E-step output — no per-iteration join.
       // Skipped under randomStartGamma (the E-step would ignore the stored
       // gamma; the reference gates the side-output the same way).
-      if (!cfg.randomStartGamma) {
-        val nextCorpus =
-          if (doSnapshot)
-            gammaDocs(LdaCheckpoint.loadGamma(spark, cfg.checkpointDir.get, snapIdx))
-              .persist(StorageLevel.MEMORY_AND_DISK)
-          else gammaDocs(docSide).ckptSer() // shuffle mode: checkpoint (2)
-        corpus.unpersist()
-        corpus = nextCorpus
-      }
+      if (!cfg.randomStartGamma)
+        rotate(cfg.checkpointDir match {
+          case Some(dir) =>
+            gammaDocs(LdaCheckpoint.loadGamma(spark, dir, snapIdx)).persist(StorageLevel.MEMORY_AND_DISK)
+          case None => gammaDocs(docSide).ckptSer() // shuffle mode: checkpoint (2)
+        })
 
       estep.unpersist()
       if (useShuffle) prevBetaTable.unpersist()
@@ -714,11 +712,13 @@ private[graft] object EmCore {
       alphaBc.destroy()
       betaBc.foreach(_.destroy())
 
-      converged = willConverge
+      converged = (iter > startIter || cfg.resumeFrom.isDefined) &&
+        math.abs((ll - lastLL) / lastLL) <= cfg.convergence
       lastLL = ll
       iter += 1
     }
     exploded.foreach(_.unpersist(blocking = false))
+    if (ownsCorpus) corpus.unpersist()
 
     // shuffle mode materializes the driver-side map once at the end
     // (callers needing beta bigger than driver memory read the
@@ -730,14 +730,18 @@ private[graft] object EmCore {
     Fit(alpha, beta, lastLL, iter, history.reverse)
   }
 
+  /** Seed of held-out inference's random E[log β] for terms the model has
+    * never seen. */
+  private val InferenceSeed = 42L
+
   /** Held-out inference (reference D5): frozen model, one map-only E-step;
     * returns per-doc (docId, gamma) and the held-out log-likelihood. */
   def infer[D, R](docs: Dataset[D], shape: DocShape[D, R], alpha: Array[Double],
-      beta: BetaSupply, vocab: Int => Int, localIterations: Int, seed: Long): (DataFrame, Double) = {
+      beta: BetaSupply, vocab: Int => Int, localIterations: Int): (DataFrame, Double) = {
     val spark = docs.sparkSession
     import spark.implicits._
     val out = estep(docs, shape, spark.sparkContext.broadcast(alpha), beta, vocab,
-      Sweeps(localIterations, randomStartGamma = false, learning = false, seed))
+      Sweeps(localIterations, randomStartGamma = false, learning = false, InferenceSeed))
       .persist(StorageLevel.MEMORY_AND_DISK)
       .toDF().filter($"isDoc")
     (out.select($"docId", $"gamma"), out.agg(sum($"ll")).as[Double].head())

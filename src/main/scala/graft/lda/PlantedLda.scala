@@ -1,8 +1,9 @@
 package graft.lda
 
 import graft.functions.LogSumExp.logsumexp
-import graft.model.Doc
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.model.{Doc, PolyDoc}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -32,71 +33,95 @@ import org.apache.spark.sql.functions._
  * them. The anchors absorb the <=2-ulp libm and fold-order differences
  * between engines; every anchored value is a transcendental, so exact
  * half-boundaries cannot occur.
+ *
+ * The fixture has one shape, the constants below: both replays
+ * ([[run]] and [[graft.polylda.PolyPlantedLda.run]]) and their DuckDB
+ * oracles read them. The only choice a caller makes is `useShuffle`:
+ * supply beta to the E-step as a joined table (the 100 TB beta-as-table
+ * path) instead of a broadcast lookup. The anchored trajectory is
+ * execution-path-independent, so the SAME oracle verifies both — and
+ * broadcast ≡ shuffle equality is pinned in PlantedLdaSpec.
  */
 object PlantedLda {
 
-  case class Cfg(
-      k: Int = 2,
-      vocab: Int = 20,
-      maxDocId: Long = 30,
-      emIters: Int = 3,
-      sweeps: Int = 3,
-      alpha: Double = 0.5,
-      gammaDp: Int = 8,
-      phiDp: Int = 10,
-      betaDp: Int = 8,
-      /** supply beta to the E-step as a joined table (the 100 TB
-        * beta-as-table path) instead of a broadcast lookup. The
-        * anchored trajectory is execution-path-independent, so the
-        * SAME DuckDB oracle verifies both — and broadcast ≡ shuffle
-        * equality is pinned in PlantedLdaSpec. */
-      useShuffle: Boolean = false)
+  /** topics: the oracle's unrolled replay pivots on exactly two */
+  val K = 2
+  /** vanilla vocabulary: the corpus's top words */
+  val Vocab = 20
+  /** polylingual vocabulary: the top words of each of the two languages */
+  val VocabPerLang = 10
+  /** the corpus: documents with doc_id below this */
+  val MaxDocId = 30L
+  val EmIters = 3
+  /** anchored E-step sweeps per EM iteration */
+  val SweepsPerIter = 3
+  /** the fixed symmetric alpha */
+  val Alpha = 0.5
+  /** anchors in decimal places: gamma handoffs, emitted log-phi, beta */
+  val GammaDp = 8
+  val PhiDp = 10
+  val BetaDp = 8
 
   /** The anchored E-step: localIterations - 1 sweeps (do-while parity
     * with the reference), fixed seed. */
-  private def sweeps(cfg: Cfg, learning: Boolean): EmCore.Sweeps =
-    EmCore.Sweeps(cfg.sweeps + 1, randomStartGamma = false, learning, seed = 42L,
-      anchorGammaDp = cfg.gammaDp, anchorPhiDp = cfg.phiDp)
+  private[graft] def sweeps(learning: Boolean): EmCore.Sweeps =
+    EmCore.Sweeps(SweepsPerIter + 1, randomStartGamma = false, learning, seed = 42L,
+      anchorGammaDp = GammaDp, anchorPhiDp = PhiDp)
 
   private def rnd(x: Double, dp: Int): Double =
     BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** Planted init: E[log beta]_{t,w} = round(-ln V + ((7w+3t) mod 11 - 5)/100, 8)
+  /** Planted init over packed (lang, termId) keys, V words per language:
+    * E[log beta]_{l,t,w} = round(-ln V + ((7w + 3t + 5l) mod 11 - 5)/100, 8)
     * — a deterministic, slightly topic-asymmetric near-uniform start
     * both engines compute from the same closed form (replaces the
     * reference's unseeded Math.random init, which no engine replay
-    * could reproduce). */
-  private[graft] def initBeta(cfg: Cfg): Map[Int, Array[Double]] =
-    (0 until cfg.vocab).map { w =>
-      w -> Array.tabulate(cfg.k)(t =>
-        rnd(-math.log(cfg.vocab.toDouble) + ((w * 7 + t * 3) % 11 - 5) / 100.0, cfg.betaDp))
-    }.toMap
+    * could reproduce). Vanilla is the one-language case. */
+  private[graft] def initBeta(numLangs: Int, vocabPerLang: Int): Map[Long, Array[Double]] =
+    (for (l <- 0 until numLangs; w <- 0 until vocabPerLang) yield
+      EmCore.key(l, w) -> Array.tabulate(K)(t =>
+        rnd(-math.log(vocabPerLang.toDouble) + ((w * 7 + t * 3 + l * 5) % 11 - 5) / 100.0,
+          BetaDp))).toMap
 
-  /** The planted corpus: docs with doc_id < maxDocId, whitespace-split
-    * lowercased words, vocabulary = top-`vocab` words by (count desc,
-    * word asc) with termId = 0-based rank in that order; documents keep
-    * only vocab words and drop if empty. All SQL-expressible. */
-  private[graft] def corpus(spark: SparkSession, dir: String, cfg: Cfg): Seq[Doc] = {
+  /** The planted corpus: docs with doc_id < MaxDocId, whitespace-split
+    * lowercased words, each in the language `lang` gives it; per language,
+    * vocabulary = top-`vocabPerLang` words by (count desc, word asc) with
+    * termId = 0-based rank in that order; documents keep only vocabulary
+    * words and drop if empty. All SQL-expressible. */
+  private[graft] def polyCorpus(spark: SparkSession, dir: String, lang: Column,
+      vocabPerLang: Int): Seq[PolyDoc] = {
     import spark.implicits._
     val words = spark.read.parquet(s"$dir/documents.parquet")
-      .filter(col("doc_id") < cfg.maxDocId)
+      .filter(col("doc_id") < MaxDocId)
       .select(col("doc_id").cast("long").as("doc"),
         explode(filter(split(lower(col("text")), " "), w => w =!= "")).as("word"))
-    val vocab = words.groupBy($"word").agg(count(lit(1)).as("cnt"))
-      .orderBy($"cnt".desc, $"word".asc)
-      .limit(cfg.vocab)
-      .collect().map(_.getString(0)).zipWithIndex.toMap
+      .withColumn("lang", lang)
+    val vocab = words.groupBy($"lang", $"word").agg(count(lit(1)).as("cnt"))
+      .withColumn("term",
+        row_number().over(Window.partitionBy($"lang").orderBy($"cnt".desc, $"word".asc)) - 1)
+      .filter($"term" < vocabPerLang)
+      .select($"lang", $"word", $"term").as[(Int, String, Int)].collect()
+      .map { case (l, w, t) => (l, w) -> t }.toMap
     val vocabBc = spark.sparkContext.broadcast(vocab)
-    words.as[(Long, String)]
-      .flatMap { case (d, w) => vocabBc.value.get(w).map(t => (d, t)) }
+    words.select($"doc", $"lang", $"word").as[(Long, Int, String)]
+      .flatMap { case (d, l, w) => vocabBc.value.get((l, w)).map(t => (d, l, t)) }
       .groupByKey(_._1)
       .mapGroups { (d, it) =>
-        val m = scala.collection.mutable.Map.empty[Int, Int]
-        it.foreach { case (_, t) => m(t) = m.getOrElse(t, 0) + 1 }
-        Doc(d, m.toMap, m.valuesIterator.map(_.toLong).sum)
+        val m = scala.collection.mutable.Map.empty[Int, scala.collection.mutable.Map[Int, Int]]
+        it.foreach { case (_, l, t) =>
+          val lm = m.getOrElseUpdate(l, scala.collection.mutable.Map.empty)
+          lm(t) = lm.getOrElse(t, 0) + 1
+        }
+        val counts = m.map { case (l, lm) => l -> lm.toMap }.toMap
+        val numTokens = counts.map { case (l, lm) => l -> lm.valuesIterator.map(_.toLong).sum }
+        PolyDoc(d, counts, numTokens, numTokens.valuesIterator.sum)
       }
       .collect().toSeq.sortBy(_.docId)
   }
+
+  /** The vanilla planted corpus: the one-language corpus read back as [[Doc]]s. */
+  private[graft] def corpus(spark: SparkSession, dir: String): Seq[Doc] =
+    polyCorpus(spark, dir, lit(0), Vocab).map(d => Doc(d.docId, d.counts(0), d.totalTokens))
 
   /**
    * The anchored EM loop both planted replays run, over packed (lang,
@@ -156,21 +181,20 @@ object PlantedLda {
   }
 
   /** The vanilla planted run: final (packed-key beta, last E-step rows). */
-  private def emState(spark: SparkSession, dir: String, cfg: Cfg)
+  private def emState(spark: SparkSession, dir: String, useShuffle: Boolean)
       : (scala.collection.Map[Long, Array[Double]], Array[(Long, Array[Double], Double)]) =
-    anchoredEm(spark, corpus(spark, dir, cfg), VanillaDocs, EmCore.Smoothing.eta(None),
-      initBeta(cfg).map { case (w, arr) => EmCore.key(0, w) -> arr }, _ => cfg.vocab,
+    anchoredEm(spark, corpus(spark, dir), VanillaDocs, EmCore.Smoothing.eta(None),
+      initBeta(1, Vocab), _ => Vocab,
       (d: Doc, g: Map[Long, Array[Double]]) => d.copy(gamma = Some(g(d.docId))),
-      Array.fill(cfg.k)(cfg.alpha), cfg.emIters, sweeps(cfg, learning = true), cfg.betaDp,
-      cfg.useShuffle)
+      Array.fill(K)(Alpha), EmIters, sweeps(learning = true), BetaDp, useShuffle)
 
   /** Run the anchored EM and return tidy rows:
     * ('beta', topic 1-based, termId, E[log beta] 8dp) for the final
     * model and ('gamma', k+1, docId, gamma_k 8dp) for the final
     * variational doc-topic state. */
-  def run(spark: SparkSession, dir: String, cfg: Cfg = Cfg()): DataFrame = {
+  def run(spark: SparkSession, dir: String, useShuffle: Boolean = false): DataFrame = {
     import spark.implicits._
-    val (beta, finalRows) = emState(spark, dir, cfg)
+    val (beta, finalRows) = emState(spark, dir, useShuffle)
     val betaRows = beta.toSeq.flatMap { case (w, arr) =>
       arr.zipWithIndex.map { case (e, t) => ("beta", t + 1, EmCore.termOf(w).toLong, e) }
     }
@@ -191,15 +215,14 @@ object PlantedLda {
    * layers over the replayed final model. Rows:
    * ('gamma', k+1, docId, gamma_k 8dp).
    */
-  def inferRows(spark: SparkSession, dir: String, cfg: Cfg = Cfg()): DataFrame = {
+  def inferRows(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (beta, _) = emState(spark, dir, cfg)
-    val alphaBc = spark.sparkContext.broadcast(Array.fill(cfg.k)(cfg.alpha))
+    val (beta, _) = emState(spark, dir, useShuffle = false)
+    val alphaBc = spark.sparkContext.broadcast(Array.fill(K)(Alpha))
     val betaBc = spark.sparkContext.broadcast(beta)
-    val fresh = corpus(spark, dir, cfg) // no carried gamma: fresh init
+    val fresh = corpus(spark, dir) // no carried gamma: fresh init
     val estep = EmCore.estep(fresh.toDS(), VanillaDocs, alphaBc,
-      EmCore.Lookup.packed(betaBc), _ => cfg.vocab,
-      sweeps(cfg, learning = false))
+      EmCore.Lookup.packed(betaBc), _ => Vocab, sweeps(learning = false))
     val rows = estep.filter($"isDoc")
       .select($"docId", $"gamma").as[(Long, Array[Double])].collect()
       .sortBy(_._1)
@@ -220,9 +243,9 @@ object PlantedLda {
    * inline Lanczos lnGamma in SQL) and the 6dp anchor absorbs
    * fold-order/libm ulps. Rows: (doc_id, ll 6dp).
    */
-  def llRows(spark: SparkSession, dir: String, cfg: Cfg = Cfg()): DataFrame = {
+  def llRows(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (_, finalRows) = emState(spark, dir, cfg)
+    val (_, finalRows) = emState(spark, dir, useShuffle = false)
     finalRows.toSeq.map { case (d, _, ll) => (d, rnd(ll, 6)) }
       .toDF("doc_id", "ll")
       .orderBy($"doc_id")
@@ -250,19 +273,18 @@ object PlantedLda {
    * Rows: ('ss', k+1, ss_k 6dp), ('vec', k+1, alpha_k 8dp),
    * ('scalar', 1, alpha 8dp).
    */
-  def alphaRows(spark: SparkSession, dir: String, cfg: Cfg = Cfg()): DataFrame = {
+  def alphaRows(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = run(spark, dir, cfg).collect()
+    val out = run(spark, dir).collect()
     val gam = out.filter(_.getString(0) == "gamma")
       .groupBy(_.getLong(2))
       .map { case (d, rows) => (d, rows.sortBy(_.getInt(1)).map(_.getDouble(3))) }
       .toSeq.sortBy(_._1)
     val gdf = gam.toDF("docId", "gamma")
-    val ss = MStep.alphaSufficientStatistics(gdf, cfg.k).map(rnd(_, 6))
+    val ss = MStep.alphaSufficientStatistics(gdf, K).map(rnd(_, 6))
     val numDocs = gam.length.toLong
-    val vec = AlphaUpdate.updateVectorAlpha(cfg.k, numDocs,
-      Array.fill(cfg.k)(cfg.alpha), ss)
-    val scalar = AlphaUpdate.updateScalarAlpha(cfg.k, numDocs, cfg.alpha, ss.sum)
+    val vec = AlphaUpdate.updateVectorAlpha(K, numDocs, Array.fill(K)(Alpha), ss)
+    val scalar = AlphaUpdate.updateScalarAlpha(K, numDocs, Alpha, ss.sum)
     val rows =
       ss.zipWithIndex.map { case (s, k) => ("ss", k + 1, s) } ++
         vec.zipWithIndex.map { case (a, k) => ("vec", k + 1, rnd(a, 8)) } :+

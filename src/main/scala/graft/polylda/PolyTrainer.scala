@@ -87,13 +87,11 @@ object PolyTrainer {
       localIterations: Int = 100,
       convergence: Double = 1e-6,
       randomStartGamma: Boolean = false,
-      updateAlpha: Boolean = true,
       seed: Long = 42L,
-      /** Snapshot alpha / per-language beta / gamma'd corpus per iteration
-        * (reference writes alpha-i, beta_lang<l>-i, gamma-i;
+      /** Snapshot alpha / per-language beta / gamma'd corpus after every
+        * iteration (reference writes alpha-i, beta_lang<l>-i, gamma-i;
         * polylda/VariationalInference.java:359-372). */
       checkpointDir: Option[String] = None,
-      checkpointEvery: Int = 1,
       /** Resume from `(dir, iteration)` — the polylda driver's resume path
         * (polylda/VariationalInference.java:396-404). */
       resumeFrom: Option[(String, Int)] = None,
@@ -125,11 +123,11 @@ object PolyTrainer {
 
   /** Held-out inference with a frozen polylingual model (map-only,
     * reference: training=false path of polylda/VariationalInference.java). */
-  def infer(docs: Dataset[PolyDoc], model: PolyLdaModel, localIterations: Int = 100,
-      seed: Long = 42L): (DataFrame, Double) = {
+  def infer(docs: Dataset[PolyDoc], model: PolyLdaModel,
+      localIterations: Int = 100): (DataFrame, Double) = {
     val betaBc = docs.sparkSession.sparkContext.broadcast(model.beta)
     EmCore.infer(docs, PolyDocs, model.alpha, lookup(betaBc),
-      vocab(model.numTermsPerLang), localIterations, seed)
+      vocab(model.numTermsPerLang), localIterations)
   }
 
   /** Top-k terms per (language, topic) — the polylingual DisplayTopic

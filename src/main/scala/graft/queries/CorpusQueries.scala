@@ -220,7 +220,7 @@ object CorpusQueries {
       * golden-pinned rows cannot have (see CATALOG.md). */
     "q_lda_planted_em" -> QueryDef(
       (s, dir) => graft.lda.PlantedLda.run(s, dir),
-      Some(LdaPlantedOracle.sql())),
+      Some(LdaPlantedOracle.sql)),
 
     /** The SAME planted trajectory through the SHUFFLE-JOIN E-step
       * (EStepShuffle — the 100 TB beta-as-table path behind
@@ -228,9 +228,8 @@ object CorpusQueries {
       * trajectory execution-path-independent, so the identical DuckDB
       * oracle verifies the scale path too. */
     "q_lda_planted_em_shuffle" -> QueryDef(
-      (s, dir) => graft.lda.PlantedLda.run(s, dir,
-        graft.lda.PlantedLda.Cfg(useShuffle = true)),
-      Some(LdaPlantedOracle.sql())),
+      (s, dir) => graft.lda.PlantedLda.run(s, dir, useShuffle = true),
+      Some(LdaPlantedOracle.sql)),
 
     /** The alpha Newton leg (D1 vector + D2 scalar, the verbatim
       * reference ports) run UNMODIFIED on the planted trajectory's
@@ -238,21 +237,21 @@ object CorpusQueries {
       * fixed-depth Newton unroll with benign-path guards. */
     "q_lda_planted_alpha" -> QueryDef(
       (s, dir) => graft.lda.PlantedLda.alphaRows(s, dir),
-      Some(LdaPlantedOracle.alphaSql())),
+      Some(LdaPlantedOracle.alphaSql)),
 
     /** Held-out inference (D5) on the planted model: fresh-init
       * E-step sweeps with learning off against the final beta —
       * the production inference shape, engine-replayed. */
     "q_lda_planted_infer" -> QueryDef(
       (s, dir) => graft.lda.PlantedLda.inferRows(s, dir),
-      Some(LdaPlantedOracle.inferSql())),
+      Some(LdaPlantedOracle.inferSql)),
 
     /** Per-doc variational log-likelihood from the planted run's final
       * E-step — the logGamma (Lanczos) kernel's engine witness
       * (reference DocumentMapper.java:244-254). */
     "q_lda_planted_ll" -> QueryDef(
       (s, dir) => graft.lda.PlantedLda.llRows(s, dir),
-      Some(LdaPlantedOracle.llSql())),
+      Some(LdaPlantedOracle.llSql)),
 
     "lda_doc_topics" -> QueryDef(
       (s, dir) => {

@@ -24,6 +24,14 @@ package graft.queries
  */
 object LdaPlantedOracle {
 
+  import graft.lda.PlantedLda.{Alpha, BetaDp, EmIters, GammaDp, K, MaxDocId, PhiDp,
+    SweepsPerIter, Vocab, VocabPerLang}
+
+  /** The Newton unroll depths of [[alphaSql]]: the vector update's exact two
+    * iterations and the scalar update's seven, plus two. */
+  private val VecIters = 2
+  private val ScalarIters = 9
+
   /** digamma as an inline SQL expression over column/expr `x` (x > 0).
     * Mirrors GammaFuncs.digamma's recurrence-then-series structure. */
   private def dg(x: String): String = {
@@ -56,39 +64,37 @@ object LdaPlantedOracle {
       s"$i2*(-691.0/2730.0)))))))) * $inv)"
   }
 
-  def sql(k: Int = 2, vocab: Int = 20, maxDocId: Long = 30,
-      emIters: Int = 3, sweeps: Int = 3, alpha: Double = 0.5,
-      gammaDp: Int = 8, phiDp: Int = 10, betaDp: Int = 8): String = {
-    require(k == 2, "the unrolled replay pivots on exactly 2 topics")
+  def sql: String = {
+    require(K == 2, "the unrolled replay pivots on exactly 2 topics")
     val P = Seq.newBuilder[String]
     P +=
       s"""pdw AS MATERIALIZED (
          |  SELECT CAST(doc_id AS BIGINT) AS doc,
          |         unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS word
-         |  FROM documents WHERE doc_id < $maxDocId)""".stripMargin
+         |  FROM documents WHERE doc_id < $MaxDocId)""".stripMargin
     P +=
       s"""pvoc AS MATERIALIZED (
          |  SELECT word, CAST(row_number() OVER (ORDER BY cnt DESC, word ASC) AS INT) - 1 AS term
          |  FROM (SELECT word, count(*) AS cnt FROM pdw GROUP BY 1)
-         |  QUALIFY row_number() OVER (ORDER BY cnt DESC, word ASC) <= $vocab)""".stripMargin
+         |  QUALIFY row_number() OVER (ORDER BY cnt DESC, word ASC) <= $Vocab)""".stripMargin
     P +=
       """pcnt AS MATERIALIZED (
         |  SELECT doc, term, count(*)::INT AS cnt FROM pdw JOIN pvoc USING (word)
         |  GROUP BY 1, 2)""".stripMargin
     P += s"pdoc AS MATERIALIZED (SELECT doc, sum(cnt)::BIGINT AS n FROM pcnt GROUP BY 1)"
-    P += s"ptop AS (SELECT unnest([${(0 until k).mkString(", ")}]) AS t)"
+    P += s"ptop AS (SELECT unnest([${(0 until K).mkString(", ")}]) AS t)"
     P +=
       s"""pb0 AS MATERIALIZED (
          |  SELECT term, t,
-         |         round(-ln(CAST($vocab AS DOUBLE)) + (((term*7 + t*3) % 11) - 5)/100.0, $betaDp) AS lb
+         |         round(-ln(CAST($Vocab AS DOUBLE)) + (((term*7 + t*3) % 11) - 5)/100.0, $BetaDp) AS lb
          |  FROM pvoc CROSS JOIN ptop)""".stripMargin
     P +=
       s"""pg1_0 AS MATERIALIZED (
-         |  SELECT doc, t, $alpha + n/${k.toDouble} AS g FROM pdoc CROSS JOIN ptop)""".stripMargin
-    for (it <- 1 to emIters) {
+         |  SELECT doc, t, $Alpha + n/${K.toDouble} AS g FROM pdoc CROSS JOIN ptop)""".stripMargin
+    for (it <- 1 to EmIters) {
       if (it > 1) // carry the previous iteration's final gammas forward
-        P += s"pg${it}_0 AS (SELECT * FROM pg${it - 1}_$sweeps)"
-      for (s <- 1 to sweeps) {
+        P += s"pg${it}_0 AS (SELECT * FROM pg${it - 1}_$SweepsPerIter)"
+      for (s <- 1 to SweepsPerIter) {
         P +=
           s"""pdg${it}_$s AS (SELECT doc, t, ${dg("g")} AS dgv FROM pg${it}_${s - 1})""".stripMargin
         P +=
@@ -109,16 +115,16 @@ object LdaPlantedOracle {
              |  FROM praw${it}_$s r JOIN pn${it}_$s n ON n.doc = r.doc AND n.term = r.term)""".stripMargin
         P +=
           s"""pg${it}_$s AS MATERIALIZED (
-             |  SELECT doc, t, round($alpha + sum(exp(lp)), $gammaDp) AS g
+             |  SELECT doc, t, round($Alpha + sum(exp(lp)), $GammaDp) AS g
              |  FROM pphi${it}_$s GROUP BY doc, t)""".stripMargin
       }
       P +=
         s"""plam$it AS MATERIALIZED (
-           |  SELECT term, t, round(mx + ln(sumex), $betaDp) AS lam FROM (
+           |  SELECT term, t, round(mx + ln(sumex), $BetaDp) AS lam FROM (
            |    SELECT term, t, mx, sum(exp(v - mx)) AS sumex FROM (
-           |      SELECT term, t, round(lp, $phiDp) AS v,
-           |             max(round(lp, $phiDp)) OVER (PARTITION BY term, t) AS mx
-           |      FROM pphi${it}_$sweeps)
+           |      SELECT term, t, round(lp, $PhiDp) AS v,
+           |             max(round(lp, $PhiDp)) OVER (PARTITION BY term, t) AS mx
+           |      FROM pphi${it}_$SweepsPerIter)
            |    GROUP BY term, t, mx))""".stripMargin
       P +=
         s"""psm$it AS MATERIALIZED (
@@ -135,16 +141,16 @@ object LdaPlantedOracle {
       P += s"pbe$it AS (SELECT t, ${dg("xn")} AS dxn FROM pbn$it)"
       P +=
         s"""pb$it AS MATERIALIZED (
-           |  SELECT d.term, d.t, round(d.dxl - e.dxn, $betaDp) AS lb
+           |  SELECT d.term, d.t, round(d.dxl - e.dxn, $BetaDp) AS lb
            |  FROM pbd$it d JOIN pbe$it e USING (t))""".stripMargin
     }
     "WITH " + P.result().mkString(",\n") +
       s"""
          |SELECT kind, topic, idx, value FROM (
          |  SELECT 'beta' AS kind, CAST(t + 1 AS INT) AS topic,
-         |         CAST(term AS BIGINT) AS idx, lb AS value FROM pb$emIters
+         |         CAST(term AS BIGINT) AS idx, lb AS value FROM pb$EmIters
          |  UNION ALL
-         |  SELECT 'gamma', CAST(t + 1 AS INT), doc, g FROM pg${emIters}_$sweeps)
+         |  SELECT 'gamma', CAST(t + 1 AS INT), doc, g FROM pg${EmIters}_$SweepsPerIter)
          |ORDER BY kind, topic, idx""".stripMargin
   }
 
@@ -168,29 +174,24 @@ object LdaPlantedOracle {
    * iterations ~1e-12 no-ops, inside the 8dp output anchor — with a
    * too-short-unroll guard.
    */
-  def alphaSql(k: Int = 2, vocab: Int = 20, maxDocId: Long = 30,
-      emIters: Int = 3, sweeps: Int = 3, alpha: Double = 0.5,
-      gammaDp: Int = 8, phiDp: Int = 10, betaDp: Int = 8,
-      vecIters: Int = 2, scalarIters: Int = 9): String = {
-    require(k == 2, "the unrolled replay pivots on exactly 2 topics")
-    val base = sql(k, vocab, maxDocId, emIters, sweeps, alpha,
-      gammaDp, phiDp, betaDp)
+  def alphaSql: String = {
+    val base = sql
     val prefix = base.substring(0, base.lastIndexOf("\nSELECT kind"))
     val P = Seq.newBuilder[String]
     P +=
-      s"""pgs AS (SELECT doc, sum(g) AS gs FROM pg${emIters}_$sweeps GROUP BY doc)""".stripMargin
-    P += s"pdgg AS (SELECT doc, t, ${dg("g")} AS v FROM pg${emIters}_$sweeps)"
+      s"""pgs AS (SELECT doc, sum(g) AS gs FROM pg${EmIters}_$SweepsPerIter GROUP BY doc)""".stripMargin
+    P += s"pdgg AS (SELECT doc, t, ${dg("g")} AS v FROM pg${EmIters}_$SweepsPerIter)"
     P += s"pdgs AS (SELECT doc, ${dg("gs")} AS v FROM pgs)"
     P +=
       """pssv AS MATERIALIZED (
         |  SELECT t, round(sum(a.v - b.v), 6) AS ss
         |  FROM pdgg a JOIN pdgs b USING (doc) GROUP BY t)""".stripMargin
     P +=
-      s"""pal0 AS (SELECT CAST($alpha AS DOUBLE) AS a0, CAST($alpha AS DOUBLE) AS a1,
+      s"""pal0 AS (SELECT CAST($Alpha AS DOUBLE) AS a0, CAST($Alpha AS DOUBLE) AS a1,
          |  (SELECT ss FROM pssv WHERE t = 0) AS s0,
          |  (SELECT ss FROM pssv WHERE t = 1) AS s1,
          |  (SELECT CAST(count(*) AS DOUBLE) FROM pgs) AS d)""".stripMargin
-    for (i <- 1 to vecIters) {
+    for (i <- 1 to VecIters) {
       P +=
         s"""pal$i AS (
            |  SELECT
@@ -216,8 +217,8 @@ object LdaPlantedOracle {
          |    THEN error('planted alpha: vector converged in one iteration — unroll exactly 1')
          |    ELSE 0 END AS ok
          |  FROM pal1 f, pal0 p)""".stripMargin
-    P += s"psa0 AS (SELECT CAST($alpha AS DOUBLE) AS a, s0 + s1 AS sst, d FROM pal0)"
-    for (i <- 1 to scalarIters) {
+    P += s"psa0 AS (SELECT CAST($Alpha AS DOUBLE) AS a, s0 + s1 AS sst, d FROM pal0)"
+    for (i <- 1 to ScalarIters) {
       P +=
         s"""psa$i AS (
            |  SELECT CASE WHEN isnan(an) OR NOT isfinite(an)
@@ -226,8 +227,8 @@ object LdaPlantedOracle {
            |  FROM (
            |    SELECT exp(ln(a) - g/(h*a + g)) AS an, sst, d FROM (
            |      SELECT a, sst, d,
-           |        d*(${k}*${dg(s"(${k}*a)")} - ${k}*${dg("a")}) + sst AS g,
-           |        d*(${k.toDouble * k}*${tg(s"(${k}*a)")} - ${k}*${tg("a")}) AS h
+           |        d*(${K}*${dg(s"(${K}*a)")} - ${K}*${dg("a")}) + sst AS g,
+           |        d*(${K.toDouble * K}*${tg(s"(${K}*a)")} - ${K}*${tg("a")}) AS h
            |      FROM psa${i - 1})))""".stripMargin
     }
     P +=
@@ -235,17 +236,17 @@ object LdaPlantedOracle {
          |  SELECT CASE WHEN abs((f.a - p.a)/p.a) >= 0.000001
          |    THEN error('planted alpha: scalar unroll too short for convergence')
          |    ELSE 0 END AS ok
-         |  FROM psa$scalarIters f, psa${scalarIters - 1} p)""".stripMargin
+         |  FROM psa$ScalarIters f, psa${ScalarIters - 1} p)""".stripMargin
     prefix + ",\n" + P.result().mkString(",\n") +
       s"""
          |SELECT kind, topic, value FROM (
          |  SELECT 'ss' AS kind, CAST(t + 1 AS INT) AS topic, ss AS value FROM pssv
          |  UNION ALL
-         |  SELECT 'vec', 1, round(a0, 8) FROM pal$vecIters WHERE (SELECT ok FROM palg) = 0
+         |  SELECT 'vec', 1, round(a0, 8) FROM pal$VecIters WHERE (SELECT ok FROM palg) = 0
          |  UNION ALL
-         |  SELECT 'vec', 2, round(a1, 8) FROM pal$vecIters
+         |  SELECT 'vec', 2, round(a1, 8) FROM pal$VecIters
          |  UNION ALL
-         |  SELECT 'scalar', 1, round(a, 8) FROM psa$scalarIters WHERE (SELECT ok FROM psag) = 0)
+         |  SELECT 'scalar', 1, round(a, 8) FROM psa$ScalarIters WHERE (SELECT ok FROM psag) = 0)
          |ORDER BY kind, topic""".stripMargin
   }
 
@@ -271,29 +272,25 @@ object LdaPlantedOracle {
    * L_phi = sum_w,k cnt*phi*(E[log beta] - log phi) — with the inline
    * Lanczos lnGamma. 6dp anchor on the sum.
    */
-  def llSql(k: Int = 2, vocab: Int = 20, maxDocId: Long = 30,
-      emIters: Int = 3, sweeps: Int = 3, alpha: Double = 0.5,
-      gammaDp: Int = 8, phiDp: Int = 10, betaDp: Int = 8): String = {
-    require(k == 2, "the unrolled replay pivots on exactly 2 topics")
-    val base = sql(k, vocab, maxDocId, emIters, sweeps, alpha,
-      gammaDp, phiDp, betaDp)
+  def llSql: String = {
+    val base = sql
     val prefix = base.substring(0, base.lastIndexOf("\nSELECT kind"))
     val P = Seq.newBuilder[String]
     // L_alpha = lnG(sum alpha) - sum_k lnG(alpha_k); fold shape matches
     // the Scala accumulation (k identical terms)
-    P += s"plla AS (SELECT ${lg(s"(${k * alpha})")} - ($k*${lg(s"($alpha)")}) AS la)"
-    P += s"pgs2 AS (SELECT doc, sum(g) AS gs FROM pg${emIters}_$sweeps GROUP BY doc)"
+    P += s"plla AS (SELECT ${lg(s"(${K * Alpha})")} - ($K*${lg(s"($Alpha)")}) AS la)"
+    P += s"pgs2 AS (SELECT doc, sum(g) AS gs FROM pg${EmIters}_$SweepsPerIter GROUP BY doc)"
     P +=
       s"""pllg AS (
          |  SELECT g.doc, sum(${lg("g.g")}) - max(${lg("s.gs")}) AS lgam
-         |  FROM pg${emIters}_$sweeps g JOIN pgs2 s USING (doc)
+         |  FROM pg${EmIters}_$SweepsPerIter g JOIN pgs2 s USING (doc)
          |  GROUP BY g.doc)""".stripMargin
     P +=
       s"""pllp AS (
          |  SELECT p.doc,
          |    sum(p.cnt * exp(p.lp - ln(p.cnt)) * (b.lb - (p.lp - ln(p.cnt)))) AS lphi
-         |  FROM pphi${emIters}_$sweeps p
-         |  JOIN pb${emIters - 1} b ON b.term = p.term AND b.t = p.t
+         |  FROM pphi${EmIters}_$SweepsPerIter p
+         |  JOIN pb${EmIters - 1} b ON b.term = p.term AND b.t = p.t
          |  GROUP BY p.doc)""".stripMargin
     prefix + ",\n" + P.result().mkString(",\n") +
       s"""
@@ -309,23 +306,19 @@ object LdaPlantedOracle {
    * inference, reference D5 semantics (learning off changes only the
    * phi side-output, which inference never emits).
    */
-  def inferSql(k: Int = 2, vocab: Int = 20, maxDocId: Long = 30,
-      emIters: Int = 3, sweeps: Int = 3, alpha: Double = 0.5,
-      gammaDp: Int = 8, phiDp: Int = 10, betaDp: Int = 8): String = {
-    require(k == 2, "the unrolled replay pivots on exactly 2 topics")
-    val base = sql(k, vocab, maxDocId, emIters, sweeps, alpha,
-      gammaDp, phiDp, betaDp)
+  def inferSql: String = {
+    val base = sql
     val prefix = base.substring(0, base.lastIndexOf("\nSELECT kind"))
     val P = Seq.newBuilder[String]
     P +=
       s"""pig0 AS MATERIALIZED (
-         |  SELECT doc, t, $alpha + n/${k.toDouble} AS g FROM pdoc CROSS JOIN ptop)""".stripMargin
-    for (s <- 1 to sweeps) {
+         |  SELECT doc, t, $Alpha + n/${K.toDouble} AS g FROM pdoc CROSS JOIN ptop)""".stripMargin
+    for (s <- 1 to SweepsPerIter) {
       P += s"pidg$s AS (SELECT doc, t, ${dg("g")} AS dgv FROM pig${s - 1})"
       P +=
         s"""pirw$s AS MATERIALIZED (
            |  SELECT c.doc, c.term, c.cnt, b.t, (b.lb + d.dgv) AS raw
-           |  FROM pcnt c JOIN pb$emIters b ON b.term = c.term
+           |  FROM pcnt c JOIN pb$EmIters b ON b.term = c.term
            |  JOIN pidg$s d ON d.doc = c.doc AND d.t = b.t)""".stripMargin
       P +=
         s"""pinm$s AS (
@@ -336,7 +329,7 @@ object LdaPlantedOracle {
            |    FROM pirw$s GROUP BY doc, term))""".stripMargin
       P +=
         s"""pig$s AS MATERIALIZED (
-           |  SELECT r.doc, r.t, round($alpha + sum(exp(((r.raw - n.nrm) + ln(r.cnt)))), $gammaDp) AS g
+           |  SELECT r.doc, r.t, round($Alpha + sum(exp(((r.raw - n.nrm) + ln(r.cnt)))), $GammaDp) AS g
            |  FROM pirw$s r JOIN pinm$s n ON n.doc = r.doc AND n.term = r.term
            |  GROUP BY r.doc, r.t)""".stripMargin
     }
@@ -344,7 +337,7 @@ object LdaPlantedOracle {
       s"""
          |SELECT 'gamma' AS kind, CAST(t + 1 AS INT) AS topic,
          |       doc AS idx, g AS value
-         |FROM pig$sweeps
+         |FROM pig$SweepsPerIter
          |ORDER BY kind, topic, idx""".stripMargin
   }
 
@@ -355,41 +348,39 @@ object LdaPlantedOracle {
    * lambda floored at -700 (EmCore.Smoothing.floor) — replayed per
    * (lang, topic, term).
    */
-  def polySql(k: Int = 2, vocabPerLang: Int = 10, maxDocId: Long = 30,
-      emIters: Int = 3, sweeps: Int = 3, alpha: Double = 0.5,
-      gammaDp: Int = 8, phiDp: Int = 10, betaDp: Int = 8): String = {
-    require(k == 2, "the unrolled replay pivots on exactly 2 topics")
+  def polySql: String = {
+    require(K == 2, "the unrolled replay pivots on exactly 2 topics")
     val P = Seq.newBuilder[String]
     P +=
       s"""pdw AS MATERIALIZED (
          |  SELECT doc, word, CASE WHEN word < 'n' THEN 0 ELSE 1 END AS lang FROM (
          |    SELECT CAST(doc_id AS BIGINT) AS doc,
          |           unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS word
-         |    FROM documents WHERE doc_id < $maxDocId))""".stripMargin
+         |    FROM documents WHERE doc_id < $MaxDocId))""".stripMargin
     P +=
       s"""pvoc AS MATERIALIZED (
          |  SELECT lang, word,
          |         CAST(row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, word ASC) AS INT) - 1 AS term
          |  FROM (SELECT lang, word, count(*) AS cnt FROM pdw GROUP BY 1, 2)
-         |  QUALIFY row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, word ASC) <= $vocabPerLang)""".stripMargin
+         |  QUALIFY row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, word ASC) <= $VocabPerLang)""".stripMargin
     P +=
       """pcnt AS MATERIALIZED (
         |  SELECT doc, lang, term, count(*)::INT AS cnt
         |  FROM pdw JOIN pvoc USING (lang, word) GROUP BY 1, 2, 3)""".stripMargin
     P += s"pdoc AS MATERIALIZED (SELECT doc, sum(cnt)::BIGINT AS n FROM pcnt GROUP BY 1)"
-    P += s"ptop AS (SELECT unnest([${(0 until k).mkString(", ")}]) AS t)"
+    P += s"ptop AS (SELECT unnest([${(0 until K).mkString(", ")}]) AS t)"
     P +=
       s"""pb0 AS MATERIALIZED (
          |  SELECT lang, term, t,
-         |         round(-ln(CAST($vocabPerLang AS DOUBLE)) + (((term*7 + t*3 + lang*5) % 11) - 5)/100.0, $betaDp) AS lb
+         |         round(-ln(CAST($VocabPerLang AS DOUBLE)) + (((term*7 + t*3 + lang*5) % 11) - 5)/100.0, $BetaDp) AS lb
          |  FROM (SELECT DISTINCT lang, term FROM pvoc) CROSS JOIN ptop)""".stripMargin
     P +=
       s"""pg1_0 AS MATERIALIZED (
-         |  SELECT doc, t, $alpha + n/${k.toDouble} AS g FROM pdoc CROSS JOIN ptop)""".stripMargin
-    for (it <- 1 to emIters) {
+         |  SELECT doc, t, $Alpha + n/${K.toDouble} AS g FROM pdoc CROSS JOIN ptop)""".stripMargin
+    for (it <- 1 to EmIters) {
       if (it > 1)
-        P += s"pg${it}_0 AS (SELECT * FROM pg${it - 1}_$sweeps)"
-      for (s <- 1 to sweeps) {
+        P += s"pg${it}_0 AS (SELECT * FROM pg${it - 1}_$SweepsPerIter)"
+      for (s <- 1 to SweepsPerIter) {
         P += s"pdg${it}_$s AS (SELECT doc, t, ${dg("g")} AS dgv FROM pg${it}_${s - 1})"
         P +=
           s"""praw${it}_$s AS MATERIALIZED (
@@ -410,16 +401,16 @@ object LdaPlantedOracle {
              |  JOIN pn${it}_$s n ON n.doc = r.doc AND n.lang = r.lang AND n.term = r.term)""".stripMargin
         P +=
           s"""pg${it}_$s AS MATERIALIZED (
-             |  SELECT doc, t, round($alpha + sum(exp(lp)), $gammaDp) AS g
+             |  SELECT doc, t, round($Alpha + sum(exp(lp)), $GammaDp) AS g
              |  FROM pphi${it}_$s GROUP BY doc, t)""".stripMargin
       }
       P +=
         s"""plam$it AS MATERIALIZED (
-           |  SELECT lang, term, t, round(greatest(mx + ln(sumex), -700.0), $betaDp) AS lam FROM (
+           |  SELECT lang, term, t, round(greatest(mx + ln(sumex), -700.0), $BetaDp) AS lam FROM (
            |    SELECT lang, term, t, mx, sum(exp(v - mx)) AS sumex FROM (
-           |      SELECT lang, term, t, round(lp, $phiDp) AS v,
-           |             max(round(lp, $phiDp)) OVER (PARTITION BY lang, term, t) AS mx
-           |      FROM pphi${it}_$sweeps)
+           |      SELECT lang, term, t, round(lp, $PhiDp) AS v,
+           |             max(round(lp, $PhiDp)) OVER (PARTITION BY lang, term, t) AS mx
+           |      FROM pphi${it}_$SweepsPerIter)
            |    GROUP BY lang, term, t, mx))""".stripMargin
       P +=
         s"""pnorm$it AS (
@@ -433,16 +424,16 @@ object LdaPlantedOracle {
       P += s"pbe$it AS (SELECT lang, t, ${dg("xn")} AS dxn FROM pbn$it)"
       P +=
         s"""pb$it AS MATERIALIZED (
-           |  SELECT d.lang, d.term, d.t, round(d.dxl - e.dxn, $betaDp) AS lb
+           |  SELECT d.lang, d.term, d.t, round(d.dxl - e.dxn, $BetaDp) AS lb
            |  FROM pbd$it d JOIN pbe$it e ON e.lang = d.lang AND e.t = d.t)""".stripMargin
     }
     "WITH " + P.result().mkString(",\n") +
       s"""
          |SELECT kind, lang, topic, idx, value FROM (
          |  SELECT 'beta' AS kind, CAST(lang AS INT) AS lang, CAST(t + 1 AS INT) AS topic,
-         |         CAST(term AS BIGINT) AS idx, lb AS value FROM pb$emIters
+         |         CAST(term AS BIGINT) AS idx, lb AS value FROM pb$EmIters
          |  UNION ALL
-         |  SELECT 'gamma', -1, CAST(t + 1 AS INT), doc, g FROM pg${emIters}_$sweeps)
+         |  SELECT 'gamma', -1, CAST(t + 1 AS INT), doc, g FROM pg${EmIters}_$SweepsPerIter)
          |ORDER BY kind, lang, topic, idx""".stripMargin
   }
 }

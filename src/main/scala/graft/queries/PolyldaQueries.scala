@@ -127,13 +127,12 @@ object PolyldaQueries {
       * q_lda_planted_em. */
     "q_polylda_planted_em" -> QueryDef(
       (s, dir) => PolyPlantedLda.run(s, dir),
-      Some(LdaPlantedOracle.polySql())),
+      Some(LdaPlantedOracle.polySql)),
 
     /** Same planted trajectory through the polylingual SHUFFLE-JOIN
       * E-step (the per-language beta-as-table scale
       * path) — identical oracle by anchored path-independence. */
     "q_polylda_planted_em_shuffle" -> QueryDef(
-      (s, dir) => PolyPlantedLda.run(s, dir,
-        PolyPlantedLda.Cfg(useShuffle = true)),
-      Some(LdaPlantedOracle.polySql())))
+      (s, dir) => PolyPlantedLda.run(s, dir, useShuffle = true),
+      Some(LdaPlantedOracle.polySql)))
 }

@@ -2,10 +2,11 @@ package graft
 
 import graft.corpus.ParseCorpus
 import graft.lda.{EStep, EStepShuffle, EmCore, Trainer}
-import graft.model.PolyDoc
+import graft.model.{Doc, PolyDoc}
 import graft.polylda.{PolyDocs, PolyTrainer}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Vanilla LDA is polylingual LDA with one language: on the same corpus,
@@ -13,7 +14,8 @@ import org.apache.spark.sql.functions.lit
  * and the polylingual E-step give exactly equal gamma, document
  * log-likelihood and partition-combined log-phi, on both ways of
  * supplying E[log β] (broadcast lookup and shuffle join). Plus the
- * degenerate corpora both trainers must survive on both paths.
+ * degenerate corpora both trainers must survive on both paths, and what
+ * training may and may not do to the caller's state.
  */
 class EmCoreSpec extends SparkSpec {
   import spark.implicits._
@@ -131,6 +133,63 @@ class EmCoreSpec extends SparkSpec {
       val pe = intercept[IllegalArgumentException](PolyTrainer.train(poly, Map(0 -> v),
         PolyTrainer.Config(numTopics = 3, maxIterations = 2, localIterations = 5)))
       assert(pe.getMessage.contains("empty corpus"), pe.getMessage)
+    }
+  }
+
+  private def onePoly(d: Doc): PolyDoc =
+    PolyDoc(d.docId, Map(0 -> d.counts), Map(0 -> d.numTokens), d.numTokens, d.gamma)
+
+  private val sixDocs = Seq("apple banana cherry", "banana apple apple", "cherry banana fruit",
+    "iron copper zinc", "copper iron iron", "zinc copper metal")
+
+  test("training leaves the caller's cache as it found it, both trainers") {
+    val parsed = parse(sixDocs)
+    val v = parsed.stats.numTerms.toInt
+    val rows = parsed.docs.collect().toSeq
+    def check[D](docs: => Dataset[D], train: (Dataset[D], Boolean) => Unit): Unit =
+      for (cachedByCaller <- Seq(true, false); randomStart <- Seq(false, true)) {
+        val corpus = docs
+        if (cachedByCaller) corpus.persist(StorageLevel.MEMORY_AND_DISK).count()
+        val before = corpus.storageLevel
+        try {
+          train(corpus, randomStart)
+          assert(corpus.storageLevel == before,
+            s"cached by caller: $cachedByCaller, randomStartGamma: $randomStart")
+        } finally corpus.unpersist()
+      }
+    check[Doc](rows.toDS(), (docs, randomStart) => Trainer.train(docs, v, Trainer.Config(
+      numTopics = 2, maxIterations = 2, localIterations = 5, randomStartGamma = randomStart)))
+    check[PolyDoc](rows.map(onePoly).toDS(), (docs, randomStart) => PolyTrainer.train(docs,
+      Map(0 -> v), PolyTrainer.Config(numTopics = 2, maxIterations = 2, localIterations = 5,
+        randomStartGamma = randomStart)))
+  }
+
+  test("resuming a checkpoint with another K is refused, both trainers and paths") {
+    val parsed = parse(sixDocs)
+    val v = parsed.stats.numTerms.toInt
+    val poly = parsed.docs.collect().toSeq.map(onePoly).toDS()
+    for ((path, ceiling) <- Seq("broadcast" -> (4L << 20), "shuffle" -> 0L);
+         (saved, asked) <- Seq(2 -> 3, 3 -> 2)) {
+      def refused(resume: String => Unit): Unit = {
+        val dir = java.nio.file.Files.createTempDirectory("graft_resume_k_").toString
+        val e = intercept[IllegalArgumentException](resume(dir))
+        assert(e.getMessage.contains(dir) && e.getMessage.contains(s"K=$saved") &&
+          e.getMessage.contains(s"numTopics=$asked"), s"$path: ${e.getMessage}")
+      }
+      val vanilla = Trainer.Config(numTopics = saved, maxIterations = 1, localIterations = 5,
+        betaBroadcastMaxEntries = ceiling)
+      refused { dir =>
+        Trainer.train(parsed.docs, v, vanilla.copy(checkpointDir = Some(dir)))
+        Trainer.train(parsed.docs, v,
+          vanilla.copy(numTopics = asked, maxIterations = 2, resumeFrom = Some((dir, 1))))
+      }
+      val polyCfg = PolyTrainer.Config(numTopics = saved, maxIterations = 1,
+        localIterations = 5, betaBroadcastMaxEntries = ceiling)
+      refused { dir =>
+        PolyTrainer.train(poly, Map(0 -> v), polyCfg.copy(checkpointDir = Some(dir)))
+        PolyTrainer.train(poly, Map(0 -> v),
+          polyCfg.copy(numTopics = asked, maxIterations = 2, resumeFrom = Some((dir, 1))))
+      }
     }
   }
 }

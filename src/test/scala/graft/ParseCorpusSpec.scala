@@ -35,6 +35,14 @@ class ParseCorpusSpec extends SparkSpec {
     assert(r.stats.collapsedDocs == 2 && r.stats.highDfTerms == 2)
   }
 
+  test("leading, trailing and doubled whitespace makes no empty token") {
+    val r = ParseCorpus.run(Seq((1L, "d1", "\t apple  banana ")).toDF("docId", "title", "text"))
+    val terms = r.terms.collect().map(_.term)
+    assert(terms.toSet == Set("apple", "banana"))
+    assert(!terms.exists(_.isEmpty))
+    assert(r.docs.collect().map(_.numTokens).toSeq == Seq(2L))
+  }
+
   test("stopword filter and lowercase") {
     val df = Seq((1L, "t", "The BANANA the apple")).toDF("docId", "title", "text")
     val r = ParseCorpus.run(df, ParseCorpus.Config(stopwords = Seq("the"), lowercase = true))

@@ -1,6 +1,7 @@
 package graft
 
 import graft.lda.PlantedLda
+import graft.lda.PlantedLda.{Alpha, K, Vocab}
 
 /** The planted micro-LDA EM (the DuckDB-replayable trajectory behind
   * q_lda_planted_em): structural invariants the hash oracle can't
@@ -21,22 +22,20 @@ class PlantedLdaSpec extends SparkSpec {
   test("shape: beta covers topics x vocab, gammas cover topics x docs") {
     val beta = out.filter(_.getString(0) == "beta")
     val gamma = out.filter(_.getString(0) == "gamma")
-    val cfg = PlantedLda.Cfg()
-    assert(beta.length == cfg.k * cfg.vocab)
-    assert(gamma.length % cfg.k == 0 && gamma.nonEmpty)
+    assert(beta.length == K * Vocab)
+    assert(gamma.length % K == 0 && gamma.nonEmpty)
     // every topic appears, ids are 1-based
-    assert(beta.map(_.getInt(1)).distinct.sorted.toSeq == (1 to cfg.k))
+    assert(beta.map(_.getInt(1)).distinct.sorted.toSeq == (1 to K))
   }
 
   test("gamma mass conservation: sum_k gamma_dk = K*alpha + numTokens (anchored)") {
-    val cfg = PlantedLda.Cfg()
-    val docs = PlantedLda.corpus(spark, dir, cfg)
+    val docs = PlantedLda.corpus(spark, dir)
     val byDoc = out.filter(_.getString(0) == "gamma")
       .groupBy(_.getLong(2)).view.mapValues(_.map(_.getDouble(3)).sum).toMap
     docs.foreach { d =>
-      val expected = cfg.k * cfg.alpha + d.numTokens.toDouble
+      val expected = K * Alpha + d.numTokens.toDouble
       // each of the K addends carries at most half an 8dp-anchor of slack
-      assert(math.abs(byDoc(d.docId) - expected) < cfg.k * 5e-9 + 1e-9,
+      assert(math.abs(byDoc(d.docId) - expected) < K * 5e-9 + 1e-9,
         s"doc ${d.docId}: ${byDoc(d.docId)} vs $expected")
     }
   }
@@ -54,8 +53,7 @@ class PlantedLdaSpec extends SparkSpec {
   }
 
   test("broadcast and shuffle E-steps produce the IDENTICAL anchored trajectory") {
-    val shuffled = PlantedLda.run(spark, dir,
-      PlantedLda.Cfg(useShuffle = true)).collect()
+    val shuffled = PlantedLda.run(spark, dir, useShuffle = true).collect()
     assert(out.map(_.toString).toSeq == shuffled.map(_.toString).toSeq,
       "anchored handoffs must make the trajectory execution-path-independent")
   }
@@ -64,10 +62,9 @@ class PlantedLdaSpec extends SparkSpec {
     val a1 = PlantedLda.alphaRows(spark, dir).collect()
     val a2 = PlantedLda.alphaRows(spark, dir).collect()
     assert(a1.map(_.toString).toSeq == a2.map(_.toString).toSeq)
-    val cfg = PlantedLda.Cfg()
-    assert(a1.count(_.getString(0) == "vec") == cfg.k)
+    assert(a1.count(_.getString(0) == "vec") == K)
     assert(a1.count(_.getString(0) == "scalar") == 1)
-    assert(a1.count(_.getString(0) == "ss") == cfg.k)
+    assert(a1.count(_.getString(0) == "ss") == K)
     a1.filter(r => r.getString(0) == "vec" || r.getString(0) == "scalar").foreach { r =>
       val v = r.getDouble(2)
       assert(v > 0 && java.lang.Double.isFinite(v), s"$r")
@@ -77,9 +74,8 @@ class PlantedLdaSpec extends SparkSpec {
   }
 
   test("llRows: one finite negative LL per kept document") {
-    val cfg = PlantedLda.Cfg()
     val lls = PlantedLda.llRows(spark, dir).collect()
-    val docs = PlantedLda.corpus(spark, dir, cfg)
+    val docs = PlantedLda.corpus(spark, dir)
     assert(lls.length == docs.length)
     lls.foreach { r =>
       val v = r.getDouble(1)
@@ -88,11 +84,10 @@ class PlantedLdaSpec extends SparkSpec {
   }
 
   test("EM moves the model: final beta differs from the planted init") {
-    val cfg = PlantedLda.Cfg()
-    val init = PlantedLda.initBeta(cfg)
+    val init = PlantedLda.initBeta(numLangs = 1, Vocab)
     val moved = out.filter(_.getString(0) == "beta").count { r =>
       math.abs(r.getDouble(3) - init(r.getLong(2).toInt)(r.getInt(1) - 1)) > 1e-4
     }
-    assert(moved > cfg.vocab, s"only $moved beta entries moved")
+    assert(moved > Vocab, s"only $moved beta entries moved")
   }
 }

@@ -101,15 +101,14 @@ class TrainerPathsSpec extends SparkSpec {
       assert(math.abs((x - y) / x) < 1e-8, s"LL drift with empty doc: $x vs $y") }
   }
 
-  test("early convergence still writes a final snapshot (checkpointEvery > 1)") {
+  test("early convergence still writes a final snapshot") {
     val parsed = ParseCorpus.run(corpus)
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_early_").toString
     // convergence=1.0 stops at the first comparable iteration (iteration 2),
-    // which is NOT a multiple of checkpointEvery=5
+    // long before maxIterations
     val m = Trainer.train(parsed.docs, parsed.stats.numTerms.toInt,
       Trainer.Config(numTopics = 2, maxIterations = 30, localIterations = 10,
-        seed = 42L, convergence = 1.0,
-        checkpointDir = Some(dir), checkpointEvery = 5))
+        seed = 42L, convergence = 1.0, checkpointDir = Some(dir)))
     assert(m.iterations < 30)
     assert(new java.io.File(s"$dir/alpha-${m.iterations}").exists(),
       s"final snapshot alpha-${m.iterations} missing")
