@@ -18,9 +18,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.all.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    // opt-in range-join binning (no-op until spark.graft.rangeJoin.binWidth
-    // is set on the session)
-    ext.injectOptimizerRule(session => graft.plans.RangeJoinBinRewrite(session))
   }
 }
 

@@ -16,8 +16,8 @@ import org.apache.spark.sql.SparkSession
  *     comfortably fit executor memory alongside a shuffle buffer.
  *   - UTC session timezone (engine-portable timestamp semantics — the
  *     DuckDB oracles assume it).
- *   - `GraftExtensions` installed: the library's SQL functions and the
- *     opt-in range-join binning rule are available on every session.
+ *   - `GraftExtensions` installed: the library's SQL functions are
+ *     available on every session (it adds no optimizer rule).
  *
  * Every session in the library, its tools (Bench, Verify, PlanProfile,
  * ScaleRehearsal, the CLI) and its test suites is built here.

@@ -1,5 +1,6 @@
 package graft.lda
 
+import graft.lda.EmCore.Keys
 import graft.model.TermEntry
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -8,31 +9,42 @@ import org.apache.spark.sql.functions._
 /**
  * Model inspection — the reference's read-path "queries"
  * (cc/mrlda/DisplayTopic.java:97-143 and DisplayDocument.java:81-103),
- * expressed as DataFrame plans instead of driver-side scans.
+ * expressed as DataFrame plans instead of driver-side scans. One ranking
+ * serves both topic models: vanilla LDA is language 0, and its rows carry
+ * no `lang` column ([[EmCore.Keys]]).
  */
 object Display {
 
-  /** Model beta map -> (topic 1..K, termId, elogbeta) DataFrame. */
-  def betaToDF(spark: SparkSession, model: LdaModel): DataFrame = {
+  /** A model's beta, lang -> termId -> E[log β] over the K topics, as
+    * (lang…, topic 1..K, termId, elogbeta) rows: the driver builds one row
+    * per (lang, term) and the plan explodes its topics. */
+  private[graft] def betaRows(spark: SparkSession, keys: Keys,
+      beta: Map[Int, scala.collection.Map[Int, Array[Double]]]): DataFrame = {
     import spark.implicits._
-    model.beta.iterator.flatMap { case (w, arr) =>
-      arr.iterator.zipWithIndex.map { case (v, t) => (t + 1, w, v) }
-    }.toSeq.toDF("topic", "termId", "elogbeta")
+    val rows = beta.toSeq.flatMap { case (l, m) => m.iterator.map { case (w, arr) => (l, w, arr) } }
+    EmCore.explodeTopics(rows.toDF("lang", "termId", "elogbeta"), keys, "elogbeta")
   }
 
-  /** Top-k terms per topic by E[log β] (reference O4: bounded TreeMap per
-    * topic → here a ranking window; ties broken by termId so output is
-    * deterministic). */
-  def topTermsPerTopic(beta: DataFrame, terms: Dataset[TermEntry], k: Int = 10): DataFrame = {
-    val spark = beta.sparkSession
-    import spark.implicits._
-    val w = Window.partitionBy($"topic").orderBy($"elogbeta".desc, $"termId".asc)
-    beta.join(broadcast(terms.toDF().select($"termId", $"term")), "termId")
+  /** Top-k terms per (lang…, topic) by E[log β] → (lang…, topic, rank,
+    * term, score) (reference O4: bounded TreeMap per topic → here a
+    * ranking window; ties broken by termId so output is deterministic).
+    * `terms` is the dictionary: (lang…, termId, term). */
+  private[graft] def rankTerms(beta: DataFrame, terms: DataFrame, keys: Keys, k: Int): DataFrame = {
+    val w = Window.partitionBy(keys.norm.map(col): _*)
+      .orderBy(col("elogbeta").desc, col("termId").asc)
+    beta.join(broadcast(terms.select((keys.term :+ "term").map(col): _*)), keys.term)
       .withColumn("rank", row_number().over(w))
-      .filter($"rank" <= k)
-      .select($"topic", $"rank", $"term", $"elogbeta".as("score"))
-      .orderBy($"topic", $"rank")
+      .filter(col("rank") <= k)
+      .select(keys.norm.map(col) ++ Seq(col("rank"), col("term"), col("elogbeta").as("score")): _*)
   }
+
+  /** Model beta map -> (topic 1..K, termId, elogbeta) DataFrame. */
+  def betaToDF(spark: SparkSession, model: LdaModel): DataFrame =
+    betaRows(spark, VanillaDocs.keys, Map(0 -> model.beta))
+
+  /** Top-k terms per topic → (topic, rank, term, score), ordered. */
+  def topTermsPerTopic(beta: DataFrame, terms: Dataset[TermEntry], k: Int = 10): DataFrame =
+    rankTerms(beta, terms.toDF(), VanillaDocs.keys, k).orderBy(col("topic"), col("rank"))
 
   /** Per-document topic proportions from gamma (reference D8). */
   def documentTopics(gammaDocs: DataFrame): DataFrame = {

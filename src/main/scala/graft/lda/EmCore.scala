@@ -394,10 +394,14 @@ private[graft] object EmCore {
     * scalar (lang…, topic, termId, logphi) rows for the cross-partition
     * fold; the per-key value multiset is unchanged. */
   def explodePhi(estep: DataFrame, keys: Keys): DataFrame =
-    estep.filter(!col("isDoc"))
-      .select(keys.term.map(col) :+ posexplode(col("logphi")).as(Seq("pos", "lp")): _*)
+    explodeTopics(estep.filter(!col("isDoc")), keys, "logphi")
+
+  /** (lang…, termId, `values`[K]) rows → one (lang…, topic 1..K, termId,
+    * `values`) row per topic, exploded in the plan. */
+  def explodeTopics(rows: DataFrame, keys: Keys, values: String): DataFrame =
+    rows.select(keys.term.map(col) :+ posexplode(col(values)).as(Seq("pos", "v")): _*)
       .select(keys.langCols.map(col) ++ Seq(
-        (col("pos") + 1).cast("int").as("topic"), col("termId"), col("lp").as("logphi")): _*)
+        (col("pos") + 1).cast("int").as("topic"), col("termId"), col("v").as(values)): _*)
 
   /**
    * Distributed M-step: fold the phi statistics into log λ per

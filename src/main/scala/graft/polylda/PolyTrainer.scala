@@ -1,6 +1,6 @@
 package graft.polylda
 
-import graft.lda.{EmCore, TermBeta}
+import graft.lda.{Display, EmCore, TermBeta}
 import graft.lda.EmCore.{DocShape, Keys, Lookup, Model, Smoothing}
 import graft.model.PolyDoc
 import org.apache.spark.broadcast.Broadcast
@@ -134,27 +134,14 @@ object PolyTrainer {
     * (reference surfaces 1-based language ids in file names; we surface the
     * lang column). */
   def topTermsPerTopic(spark: org.apache.spark.sql.SparkSession, model: PolyLdaModel,
-      terms: Dataset[graft.model.PolyTermEntry], k: Int): DataFrame = {
-    import spark.implicits._
-    val rows = model.beta.toSeq.flatMap { case (lang, termMap) =>
-      termMap.toSeq.flatMap { case (termId, arr) =>
-        arr.zipWithIndex.map { case (v, t) => (lang, t + 1, termId, v) }
-      }
-    }
-    topTermsFromRows(rows.toDF("lang", "topic", "termId", "elogbeta"), terms, k)
-  }
+      terms: Dataset[graft.model.PolyTermEntry], k: Int): DataFrame =
+    topTermsFromRows(Display.betaRows(spark, PolyDocs.keys, model.beta), terms, k)
 
   /** Same over (lang, topic, termId, elogbeta) rows — e.g. a checkpointed
-    * beta-<i> snapshot. */
+    * beta-<i> snapshot. Scores are rounded to 6 dp. */
   def topTermsFromRows(beta: DataFrame,
-      terms: Dataset[graft.model.PolyTermEntry], k: Int): DataFrame = {
-    val spark = beta.sparkSession
-    import spark.implicits._
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"lang", $"topic").orderBy($"elogbeta".desc, $"termId".asc)
-    beta.join(terms.select($"lang", $"termId", $"term"), Seq("lang", "termId"))
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= k)
-      .select($"lang", $"topic", $"rnk", $"term", round($"elogbeta", 6).as("score"))
-  }
+      terms: Dataset[graft.model.PolyTermEntry], k: Int): DataFrame =
+    Display.rankTerms(beta, terms.toDF(), PolyDocs.keys, k)
+      .select(col("lang"), col("topic"), col("rank").as("rnk"), col("term"),
+        round(col("score"), 6).as("score"))
 }

@@ -73,9 +73,6 @@ object MrldaModelFiles {
   def readTermIndex(spark: SparkSession, path: String): DataFrame =
     readIntTextIndex(spark, path, "termId", "term")
 
-  def readTitleIndex(spark: SparkSession, path: String): DataFrame =
-    readIntTextIndex(spark, path, "docId", "title")
-
   // ---- alpha (IntWritable topic 1..K -> DoubleWritable) ----
 
   def readAlpha(spark: SparkSession, path: String): Array[Double] = {

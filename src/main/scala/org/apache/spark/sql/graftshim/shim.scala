@@ -14,15 +14,6 @@ object shim {
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
   def toExpr(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Execute a hand-built logical plan (classic Dataset.ofRows is
-    * private[sql]; tests use this to run a manually-applied optimizer
-    * rule's output). */
-  def ofRows(spark: org.apache.spark.sql.SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
   /** Block until every listener-bus event posted so far has reached every
     * listener (`listenerBus` is private[spark]); throws a
     * TimeoutException after `timeoutMs`. */

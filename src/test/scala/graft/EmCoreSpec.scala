@@ -1,9 +1,9 @@
 package graft
 
 import graft.corpus.ParseCorpus
-import graft.lda.{EStep, EStepShuffle, EmCore, Trainer}
-import graft.model.{Doc, PolyDoc}
-import graft.polylda.{PolyDocs, PolyTrainer}
+import graft.lda.{Display, EStep, EStepShuffle, EmCore, LdaModel, Trainer}
+import graft.model.{Doc, PolyDoc, PolyTermEntry}
+import graft.polylda.{PolyDocs, PolyLdaModel, PolyTrainer}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.storage.StorageLevel
@@ -191,5 +191,33 @@ class EmCoreSpec extends SparkSpec {
           polyCfg.copy(numTopics = asked, maxIterations = 2, resumeFrom = Some((dir, 1))))
       }
     }
+  }
+
+  test("top terms: vanilla == polylingual with one language, ties broken by termId") {
+    val parsed = parse(sixDocs)
+    val v = parsed.stats.numTerms.toInt
+    // four values per topic, shared by several terms: the termId tie-break
+    // decides most ranks
+    val beta = (1 to v).map(w => w -> Array.tabulate(k)(t => -2.0 - (w + t) % 4 * 0.1234567891)).toMap
+    val vanilla = LdaModel(k, v, Array.fill(k)(0.1), beta, 0.0, 1, Nil)
+    val poly = PolyLdaModel(k, Map(0 -> v), vanilla.alpha, Map(0 -> beta), 0.0, 1, Nil)
+    val polyTerms = parsed.terms.map(t => PolyTermEntry(0, t.termId, t.term, t.df, t.tf))
+    val top = 4
+    val vTop = Display.topTermsPerTopic(Display.betaToDF(spark, vanilla), parsed.terms, top)
+      .collect().map(r => (r.getAs[Int]("topic"), r.getAs[Int]("rank"), r.getAs[String]("term"),
+        r.getAs[Double]("score"))).toSeq
+    val pTop = PolyTrainer.topTermsPerTopic(spark, poly, polyTerms, top).collect().map { r =>
+      assert(r.getAs[Int]("lang") == 0)
+      (r.getAs[Int]("topic"), r.getAs[Int]("rnk"), r.getAs[String]("term"), r.getAs[Double]("score"))
+    }.toSeq.sortBy(r => (r._1, r._2))
+    val names = parsed.terms.collect().map(t => t.termId -> t.term).toMap
+    val expected = for {
+      t <- 1 to k
+      ((w, e), i) <- beta.toSeq.map { case (w, arr) => (w, arr(t - 1)) }
+        .sortBy { case (w, e) => (-e, w) }.take(top).zipWithIndex
+    } yield (t, i + 1, names(w), e)
+    assert(vTop == expected)
+    assert(pTop.map(r => (r._1, r._2, r._3)) == expected.map(r => (r._1, r._2, r._3)))
+    pTop.zip(expected).foreach { case (p, e) => assert(math.abs(p._4 - e._4) <= 5e-7, s"$p vs $e") }
   }
 }

@@ -50,4 +50,17 @@ class OptionSurfaceSpec extends AnyFunSuite {
     assert(unset.isEmpty,
       s"options no caller in src/main or ldabench sets; make each a constant: $unset")
   }
+
+  test("every spark.graft. session key src/main reads is set by a caller (source gate)") {
+    val files = sources.map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
+    val read = """(?:get|getOption)\s*\(\s*"(spark\.graft\.[^"]+)"""".r
+    val keysRead = files.filter(_._1.startsWith("src/main"))
+      .flatMap { case (_, text) => read.findAllMatchIn(text).map(_.group(1)) }.distinct
+    val unset = keysRead.filterNot { key =>
+      val set = ("""(?:set|config)\s*\(\s*"""" + java.util.regex.Pattern.quote(key) + "\"").r
+      files.exists { case (_, text) => set.findFirstIn(text).nonEmpty }
+    }
+    assert(unset.isEmpty,
+      s"session keys no caller in src/main or ldabench sets; make each a constant: $unset")
+  }
 }
