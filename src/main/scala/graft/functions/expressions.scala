@@ -68,5 +68,4 @@ object gfunctions {
   def digamma(c: Column): Column = shim.toColumn(Digamma(dbl(c)))
   def trigamma(c: Column): Column = shim.toColumn(Trigamma(dbl(c)))
   def lgamma(c: Column): Column = shim.toColumn(LogGammaExpr(dbl(c)))
-  def log_add(a: Column, b: Column): Column = shim.toColumn(LogAdd(dbl(a), dbl(b)))
 }

@@ -15,16 +15,6 @@ import org.apache.spark.sql.functions._
  */
 object Display {
 
-  /** A model's beta, lang -> termId -> E[log β] over the K topics, as
-    * (lang…, topic 1..K, termId, elogbeta) rows: the driver builds one row
-    * per (lang, term) and the plan explodes its topics. */
-  private[graft] def betaRows(spark: SparkSession, keys: Keys,
-      beta: Map[Int, scala.collection.Map[Int, Array[Double]]]): DataFrame = {
-    import spark.implicits._
-    val rows = beta.toSeq.flatMap { case (l, m) => m.iterator.map { case (w, arr) => (l, w, arr) } }
-    EmCore.explodeTopics(rows.toDF("lang", "termId", "elogbeta"), keys, "elogbeta")
-  }
-
   /** Top-k terms per (lang…, topic) by E[log β] → (lang…, topic, rank,
     * term, score) (reference O4: bounded TreeMap per topic → here a
     * ranking window; ties broken by termId so output is deterministic).
@@ -40,7 +30,7 @@ object Display {
 
   /** Model beta map -> (topic 1..K, termId, elogbeta) DataFrame. */
   def betaToDF(spark: SparkSession, model: LdaModel): DataFrame =
-    betaRows(spark, VanillaDocs.keys, Map(0 -> model.beta))
+    EmCore.betaRows(spark, VanillaDocs.keys, model.beta.toSeq.map { case (w, arr) => (0, w, arr) })
 
   /** Top-k terms per topic → (topic, rank, term, score), ordered. */
   def topTermsPerTopic(beta: DataFrame, terms: Dataset[TermEntry], k: Int = 10): DataFrame =

@@ -1,8 +1,8 @@
 package graft.lda
 
 import graft.functions.GammaFuncs.{digamma => dg, logAdd, logGamma}
+import graft.functions.LogSumExpAgg
 import graft.functions.LogSumExp.logsumexp
-import graft.functions.gfunctions.{digamma, log_add}
 import graft.util.Ckpt._
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
@@ -31,9 +31,11 @@ private[graft] case class DocWithBeta(
  *    (polylingual);
  *  - [[Model]]: the alpha init, symmetric-alpha update and vocabulary sizes.
  *
- * Broadcast vs shuffle is the [[BetaSupply]] — a broadcast map lookup, or
- * the corpus exploded and joined with a distributed beta table — feeding
- * the one `mapPartitions` kernel ([[estep]]).
+ * Broadcast vs shuffle is the [[BetaPath]] that [[fit]] picks once: a
+ * broadcast map lookup, or the corpus exploded and joined with a
+ * distributed beta table ([[BetaSupply]]), feeding the one `mapPartitions`
+ * kernel ([[estep]]); and one per-topic M-step tail ([[topicTail]]), run on
+ * the driver or in a keyed reducer.
  */
 private[graft] object EmCore {
 
@@ -89,47 +91,33 @@ private[graft] object EmCore {
     def phiRow(key: Long, logphi: Array[Double]): R
   }
 
-  /** How the M-step smooths the folded log λ before normalizing. */
-  final case class Smoothing(
-      /** (key columns…, lp) rows → the same with `loglambda` */
-      column: DataFrame => DataFrame,
-      /** (topic, termId, lp) → log λ, on the driver */
-      driver: (Int, Int, Double) => Double)
+  /** How the M-step smooths one folded log λ before normalizing:
+    * (topic, termId, log λ) → smoothed log λ. Both beta paths apply it in
+    * [[topicTail]]. */
+  type Smoothing = (Int, Int, Double) => Double
 
   object Smoothing {
     /** Vanilla LDA: log λ ⊕ eta (InformedPrior.java:172-177,
-      * Settings.java:58): log(1000) for seeded (topic, term) pairs and
+      * Settings.java:58): log(1000) for the seeded (topic, term) pairs and
       * log(0.001) for the rest when a prior is supplied, log(1e-12)
-      * otherwise. */
-    def eta(prior: Option[DataFrame]): Smoothing = {
-      lazy val seeded = prior.map(_.select("topic", "termId").collect()
-        .map(r => (r.getInt(0), r.getInt(1))).toSet)
-      Smoothing(
-        lambda => (prior match {
-          case Some(p) =>
-            lambda.join(broadcast(p.select(col("topic"), col("termId"), lit(true).as("seeded"))),
-                Seq("topic", "termId"), "left")
-              .withColumn("eta", when(col("seeded"), lit(MStep.InformedLogEta))
-                .otherwise(lit(MStep.UninformedLogEta)))
-          case None => lambda.withColumn("eta", lit(MStep.DefaultLogEta))
-        }).withColumn("loglambda", log_add(col("lp"), col("eta"))),
-        etaDriver(seeded))
+      * otherwise. The seeds are a set, like the reference's per-topic seed
+      * set: a pair listed twice is seeded once. */
+    def eta(seeded: Option[Set[(Int, Int)]]): Smoothing = seeded match {
+      case Some(s) => (topic, termId, lp) =>
+        logAdd(lp, if (s((topic, termId))) MStep.InformedLogEta else MStep.UninformedLogEta)
+      case None => (_, _, lp) => logAdd(lp, MStep.DefaultLogEta)
     }
 
-    def etaDriver(seeded: => Option[Set[(Int, Int)]]): (Int, Int, Double) => Double =
-      (topic, termId, lp) => logAdd(lp, seeded match {
-        case Some(s) => if (s((topic, termId))) MStep.InformedLogEta else MStep.UninformedLogEta
-        case None => MStep.DefaultLogEta
-      })
+    /** A prior's (topic, termId) rows, collected to the seed set [[eta]] reads. */
+    def seeds(prior: DataFrame): Set[(Int, Int)] =
+      prior.select("topic", "termId").collect().map(r => (r.getInt(0), r.getInt(1))).toSet
 
     /** Polylingual LDA: no eta (polylda/TermReducer.java:84-119 adds no
       * prior), but log λ is floored at -700. A topic whose phi mass for a
       * term fully underflows would hit digamma(exp(-inf)) = -Inf and poison
       * the next E-step with 0·(−Inf−(−Inf)) = NaN; exp(-700) is the smallest
       * normal-range double whose digamma is still finite. */
-    val floor: Smoothing = Smoothing(
-      _.withColumn("loglambda", greatest(col("lp"), lit(-700.0))),
-      (_, _, lp) => math.max(lp, -700.0))
+    val floor: Smoothing = (_, _, lp) => math.max(lp, -700.0)
   }
 
   /** One E-step's fixed-point settings. `anchorGammaDp` / `anchorPhiDp`
@@ -403,21 +391,71 @@ private[graft] object EmCore {
       .select(keys.langCols.map(col) ++ Seq(
         (col("pos") + 1).cast("int").as("topic"), col("termId"), col("v").as(values)): _*)
 
+  /** (lang, termId, E[log β][K]) rows → (lang…, topic, termId, elogbeta)
+    * rows, exploded in the plan. */
+  def betaRows(spark: SparkSession, keys: Keys, packed: Seq[(Int, Int, Array[Double])])
+      : DataFrame = {
+    import spark.implicits._
+    explodeTopics(packed.toDF("lang", "termId", "elogbeta"), keys, "elogbeta")
+  }
+
   /**
-   * Distributed M-step: fold the phi statistics into log λ per
-   * (lang…, topic, term), smooth, normalize per (lang…, topic) and emit
-   * E[log β] = ψ(λ) − ψ(Σ_w λ). The two-level groupBy replaces the
-   * reference's partitioner + sorted streaming reducer
-   * (TermReducer.java:134-238, polylda/TermReducer.java:84-119).
+   * The M-step's per-(lang, topic) tail, the one both beta paths run: on
+   * the driver over a broadcast model's collected λ ([[finishBetaOnDriver]]),
+   * and as the keyed reducer of a table model ([[lambdaToBeta]]). It is the
+   * reference's reducer (TermReducer.java:134-238). The input is (lang,
+   * topic, termId, value) rows sorted by (lang, topic, termId). Each term's
+   * values fold into log λ with [[graft.functions.LogSumExpAgg]]'s
+   * arithmetic; a single collected λ passes through unchanged. Each topic's
+   * λ is smoothed, its normalizer Σ_w λ is a sequential log-add in termId
+   * order, and every term gets E[log β] = ψ(λ) − ψ(Σ_w λ). Emits (lang,
+   * topic, termId, E[log β]) in input order.
+   */
+  def topicTail(rows: BufferedIterator[(Int, Int, Int, Double)], smoothing: Smoothing)
+      : Iterator[(Int, Int, Int, Double)] = {
+    val lse = new LogSumExpAgg
+    Iterator.continually(rows).takeWhile(_.hasNext).flatMap { _ =>
+      val (lang, topic, _, _) = rows.head
+      def inTopic = rows.hasNext && rows.head._1 == lang && rows.head._2 == topic
+      val terms = Array.newBuilder[Int]
+      val smoothed = Array.newBuilder[Double]
+      var lognorm = Double.NegativeInfinity
+      while (inTopic) {
+        val w = rows.head._3
+        var buf = lse.zero
+        while (inTopic && rows.head._3 == w) buf = lse.reduce(buf, rows.next()._4)
+        val v = smoothing(topic, w, lse.finish(buf))
+        lognorm = logAdd(lognorm, v)
+        terms += w
+        smoothed += v
+      }
+      val dgNorm = dg(math.exp(lognorm))
+      terms.result().iterator.zip(smoothed.result().iterator)
+        .map { case (w, v) => (lang, topic, w, dg(math.exp(v)) - dgNorm) }
+    }
+  }
+
+  /**
+   * The table model's M-step, shaped like the reference's reducer
+   * (TermReducer.java:134-238, polylda/TermReducer.java:84-119): the phi
+   * rows take one exchange, partitioned by (lang…, topic) and sorted by
+   * termId, then by value, largest first, so the λ fold does not depend on
+   * the shuffle's fetch order; [[topicTail]] finishes each (lang, topic).
+   *
+   * @param phi (lang…, topic, termId, logphi) rows ([[explodePhi]])
+   * @return    (lang…, topic, termId, elogbeta)
    */
   def lambdaToBeta(phi: DataFrame, keys: Keys, smoothing: Smoothing): DataFrame = {
-    val lambda = smoothing.column(
-      phi.groupBy(keys.lambda.map(col): _*).agg(logsumexp(col("logphi")).as("lp")))
-    val norms = lambda.groupBy(keys.norm.map(col): _*)
-      .agg(logsumexp(col("loglambda")).as("lognorm"))
-    lambda.join(broadcast(norms), keys.norm)
-      .select(keys.lambda.map(col) :+
-        (digamma(exp(col("loglambda"))) - digamma(exp(col("lognorm")))).as("elogbeta"): _*)
+    val spark = phi.sparkSession
+    import spark.implicits._
+    phi.select(keys.lambda.map(col) :+ col("logphi"): _*)
+      .repartition(keys.norm.map(col): _*)
+      .sortWithinPartitions(keys.lambda.map(col) :+ col("logphi").desc: _*)
+      .select(keys.lang, col("topic"), col("termId"), col("logphi"))
+      .as[(Int, Int, Int, Double)]
+      .mapPartitions(rows => topicTail(rows.buffered, smoothing))
+      .toDF("lang", "topic", "termId", "elogbeta")
+      .select(keys.lambda.map(col) :+ col("elogbeta"): _*)
   }
 
   /** (lang…, topic, termId, elogbeta) rows → (key columns…, elogbeta[K]),
@@ -433,25 +471,22 @@ private[graft] object EmCore {
       keys.term.map(StructField(_, IntegerType, nullable = false)) :+
         StructField("elogbeta", ArrayType(DoubleType), nullable = true)))
 
-  /** (lang…, topic, termId, elogbeta) rows → packed key → topic array. */
-  private def betaRowsToMap(betaRows: DataFrame, keys: Keys, k: Int)
+  /** A packed (key columns…, elogbeta[K]) table → packed key → topic array,
+    * on the driver. */
+  private def collectPacked(table: DataFrame, keys: Keys)
       : scala.collection.Map[Long, Array[Double]] = {
-    val m = new java.util.HashMap[Long, Array[Double]]()
-    betaRows.select(keys.lang, col("topic"), col("termId"), col("elogbeta")).collect().foreach { r =>
-      val w = key(r.getInt(0), r.getInt(2))
-      var arr = m.get(w)
-      if (arr == null) { arr = new Array[Double](k); m.put(w, arr) }
-      arr(r.getInt(1) - 1) = r.getDouble(3)
-    }
-    scala.jdk.CollectionConverters.MapHasAsScala(m).asScala
+    val spark = table.sparkSession
+    import spark.implicits._
+    table.select(keys.lang, col("termId"), col("elogbeta")).as[(Int, Int, Array[Double])]
+      .collect().map { case (l, w, arr) => key(l, w) -> arr }.toMap
   }
 
   /**
    * Broadcast-mode fused per-iteration reduce: the phi side's
    * cross-partition fold to (lang, topic, termId, log λ) and the doc side's
    * ll/alpha statistics run as two branches of ONE union — a single action
-   * per EM iteration. Smoothing and the per-(lang, topic) normalizer run
-   * in [[finishBetaOnDriver]] over the collected (model-sized) rows.
+   * per EM iteration. The per-topic tail runs in [[finishBetaOnDriver]]
+   * over the collected (model-sized) rows.
    *
    * Row encoding: tag 0 = (lang, topic, termId, λ in v1); tag 1 =
    * (topic = slot k, ss_k in v1, Σll in v2 — every slot carries the same Σll).
@@ -488,33 +523,109 @@ private[graft] object EmCore {
     (ll, ss, lambda.result())
   }
 
-  /**
-   * Driver-side tail of the broadcast-mode M-step: smoothing, per-(lang,
-   * topic) log-normalizer, E[log β] = ψ(λ) − ψ(Σ_w λ) — the math
-   * [[lambdaToBeta]] evaluates distributed (identical GammaFuncs kernels),
-   * done in one pass sorted by termId so the log-space fold order is
-   * reproducible. Returns the E-step's lookup map and the
-   * (lang, topic, termId, elogbeta) rows for checkpointing.
-   */
+  /** Driver-side tail of the broadcast-mode M-step: [[topicTail]] over the
+    * collected (lang, topic, termId, log λ) rows, one (lang, topic) at a
+    * time → the packed key → topic-array map the next E-step looks up. */
   def finishBetaOnDriver(lambda: Array[(Int, Int, Int, Double)], numTopics: Int,
-      smooth: (Int, Int, Double) => Double)
-      : (scala.collection.Map[Long, Array[Double]], Seq[(Int, Int, Int, Double)]) = {
+      smoothing: Smoothing): scala.collection.Map[Long, Array[Double]] = {
     val betaMap = new java.util.HashMap[Long, Array[Double]]()
-    val rows = Seq.newBuilder[(Int, Int, Int, Double)]
-    lambda.groupBy(e => (e._1, e._2)).foreach { case ((lang, topic), entries) =>
-      val smoothed = entries.sortBy(_._3).map { case (_, _, w, lp) => (w, smooth(topic, w, lp)) }
-      var lognorm = Double.NegativeInfinity
-      smoothed.foreach { case (_, v) => lognorm = logAdd(lognorm, v) }
-      val dgNorm = dg(math.exp(lognorm))
-      smoothed.foreach { case (w, v) =>
-        val e = dg(math.exp(v)) - dgNorm
-        var arr = betaMap.get(key(lang, w))
-        if (arr == null) { arr = new Array[Double](numTopics); betaMap.put(key(lang, w), arr) }
-        arr(topic - 1) = e
-        rows += ((lang, topic, w, e))
+    lambda.groupBy(e => (e._1, e._2)).valuesIterator
+      .flatMap(topic => topicTail(topic.sortBy(_._3).iterator.buffered, smoothing))
+      .foreach { case (lang, topic, w, e) =>
+        betaMap.computeIfAbsent(key(lang, w), _ => new Array[Double](numTopics))(topic - 1) = e
       }
+    scala.jdk.CollectionConverters.MapHasAsScala(betaMap).asScala
+  }
+
+  /**
+   * A model's beta between EM iterations, held in the form its path looks
+   * it up in, together with everything that depends on that form: the
+   * E-step's supply, the M-step, the snapshot rows, the resume load (the
+   * constructor's checkpointed rows), the final map and the release.
+   * [[fit]] picks the path once; its loop never branches on it.
+   */
+  private sealed trait BetaPath {
+    /** the E-step's supply for the coming iteration; releases what the
+      * finished iteration's supply held */
+    def supply(): BetaSupply
+    /** the M-step over one E-step's rows, replacing beta with the next one;
+      * returns (corpus LL, alpha sufficient statistics) */
+    def mstep(estep: DataFrame): (Double, Array[Double])
+    /** (lang…, topic, termId, elogbeta) rows: the beta-<i> snapshot */
+    def rows: DataFrame
+    /** the final packed key → topic-array map; releases the path */
+    def finish(): scala.collection.Map[Long, Array[Double]]
+  }
+
+  /** Beta collected and broadcast (the reference's DistributedCache path,
+    * DocumentMapper.java:116): the λ fold and the doc-side statistics are
+    * one collect ([[fusedIterationRows]]), and the tail runs on the driver. */
+  private final class BroadcastBeta(spark: SparkSession, keys: Keys, k: Int,
+      smoothing: Smoothing, resumed: Option[DataFrame]) extends BetaPath {
+    private var beta = resumed.map(rows => collectPacked(packBeta(rows, keys), keys))
+      .getOrElse(Map.empty[Long, Array[Double]])
+    // kept so the (model-sized) broadcast is destroyed once its iteration
+    // is done — otherwise broadcast memory grows linearly with iterations
+    // on the driver and every executor
+    private var bc: Option[Broadcast[scala.collection.Map[Long, Array[Double]]]] = None
+
+    // destroy() is non-blocking in Spark 4, so this adds no latency
+    private def release(): Unit = bc.foreach(_.destroy())
+    def supply(): BetaSupply = {
+      release()
+      val b = spark.sparkContext.broadcast(beta)
+      bc = Some(b)
+      Lookup.packed(b)
     }
-    (scala.jdk.CollectionConverters.MapHasAsScala(betaMap).asScala, rows.result())
+    def mstep(estep: DataFrame): (Double, Array[Double]) = {
+      val (ll, ss, lambda) = splitFused(fusedIterationRows(estep, keys).collect(), k)
+      beta = finishBetaOnDriver(lambda, k, smoothing)
+      (ll, ss)
+    }
+    def rows: DataFrame =
+      betaRows(spark, keys, beta.toSeq.map { case (w, arr) => (langOf(w), termOf(w), arr) })
+    def finish(): scala.collection.Map[Long, Array[Double]] = { release(); beta }
+  }
+
+  /** Beta kept as a distributed (key columns…, elogbeta[K]) table, joined
+    * each iteration to the corpus exploded once per run (`exploded`, owned
+    * here): the scale path, where nothing model-sized moves through the
+    * driver until [[finish]]. */
+  private final class TableBeta(spark: SparkSession, keys: Keys, k: Int,
+      smoothing: Smoothing, exploded: DataFrame, resumed: Option[DataFrame]) extends BetaPath {
+    private var table: DataFrame = resumed.fold(emptyBetaTable(spark, keys))(
+      rows => packBeta(rows, keys).persist(StorageLevel.MEMORY_AND_DISK))
+    private var previous: Option[DataFrame] = None
+
+    def supply(): BetaSupply = {
+      previous.foreach(_.unpersist())
+      Join(table, Some(exploded))
+    }
+    /** One localCheckpoint holds the packed beta and the k-row ll/alpha
+      * statistics as union branches: the stats collect and every E-step
+      * join of the next iteration read it, and it truncates the lineage (a
+      * plain persist would nest each iteration's plan inside the next
+      * E-step join). Keeping the doc side out of it means the per-iteration
+      * beta scans never re-read corpus blocks. */
+    def mstep(estep: DataFrame): (Double, Array[Double]) = {
+      val fused = packBeta(lambdaToBeta(explodePhi(estep, keys), keys, smoothing), keys)
+        .withColumn("tag", lit(0))
+        .unionByName(
+          MStep.llAndAlphaStatsRows(estep.filter(col("isDoc"))).withColumn("tag", lit(1)),
+          allowMissingColumns = true)
+        .ckptSer()
+      previous = Some(table)
+      table = fused.filter(col("tag") === 0).select(keys.term.map(col) :+ col("elogbeta"): _*)
+      MStep.statsOf(fused.filter(col("tag") === 1).select("k", "ss", "llsum").collect(), k)
+    }
+    def rows: DataFrame = explodeTopics(table, keys, "elogbeta")
+    def finish(): scala.collection.Map[Long, Array[Double]] = {
+      previous.foreach(_.unpersist())
+      exploded.unpersist(blocking = false)
+      val beta = collectPacked(table, keys)
+      table.unpersist()
+      beta
+    }
   }
 
   // ---- EM loop ----
@@ -564,13 +675,11 @@ private[graft] object EmCore {
     val shape = model.shape
     val keys = shape.keys
     val k = cfg.numTopics
-    val useShuffle = k.toLong * model.totalVocab > cfg.betaBroadcastMaxEntries
     def gammaDocs(df: DataFrame): Dataset[D] =
       df.select(shape.docCols.map(col): _*).as[D](shape.docEncoder)
 
     var alpha = model.alphaInit
-    var beta: scala.collection.Map[Long, Array[Double]] = Map.empty
-    var betaTable: DataFrame = emptyBetaTable(spark, keys)
+    var resumedBeta: Option[DataFrame] = None
     var history = List.empty[Double]
     var startIter = 0
     var ownsCorpus = cfg.resumeFrom.isEmpty && docs.storageLevel == StorageLevel.NONE
@@ -588,9 +697,7 @@ private[graft] object EmCore {
         throw new IllegalArgumentException(
           s"cannot resume from $dir iteration $i: the checkpoint has K=${alpha.length} topics, " +
             s"the configuration numTopics=$k")
-      val betaRows = LdaCheckpoint.loadBeta(spark, dir, i)
-      if (useShuffle) betaTable = packBeta(betaRows, keys).persist(StorageLevel.MEMORY_AND_DISK)
-      else beta = betaRowsToMap(betaRows, keys, k)
+      resumedBeta = Some(LdaCheckpoint.loadBeta(spark, dir, i))
       // gamma-<i> is the full gamma-annotated corpus — resume reads it
       // directly (the reference resumes from the gamma-i document dir)
       rotate(gammaDocs(LdaCheckpoint.loadGamma(spark, dir, i)).persist(StorageLevel.MEMORY_AND_DISK))
@@ -605,69 +712,30 @@ private[graft] object EmCore {
       if (ownsCorpus) corpus.unpersist()
       throw new IllegalArgumentException("cannot train a topic model on an empty corpus (0 documents)")
     }
-    // the explode is loop-invariant (gamma rotation never touches counts):
-    // materialized once, partitioned by the beta join key, so each
-    // iteration's E-step shuffles only the model-sized beta table
-    val exploded: Option[DataFrame] =
-      if (useShuffle) Some(explodeDocs(corpus.toDF(), shape).persist(StorageLevel.MEMORY_AND_DISK))
-      else None
+    // the one place the beta path is chosen. The table path's explode is
+    // loop-invariant (gamma rotation never touches counts): materialized
+    // once, partitioned by the beta join key, so each iteration's E-step
+    // shuffles only the model-sized beta table
+    val beta: BetaPath =
+      if (k.toLong * model.totalVocab > cfg.betaBroadcastMaxEntries)
+        new TableBeta(spark, keys, k, model.smoothing,
+          explodeDocs(corpus.toDF(), shape).persist(StorageLevel.MEMORY_AND_DISK), resumedBeta)
+      else new BroadcastBeta(spark, keys, k, model.smoothing, resumedBeta)
     var lastLL = history.headOption.getOrElse(0.0)
     var iter = startIter
     var converged = false
 
     while (iter < cfg.maxIterations && !converged) {
       val alphaBc = spark.sparkContext.broadcast(alpha)
-      // captured so the (model-sized) beta broadcast can be destroyed at
-      // iteration end — otherwise broadcast memory grows linearly with
-      // iterations on the driver and every executor
-      val betaBc = if (useShuffle) None else Some(spark.sparkContext.broadcast(beta))
-      val supply = betaBc match {
-        case Some(bc) => Lookup.packed(bc)
-        case None => Join(betaTable, exploded)
-      }
-      val estep = EmCore.estep(corpus, shape, alphaBc, supply, model.vocab,
+      val estep = EmCore.estep(corpus, shape, alphaBc, beta.supply(), model.vocab,
         Sweeps(cfg.localIterations, cfg.randomStartGamma, learning = true, cfg.seed))
         .persist(StorageLevel.MEMORY_AND_DISK)
 
       val snapIdx = iter + 1
       val docSide = estep.toDF().filter($"isDoc")
 
-      // M-step + likelihood + alpha sufficient statistics. Broadcast mode:
-      // the phi reduce and the doc-side stats are union branches of a
-      // single collect, and the smoothing/normalizer tail runs on the
-      // driver over the (model-sized) rows. Shuffle mode: TWO
-      // localCheckpoints over the shared cached `estep` — (1) the
-      // MODEL-sized one here (packed beta + the k-row ll/alpha statistics
-      // as union branches), consumed by the stats collect and by every
-      // E-step beta join of the next iteration; (2) the CORPUS-sized gamma
-      // rotation below. Keeping the doc side out of (1) means the
-      // per-iteration beta scans never re-read corpus blocks. Both
-      // checkpoints also truncate lineage (a plain persist would nest each
-      // iteration's plan inside the next E-step join).
-      var betaRowsDriver: Seq[(Int, Int, Int, Double)] = Nil // broadcast mode only
-      var fused: Option[DataFrame] = None                    // shuffle mode only
-      val prevBetaTable = betaTable
-      val (ll, ss) = if (useShuffle) {
-        val nullInt = lit(null).cast("int")
-        val nullDouble = lit(null).cast("double")
-        val packed = packBeta(lambdaToBeta(explodePhi(estep.toDF(), keys), keys, model.smoothing), keys)
-        val fusedDf = packed
-          .select(((lit(0).as("tag") +: keys.term.map(col)) ++ Seq($"elogbeta",
-            nullInt.as("k"), nullDouble.as("ss"), nullDouble.as("llsum"))): _*)
-          .unionByName(MStep.llAndAlphaStatsRows(docSide)
-            .select(((lit(2).as("tag") +: keys.term.map(nullInt.as(_))) ++ Seq(
-              lit(null).cast(ArrayType(DoubleType)).as("elogbeta"), $"k", $"ss", $"llsum")): _*))
-          .ckptSer()
-        fused = Some(fusedDf)
-        betaTable = fusedDf.filter($"tag" === 0).select(keys.term.map(col) :+ $"elogbeta": _*)
-        MStep.statsOf(fusedDf.filter($"tag" === 2).select($"k", $"ss", $"llsum").collect(), k)
-      } else {
-        val (llF, ssF, lambda) = splitFused(fusedIterationRows(estep.toDF(), keys).collect(), k)
-        val (betaMap, rows) = finishBetaOnDriver(lambda, k, model.smoothing.driver)
-        beta = betaMap
-        betaRowsDriver = rows
-        (llF, ssF)
-      }
+      // M-step + likelihood + alpha sufficient statistics
+      val (ll, ss) = beta.mstep(estep.toDF())
       alpha =
         if (model.symmetricAlpha) {
           val a = AlphaUpdate.updateScalarAlpha(k, numDocs, alpha(0), ss.sum)
@@ -680,58 +748,41 @@ private[graft] object EmCore {
       // reference's layout, where the gamma output dir IS the next
       // iteration's document input (VariationalInference.java:358-379)
       cfg.checkpointDir.foreach { dir =>
-        // shuffle mode unpacks the materialized packed table (array
-        // position p ↔ topic p+1: packBeta sorts by topic and the E-step
-        // emits every topic for each term it touches)
-        val snapshotBeta = fused match {
-          case Some(f) =>
-            f.filter($"tag" === 0)
-              .select(keys.term.map(col) :+ posexplode($"elogbeta").as(Seq("pos", "v")): _*)
-              .select(($"pos" + 1).as("topic") +: keys.term.map(col) :+ $"v".as("elogbeta"): _*)
-          case None => betaRowsDriver.toDF("lang", "topic", "termId", "elogbeta")
-        }
         LdaCheckpoint.saveAlpha(spark, dir, snapIdx, alpha)
-        LdaCheckpoint.saveBeta(snapshotBeta.select(keys.lambda.map(col) :+ $"elogbeta": _*),
-          dir, snapIdx)
+        LdaCheckpoint.saveBeta(beta.rows, dir, snapIdx)
         LdaCheckpoint.saveGamma(docSide.select(shape.docCols.map(col): _*), dir, snapIdx)
         LdaCheckpoint.saveState(spark, dir, snapIdx, history.reverse)
       }
 
       // rotate gamma into the corpus for the next iteration's warm start:
       // the doc side already carries the full document, so the next corpus
-      // is a projection of the E-step output — no per-iteration join.
-      // Skipped under randomStartGamma (the E-step would ignore the stored
-      // gamma; the reference gates the side-output the same way).
+      // is a projection of the E-step output — no per-iteration join. A
+      // localCheckpoint of it (corpus-sized) truncates the lineage when no
+      // snapshot is read back. Skipped under randomStartGamma (the E-step
+      // would ignore the stored gamma; the reference gates the side-output
+      // the same way).
       if (!cfg.randomStartGamma)
         rotate(cfg.checkpointDir match {
           case Some(dir) =>
             gammaDocs(LdaCheckpoint.loadGamma(spark, dir, snapIdx)).persist(StorageLevel.MEMORY_AND_DISK)
-          case None => gammaDocs(docSide).ckptSer() // shuffle mode: checkpoint (2)
+          case None => gammaDocs(docSide).ckptSer()
         })
 
       estep.unpersist()
-      if (useShuffle) prevBetaTable.unpersist()
-      // every action reading these completed above; destroy() is
-      // non-blocking in Spark 4, so this adds no per-iteration latency
       alphaBc.destroy()
-      betaBc.foreach(_.destroy())
 
       converged = (iter > startIter || cfg.resumeFrom.isDefined) &&
         math.abs((ll - lastLL) / lastLL) <= cfg.convergence
       lastLL = ll
       iter += 1
     }
-    exploded.foreach(_.unpersist(blocking = false))
+    // a table model's map is collected once, at the end (callers needing
+    // beta bigger than driver memory read the checkpointed beta-<i>
+    // parquet instead)
+    val betaMap = beta.finish()
     if (ownsCorpus) corpus.unpersist()
 
-    // shuffle mode materializes the driver-side map once at the end
-    // (callers needing beta bigger than driver memory read the
-    // checkpointed beta-<i> parquet instead)
-    if (useShuffle)
-      beta = betaTable.select(keys.lang, $"termId", $"elogbeta").as[(Int, Int, Array[Double])]
-        .collect().map { case (l, w, arr) => key(l, w) -> arr }.toMap
-
-    Fit(alpha, beta, lastLL, iter, history.reverse)
+    Fit(alpha, betaMap, lastLL, iter, history.reverse)
   }
 
   /** Seed of held-out inference's random E[log β] for terms the model has

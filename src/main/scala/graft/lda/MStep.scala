@@ -25,13 +25,16 @@ object MStep {
   def explodePhi(estep: DataFrame): DataFrame = EmCore.explodePhi(estep, keys)
 
   /**
+   * The table path's M-step ([[EmCore.lambdaToBeta]]): one exchange by
+   * topic, λ folded per term, then the per-topic tail.
+   *
    * @param phi   (topic, termId, logphi) partition-combined E-step rows
    *              (use [[explodePhi]] to unpack the E-step's K-array rows)
    * @param prior optional informed prior (topic, termId) seed pairs
    * @return      (topic, termId, elogbeta)
    */
   def run(phi: DataFrame, prior: Option[DataFrame] = None): DataFrame =
-    EmCore.lambdaToBeta(phi, keys, Smoothing.eta(prior))
+    EmCore.lambdaToBeta(phi, keys, Smoothing.eta(prior.map(Smoothing.seeds)))
 
   /** Broadcast-mode fused per-iteration reduce (see
     * [[EmCore.fusedIterationRows]]): tag 0 = (topic, termId, λ in v1);
@@ -48,18 +51,19 @@ object MStep {
   /**
    * Driver-side tail of the broadcast-mode M-step (see
    * [[EmCore.finishBetaOnDriver]]): returns the E-step's broadcast map and
-   * the (topic, termId, elogbeta) rows for checkpointing.
+   * the same values as (topic, termId, elogbeta) rows.
    *
    * @param seeded informed-prior (topic, termId) pairs; None = no prior
    */
   def finishBetaOnDriver(lambda: Array[(Int, Int, Double)], numTopics: Int,
       seeded: Option[Set[(Int, Int)]])
       : (scala.collection.Map[Int, Array[Double]], Seq[(Int, Int, Double)]) = {
-    val (betaMap, rows) = EmCore.finishBetaOnDriver(
+    val beta = EmCore.finishBetaOnDriver(
       lambda.map { case (topic, termId, v) => (0, topic, termId, v) }, numTopics,
-      Smoothing.etaDriver(seeded))
-    (betaMap.map { case (w, arr) => EmCore.termOf(w) -> arr },
-      rows.map { case (_, topic, termId, e) => (topic, termId, e) })
+      Smoothing.eta(seeded))
+    (beta.map { case (w, arr) => EmCore.termOf(w) -> arr },
+      beta.toSeq.flatMap { case (w, arr) =>
+        arr.indices.map(t => (t + 1, EmCore.termOf(w), arr(t))) })
   }
 
   /** Alpha sufficient statistics ss_k = Σ_d ψ(γ_dk) − ψ(Σ_k γ_dk) from the

@@ -1,6 +1,5 @@
 package graft.lda
 
-import graft.functions.LogSumExp.logsumexp
 import graft.model.{Doc, PolyDoc}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -21,7 +20,7 @@ import org.apache.spark.sql.functions._
  * The run IS the broadcast-mode trainer skeleton on real operators:
  * the EM core's E-step (with the fixture-only anchor knobs) for every sweep,
  * the distributed `logsumexp` phi fold, and
- * [[EmCore.finishBetaOnDriver]] for the smoothing/normalizer tail —
+ * [[EmCore.finishBetaOnDriver]] for the per-topic smoothing/normalizer tail —
  * only alpha stays FIXED (the alpha Newton update is a driver-side
  * scalar routine already pinned verbatim against the reference's 8
  * golden cases in AlphaUpdateSpec; a condition-based Newton loop has
@@ -157,17 +156,11 @@ object PlantedLda {
         else EmCore.Lookup.packed(betaBc)
       val estep = EmCore.estep(spark.createDataset(docs)(shape.docEncoder), shape, alphaBc,
         supply, vocab, sweeps).persist()
-      val lambda = EmCore.explodePhi(estep.toDF(), keys)
-        .groupBy(keys.lambda.map(col): _*).agg(logsumexp($"logphi").as("lp"))
-        .select(keys.lang, $"topic", $"termId", $"lp")
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), rnd(r.getDouble(3), betaDp)))
-      val (_, rows) = EmCore.finishBetaOnDriver(lambda, k, smoothing.driver)
-      val nextBeta = new scala.collection.mutable.HashMap[Long, Array[Double]]()
-      rows.foreach { case (l, t, w, e) =>
-        nextBeta.getOrElseUpdate(EmCore.key(l, w), new Array[Double](k))(t - 1) = rnd(e, betaDp)
-      }
-      beta = nextBeta
+      val (_, _, lambda) =
+        EmCore.splitFused(EmCore.fusedIterationRows(estep.toDF(), keys).collect(), k)
+      beta = EmCore.finishBetaOnDriver(
+        lambda.map { case (l, t, w, lp) => (l, t, w, rnd(lp, betaDp)) }, k, smoothing)
+        .map { case (w, arr) => w -> arr.map(rnd(_, betaDp)) }
       val docRows = estep.filter($"isDoc")
         .select($"docId", $"gamma", $"ll")
         .as[(Long, Array[Double], Double)].collect()

@@ -47,7 +47,7 @@ object Trainer {
       resumeFrom: Option[(String, Int)] = None) extends EmCore.Settings
 
   def train(docs: Dataset[Doc], numTerms: Int, cfg: Config): LdaModel = {
-    val fit = EmCore.fit(docs, Model(VanillaDocs, Smoothing.eta(cfg.prior),
+    val fit = EmCore.fit(docs, Model(VanillaDocs, Smoothing.eta(cfg.prior.map(Smoothing.seeds)),
       Array.fill(cfg.numTopics)(AlphaInit), cfg.symmetricAlpha, _ => numTerms, numTerms), cfg)
     LdaModel(cfg.numTopics, numTerms, fit.alpha,
       fit.beta.iterator.map { case (w, arr) => EmCore.termOf(w) -> arr }.toMap,

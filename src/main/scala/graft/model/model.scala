@@ -39,9 +39,6 @@ case class PolyTermEntry(lang: Int, termId: Int, term: String, df: Long, tf: Lon
 /** Title-index row (reference: ParseCorpus.java:698-710). */
 case class TitleEntry(docId: Long, title: String)
 
-/** Per-(topic, term) expected log beta: E[log β_kw] = ψ(λ_kw) − ψ(Σ_w λ_kw). */
-case class BetaRow(topic: Int, termId: Int, elogbeta: Double)
-
 /** Counters surfaced by the corpus pipeline
   * (reference: ParseCorpus.java:67,123-126 counter semantics). */
 case class CorpusStats(numDocs: Long, numTerms: Long, collapsedDocs: Long,

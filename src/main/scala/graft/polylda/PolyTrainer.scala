@@ -135,7 +135,8 @@ object PolyTrainer {
     * lang column). */
   def topTermsPerTopic(spark: org.apache.spark.sql.SparkSession, model: PolyLdaModel,
       terms: Dataset[graft.model.PolyTermEntry], k: Int): DataFrame =
-    topTermsFromRows(Display.betaRows(spark, PolyDocs.keys, model.beta), terms, k)
+    topTermsFromRows(EmCore.betaRows(spark, PolyDocs.keys, model.beta.toSeq.flatMap { case (l, m) =>
+      m.map { case (w, arr) => (l, w, arr) } }), terms, k)
 
   /** Same over (lang, topic, termId, elogbeta) rows — e.g. a checkpointed
     * beta-<i> snapshot. Scores are rounded to 6 dp. */

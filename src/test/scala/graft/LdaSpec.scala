@@ -66,6 +66,29 @@ class LdaSpec extends SparkSpec {
     assert(rank1(2) == "iron", s"topic 2 top term: $rank1")
   }
 
+  test("a repeated seed word trains alike on both beta paths") {
+    val parsed = ParseCorpus.run(corpus)
+    val seeds = Seq((1, "apple"), (1, "apple"), (2, "iron")).toDF("topic", "term")
+    val prior = graft.lda.InformedPrior.compile(seeds, parsed.terms)
+    val base = Trainer.Config(numTopics = 2, maxIterations = 4, localIterations = 15,
+      seed = 42L, prior = Some(prior))
+    val broadcastM = Trainer.train(parsed.docs, parsed.stats.numTerms.toInt, base)
+    val shuffleM = Trainer.train(parsed.docs, parsed.stats.numTerms.toInt,
+      base.copy(betaBroadcastMaxEntries = 0L))
+    Seq(broadcastM, shuffleM).foreach(_.beta.foreach { case (w, arr) =>
+      assert(arr.length == 2, s"term $w has ${arr.length} topics") })
+    assert(broadcastM.llHistory.length == shuffleM.llHistory.length)
+    broadcastM.llHistory.zip(shuffleM.llHistory).foreach { case (a, b) =>
+      assert(math.abs((a - b) / a) < 1e-8, s"LL drift between paths: $a vs $b") }
+    assert(broadcastM.beta.keySet == shuffleM.beta.keySet)
+    broadcastM.beta.foreach { case (w, arr) =>
+      arr.zip(shuffleM.beta(w)).foreach { case (a, b) =>
+        assert(math.abs(a - b) < 1e-6, s"beta drift for term $w: $a vs $b") }
+    }
+    // the compiled prior is the seed set
+    assert(prior.count() == 2)
+  }
+
   test("training is deterministic under a fixed seed") {
     val parsed = ParseCorpus.run(corpus)
     def run() = Trainer.train(parsed.docs, parsed.stats.numTerms.toInt,
