@@ -60,15 +60,18 @@ private[graft] object VanillaDocs extends DocShape[Doc, EStepRow](
 object EStep {
 
   /**
-   * One term's log-space phi update inside a fixed-point sweep (reference
-   * updatePhi, cc/mrlda/DocumentMapper.java:402-429 — shared verbatim by the
-   * polylingual mapper, polylda/DocumentMapper.java:245-247): computes
+   * One term's log-space phi update: the E-step kernel's underflow step.
+   * The kernel sweeps in linear space ([[EmCore]]'s `Kernel`); a term
+   * whose linear normaliser falls below [[EmCore.NormFloor]] in a sweep (γ
+   * warm-started on some topics, the term's mass only in topics with
+   * ψ(γ) ≈ ψ(α)) takes this step for that sweep instead. It is the
+   * reference's updatePhi (cc/mrlda/DocumentMapper.java:402-429, shared by
+   * the polylingual mapper, polylda/DocumentMapper.java:245-247): computes
    * logφ_k = E[log β_kw] + ψ(γ_k), normalizes by log-sum-exp, accumulates the
    * likelihood contribution c·φ_k·(E[log β_kw] − logφ_k), scales by log c and
-   * folds into the gamma accumulator. `dgamma` must already be ψ(γ);
-   * `lp` is the term's scratch/output phi row; `logC` must be
-   * math.log(cnt) — hoisted by callers so the (sweeps × terms) hot loop
-   * doesn't recompute a per-term constant. Returns the likelihood term.
+   * folds into the log-space gamma accumulator. `dgamma` must already be
+   * ψ(γ); `lp` is the term's scratch/output phi row; `logC` must be
+   * math.log(cnt). Returns the likelihood term.
    */
   private[graft] def updatePhiTerm(k: Int, cnt: Int, logC: Double, lb: Array[Double],
       dgamma: Array[Double], lp: Array[Double], updateLogGamma: Array[Double]): Double = {

@@ -49,6 +49,23 @@ private[graft] object EmCore {
     * re-combines flush chunks. */
   private val PhiFlushEntries = 1 << 20
 
+  /** Shifted exponent below which the E-step's linear sweep takes
+    * exp(E[log β_wk] − m_w) or exp(ψ(γ_k) − max ψ(γ)) as exactly 0. Every
+    * product of two kept factors is then at least e^-708, a normal double:
+    * subnormal operands (idle topics at γ ≈ 1.4e-3, say) made the sweep
+    * three to five times slower. */
+  private val LogFlush = -354.0
+
+  /** Smallest linear-space normaliser norm_w the E-step sweep divides by;
+    * a term below it takes the log-space step. The factors [[LogFlush]]
+    * drops sum to under K · e^-354, below 2^-110 · K of any normaliser
+    * above 2^-400; the gamma they would feed is under c_w · 2^-110; and
+    * c_w / norm_w cannot overflow. */
+  private[graft] val NormFloor = java.lang.Math.scalb(1.0, -400)
+
+  /** exp(x) for a max-shifted exponent x ≤ 0, 0 below [[LogFlush]]. */
+  private def shiftedExp(x: Double): Double = if (x < LogFlush) 0.0 else math.exp(x)
+
   /** The iteration settings both trainers' `Config`s carry. */
   trait Settings {
     def numTopics: Int
@@ -152,7 +169,7 @@ private[graft] object EmCore {
       extends BetaSupply
 
   /** A document flattened for the fixed point, in sweep order. */
-  private final class Flat(
+  private[graft] final class Flat(
       val keys: Array[Long], val cnt: Array[Int], val elogbeta: Array[Array[Double]],
       val tokens: Long, val gamma: Option[Array[Double]])
 
@@ -180,16 +197,13 @@ private[graft] object EmCore {
    * sums (slot i ↔ topic i+1), the reference's in-mapper combiner
    * (DocumentMapper.java:263-339) generalized to whole-partition combining.
    */
-  private final class Kernel[R](alpha: Array[Double], sweeps: Sweeps, vocab: Int => Int,
+  private[graft] final class Kernel[R](alpha: Array[Double], sweeps: Sweeps, vocab: Int => Int,
       phiRow: (Long, Array[Double]) => R) {
     import sweeps._
     private val k = alpha.length
     // L_α = lnΓ(Σα) − Σ lnΓ(α_k), added once per document
     // (reference DocumentMapper.java:121-126)
     private val likelihoodAlpha = logGamma(alpha.sum) - alpha.map(logGamma).sum
-    // ln α is constant across the whole partition — hoisted out of the
-    // per-sweep gamma reset
-    private val logAlpha = alpha.map(math.log)
     private val unseen = new java.util.HashMap[Long, Array[Double]]()
     private val phiAcc = new java.util.HashMap[Long, Array[Double]]()
 
@@ -228,84 +242,166 @@ private[graft] object EmCore {
       docRows ++ phiRows
     }
 
-    private def fitDoc(f: Flat, row: (Array[Double], Double) => R): R = {
-      val nnz = f.keys.length
-      val cnt = f.cnt
-      val lb = f.elogbeta
-      // ln(count) and each term's E[log β] row are sweep-invariant:
-      // resolved once per document
-      val logCnt = new Array[Double](nnz)
-      var j = 0
-      while (j < nnz) {
-        if (lb(j) == null) lb(j) = fallback(f.keys(j))
-        logCnt(j) = math.log(cnt(j).toDouble)
-        j += 1
+    /** Writes exp(b_k − max b) ([[shiftedExp]]) for one term's E[log β]
+      * row to `out` from `base`; returns max b. */
+    private def shiftRow(b: Array[Double], out: Array[Double], base: Int): Double = {
+      var m = b(0)
+      var i = 1
+      while (i < k) { if (b(i) > m) m = b(i); i += 1 }
+      i = 0
+      while (i < k) { out(base + i) = shiftedExp(b(i) - m); i += 1 }
+      m
+    }
+
+    /**
+     * One document's gamma/phi fixed point, swept in linear space (the
+     * variational update of lda-c and of Hoffman, Blei & Bach 2010; MLlib's
+     * `OnlineLDAOptimizer.variationalTopicInference`): the same fixed point
+     * as the reference's log-space `updatePhi` (DocumentMapper.java:204-242,
+     * 402-429), with no transcendental call per term in a sweep.
+     *
+     * Once per document each term's row is shifted by its maximum m_w and
+     * exponentiated, eb_wk = exp(E[log β_wk] − m_w); each [[sweep]] takes
+     * ed_k = exp(ψ(γ_k) − max ψ(γ)), norm_w = Σ_k eb_wk·ed_k and
+     * γ_k = α_k + ed_k · Σ_w c_w·eb_wk / norm_w. Logs are taken after the
+     * final sweep only, additively — log φ_wk = E[log β_wk] + ψ(γ_k) − (m_w +
+     * max ψ(γ) + ln norm_w) — for the likelihood and the log-space phi fold
+     * ([[finish]]). A term whose norm_w falls below [[NormFloor]] (γ
+     * warm-started on some topics and the term's mass only in topics with
+     * ψ(γ) ≈ ψ(α)) takes the log-space step [[EStep.updatePhiTerm]] in that
+     * sweep instead, its gamma contribution merged in from log space.
+     *
+     * The sweep and the row shift are methods of their own, called many
+     * times per document, so the JIT compiles them early: as loops inside a
+     * once-per-document method they ran two to four times slower.
+     */
+    private final class DocFit(f: Flat) {
+      private val nnz = f.keys.length
+      private val cnt = f.cnt
+      private val lb = f.elogbeta
+      // sweep-invariant, resolved once: each term's E[log β] row, its
+      // maximum m_w, ln(count) and eb_wk (term-major, at w·K + k)
+      private val rowMax = new Array[Double](nnz)
+      private val logCnt = new Array[Double](nnz)
+      private val expBeta = new Array[Double](nnz * k)
+      locally {
+        var j = 0
+        while (j < nnz) {
+          if (lb(j) == null) lb(j) = fallback(f.keys(j))
+          rowMax(j) = shiftRow(lb(j), expBeta, j * k)
+          logCnt(j) = math.log(cnt(j).toDouble)
+          j += 1
+        }
       }
 
       val gamma: Array[Double] = f.gamma match {
         case Some(g) if g.length == k && !randomStartGamma => g.clone()
         case _ => Array.tabulate(k)(i => alpha(i) + f.tokens.toDouble / k)
       }
-      val updateLogGamma = new Array[Double](k)
-      val logPhi = Array.ofDim[Double](nnz, k)
-      var likelihoodPhi = 0.0
+      // ψ(γ) of the latest sweep, its maximum and ed_k
+      private val dgamma = new Array[Double](k)
+      private var maxDg = 0.0
+      private val expDg = new Array[Double](k)
+      // each term's norm_w in the latest sweep: the final logs read it
+      private val norm = new Array[Double](nnz)
+      // Σ_w c_w·eb_wk / norm_w over the linear terms, and the log-space
+      // gamma sum of the terms the guard sent to the log-space step
+      private val acc = new Array[Double](k)
+      private val guardLogGamma = new Array[Double](k)
+      private val scratch = new Array[Double](k)
 
+      def sweep(): Unit = {
+        var i = 0
+        maxDg = Double.NegativeInfinity
+        while (i < k) { dgamma(i) = dg(gamma(i)); maxDg = math.max(maxDg, dgamma(i)); i += 1 }
+        i = 0
+        while (i < k) {
+          expDg(i) = shiftedExp(dgamma(i) - maxDg)
+          acc(i) = 0.0
+          guardLogGamma(i) = Double.NegativeInfinity
+          i += 1
+        }
+        var w = 0
+        while (w < nnz) {
+          val base = w * k
+          var s = 0.0
+          i = 0
+          while (i < k) { s += expBeta(base + i) * expDg(i); i += 1 }
+          norm(w) = s
+          if (s >= NormFloor) {
+            val r = cnt(w) / s
+            i = 0
+            while (i < k) { acc(i) += r * expBeta(base + i); i += 1 }
+          } else
+            EStep.updatePhiTerm(k, cnt(w), logCnt(w), lb(w), dgamma, scratch, guardLogGamma)
+          w += 1
+        }
+        i = 0
+        while (i < k) {
+          gamma(i) = anchor(alpha(i) + expDg(i) * acc(i) + math.exp(guardLogGamma(i)), anchorGammaDp)
+          i += 1
+        }
+      }
+
+      /** The final sweep's log φ (scaled by ln count): returns the likelihood
+        * term c·Σ_k φ_k·(E[log β_k] − log φ_k) and, when learning, folds log φ
+        * into the partition combiner — first touch writes the value, later
+        * documents logAdd in document order. */
+      def finish(): Double = {
+        var likelihoodPhi = 0.0
+        var w = 0
+        while (w < nnz) {
+          val b = lb(w)
+          var i = 0
+          if (norm(w) >= NormFloor) {
+            val logNorm = rowMax(w) + maxDg + math.log(norm(w))
+            val base = w * k
+            while (i < k) {
+              val lp = b(i) + dgamma(i) - logNorm
+              likelihoodPhi += cnt(w) * (expBeta(base + i) * expDg(i) / norm(w)) * (b(i) - lp)
+              scratch(i) = lp + logCnt(w)
+              i += 1
+            }
+          } else
+            likelihoodPhi += EStep.updatePhiTerm(k, cnt(w), logCnt(w), b, dgamma, scratch,
+              new Array[Double](k))
+          if (learning) {
+            i = 0
+            while (i < k) { scratch(i) = anchor(scratch(i), anchorPhiDp); i += 1 }
+            val sums = phiAcc.get(f.keys(w))
+            if (sums == null) phiAcc.put(f.keys(w), scratch.clone())
+            else {
+              i = 0
+              while (i < k) { sums(i) = logAdd(sums(i), scratch(i)); i += 1 }
+            }
+          }
+          w += 1
+        }
+        likelihoodPhi
+      }
+    }
+
+    private def fitDoc(f: Flat, row: (Array[Double], Double) => R): R = {
+      val doc = new DocFit(f)
       // fixed-sweep gamma/phi fixed point; do-while semantics replicate the
       // reference's iteration count exactly (DocumentMapper.java:204-242)
       var sweep = 1
       var continue = true
       while (continue) {
-        likelihoodPhi = 0.0
-        var i = 0
-        while (i < k) {
-          gamma(i) = dg(gamma(i))
-          updateLogGamma(i) = logAlpha(i)
-          i += 1
-        }
-        var w = 0
-        while (w < nnz) {
-          likelihoodPhi += EStep.updatePhiTerm(k, cnt(w), logCnt(w), lb(w),
-            gamma, logPhi(w), updateLogGamma)
-          w += 1
-        }
-        i = 0
-        while (i < k) {
-          gamma(i) = anchor(math.exp(updateLogGamma(i)), anchorGammaDp)
-          i += 1
-        }
+        doc.sweep()
         sweep += 1
         continue = sweep < localIterations
       }
+      val likelihoodPhi = doc.finish()
 
       // document log-likelihood L_α + L_γ + L_φ (DocumentMapper.java:244-254)
+      val gamma = doc.gamma
       var sumGamma = 0.0
       var likelihoodGamma = 0.0
       var i = 0
       while (i < k) { sumGamma += gamma(i); likelihoodGamma += logGamma(gamma(i)); i += 1 }
       likelihoodGamma -= logGamma(sumGamma)
-      val docLL = likelihoodAlpha + likelihoodGamma + likelihoodPhi
-
-      // fold this document's phi (from the final sweep, already scaled by
-      // log(count)) into the partition combiner: first touch writes the
-      // value, later documents logAdd in document order
-      if (learning) {
-        var w = 0
-        while (w < nnz) {
-          val lp = logPhi(w)
-          val acc = phiAcc.get(f.keys(w))
-          if (acc == null) {
-            val arr = new Array[Double](k)
-            i = 0
-            while (i < k) { arr(i) = anchor(lp(i), anchorPhiDp); i += 1 }
-            phiAcc.put(f.keys(w), arr)
-          } else {
-            i = 0
-            while (i < k) { acc(i) = logAdd(acc(i), anchor(lp(i), anchorPhiDp)); i += 1 }
-          }
-          w += 1
-        }
-      }
-      row(gamma, docLL)
+      row(gamma, likelihoodAlpha + likelihoodGamma + likelihoodPhi)
     }
   }
 
