@@ -42,6 +42,7 @@ private[graft] object VanillaDocs extends DocShape[Doc, EStepRow](
   def langCountsColumns(docs: DataFrame): DataFrame =
     docs.select(col("docId"), lit(0).as("lang"), col("counts").as("langCounts"))
   def langCounts(d: Doc): Iterable[(Int, Map[Int, Int])] = Seq(0 -> d.counts)
+  def docId(d: Doc): Long = d.docId
   def tokens(d: Doc): Long = d.numTokens
   def gamma(d: Doc): Option[Array[Double]] = d.gamma
   def fromTerms(docId: Long, tokens: Long, terms: Seq[TermBeta]): Doc =

@@ -1,14 +1,15 @@
 package graft.lda
 
 import graft.functions.GammaFuncs.{digamma => dg, logAdd, logGamma}
-import graft.functions.LogSumExpAgg
-import graft.functions.LogSumExp.logsumexp
+import graft.functions.{LogSumExpAgg, LseBuf}
 import graft.util.Ckpt._
+import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** One joined term of a document on the shuffle path (lang, termId) →
   * its count and E[log β] row (None for a term the model has not seen). */
@@ -34,8 +35,8 @@ private[graft] case class DocWithBeta(
  * Broadcast vs shuffle is the [[BetaPath]] that [[fit]] picks once: a
  * broadcast map lookup, or the corpus exploded and joined with a
  * distributed beta table ([[BetaSupply]]), feeding the one `mapPartitions`
- * kernel ([[estep]]); and one per-topic M-step tail ([[topicTail]]), run on
- * the driver or in a keyed reducer.
+ * kernel ([[estep]]); and one per-topic M-step tail ([[normalizeTopic]]),
+ * run on the driver ([[betaOf]]) or in a keyed reducer ([[topicTail]]).
  */
 private[graft] object EmCore {
 
@@ -100,6 +101,7 @@ private[graft] object EmCore {
     def langCountsColumns(docs: DataFrame): DataFrame
     /** per-language count maps, languages ascending — the sweep order */
     def langCounts(d: D): Iterable[(Int, Map[Int, Int])]
+    def docId(d: D): Long
     def tokens(d: D): Long
     def gamma(d: D): Option[Array[Double]]
     /** the document rebuilt from its joined terms (shuffle path) */
@@ -496,16 +498,28 @@ private[graft] object EmCore {
   }
 
   /**
-   * The M-step's per-(lang, topic) tail, the one both beta paths run: on
-   * the driver over a broadcast model's collected λ ([[finishBetaOnDriver]]),
-   * and as the keyed reducer of a table model ([[lambdaToBeta]]). It is the
-   * reference's reducer (TermReducer.java:134-238). The input is (lang,
-   * topic, termId, value) rows sorted by (lang, topic, termId). Each term's
-   * values fold into log λ with [[graft.functions.LogSumExpAgg]]'s
-   * arithmetic; a single collected λ passes through unchanged. Each topic's
-   * λ is smoothed, its normalizer Σ_w λ is a sequential log-add in termId
-   * order, and every term gets E[log β] = ψ(λ) − ψ(Σ_w λ). Emits (lang,
-   * topic, termId, E[log β]) in input order.
+   * One (lang, topic)'s E[log β] from its smoothed log λ in termId order,
+   * in place: E[log β_w] = ψ(λ_w) − ψ(Σ_w λ_w), the normalizer a
+   * sequential log-add in that order. This is the reference's reducer
+   * (TermReducer.java:134-238), the tail both beta paths run: on the
+   * driver for a broadcast model ([[betaOf]]) and in the keyed reducer of
+   * a table model ([[topicTail]]).
+   */
+  private def normalizeTopic(v: Array[Double]): Unit = {
+    var lognorm = Double.NegativeInfinity
+    var j = 0
+    while (j < v.length) { lognorm = logAdd(lognorm, v(j)); j += 1 }
+    val dgNorm = dg(math.exp(lognorm))
+    j = 0
+    while (j < v.length) { v(j) = dg(math.exp(v(j))) - dgNorm; j += 1 }
+  }
+
+  /**
+   * The table model's per-(lang, topic) tail over (lang, topic, termId,
+   * value) rows sorted by (lang, topic, termId): each term's values fold
+   * into log λ with [[graft.functions.LogSumExpAgg]]'s arithmetic (a
+   * single value passes through unchanged), then [[normalizeTopic]] after
+   * the smoothing. Emits (lang, topic, termId, E[log β]) in input order.
    */
   def topicTail(rows: BufferedIterator[(Int, Int, Int, Double)], smoothing: Smoothing)
       : Iterator[(Int, Int, Int, Double)] = {
@@ -515,19 +529,16 @@ private[graft] object EmCore {
       def inTopic = rows.hasNext && rows.head._1 == lang && rows.head._2 == topic
       val terms = Array.newBuilder[Int]
       val smoothed = Array.newBuilder[Double]
-      var lognorm = Double.NegativeInfinity
       while (inTopic) {
         val w = rows.head._3
         var buf = lse.zero
         while (inTopic && rows.head._3 == w) buf = lse.reduce(buf, rows.next()._4)
-        val v = smoothing(topic, w, lse.finish(buf))
-        lognorm = logAdd(lognorm, v)
         terms += w
-        smoothed += v
+        smoothed += smoothing(topic, w, lse.finish(buf))
       }
-      val dgNorm = dg(math.exp(lognorm))
-      terms.result().iterator.zip(smoothed.result().iterator)
-        .map { case (w, v) => (lang, topic, w, dg(math.exp(v)) - dgNorm) }
+      val beta = smoothed.result()
+      normalizeTopic(beta)
+      terms.result().iterator.zip(beta.iterator).map { case (w, e) => (lang, topic, w, e) }
     }
   }
 
@@ -578,60 +589,132 @@ private[graft] object EmCore {
   }
 
   /**
-   * Broadcast-mode fused per-iteration reduce: the phi side's
-   * cross-partition fold to (lang, topic, termId, log λ) and the doc side's
-   * ll/alpha statistics run as two branches of ONE union — a single action
-   * per EM iteration. The per-topic tail runs in [[finishBetaOnDriver]]
-   * over the collected (model-sized) rows.
-   *
-   * Row encoding: tag 0 = (lang, topic, termId, λ in v1); tag 1 =
-   * (topic = slot k, ss_k in v1, Σll in v2 — every slot carries the same Σll).
+   * Per packed key, K [[graft.functions.LogSumExpAgg]] buffers, each
+   * reduced in the order its values arrive: the λ fold of a broadcast
+   * model. [[reduce]] folds one partition's E-step rows into one (a key
+   * the kernel flushed mid-partition arrives in several rows), and the
+   * driver folds the partitions' results in partition-index order.
    */
-  def fusedIterationRows(estep: DataFrame, keys: Keys): DataFrame = {
-    val lambda = explodePhi(estep, keys)
-      .groupBy(keys.lambda.map(col): _*)
-      .agg(logsumexp(col("logphi")).as("v1"))
-      .select(lit(0).as("tag"), keys.lang.as("lang"), col("topic"), col("termId"), col("v1"),
-        lit(0.0).as("v2"))
-    val stats = MStep.llAndAlphaStatsRows(estep.filter(col("isDoc")))
-      .select(lit(1).as("tag"), lit(-1).as("lang"), col("k").as("topic"), lit(-1).as("termId"),
-        col("ss").as("v1"), col("llsum").as("v2"))
-    lambda.unionByName(stats)
-  }
+  private[graft] final class LseFold(k: Int) {
+    private val lse = new LogSumExpAgg
+    private val bufs = new java.util.HashMap[Long, Array[LseBuf]]()
 
-  /** Split [[fusedIterationRows]] output: (corpus LL, alpha stats,
-    * (lang, topic, termId, log λ) rows). */
-  def splitFused(rows: Array[Row], numTopics: Int)
-      : (Double, Array[Double], Array[(Int, Int, Int, Double)]) = {
-    val ss = new Array[Double](numTopics)
-    var ll = 0.0
-    val lambda = Array.newBuilder[(Int, Int, Int, Double)]
-    rows.foreach { r =>
-      if (r.getAs[Int]("tag") == 0)
-        lambda += ((r.getAs[Int]("lang"), r.getAs[Int]("topic"), r.getAs[Int]("termId"),
-          r.getAs[Double]("v1")))
-      else {
-        val k = r.getAs[Int]("topic")
-        ss(k) = r.getAs[Double]("v1")
-        if (k == 0) ll = r.getAs[Double]("v2")
-      }
+    private def buf(key: Long): Array[LseBuf] = bufs.computeIfAbsent(key, _ => Array.fill(k)(lse.zero))
+
+    /** reduce one (key, topic slot) value */
+    def add(key: Long, topic: Int, x: Double): Unit = lse.reduce(buf(key)(topic), x)
+
+    /** reduce a key's K values `xs(from until from + K)` */
+    def addRow(key: Long, xs: Array[Double], from: Int): Unit = {
+      val b = buf(key)
+      for (i <- 0 until k) lse.reduce(b(i), xs(from + i))
     }
-    (ll, ss, lambda.result())
+
+    /** The keys, sorted as primitive Longs — (lang, termId) order — and
+      * their finished log λ, K per key in that order. */
+    def result(): (Array[Long], Array[Double]) = {
+      val keys = bufs.keySet.asScala.toArray
+      java.util.Arrays.sort(keys)
+      (keys, keys.flatMap(w => bufs.get(w).map(lse.finish)))
+    }
   }
 
-  /** Driver-side tail of the broadcast-mode M-step: [[topicTail]] over the
-    * collected (lang, topic, termId, log λ) rows, one (lang, topic) at a
-    * time → the packed key → topic-array map the next E-step looks up. */
+  /**
+   * One partition's share of a broadcast model's M-step, the reference's
+   * in-mapper combiner plus its mapper-side likelihood and alpha
+   * statistics (DocumentMapper.java:177, 263-339): its E-step rows' log φ
+   * per packed key folded ([[LseFold]], `logphi(j·K + i)` ↔ key j, topic
+   * i+1), Σ ll over its documents, and ss_k = Σ_d ψ(γ_dk) − ψ(Σ_k γ_dk).
+   * An empty partition has no keys and an empty `ss`.
+   */
+  final case class Partial(keys: Array[Long], logphi: Array[Double], ll: Double, ss: Array[Double])
+
+  /** A broadcast model's M-step input, merged: corpus LL, alpha statistics
+    * (K = `ss.length`) and log λ for each key, keys ascending. */
+  final case class Reduced(ll: Double, ss: Array[Double], keys: Array[Long], lambda: Array[Double])
+
+  /**
+   * A broadcast model's M-step reduce over E-step rows: one narrow job in
+   * which each partition yields its [[Partial]], merged on the driver in
+   * partition-index order — each key's λ with [[LseFold]], ll and ss
+   * summed. `collect` returns the partials by partition index, so the
+   * merge order never depends on which task finished first (a tree or
+   * `RDD.reduce` would merge in completion order).
+   */
+  def reduce(estep: DataFrame, keys: Keys): Reduced = {
+    val at = estep.schema.fieldIndex _
+    val (isDoc, gamma, docLl, termId, logphi) =
+      (at("isDoc"), at("gamma"), at("ll"), at("termId"), at("logphi"))
+    val lang = keys.langCols.headOption.map(at)
+    val parts = estep.queryExecution.toRdd.mapPartitions { rows =>
+      var fold: LseFold = null
+      var ss = Array.empty[Double]
+      var sumLl = 0.0
+      rows.foreach { row =>
+        if (row.getBoolean(isDoc)) {
+          val g = row.getArray(gamma).toDoubleArray()
+          if (ss.isEmpty) ss = new Array[Double](g.length)
+          sumLl += row.getDouble(docLl)
+          val dgSum = dg(g.sum)
+          for (i <- g.indices) ss(i) += dg(g(i)) - dgSum
+        } else {
+          val lp = row.getArray(logphi).toDoubleArray()
+          if (fold == null) fold = new LseFold(lp.length)
+          fold.addRow(key(lang.fold(0)(row.getInt), row.getInt(termId)), lp, 0)
+        }
+      }
+      val (ks, lps) = if (fold == null) (Array.empty[Long], Array.empty[Double]) else fold.result()
+      Iterator(Partial(ks, lps, sumLl, ss))
+    }.collect()
+    val k = parts.map(_.ss.length).maxOption.getOrElse(0)
+    val fold = new LseFold(k)
+    val ss = new Array[Double](k)
+    var ll = 0.0
+    parts.foreach { p =>
+      ll += p.ll
+      for (i <- p.ss.indices) ss(i) += p.ss(i)
+      for (j <- p.keys.indices) fold.addRow(p.keys(j), p.logphi, j * k)
+    }
+    val (ks, lambda) = fold.result()
+    Reduced(ll, ss, ks, lambda)
+  }
+
+  /** Smoothing and [[normalizeTopic]] over a broadcast model's λ (`keys`
+    * ascending, K values each), one (lang, topic) at a time → the packed
+    * key → topic-array map the next E-step looks up. */
+  private[graft] def betaOf(keys: Array[Long], lambda: Array[Double], k: Int,
+      smoothing: Smoothing): scala.collection.Map[Long, Array[Double]] = {
+    val beta = Array.fill(keys.length)(new Array[Double](k))
+    var a = 0
+    while (a < keys.length) {
+      val lang = langOf(keys(a))
+      var b = a
+      while (b < keys.length && langOf(keys(b)) == lang) b += 1
+      val v = new Array[Double](b - a)
+      for (t <- 0 until k) {
+        for (j <- v.indices) v(j) = smoothing(t + 1, termOf(keys(a + j)), lambda((a + j) * k + t))
+        normalizeTopic(v)
+        for (j <- v.indices) beta(a + j)(t) = v(j)
+      }
+      a = b
+    }
+    keys.iterator.zip(beta.iterator).toMap
+  }
+
+  /** The broadcast M-step's tail over (lang, topic, termId, log λ) rows:
+    * values of one (lang, topic, termId) fold with [[LseFold]], then
+    * [[betaOf]]. */
   def finishBetaOnDriver(lambda: Array[(Int, Int, Int, Double)], numTopics: Int,
       smoothing: Smoothing): scala.collection.Map[Long, Array[Double]] = {
-    val betaMap = new java.util.HashMap[Long, Array[Double]]()
-    lambda.groupBy(e => (e._1, e._2)).valuesIterator
-      .flatMap(topic => topicTail(topic.sortBy(_._3).iterator.buffered, smoothing))
-      .foreach { case (lang, topic, w, e) =>
-        betaMap.computeIfAbsent(key(lang, w), _ => new Array[Double](numTopics))(topic - 1) = e
-      }
-    scala.jdk.CollectionConverters.MapHasAsScala(betaMap).asScala
+    val fold = new LseFold(numTopics)
+    lambda.foreach { case (lang, topic, w, v) => fold.add(key(lang, w), topic - 1, v) }
+    val (keys, values) = fold.result()
+    betaOf(keys, values, numTopics, smoothing)
   }
+
+  /** One iteration's M-step outcome: corpus LL, alpha statistics, and the
+    * E-step's doc rows, readable until `release`. */
+  private final case class Step(ll: Double, ss: Array[Double], docs: DataFrame, release: () => Unit)
 
   /**
    * A model's beta between EM iterations, held in the form its path looks
@@ -644,9 +727,8 @@ private[graft] object EmCore {
     /** the E-step's supply for the coming iteration; releases what the
       * finished iteration's supply held */
     def supply(): BetaSupply
-    /** the M-step over one E-step's rows, replacing beta with the next one;
-      * returns (corpus LL, alpha sufficient statistics) */
-    def mstep(estep: DataFrame): (Double, Array[Double])
+    /** the M-step over one E-step's rows, replacing beta with the next one */
+    def mstep(estep: DataFrame): Step
     /** (lang…, topic, termId, elogbeta) rows: the beta-<i> snapshot */
     def rows: DataFrame
     /** the final packed key → topic-array map; releases the path */
@@ -654,8 +736,10 @@ private[graft] object EmCore {
   }
 
   /** Beta collected and broadcast (the reference's DistributedCache path,
-    * DocumentMapper.java:116): the λ fold and the doc-side statistics are
-    * one collect ([[fusedIterationRows]]), and the tail runs on the driver. */
+    * DocumentMapper.java:116). The iteration is one narrow job: the E-step
+    * rows are checkpointed lazily and [[reduce]] materializes them while it
+    * folds them, so the doc rows the next corpus reads cost no job of
+    * their own; the tail runs on the driver. */
   private final class BroadcastBeta(spark: SparkSession, keys: Keys, k: Int,
       smoothing: Smoothing, resumed: Option[DataFrame]) extends BetaPath {
     private var beta = resumed.map(rows => collectPacked(packBeta(rows, keys), keys))
@@ -673,10 +757,13 @@ private[graft] object EmCore {
       bc = Some(b)
       Lookup.packed(b)
     }
-    def mstep(estep: DataFrame): (Double, Array[Double]) = {
-      val (ll, ss, lambda) = splitFused(fusedIterationRows(estep, keys).collect(), k)
-      beta = finishBetaOnDriver(lambda, k, smoothing)
-      (ll, ss)
+    def mstep(estep: DataFrame): Step = {
+      // lazy is safe here: the reduce's one stage is the only reader until
+      // it has materialized the checkpoint
+      val out = estep.ckptLazy()
+      val r = reduce(out, keys)
+      beta = betaOf(r.keys, r.lambda, k, smoothing)
+      Step(r.ll, r.ss, out.filter(col("isDoc")), () => out.releaseCkpt())
     }
     def rows: DataFrame =
       betaRows(spark, keys, beta.toSeq.map { case (w, arr) => (langOf(w), termOf(w), arr) })
@@ -691,35 +778,39 @@ private[graft] object EmCore {
       smoothing: Smoothing, exploded: DataFrame, resumed: Option[DataFrame]) extends BetaPath {
     private var table: DataFrame = resumed.fold(emptyBetaTable(spark, keys))(
       rows => packBeta(rows, keys).persist(StorageLevel.MEMORY_AND_DISK))
-    private var previous: Option[DataFrame] = None
+    // drops the blocks `table` reads
+    private var releaseTable: () => Unit = { val t = table; () => t.unpersist() }
 
-    def supply(): BetaSupply = {
-      previous.foreach(_.unpersist())
-      Join(table, Some(exploded))
-    }
+    def supply(): BetaSupply = Join(table, Some(exploded))
     /** One localCheckpoint holds the packed beta and the k-row ll/alpha
       * statistics as union branches: the stats collect and every E-step
       * join of the next iteration read it, and it truncates the lineage (a
       * plain persist would nest each iteration's plan inside the next
       * E-step join). Keeping the doc side out of it means the per-iteration
-      * beta scans never re-read corpus blocks. */
-    def mstep(estep: DataFrame): (Double, Array[Double]) = {
-      val fused = packBeta(lambdaToBeta(explodePhi(estep, keys), keys, smoothing), keys)
+      * beta scans never re-read corpus blocks. The doc rows are checkpointed
+      * eagerly (the two union branches read the E-step from concurrent
+      * stages); after that nothing reads the old beta table. */
+    def mstep(estep: DataFrame): Step = {
+      val held = estep.persist(StorageLevel.MEMORY_AND_DISK)
+      val next = packBeta(lambdaToBeta(explodePhi(held, keys), keys, smoothing), keys)
         .withColumn("tag", lit(0))
         .unionByName(
-          MStep.llAndAlphaStatsRows(estep.filter(col("isDoc"))).withColumn("tag", lit(1)),
+          MStep.llAndAlphaStatsRows(held.filter(col("isDoc"))).withColumn("tag", lit(1)),
           allowMissingColumns = true)
         .ckptSer()
-      previous = Some(table)
-      table = fused.filter(col("tag") === 0).select(keys.term.map(col) :+ col("elogbeta"): _*)
-      MStep.statsOf(fused.filter(col("tag") === 1).select("k", "ss", "llsum").collect(), k)
+      val (ll, ss) = MStep.statsOf(next.filter(col("tag") === 1).select("k", "ss", "llsum").collect(), k)
+      val docs = held.filter(col("isDoc")).ckptSer()
+      held.unpersist()
+      releaseTable()
+      releaseTable = () => next.releaseCkpt()
+      table = next.filter(col("tag") === 0).select(keys.term.map(col) :+ col("elogbeta"): _*)
+      Step(ll, ss, docs, () => docs.releaseCkpt())
     }
     def rows: DataFrame = explodeTopics(table, keys, "elogbeta")
     def finish(): scala.collection.Map[Long, Array[Double]] = {
-      previous.foreach(_.unpersist())
       exploded.unpersist(blocking = false)
       val beta = collectPacked(table, keys)
-      table.unpersist()
+      releaseTable()
       beta
     }
   }
@@ -745,11 +836,60 @@ private[graft] object EmCore {
       iterations: Int,
       llHistory: Seq[Double])
 
+  /** E-step work (φ updates) one corpus partition is sized to carry. */
+  private[graft] val WorkPerTask = 1L << 22
+  /** The final sweep's logs and the φ fold, counted in sweeps: each
+    * (term, topic) takes a log-add there (an exp and a log1p) against a
+    * sweep's two multiply-adds. An estimate, not a measurement. */
+  private[graft] val FoldSweeps = 10
+  private[graft] val MaxPartitions = 1 << 16
+
+  /**
+   * The corpus's partition count: its E-step work, Σ nnz · K · (sweeps +
+   * [[FoldSweeps]]), in tasks of [[WorkPerTask]]; at least one, at most one
+   * per document. A function of the data and the settings only, never of
+   * the host's cores, so the per-partition folds — and the trained model —
+   * are the same on every host.
+   */
+  def partitionsFor(numDocs: Long, nnz: Long, k: Int, sweeps: Int): Int = {
+    val tasks = math.ceil(nnz.toDouble * k * (sweeps + FoldSweeps) / WorkPerTask).toLong
+    math.max(1L, math.min(tasks, math.min(numDocs, MaxPartitions.toLong))).toInt
+  }
+
+  /** (documents, Σ nnz) of a corpus in one job. */
+  private def countTerms[D, R](docs: Dataset[D], shape: DocShape[D, R]): (Long, Long) = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.mapPartitions { it =>
+      var n = 0L
+      var nnz = 0L
+      it.foreach { d => n += 1; shape.langCounts(d).foreach(nnz += _._2.size) }
+      Iterator((n, nnz))
+    }.collect().foldLeft((0L, 0L)) { case ((n, z), (a, b)) => (n + a, z + b) }
+  }
+
+  /** `docs` hash-partitioned by docId into `parts` partitions, docId-sorted
+    * within each, and persisted; returns it and its release. The first job
+    * that reads it runs the exchange: no job of its own. */
+  private def byWork[D, R](docs: Dataset[D], shape: DocShape[D, R], parts: Int)
+      : (Dataset[D], () => Unit) = {
+    implicit val tag: scala.reflect.ClassTag[D] = shape.docEncoder.clsTag
+    val rdd = docs.rdd.keyBy(shape.docId)
+      .repartitionAndSortWithinPartitions(new HashPartitioner(parts)).values
+    rdd.persist(StorageLevel.MEMORY_AND_DISK_SER)
+    (docs.sparkSession.createDataset(rdd)(shape.docEncoder), () => rdd.unpersist(blocking = false))
+  }
+
   /**
    * EM driver loop (reference: cc/mrlda/VariationalInference.java:181-394,
-   * polylda/VariationalInference.java:330-580). One Spark job per iteration
-   * instead of one MR job + one merge job + JVM restarts: the corpus stays
-   * cached in executor memory across iterations.
+   * polylda/VariationalInference.java:330-580). A broadcast model's
+   * iteration is one narrow Spark job — the E-step and the per-partition
+   * M-step partials ([[reduce]]) — instead of one MR job + one merge job +
+   * JVM restarts. The corpus it starts from (fresh or resumed) is
+   * partitioned once by E-step work ([[partitionsFor]]), hashed by docId and
+   * docId-sorted within each partition, and every iteration's doc rows keep
+   * that layout, so the folds — and the model — do not depend on the host
+   * or on task timing.
    *
    * Scale posture: below `betaBroadcastMaxEntries` beta is collected and
    * broadcast (the reference's DistributedCache path,
@@ -757,17 +897,16 @@ private[graft] object EmCore {
    * end-to-end and nothing model-sized moves through the driver. With
    * `checkpointDir` set, alpha/beta/gamma snapshot to parquet after every
    * iteration (the reference's alpha-i/beta-i/gamma-i rotation) and gamma
-   * re-reads from parquet — reliable lineage truncation; without it,
-   * `localCheckpoint` (fast, not fault-tolerant). Alpha takes one Newton
-   * update per iteration. Convergence: |ΔLL/LL| ≤ `convergence` or
-   * `maxIterations` (Settings.java:56,43).
+   * re-reads from parquet, re-partitioned the same way — reliable lineage
+   * truncation; without it, a `localCheckpoint` (fast, not fault-tolerant).
+   * Alpha takes one Newton update per iteration. Convergence: |ΔLL/LL| ≤
+   * `convergence` or `maxIterations` (Settings.java:56,43).
    *
-   * The caller's cache is the caller's: `docs` is cached here only when
-   * the caller has not cached it, and fit releases only what it cached.
+   * The caller's `docs` are read twice (the count, then the partitioning)
+   * and never cached or released here.
    */
   def fit[D, R](docs: Dataset[D], model: Model[D, R], cfg: Settings): Fit = {
     val spark = docs.sparkSession
-    import spark.implicits._
     val shape = model.shape
     val keys = shape.keys
     val k = cfg.numTopics
@@ -778,13 +917,7 @@ private[graft] object EmCore {
     var resumedBeta: Option[DataFrame] = None
     var history = List.empty[Double]
     var startIter = 0
-    var ownsCorpus = cfg.resumeFrom.isEmpty && docs.storageLevel == StorageLevel.NONE
-    var corpus = if (ownsCorpus) docs.persist(StorageLevel.MEMORY_AND_DISK) else docs
-    def rotate(next: Dataset[D]): Unit = {
-      if (ownsCorpus) corpus.unpersist()
-      corpus = next
-      ownsCorpus = true
-    }
+    var source = docs
 
     cfg.resumeFrom.foreach { case (dir, i) =>
       alpha = LdaCheckpoint.loadAlpha(spark, dir, i)
@@ -796,18 +929,18 @@ private[graft] object EmCore {
       resumedBeta = Some(LdaCheckpoint.loadBeta(spark, dir, i))
       // gamma-<i> is the full gamma-annotated corpus — resume reads it
       // directly (the reference resumes from the gamma-i document dir)
-      rotate(gammaDocs(LdaCheckpoint.loadGamma(spark, dir, i)).persist(StorageLevel.MEMORY_AND_DISK))
+      source = gammaDocs(LdaCheckpoint.loadGamma(spark, dir, i))
       history = LdaCheckpoint.loadLlHistory(spark, dir, i).reverse.toList
       startIter = i
     }
 
-    val numDocs = corpus.count()
+    val (numDocs, nnz) = countTerms(source, shape)
     // with no document the alpha update divides by zero and training would
     // return NaN alpha and a flat zero likelihood
-    if (numDocs == 0) {
-      if (ownsCorpus) corpus.unpersist()
+    if (numDocs == 0)
       throw new IllegalArgumentException("cannot train a topic model on an empty corpus (0 documents)")
-    }
+    val parts = partitionsFor(numDocs, nnz, k, cfg.localIterations)
+    var (corpus, releaseCorpus) = byWork(source, shape, parts)
     // the one place the beta path is chosen. The table path's explode is
     // loop-invariant (gamma rotation never touches counts): materialized
     // once, partitioned by the beta join key, so each iteration's E-step
@@ -825,46 +958,50 @@ private[graft] object EmCore {
       val alphaBc = spark.sparkContext.broadcast(alpha)
       val estep = EmCore.estep(corpus, shape, alphaBc, beta.supply(), model.vocab,
         Sweeps(cfg.localIterations, cfg.randomStartGamma, learning = true, cfg.seed))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-
-      val snapIdx = iter + 1
-      val docSide = estep.toDF().filter($"isDoc")
 
       // M-step + likelihood + alpha sufficient statistics
-      val (ll, ss) = beta.mstep(estep.toDF())
+      val step = beta.mstep(estep.toDF())
+      val ll = step.ll
       alpha =
         if (model.symmetricAlpha) {
-          val a = AlphaUpdate.updateScalarAlpha(k, numDocs, alpha(0), ss.sum)
+          val a = AlphaUpdate.updateScalarAlpha(k, numDocs, alpha(0), step.ss.sum)
           Array.fill(k)(a)
-        } else AlphaUpdate.updateVectorAlpha(k, numDocs, alpha, ss)
+        } else AlphaUpdate.updateVectorAlpha(k, numDocs, alpha, step.ss)
       history = ll :: history
 
       // snapshot i+1 after iteration i (the reference's alpha-(i+1)).
       // gamma-<i> holds the FULL gamma-annotated corpus — exactly the
       // reference's layout, where the gamma output dir IS the next
       // iteration's document input (VariationalInference.java:358-379)
+      val snapIdx = iter + 1
       cfg.checkpointDir.foreach { dir =>
         LdaCheckpoint.saveAlpha(spark, dir, snapIdx, alpha)
         LdaCheckpoint.saveBeta(beta.rows, dir, snapIdx)
-        LdaCheckpoint.saveGamma(docSide.select(shape.docCols.map(col): _*), dir, snapIdx)
+        LdaCheckpoint.saveGamma(step.docs.select(shape.docCols.map(col): _*), dir, snapIdx)
         LdaCheckpoint.saveState(spark, dir, snapIdx, history.reverse)
       }
 
       // rotate gamma into the corpus for the next iteration's warm start:
-      // the doc side already carries the full document, so the next corpus
-      // is a projection of the E-step output — no per-iteration join. A
-      // localCheckpoint of it (corpus-sized) truncates the lineage when no
-      // snapshot is read back. Skipped under randomStartGamma (the E-step
+      // the doc rows carry the full document, in the corpus's partitions
+      // and order, so the next corpus is a projection of them — no
+      // per-iteration join. Skipped under randomStartGamma (the E-step
       // would ignore the stored gamma; the reference gates the side-output
       // the same way).
-      if (!cfg.randomStartGamma)
-        rotate(cfg.checkpointDir match {
+      if (cfg.randomStartGamma) step.release()
+      else {
+        releaseCorpus()
+        cfg.checkpointDir match {
           case Some(dir) =>
-            gammaDocs(LdaCheckpoint.loadGamma(spark, dir, snapIdx)).persist(StorageLevel.MEMORY_AND_DISK)
-          case None => gammaDocs(docSide).ckptSer()
-        })
-
-      estep.unpersist()
+            step.release()
+            val (next, release) =
+              byWork(gammaDocs(LdaCheckpoint.loadGamma(spark, dir, snapIdx)), shape, parts)
+            corpus = next
+            releaseCorpus = release
+          case None =>
+            corpus = gammaDocs(step.docs)
+            releaseCorpus = step.release
+        }
+      }
       alphaBc.destroy()
 
       converged = (iter > startIter || cfg.resumeFrom.isDefined) &&
@@ -876,7 +1013,7 @@ private[graft] object EmCore {
     // beta bigger than driver memory read the checkpointed beta-<i>
     // parquet instead)
     val betaMap = beta.finish()
-    if (ownsCorpus) corpus.unpersist()
+    releaseCorpus()
 
     Fit(alpha, betaMap, lastLL, iter, history.reverse)
   }

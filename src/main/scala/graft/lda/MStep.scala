@@ -36,16 +36,38 @@ object MStep {
   def run(phi: DataFrame, prior: Option[DataFrame] = None): DataFrame =
     EmCore.lambdaToBeta(phi, keys, Smoothing.eta(prior.map(Smoothing.seeds)))
 
-  /** Broadcast-mode fused per-iteration reduce (see
-    * [[EmCore.fusedIterationRows]]): tag 0 = (topic, termId, λ in v1);
-    * tag 1 = (topic = slot k, ss_k in v1, Σll in v2). */
-  def fusedIterationRows(estep: DataFrame): DataFrame = EmCore.fusedIterationRows(estep, keys)
+  /** The broadcast M-step's reduce ([[EmCore.reduce]]: one narrow job of
+    * per-partition partials, merged on the driver) as local rows: tag 0 =
+    * (termId, log λ per topic in v); tag 1 = (alpha stats in v, corpus LL
+    * in ll). The reduce runs when this is called. */
+  def fusedIterationRows(estep: DataFrame): DataFrame = {
+    val spark = estep.sparkSession
+    import spark.implicits._
+    val r = EmCore.reduce(estep, keys)
+    val k = r.ss.length
+    val lambda = r.keys.indices.map(j =>
+      (0, EmCore.termOf(r.keys(j)), r.lambda.slice(j * k, (j + 1) * k), 0.0))
+    (lambda :+ ((1, -1, r.ss, r.ll))).toDF("tag", "termId", "v", "ll")
+  }
 
-  /** Split `fusedIterationRows` output: (corpus LL, alpha stats, λ rows). */
+  /** Split `fusedIterationRows` output: (corpus LL, alpha stats,
+    * (topic, termId, log λ) rows). */
   def splitFused(rows: Array[Row], numTopics: Int)
       : (Double, Array[Double], Array[(Int, Int, Double)]) = {
-    val (ll, ss, lambda) = EmCore.splitFused(rows, numTopics)
-    (ll, ss, lambda.map { case (_, topic, termId, v) => (topic, termId, v) })
+    var ss = new Array[Double](numTopics)
+    var ll = 0.0
+    val lambda = Array.newBuilder[(Int, Int, Double)]
+    rows.foreach { r =>
+      val v = r.getAs[scala.collection.Seq[Double]]("v")
+      if (r.getAs[Int]("tag") == 0) {
+        val w = r.getAs[Int]("termId")
+        v.indices.foreach(t => lambda += ((t + 1, w, v(t))))
+      } else {
+        ss = v.toArray
+        ll = r.getAs[Double]("ll")
+      }
+    }
+    (ll, ss, lambda.result())
   }
 
   /**

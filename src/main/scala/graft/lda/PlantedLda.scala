@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
  *
  * The run IS the broadcast-mode trainer skeleton on real operators:
  * the EM core's E-step (with the fixture-only anchor knobs) for every sweep,
- * the distributed `logsumexp` phi fold, and
- * [[EmCore.finishBetaOnDriver]] for the per-topic smoothing/normalizer tail —
+ * the trainer's own phi fold ([[EmCore.reduce]]: per-partition partials
+ * merged in partition order), and [[EmCore.betaOf]] for the per-topic
+ * smoothing/normalizer tail —
  * only alpha stays FIXED (the alpha Newton update is a driver-side
  * scalar routine already pinned verbatim against the reference's 8
  * golden cases in AlphaUpdateSpec; a condition-based Newton loop has
@@ -125,9 +126,9 @@ object PlantedLda {
   /**
    * The anchored EM loop both planted replays run, over packed (lang,
    * termId) keys — vanilla is lang 0 with eta smoothing: broadcast or
-   * joined beta → the anchored E-step → the distributed `logsumexp` phi
-   * fold, rounded at collect → the real M-step tail
-   * ([[EmCore.finishBetaOnDriver]]) with the handoff re-anchored → the
+   * joined beta → the anchored E-step → the trainer's phi fold
+   * ([[EmCore.reduce]]), rounded on the driver → the real M-step tail
+   * ([[EmCore.betaOf]]) with the handoff re-anchored → the
    * anchored gammas carried forward (reference semantics: the next
    * iteration's corpus is the gamma side-output; `withGamma` sets one
    * document's). Returns the final beta and the last E-step's
@@ -156,10 +157,8 @@ object PlantedLda {
         else EmCore.Lookup.packed(betaBc)
       val estep = EmCore.estep(spark.createDataset(docs)(shape.docEncoder), shape, alphaBc,
         supply, vocab, sweeps).persist()
-      val (_, _, lambda) =
-        EmCore.splitFused(EmCore.fusedIterationRows(estep.toDF(), keys).collect(), k)
-      beta = EmCore.finishBetaOnDriver(
-        lambda.map { case (l, t, w, lp) => (l, t, w, rnd(lp, betaDp)) }, k, smoothing)
+      val r = EmCore.reduce(estep.toDF(), keys)
+      beta = EmCore.betaOf(r.keys, r.lambda.map(rnd(_, betaDp)), k, smoothing)
         .map { case (w, arr) => w -> arr.map(rnd(_, betaDp)) }
       val docRows = estep.filter($"isDoc")
         .select($"docId", $"gamma", $"ll")

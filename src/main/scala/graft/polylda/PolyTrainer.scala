@@ -50,6 +50,7 @@ private[graft] object PolyDocs extends DocShape[PolyDoc, PolyEStepRow](
   def langCountsColumns(docs: DataFrame): DataFrame =
     docs.select(col("docId"), explode_outer(col("counts")).as(Seq("lang", "langCounts")))
   def langCounts(d: PolyDoc): Iterable[(Int, Map[Int, Int])] = d.counts.toSeq.sortBy(_._1)
+  def docId(d: PolyDoc): Long = d.docId
   def tokens(d: PolyDoc): Long = d.totalTokens
   def gamma(d: PolyDoc): Option[Array[Double]] = d.gamma
   def fromTerms(docId: Long, tokens: Long, terms: Seq[TermBeta]): PolyDoc = {

@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Eager `localCheckpoint` at MEMORY_AND_DISK_SER — the storage level
@@ -20,12 +21,26 @@ import org.apache.spark.storage.StorageLevel
   * same blocks several times smaller — at 1000-executor scale the
   * difference is a dead executor vs a spill.
   *
-  * Eagerness: always eager — a LAZY localCheckpoint materialized
+  * Eagerness: eager by default — a LAZY localCheckpoint materialized
   * concurrently by two consumers can deadlock inside Spark's
-  * checkpoint locking (the r13 ABBA deadlock, Dedup posture note). */
+  * checkpoint locking (the r13 ABBA deadlock, Dedup posture note).
+  * [[CkptOps.ckptLazy]] is for a dataset whose first reader is a single
+  * stage: that stage materializes it, with no job of its own. */
 object Ckpt {
   implicit final class CkptOps[T](private val ds: Dataset[T]) extends AnyVal {
     def ckptSer(): Dataset[T] =
       ds.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+
+    /** `ckptSer` materialized by the first job that reads it. Only for a
+      * dataset exactly one stage reads until then. */
+    def ckptLazy(): Dataset[T] =
+      ds.localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
+
+    /** Drops the blocks of a dataset `ckptSer` or `ckptLazy` returned
+      * (`unpersist` does not reach them); a no-op on any other dataset. */
+    def releaseCkpt(): Unit = ds.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
   }
 }
