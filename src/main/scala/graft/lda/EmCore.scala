@@ -592,8 +592,9 @@ private[graft] object EmCore {
    * Per packed key, K [[graft.functions.LogSumExpAgg]] buffers, each
    * reduced in the order its values arrive: the λ fold of a broadcast
    * model. [[reduce]] folds one partition's E-step rows into one (a key
-   * the kernel flushed mid-partition arrives in several rows), and the
-   * driver folds the partitions' results in partition-index order.
+   * the kernel flushed mid-partition arrives in several rows), and a
+   * reducer folds the partitions' partials of its keys in partition-index
+   * order.
    */
   private[graft] final class LseFold(k: Int) {
     private val lse = new LogSumExpAgg
@@ -610,6 +611,10 @@ private[graft] object EmCore {
       for (i <- 0 until k) lse.reduce(b(i), xs(from + i))
     }
 
+    /** Each key with its finished log λ, in no particular order. */
+    def entries(): Iterator[(Long, Array[Double])] =
+      bufs.entrySet.iterator.asScala.map(e => (e.getKey: Long) -> e.getValue.map(lse.finish))
+
     /** The keys, sorted as primitive Longs — (lang, termId) order — and
       * their finished log λ, K per key in that order. */
     def result(): (Array[Long], Array[Double]) = {
@@ -619,64 +624,89 @@ private[graft] object EmCore {
     }
   }
 
-  /**
-   * One partition's share of a broadcast model's M-step, the reference's
-   * in-mapper combiner plus its mapper-side likelihood and alpha
-   * statistics (DocumentMapper.java:177, 263-339): its E-step rows' log φ
-   * per packed key folded ([[LseFold]], `logphi(j·K + i)` ↔ key j, topic
-   * i+1), Σ ll over its documents, and ss_k = Σ_d ψ(γ_dk) − ψ(Σ_k γ_dk).
-   * An empty partition has no keys and an empty `ss`.
-   */
-  final case class Partial(keys: Array[Long], logphi: Array[Double], ll: Double, ss: Array[Double])
-
   /** A broadcast model's M-step input, merged: corpus LL, alpha statistics
     * (K = `ss.length`) and log λ for each key, keys ascending. */
   final case class Reduced(ll: Double, ss: Array[Double], keys: Array[Long], lambda: Array[Double])
 
+  /** [[reduce]]'s key of the merged (Σ ll, ss): no packed (lang, termId)
+    * key is negative. */
+  private val StatsKey = -1L
+
+  /** One map partition's share of [[reduce]] bound for one reducer: the
+    * partition's index, its keys that hash to that reducer with their log
+    * φ (K per key, `logphi(j·K + i)` ↔ key j), and — on reducer 0 only —
+    * its Σ ll followed by ss. */
+  private final case class Block(part: Int, keys: Array[Long], logphi: Array[Double], stats: Array[Double])
+
   /**
-   * A broadcast model's M-step reduce over E-step rows: one narrow job in
-   * which each partition yields its [[Partial]], merged on the driver in
-   * partition-index order — each key's λ with [[LseFold]], ll and ss
-   * summed. `collect` returns the partials by partition index, so the
-   * merge order never depends on which task finished first (a tree or
-   * `RDD.reduce` would merge in completion order).
+   * A broadcast model's M-step reduce over E-step rows, the reference's
+   * in-mapper combiner and its reducer (DocumentMapper.java:177, 263-339):
+   * one job of two stages, which collects only the model.
+   *
+   * Each partition folds its rows into one partial: log φ per packed key
+   * ([[LseFold]], `logphi(j·K + i)` ↔ key j, topic i+1), Σ ll and ss_k =
+   * Σ_d ψ(γ_dk) − ψ(Σ_k γ_dk). It ships the partial as one [[Block]] per
+   * reducer, its keys hashed to reducers. A reducer folds its blocks in
+   * partition-index order — λ with [[LseFold]], the statistics summed —
+   * so the result never depends on which task finished first or on the
+   * shuffle's fetch order (Spark's combiners, `RDD.reduce` and
+   * `treeAggregate` merge in arrival order), nor on the number of reducers.
    */
   def reduce(estep: DataFrame, keys: Keys): Reduced = {
     val at = estep.schema.fieldIndex _
     val (isDoc, gamma, docLl, termId, logphi) =
       (at("isDoc"), at("gamma"), at("ll"), at("termId"), at("logphi"))
     val lang = keys.langCols.headOption.map(at)
-    val parts = estep.queryExecution.toRdd.mapPartitions { rows =>
+    val input = estep.queryExecution.toRdd
+    val reducers = new HashPartitioner(
+      math.max(1, math.min(input.getNumPartitions, estep.sparkSession.sparkContext.defaultParallelism)))
+    val blocks = input.mapPartitionsWithIndex { (part, rows) =>
       var fold: LseFold = null
-      var ss = Array.empty[Double]
-      var sumLl = 0.0
+      var stats = Array.empty[Double] // Σ ll, then ss
       rows.foreach { row =>
         if (row.getBoolean(isDoc)) {
           val g = row.getArray(gamma).toDoubleArray()
-          if (ss.isEmpty) ss = new Array[Double](g.length)
-          sumLl += row.getDouble(docLl)
+          if (stats.isEmpty) stats = new Array[Double](g.length + 1)
+          stats(0) += row.getDouble(docLl)
           val dgSum = dg(g.sum)
-          for (i <- g.indices) ss(i) += dg(g(i)) - dgSum
+          for (i <- g.indices) stats(i + 1) += dg(g(i)) - dgSum
         } else {
           val lp = row.getArray(logphi).toDoubleArray()
           if (fold == null) fold = new LseFold(lp.length)
           fold.addRow(key(lang.fold(0)(row.getInt), row.getInt(termId)), lp, 0)
         }
       }
-      val (ks, lps) = if (fold == null) (Array.empty[Long], Array.empty[Double]) else fold.result()
-      Iterator(Partial(ks, lps, sumLl, ss))
-    }.collect()
-    val k = parts.map(_.ss.length).maxOption.getOrElse(0)
-    val fold = new LseFold(k)
-    val ss = new Array[Double](k)
-    var ll = 0.0
-    parts.foreach { p =>
-      ll += p.ll
-      for (i <- p.ss.indices) ss(i) += p.ss(i)
-      for (j <- p.keys.indices) fold.addRow(p.keys(j), p.logphi, j * k)
+      val n = reducers.numPartitions
+      val (ks, lps) = (Array.fill(n)(Array.newBuilder[Long]), Array.fill(n)(Array.newBuilder[Double]))
+      if (fold != null) fold.entries().foreach { case (w, v) =>
+        val r = reducers.getPartition(w)
+        ks(r) += w
+        lps(r) ++= v
+      }
+      Iterator.tabulate(n)(r => r -> Block(part, ks(r).result(), lps(r).result(), if (r == 0) stats else Array.empty))
     }
-    val (ks, lambda) = fold.result()
-    Reduced(ll, ss, ks, lambda)
+    val merged = blocks.partitionBy(reducers).mapPartitions { it =>
+      var fold: LseFold = null
+      var stats = Array.empty[Double]
+      it.map(_._2).toArray.sortBy(_.part).foreach { b =>
+        if (b.keys.nonEmpty) {
+          val k = b.logphi.length / b.keys.length
+          if (fold == null) fold = new LseFold(k)
+          for (j <- b.keys.indices) fold.addRow(b.keys(j), b.logphi, j * k)
+        }
+        if (b.stats.nonEmpty) {
+          if (stats.isEmpty) stats = new Array[Double](b.stats.length)
+          for (i <- stats.indices) stats(i) += b.stats(i)
+        }
+      }
+      Option(fold).iterator.flatMap(_.entries()) ++ Option.when(stats.nonEmpty)(StatsKey -> stats)
+    }.collect()
+    val stats = merged.find(_._1 == StatsKey).fold(Array(0.0))(_._2)
+    val byKey = new java.util.HashMap[Long, Array[Double]](merged.length * 2)
+    merged.foreach { case (w, v) => if (w != StatsKey) byKey.put(w, v) }
+    val ks = byKey.keySet.asScala.toArray
+    java.util.Arrays.sort(ks)
+    Reduced(stats(0), stats.tail, ks, ks.flatMap(byKey.get))
   }
 
   /** Smoothing and [[normalizeTopic]] over a broadcast model's λ (`keys`
@@ -736,10 +766,10 @@ private[graft] object EmCore {
   }
 
   /** Beta collected and broadcast (the reference's DistributedCache path,
-    * DocumentMapper.java:116). The iteration is one narrow job: the E-step
-    * rows are checkpointed lazily and [[reduce]] materializes them while it
-    * folds them, so the doc rows the next corpus reads cost no job of
-    * their own; the tail runs on the driver. */
+    * DocumentMapper.java:116). The iteration is one job: the E-step rows
+    * are checkpointed lazily and [[reduce]]'s first stage materializes them
+    * while it folds them, so the doc rows the next corpus reads cost no job
+    * of their own; the tail runs on the driver. */
   private final class BroadcastBeta(spark: SparkSession, keys: Keys, k: Int,
       smoothing: Smoothing, resumed: Option[DataFrame]) extends BetaPath {
     private var beta = resumed.map(rows => collectPacked(packBeta(rows, keys), keys))
@@ -758,8 +788,8 @@ private[graft] object EmCore {
       Lookup.packed(b)
     }
     def mstep(estep: DataFrame): Step = {
-      // lazy is safe here: the reduce's one stage is the only reader until
-      // it has materialized the checkpoint
+      // lazy is safe here: the reduce's first stage is the only reader
+      // until it has materialized the checkpoint
       val out = estep.ckptLazy()
       val r = reduce(out, keys)
       beta = betaOf(r.keys, r.lambda, k, smoothing)
@@ -836,13 +866,19 @@ private[graft] object EmCore {
       iterations: Int,
       llHistory: Seq[Double])
 
-  /** E-step work (φ updates) one corpus partition is sized to carry. */
+  /** E-step work (φ updates, sweeps and [[FoldSweeps]]) one corpus
+    * partition is sized to carry: about 10 ms of one core at the rate
+    * measured below. */
   private[graft] val WorkPerTask = 1L << 22
-  /** The final sweep's logs and the φ fold, counted in sweeps: each
-    * (term, topic) takes a log-add there (an exp and a log1p) against a
-    * sweep's two multiply-adds. An estimate, not a measurement. */
-  private[graft] val FoldSweeps = 10
-  private[graft] val MaxPartitions = 1 << 16
+  /** A broadcast iteration's work per (term, topic) outside the sweeps —
+    * row decoding, the shifted E[log β] rows, the final logs, the φ
+    * combiner and the partial fold, the checkpoint and shuffle writes —
+    * counted in sweeps. Measured as the intercept over the slope of one
+    * map task's CPU time against the sweep count (1 to 100; 400 documents
+    * of 156 distinct terms, K = 20, one core of a 4-core Xeon VM): 180–200
+    * ms plus 3.0–3.1 ms per sweep, 58–68 sweeps over three runs of 11
+    * repetitions. */
+  private[graft] val FoldSweeps = 60
 
   /**
    * The corpus's partition count: its E-step work, Σ nnz · K · (sweeps +
@@ -853,7 +889,7 @@ private[graft] object EmCore {
    */
   def partitionsFor(numDocs: Long, nnz: Long, k: Int, sweeps: Int): Int = {
     val tasks = math.ceil(nnz.toDouble * k * (sweeps + FoldSweeps) / WorkPerTask).toLong
-    math.max(1L, math.min(tasks, math.min(numDocs, MaxPartitions.toLong))).toInt
+    math.max(1L, math.min(math.min(tasks, numDocs), Int.MaxValue)).toInt
   }
 
   /** (documents, Σ nnz) of a corpus in one job. */
@@ -883,27 +919,30 @@ private[graft] object EmCore {
   /**
    * EM driver loop (reference: cc/mrlda/VariationalInference.java:181-394,
    * polylda/VariationalInference.java:330-580). A broadcast model's
-   * iteration is one narrow Spark job — the E-step and the per-partition
-   * M-step partials ([[reduce]]) — instead of one MR job + one merge job +
-   * JVM restarts. The corpus it starts from (fresh or resumed) is
-   * partitioned once by E-step work ([[partitionsFor]]), hashed by docId and
-   * docId-sorted within each partition, and every iteration's doc rows keep
-   * that layout, so the folds — and the model — do not depend on the host
-   * or on task timing.
+   * iteration is one Spark job — the E-step with the per-partition M-step
+   * partials, then their keyed merge ([[reduce]]) — instead of one MR job
+   * + one merge job + JVM restarts. The corpus it starts from (fresh or
+   * resumed) is partitioned once by E-step work ([[partitionsFor]]), hashed
+   * by docId and docId-sorted within each partition, and every iteration's
+   * doc rows keep that layout, so the folds — and the model — do not depend
+   * on the host or on task timing.
    *
    * Scale posture: below `betaBroadcastMaxEntries` beta is collected and
    * broadcast (the reference's DistributedCache path,
    * DocumentMapper.java:116); above it beta stays a distributed table
    * end-to-end and nothing model-sized moves through the driver. With
    * `checkpointDir` set, alpha/beta/gamma snapshot to parquet after every
-   * iteration (the reference's alpha-i/beta-i/gamma-i rotation) and gamma
-   * re-reads from parquet, re-partitioned the same way — reliable lineage
-   * truncation; without it, a `localCheckpoint` (fast, not fault-tolerant).
+   * iteration (the reference's alpha-i/beta-i/gamma-i rotation), and a
+   * resume re-reads gamma-<i> and partitions it the same way. Between
+   * iterations the corpus is the E-step's doc rows, cut from their lineage
+   * by a `localCheckpoint` (fast, not fault-tolerant: a lost executor's
+   * blocks fail the run, which then resumes from the last snapshot).
    * Alpha takes one Newton update per iteration. Convergence: |ΔLL/LL| ≤
    * `convergence` or `maxIterations` (Settings.java:56,43).
    *
-   * The caller's `docs` are read twice (the count, then the partitioning)
-   * and never cached or released here.
+   * The caller's `docs` are read by the count and by the partitioning; if
+   * the caller left them uncached, they are cached for those two reads and
+   * released after the first iteration.
    */
   def fit[D, R](docs: Dataset[D], model: Model[D, R], cfg: Settings): Fit = {
     val spark = docs.sparkSession
@@ -934,6 +973,13 @@ private[graft] object EmCore {
       startIter = i
     }
 
+    // an uncached source is held until the first iteration has read it
+    // into the partitioned corpus: the count and the exchange read it once
+    var releaseSource: () => Unit = () => ()
+    if (source.storageLevel == StorageLevel.NONE) {
+      val held = source.persist(StorageLevel.MEMORY_AND_DISK)
+      releaseSource = () => { held.unpersist(blocking = false); releaseSource = () => () }
+    }
     val (numDocs, nnz) = countTerms(source, shape)
     // with no document the alpha update divides by zero and training would
     // return NaN alpha and a flat zero likelihood
@@ -961,6 +1007,7 @@ private[graft] object EmCore {
 
       // M-step + likelihood + alpha sufficient statistics
       val step = beta.mstep(estep.toDF())
+      releaseSource()
       val ll = step.ll
       alpha =
         if (model.symmetricAlpha) {
@@ -984,23 +1031,15 @@ private[graft] object EmCore {
       // rotate gamma into the corpus for the next iteration's warm start:
       // the doc rows carry the full document, in the corpus's partitions
       // and order, so the next corpus is a projection of them — no
-      // per-iteration join. Skipped under randomStartGamma (the E-step
-      // would ignore the stored gamma; the reference gates the side-output
-      // the same way).
+      // per-iteration join or exchange, with or without `checkpointDir`
+      // (gamma-<i> holds the same values; only a resume re-reads it).
+      // Skipped under randomStartGamma (the E-step would ignore the stored
+      // gamma; the reference gates the side-output the same way).
       if (cfg.randomStartGamma) step.release()
       else {
         releaseCorpus()
-        cfg.checkpointDir match {
-          case Some(dir) =>
-            step.release()
-            val (next, release) =
-              byWork(gammaDocs(LdaCheckpoint.loadGamma(spark, dir, snapIdx)), shape, parts)
-            corpus = next
-            releaseCorpus = release
-          case None =>
-            corpus = gammaDocs(step.docs)
-            releaseCorpus = step.release
-        }
+        corpus = gammaDocs(step.docs)
+        releaseCorpus = step.release
       }
       alphaBc.destroy()
 
@@ -1014,6 +1053,7 @@ private[graft] object EmCore {
     // parquet instead)
     val betaMap = beta.finish()
     releaseCorpus()
+    releaseSource()
 
     Fit(alpha, betaMap, lastLL, iter, history.reverse)
   }

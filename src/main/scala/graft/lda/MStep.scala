@@ -36,8 +36,8 @@ object MStep {
   def run(phi: DataFrame, prior: Option[DataFrame] = None): DataFrame =
     EmCore.lambdaToBeta(phi, keys, Smoothing.eta(prior.map(Smoothing.seeds)))
 
-  /** The broadcast M-step's reduce ([[EmCore.reduce]]: one narrow job of
-    * per-partition partials, merged on the driver) as local rows: tag 0 =
+  /** The broadcast M-step's reduce ([[EmCore.reduce]]: one job of
+    * per-partition partials, merged by key in partition order) as local rows: tag 0 =
     * (termId, log λ per topic in v); tag 1 = (alpha stats in v, corpus LL
     * in ll). The reduce runs when this is called. */
   def fusedIterationRows(estep: DataFrame): DataFrame = {

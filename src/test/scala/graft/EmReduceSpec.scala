@@ -3,15 +3,17 @@ package graft
 import graft.functions.LogSumExp.logsumexp
 import graft.lda.{EStep, EmCore, MStep, VanillaDocs}
 import graft.model.Doc
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions.spark_partition_id
+import org.apache.spark.sql.graftshim.shim
 import org.apache.spark.storage.StorageLevel
 
 /**
- * A broadcast model's M-step reduce — one partial per partition, merged on
- * the driver in partition-index order — against the fold it replaced, kept
- * here as the reference: the E-step's K-array phi rows posexploded and
- * folded by a SQL `logsumexp` per (topic, termId), and the ll / alpha
- * statistics aggregate over the doc rows.
+ * A broadcast model's M-step reduce — one partial per partition, merged by
+ * key in partition-index order — against the fold it replaced, kept here
+ * as the reference: the E-step's K-array phi rows posexploded and folded
+ * by a SQL `logsumexp` per (topic, termId), and the ll / alpha statistics
+ * aggregate over the doc rows. Only the merged model reaches the driver.
  */
 class EmReduceSpec extends SparkSpec {
   import spark.implicits._
@@ -65,6 +67,36 @@ class EmReduceSpec extends SparkSpec {
       r.ss.zip(ssRef).zipWithIndex.foreach { case ((got, want), i) =>
         assert(math.abs(got - want) <= 1e-12 * math.abs(want), s"ss($i): $got vs $want")
       }
+    } finally estep.unpersist()
+  }
+
+  test("the driver receives the model, not one partial per partition") {
+    // 16 partitions whose documents draw from the same 2000 terms: each
+    // partition touches most of them, so partials collected per partition
+    // would carry about ten copies of the model
+    val vocab = 2000
+    val input = docs(0 until 320, 100, vocab, 3L).toDS().repartition(16)
+    val estep = EStep.run(input, spark.sparkContext.broadcast(Array.fill(k)(0.1)),
+      spark.sparkContext.broadcast(Map.empty: scala.collection.Map[Int, Array[Double]]), vocab,
+      localIterations = 2, seed = 5L).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      estep.count()
+      shim.drainListenerBus(spark, 10000)
+      val received = new java.util.concurrent.atomic.AtomicLong
+      val listener = new SparkListener {
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          Option(e.taskMetrics).foreach(m => received.addAndGet(m.resultSize))
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val r = try EmCore.reduce(estep.toDF(), VanillaDocs.keys) finally {
+        shim.drainListenerBus(spark, 10000)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      val modelBytes = r.lambda.length * 8L
+      val phiBytes = estep.toDF().filter(!$"isDoc").count() * k * 8L
+      assert(phiBytes > 8 * modelBytes, s"phi $phiBytes B is not several models ($modelBytes B)")
+      assert(received.get <= 2 * modelBytes,
+        s"task results ${received.get} B for a model of $modelBytes B (phi $phiBytes B)")
     } finally estep.unpersist()
   }
 
