@@ -1,7 +1,7 @@
 package graft.lda
 
 import graft.functions.GammaFuncs.logAdd
-import graft.lda.EmCore.{DocShape, Join, Keys, Lookup, Sweeps}
+import graft.lda.EmCore.{DocRecord, DocShape, Join, Keys, Lookup, PackedBeta, Sweeps}
 import graft.model.Doc
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
@@ -25,10 +25,8 @@ case class EStepRow(
     ll: Double,
     termId: Int,
     logphi: Array[Double],
-    /** doc rows carry the full document (counts + token total) so the next
-      * iteration's corpus is a projection of the E-step output — no
-      * corpus-sized rotation join per iteration, like the reference's
-      * gamma side-output, which emits the whole Document
+    /** doc rows carry the full document (counts + token total), like the
+      * reference's gamma side-output, which emits the whole Document
       * (DocumentMapper.java:341-346). Null on phi rows. */
     counts: Map[Int, Int] = null,
     numTokens: Long = 0L)
@@ -41,14 +39,14 @@ private[graft] object VanillaDocs extends DocShape[Doc, EStepRow](
   lazy val rowEncoder: Encoder[EStepRow] = Encoders.product[EStepRow]
   def langCountsColumns(docs: DataFrame): DataFrame =
     docs.select(col("docId"), lit(0).as("lang"), col("counts").as("langCounts"))
-  def langCounts(d: Doc): Iterable[(Int, Map[Int, Int])] = Seq(0 -> d.counts)
-  def docId(d: Doc): Long = d.docId
-  def tokens(d: Doc): Long = d.numTokens
-  def gamma(d: Doc): Option[Array[Double]] = d.gamma
-  def fromTerms(docId: Long, tokens: Long, terms: Seq[TermBeta]): Doc =
-    Doc(docId, terms.map(t => t.termId -> t.cnt).toMap, tokens)
-  def docRow(d: Doc, gamma: Array[Double], ll: Double): EStepRow =
-    EStepRow(isDoc = true, d.docId, gamma, ll, -1, null, d.counts, d.numTokens)
+  def record(d: Doc): DocRecord = {
+    val (keys, cnt) = EmCore.terms(Seq(0 -> d.counts))
+    DocRecord(d.docId, d.numTokens, keys, cnt, Array.emptyLongArray, d.gamma.orNull)
+  }
+  def document(r: DocRecord, gamma: Option[Array[Double]]): Doc =
+    Doc(r.docId, EmCore.counts(r, 0), r.tokens, gamma)
+  def docRow(r: DocRecord, gamma: Array[Double], ll: Double): EStepRow =
+    EStepRow(isDoc = true, r.docId, gamma, ll, -1, null, EmCore.counts(r, 0), r.tokens)
   def phiRow(key: Long, logphi: Array[Double]): EStepRow =
     EStepRow(isDoc = false, -1L, null, 0.0, EmCore.termOf(key), logphi)
 }
@@ -122,9 +120,12 @@ object EStep {
       localIterations: Int = 100,
       randomStartGamma: Boolean = false,
       learning: Boolean = true,
-      seed: Long = 42L): Dataset[EStepRow] =
-    EmCore.estep(docs, VanillaDocs, alphaBc, Lookup.terms(betaBc), _ => numTerms,
-      Sweeps(localIterations, randomStartGamma, learning, seed))
+      seed: Long = 42L): Dataset[EStepRow] = {
+    val beta = PackedBeta.of(betaBc.value.iterator.map { case (w, arr) => EmCore.key(0, w) -> arr },
+      alphaBc.value.length)
+    EmCore.estep(docs, VanillaDocs, alphaBc, Lookup(docs.sparkSession.sparkContext.broadcast(beta)),
+      _ => numTerms, Sweeps(localIterations, randomStartGamma, learning, seed))
+  }
 }
 
 /**

@@ -5,11 +5,13 @@ import graft.functions.{LogSumExpAgg, LseBuf}
 import graft.util.Ckpt._
 import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 /** One joined term of a document on the shuffle path (lang, termId) →
   * its count and E[log β] row (None for a term the model has not seen). */
@@ -26,17 +28,18 @@ private[graft] case class DocWithBeta(
  * is keyed by a packed (lang, termId) Long.
  *
  * The model-specific parts enter as values, never as branches:
- *  - [[DocShape]]: key columns, document/E-step row types and the gamma-<i>
- *    snapshot columns;
+ *  - [[DocShape]]: key columns, document/E-step row types, the document as
+ *    a primitive [[DocRecord]] and back, and the gamma-<i> snapshot columns;
  *  - [[Smoothing]]: eta (vanilla, informed prior) or the -700 floor
  *    (polylingual);
  *  - [[Model]]: the alpha init, symmetric-alpha update and vocabulary sizes.
  *
  * Broadcast vs shuffle is the [[BetaPath]] that [[fit]] picks once: a
- * broadcast map lookup, or the corpus exploded and joined with a
- * distributed beta table ([[BetaSupply]]), feeding the one `mapPartitions`
- * kernel ([[estep]]); and one per-topic M-step tail ([[normalizeTopic]]),
- * run on the driver ([[betaOf]]) or in a keyed reducer ([[topicTail]]).
+ * broadcast [[PackedBeta]] resolved once per partition against the
+ * corpus's primitive [[DocBlock]]s, or the corpus exploded and joined with
+ * a distributed beta table ([[BetaSupply]]), feeding the one kernel; and
+ * one per-topic M-step tail ([[normalizeTopic]]), run on the driver
+ * ([[betaOf]]) or in a keyed reducer ([[topicTail]]).
  */
 private[graft] object EmCore {
 
@@ -44,10 +47,13 @@ private[graft] object EmCore {
   def langOf(key: Long): Int = (key >>> 32).toInt
   def termOf(key: Long): Int = key.toInt
 
-  /** Partition combiner flush threshold in (topic, term) entries: the
-    * reference flushes its in-mapper combiner under memory pressure
+  /** Flush threshold in (topic, term) entries of the streamed kernel's
+    * partition combiner ([[Kernel.run]], the table path): the reference
+    * flushes its in-mapper combiner under memory pressure
     * (DocumentMapper.java:263-313, Settings.java:76); the downstream fold
-    * re-combines flush chunks. */
+    * re-combines flush chunks. A [[DocBlock]]'s combiner holds K values per
+    * distinct key of the partition, no more than the broadcast model, and
+    * never flushes. */
   private val PhiFlushEntries = 1 << 20
 
   /** Shifted exponent below which the E-step's linear sweep takes
@@ -99,14 +105,13 @@ private[graft] object EmCore {
     def rowEncoder: Encoder[R]
     /** (docId, lang, langCounts) rows: the per-language count maps */
     def langCountsColumns(docs: DataFrame): DataFrame
-    /** per-language count maps, languages ascending — the sweep order */
-    def langCounts(d: D): Iterable[(Int, Map[Int, Int])]
-    def docId(d: D): Long
-    def tokens(d: D): Long
-    def gamma(d: D): Option[Array[Double]]
-    /** the document rebuilt from its joined terms (shuffle path) */
-    def fromTerms(docId: Long, tokens: Long, terms: Seq[TermBeta]): D
-    def docRow(d: D, gamma: Array[Double], ll: Double): R
+    /** the document as primitive arrays, its terms in sweep order
+      * ([[terms]]) */
+    def record(d: D): DocRecord
+    /** the document `r` was made from, carrying `gamma` */
+    def document(r: DocRecord, gamma: Option[Array[Double]]): D
+    /** an E-step doc row of the document `r` holds */
+    def docRow(r: DocRecord, gamma: Array[Double], ll: Double): R
     def phiRow(key: Long, logphi: Array[Double]): R
   }
 
@@ -152,43 +157,112 @@ private[graft] object EmCore {
       anchorGammaDp: Int = 0,
       anchorPhiDp: Int = 0)
 
+  /** Per-language count maps, languages ascending and each map in its
+    * iteration order (the sweep order) → packed keys and counts. */
+  def terms(langCounts: Iterable[(Int, Map[Int, Int])]): (Array[Long], Array[Int]) =
+    langCounts.iterator.flatMap { case (l, m) => m.iterator.map { case (t, c) => (key(l, t), c) } }.toArray.unzip
+
+  /** One language's count map of a record, built in sweep order (so it
+    * iterates like the map the record was made from). */
+  def counts(r: DocRecord, lang: Int): Map[Int, Int] =
+    r.keys.indices.iterator.filter(j => langOf(r.keys(j)) == lang)
+      .map(j => termOf(r.keys(j)) -> r.cnt(j)).toMap
+
+  /** A broadcast model's E[log β]: the packed keys ascending and K values
+    * per key (`values(i·K + t)` ↔ key i, topic t+1). Primitive arrays, so
+    * the broadcast carries n·(8 + 8K) bytes and a lookup is a binary
+    * search. */
+  final case class PackedBeta(keys: Array[Long], values: Array[Double], k: Int) {
+    def indexOf(key: Long): Int = java.util.Arrays.binarySearch(keys, key)
+    def row(i: Int): Array[Double] = java.util.Arrays.copyOfRange(values, i * k, (i + 1) * k)
+    def apply(key: Long): Array[Double] = row(indexOf(key))
+    def iterator: Iterator[(Long, Array[Double])] = keys.indices.iterator.map(i => keys(i) -> row(i))
+  }
+  object PackedBeta {
+    /** (key, K-array) entries with distinct keys, in any order */
+    def of(entries: Iterator[(Long, Array[Double])], k: Int): PackedBeta = {
+      val (keys, rows) = entries.toArray.unzip
+      val sorted = keys.sorted
+      val values = new Array[Double](keys.length * k)
+      for (i <- keys.indices) System.arraycopy(rows(i), 0, values, java.util.Arrays.binarySearch(sorted, keys(i)) * k, k)
+      PackedBeta(sorted, values, k)
+    }
+  }
+
   /** Where each task gets its terms' E[log β] rows. */
   sealed trait BetaSupply
-  /** A broadcast model: `get(key)` is the row, null for an unseen term. */
-  final case class Lookup(get: Long => Array[Double]) extends BetaSupply
-  object Lookup {
-    def packed(bc: Broadcast[scala.collection.Map[Long, Array[Double]]]): Lookup =
-      Lookup(w => bc.value.getOrElse(w, null))
-    /** a vanilla termId map: every term is lang 0 */
-    def terms(bc: Broadcast[scala.collection.Map[Int, Array[Double]]]): Lookup =
-      Lookup(w => bc.value.getOrElse(termOf(w), null))
-  }
+  /** A broadcast model; a term it lacks takes the seeded random init. */
+  final case class Lookup(beta: Broadcast[PackedBeta]) extends BetaSupply
   /** Beta stays a distributed (key columns…, elogbeta ARRAY<DOUBLE>[K])
     * table, joined to the exploded corpus (`exploded`, or [[explodeDocs]]
     * of the docs when None) — the scale path for models too large to
     * broadcast: each task holds only the rows its documents reference. */
-  final case class Join(table: DataFrame, exploded: Option[DataFrame])
-      extends BetaSupply
+  final case class Join(table: DataFrame, exploded: Option[DataFrame]) extends BetaSupply
 
-  /** A document flattened for the fixed point, in sweep order. */
+  /** One document as primitive arrays: its packed keys and counts in sweep
+    * order, its token total, the model's own fields the core does not read
+    * (`meta`, [[DocShape.record]]'s encoding) and its gamma (null: none). */
+  private[graft] final case class DocRecord(docId: Long, tokens: Long, keys: Array[Long],
+      cnt: Array[Int], meta: Array[Long], gamma: Array[Double])
+
+  /**
+   * One corpus partition's documents as primitive arrays, in record order,
+   * the layout the E-step keeps resident between passes (MLlib's
+   * `OnlineLDAOptimizer`; Smola & Narayanamurthy, VLDB 2010). Document d's
+   * terms are entries `offsets(d) until offsets(d + 1)` of `cnt` and `slot`;
+   * `slot` indexes the partition's distinct keys, ascending, so a model
+   * row is resolved once per partition, not once per (document, term).
+   * `gamma` is the block's first gamma state, K per document: a record's
+   * own gamma, or the kernel's initial one, α_k + tokens / K.
+   */
+  private[graft] final class DocBlock(val docIds: Array[Long], val tokens: Array[Long],
+      val offsets: Array[Int], val cnt: Array[Int], val distinct: Array[Long], val slot: Array[Int],
+      val metaOffsets: Array[Int], val meta: Array[Long], val gamma: Array[Double]) extends Serializable {
+    def size: Int = docIds.length
+
+    /** Document d's gamma in a block's gamma state `g` (K per document). */
+    def gammaOf(g: Array[Double], d: Int): Array[Double] = { val k = g.length / size; g.slice(d * k, (d + 1) * k) }
+
+    def record(d: Int): DocRecord = DocRecord(docIds(d), tokens(d),
+      slot.slice(offsets(d), offsets(d + 1)).map(distinct),
+      cnt.slice(offsets(d), offsets(d + 1)), meta.slice(metaOffsets(d), metaOffsets(d + 1)), null)
+  }
+
+  private[graft] object DocBlock {
+    def apply(records: Iterator[DocRecord], alpha: Array[Double]): DocBlock = {
+      val (rs, k) = (records.toArray, alpha.length)
+      val keys = rs.flatMap(_.keys)
+      val distinct = keys.distinct.sorted
+      val gamma = rs.flatMap(r =>
+        if (r.gamma != null && r.gamma.length == k) r.gamma else alpha.map(_ + r.tokens.toDouble / k))
+      new DocBlock(rs.map(_.docId), rs.map(_.tokens), rs.scanLeft(0)(_ + _.keys.length),
+        rs.flatMap(_.cnt), distinct, keys.map(java.util.Arrays.binarySearch(distinct, _)),
+        rs.scanLeft(0)(_ + _.meta.length), rs.flatMap(_.meta), gamma)
+    }
+  }
+
+  /** A partition's distinct keys resolved against β for one E-step, once
+    * per key rather than once per (document, term): each key's E[log β]
+    * row (the model's, or the seeded random init of a term it has not
+    * seen), the row's maximum and its shifted exp row (K per key); and,
+    * when learning, the partition's log φ combiner (K per key, −∞ until a
+    * document adds to it). */
+  private[graft] final class Resolved(val rows: Array[Array[Double]], val max: Array[Double],
+      val exp: Array[Double], val phi: Array[Double])
+
+  /** A document flattened for the fixed point, in sweep order: its keys,
+    * counts and E[log β] rows (null for a term the model has not seen). A
+    * [[DocBlock]]'s document instead names each term by its `slot` in the
+    * partition's [[Resolved]] `table`, and has no keys. */
   private[graft] final class Flat(
       val keys: Array[Long], val cnt: Array[Int], val elogbeta: Array[Array[Double]],
-      val tokens: Long, val gamma: Option[Array[Double]])
+      val tokens: Long, val gamma: Option[Array[Double]],
+      val slot: Array[Int] = null, val table: Resolved = null)
 
-  private def flatten(langCounts: Iterable[(Int, Map[Int, Int])], get: Long => Array[Double],
-      tokens: Long, gamma: Option[Array[Double]]): Flat = {
-    val nnz = langCounts.iterator.map(_._2.size).sum
-    val keys = new Array[Long](nnz)
-    val cnt = new Array[Int](nnz)
-    val lb = new Array[Array[Double]](nnz)
-    var j = 0
-    langCounts.foreach { case (lang, counts) =>
-      counts.foreach { case (t, c) =>
-        keys(j) = key(lang, t); cnt(j) = c; lb(j) = get(keys(j)); j += 1
-      }
-    }
-    new Flat(keys, cnt, lb, tokens, gamma)
-  }
+  /** One [[DocBlock]]'s E-step: the new gammas and each document's LL, in
+    * block order, and — when learning — the log φ of each distinct key (K
+    * per key, in `distinct` order). */
+  private[graft] final class BlockFit(val gamma: Array[Double], val ll: Array[Double], val logphi: Array[Double])
 
   /**
    * The per-partition E-step (reference semantics:
@@ -213,35 +287,42 @@ private[graft] object EmCore {
       if (dp > 0) BigDecimal(v).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble else v
 
     /** Random init for a term absent from the model, cached per partition. */
-    private def fallback(key: Long): Array[Double] = {
-      var v = unseen.get(key)
-      if (v == null) {
-        val lang = langOf(key)
-        v = EStep.randomElogBeta(k, termOf(key), vocab(lang), seed ^ (lang.toLong << 17))
-        unseen.put(key, v)
-      }
-      v
-    }
+    private def fallback(key: Long): Array[Double] = unseen.computeIfAbsent(key, w =>
+      EStep.randomElogBeta(k, termOf(w), vocab(langOf(w)), seed ^ (langOf(w).toLong << 17)))
 
     private def drain(): Vector[R] = {
-      val b = Vector.newBuilder[R]
-      phiAcc.forEach((key, arr) => b += phiRow(key, arr))
+      val rows = phiAcc.asScala.iterator.map { case (key, arr) => phiRow(key, arr) }.toVector
       phiAcc.clear()
-      b.result()
+      rows
     }
 
-    /** Doc rows in input order, each partition's phi rows after them. */
-    def run[D](docs: Iterator[(D, Flat)], docRow: (D, Array[Double], Double) => R): Iterator[R] = {
-      val docRows = docs.flatMap { case (d, f) =>
+    /** Doc rows in input order, each partition's phi rows after them (`++`
+      * drains the combiner once the documents are done). */
+    def run[D](docs: Iterator[(D, Flat)], docRow: (D, Array[Double], Double) => R): Iterator[R] =
+      docs.flatMap { case (d, f) =>
         val row = fitDoc(f, docRow(d, _, _))
         if (phiAcc.size.toLong * k > PhiFlushEntries) row +: drain() else Vector(row)
+      } ++ drain()
+
+    private def resolve(keys: Array[Long], beta: PackedBeta): Resolved = {
+      val rows = keys.map { w => val i = beta.indexOf(w); if (i < 0) fallback(w) else beta.row(i) }
+      val exp = new Array[Double](keys.length * k)
+      new Resolved(rows, Array.tabulate(keys.length)(s => shiftRow(rows(s), exp, s * k)), exp,
+        if (learning) Array.fill(keys.length * k)(Double.NegativeInfinity) else null)
+    }
+
+    /** The E-step over one block against `beta`, gamma warm-started from
+      * the block's gamma state `gamma` ([[DocBlock.gammaOf]]). */
+    def fitBlock(b: DocBlock, gamma: Array[Double], beta: PackedBeta): BlockFit = {
+      val table = resolve(b.distinct, beta)
+      val gammas = new Array[Double](b.size * k)
+      val ll = Array.tabulate(b.size) { d =>
+        val slot = b.slot.slice(b.offsets(d), b.offsets(d + 1))
+        fitDoc(new Flat(null, b.cnt.slice(b.offsets(d), b.offsets(d + 1)), slot.map(table.rows),
+          b.tokens(d), Some(b.gammaOf(gamma, d)), slot, table),
+          (g, l) => { System.arraycopy(g, 0, gammas, d * k, k); l })
       }
-      val phiRows = new Iterator[R] {
-        private lazy val inner = drain().iterator
-        def hasNext: Boolean = inner.hasNext
-        def next(): R = inner.next()
-      }
-      docRows ++ phiRows
+      new BlockFit(gammas, ll, table.phi)
     }
 
     /** Writes exp(b_k − max b) ([[shiftedExp]]) for one term's E[log β]
@@ -275,10 +356,12 @@ private[graft] object EmCore {
      *
      * The sweep and the row shift are methods of their own, called many
      * times per document, so the JIT compiles them early: as loops inside a
-     * once-per-document method they ran two to four times slower.
+     * once-per-document method they ran two to four times slower. A block's
+     * document copies its shifted rows from the partition's [[Resolved]]
+     * table, which holds the same values.
      */
     private final class DocFit(f: Flat) {
-      private val nnz = f.keys.length
+      private val nnz = f.cnt.length
       private val cnt = f.cnt
       private val lb = f.elogbeta
       // sweep-invariant, resolved once: each term's E[log β] row, its
@@ -289,8 +372,13 @@ private[graft] object EmCore {
       locally {
         var j = 0
         while (j < nnz) {
-          if (lb(j) == null) lb(j) = fallback(f.keys(j))
-          rowMax(j) = shiftRow(lb(j), expBeta, j * k)
+          if (f.table != null) {
+            rowMax(j) = f.table.max(f.slot(j))
+            System.arraycopy(f.table.exp, f.slot(j) * k, expBeta, j * k, k)
+          } else {
+            if (lb(j) == null) lb(j) = fallback(f.keys(j))
+            rowMax(j) = shiftRow(lb(j), expBeta, j * k)
+          }
           logCnt(j) = math.log(cnt(j).toDouble)
           j += 1
         }
@@ -347,8 +435,8 @@ private[graft] object EmCore {
 
       /** The final sweep's log φ (scaled by ln count): returns the likelihood
         * term c·Σ_k φ_k·(E[log β_k] − log φ_k) and, when learning, folds log φ
-        * into the partition combiner — first touch writes the value, later
-        * documents logAdd in document order. */
+        * into the partition combiner in document order: it starts at −∞,
+        * and logAdd(−∞, x) = x, so the first document writes its value. */
       def finish(): Double = {
         var likelihoodPhi = 0.0
         var w = 0
@@ -370,12 +458,11 @@ private[graft] object EmCore {
           if (learning) {
             i = 0
             while (i < k) { scratch(i) = anchor(scratch(i), anchorPhiDp); i += 1 }
-            val sums = phiAcc.get(f.keys(w))
-            if (sums == null) phiAcc.put(f.keys(w), scratch.clone())
-            else {
-              i = 0
-              while (i < k) { sums(i) = logAdd(sums(i), scratch(i)); i += 1 }
-            }
+            val sums = if (f.table != null) f.table.phi
+              else phiAcc.computeIfAbsent(f.keys(w), _ => Array.fill(k)(Double.NegativeInfinity))
+            val base = if (f.table != null) f.slot(w) * k else 0
+            i = 0
+            while (i < k) { sums(base + i) = logAdd(sums(base + i), scratch(i)); i += 1 }
           }
           w += 1
         }
@@ -383,7 +470,7 @@ private[graft] object EmCore {
       }
     }
 
-    private def fitDoc(f: Flat, row: (Array[Double], Double) => R): R = {
+    private def fitDoc[T](f: Flat, row: (Array[Double], Double) => T): T = {
       val doc = new DocFit(f)
       // fixed-sweep gamma/phi fixed point; do-while semantics replicate the
       // reference's iteration count exactly (DocumentMapper.java:204-242)
@@ -429,11 +516,15 @@ private[graft] object EmCore {
     val phiRow = shape.phiRow _
     val docRow = shape.docRow _
     beta match {
-      case Lookup(get) =>
+      case Lookup(bc) =>
         docs.mapPartitions { it =>
-          new Kernel(alphaBc.value, sweeps, vocab, phiRow).run(
-            it.map(d => (d, flatten(shape.langCounts(d), get, shape.tokens(d), shape.gamma(d)))),
-            docRow)
+          val alpha = alphaBc.value
+          val k = alpha.length
+          val b = DocBlock(it.map(shape.record), alpha)
+          val fit = new Kernel(alpha, sweeps, vocab, phiRow).fitBlock(b, b.gamma, bc.value)
+          Iterator.tabulate(b.size)(d => docRow(b.record(d), b.gammaOf(fit.gamma, d), fit.ll(d))) ++
+            Option(fit.logphi).iterator.flatMap(lp =>
+              b.distinct.indices.iterator.map(s => phiRow(b.distinct(s), lp.slice(s * k, (s + 1) * k))))
         }(shape.rowEncoder)
       case Join(table, exploded) =>
         val spark = docs.sparkSession
@@ -465,9 +556,9 @@ private[graft] object EmCore {
               // the log-space folds are not FP-associative
               val terms = g.terms.filter(t => t.lang >= 0 && t.termId >= 0)
                 .sortBy(t => key(t.lang, t.termId))
-              val flat = new Flat(terms.map(t => key(t.lang, t.termId)).toArray,
-                terms.map(_.cnt).toArray, terms.map(_.elogbeta.orNull).toArray, g.tokens, g.gamma)
-              (shape.fromTerms(g.docId, g.tokens, terms), flat)
+              val (keys, cnt) = (terms.map(t => key(t.lang, t.termId)).toArray, terms.map(_.cnt).toArray)
+              (DocRecord(g.docId, g.tokens, keys, cnt, Array.emptyLongArray, null),
+                new Flat(keys, cnt, terms.map(_.elogbeta.orNull).toArray, g.tokens, g.gamma))
             },
             docRow)
         }(shape.rowEncoder)
@@ -578,14 +669,13 @@ private[graft] object EmCore {
       keys.term.map(StructField(_, IntegerType, nullable = false)) :+
         StructField("elogbeta", ArrayType(DoubleType), nullable = true)))
 
-  /** A packed (key columns…, elogbeta[K]) table → packed key → topic array,
-    * on the driver. */
-  private def collectPacked(table: DataFrame, keys: Keys)
-      : scala.collection.Map[Long, Array[Double]] = {
+  /** A packed (key columns…, elogbeta[K]) table as a [[PackedBeta]], on
+    * the driver. */
+  private def collectPacked(table: DataFrame, keys: Keys, k: Int): PackedBeta = {
     val spark = table.sparkSession
     import spark.implicits._
-    table.select(keys.lang, col("termId"), col("elogbeta")).as[(Int, Int, Array[Double])]
-      .collect().map { case (l, w, arr) => key(l, w) -> arr }.toMap
+    PackedBeta.of(table.select(keys.lang, col("termId"), col("elogbeta")).as[(Int, Int, Array[Double])]
+      .collect().iterator.map { case (l, w, arr) => key(l, w) -> arr }, k)
   }
 
   /**
@@ -611,10 +701,6 @@ private[graft] object EmCore {
       for (i <- 0 until k) lse.reduce(b(i), xs(from + i))
     }
 
-    /** Each key with its finished log λ, in no particular order. */
-    def entries(): Iterator[(Long, Array[Double])] =
-      bufs.entrySet.iterator.asScala.map(e => (e.getKey: Long) -> e.getValue.map(lse.finish))
-
     /** The keys, sorted as primitive Longs — (lang, termId) order — and
       * their finished log λ, K per key in that order. */
     def result(): (Array[Long], Array[Double]) = {
@@ -628,64 +714,53 @@ private[graft] object EmCore {
     * (K = `ss.length`) and log λ for each key, keys ascending. */
   final case class Reduced(ll: Double, ss: Array[Double], keys: Array[Long], lambda: Array[Double])
 
-  /** [[reduce]]'s key of the merged (Σ ll, ss): no packed (lang, termId)
-    * key is negative. */
-  private val StatsKey = -1L
+  /** One partition's M-step partial: log φ of its keys (ascending, K per
+    * key) and its Σ ll followed by ss_k = Σ_d ψ(γ_dk) − ψ(Σ_k γ_dk). */
+  private[graft] final case class Partial(keys: Array[Long], logphi: Array[Double], stats: Array[Double])
 
-  /** One map partition's share of [[reduce]] bound for one reducer: the
+  /** Adds one document's LL and alpha statistics to a partial's `stats`. */
+  private def addStats(stats: Array[Double], g: Array[Double], ll: Double): Unit = {
+    stats(0) += ll
+    val dgSum = dg(g.sum)
+    for (i <- g.indices) stats(i + 1) += dg(g(i)) - dgSum
+  }
+
+  /** One map partition's share of [[merge]] bound for one reducer: the
     * partition's index, its keys that hash to that reducer with their log
     * φ (K per key, `logphi(j·K + i)` ↔ key j), and — on reducer 0 only —
     * its Σ ll followed by ss. */
   private final case class Block(part: Int, keys: Array[Long], logphi: Array[Double], stats: Array[Double])
 
   /**
-   * A broadcast model's M-step reduce over E-step rows, the reference's
-   * in-mapper combiner and its reducer (DocumentMapper.java:177, 263-339):
-   * one job of two stages, which collects only the model.
+   * The reducer half of a broadcast model's M-step, the reference's
+   * reducer behind its in-mapper combiner (DocumentMapper.java:177,
+   * 263-339): one job of two stages over one [[Partial]] per partition,
+   * which collects only the model.
    *
-   * Each partition folds its rows into one partial: log φ per packed key
-   * ([[LseFold]], `logphi(j·K + i)` ↔ key j, topic i+1), Σ ll and ss_k =
-   * Σ_d ψ(γ_dk) − ψ(Σ_k γ_dk). It ships the partial as one [[Block]] per
-   * reducer, its keys hashed to reducers. A reducer folds its blocks in
-   * partition-index order — λ with [[LseFold]], the statistics summed —
-   * so the result never depends on which task finished first or on the
-   * shuffle's fetch order (Spark's combiners, `RDD.reduce` and
-   * `treeAggregate` merge in arrival order), nor on the number of reducers.
+   * Each partition ships its partial as one [[Block]] per reducer, its
+   * keys hashed to reducers. A reducer folds its blocks in partition-index
+   * order — λ with [[LseFold]], the statistics summed — so the result never
+   * depends on which task finished first or on the shuffle's fetch order
+   * (Spark's combiners, `RDD.reduce` and `treeAggregate` merge in arrival
+   * order), nor on the number of reducers. The driver merges the reducers'
+   * primitive key runs.
    */
-  def reduce(estep: DataFrame, keys: Keys): Reduced = {
-    val at = estep.schema.fieldIndex _
-    val (isDoc, gamma, docLl, termId, logphi) =
-      (at("isDoc"), at("gamma"), at("ll"), at("termId"), at("logphi"))
-    val lang = keys.langCols.headOption.map(at)
-    val input = estep.queryExecution.toRdd
+  private def merge(partials: RDD[Partial]): Reduced = {
     val reducers = new HashPartitioner(
-      math.max(1, math.min(input.getNumPartitions, estep.sparkSession.sparkContext.defaultParallelism)))
-    val blocks = input.mapPartitionsWithIndex { (part, rows) =>
-      var fold: LseFold = null
-      var stats = Array.empty[Double] // Σ ll, then ss
-      rows.foreach { row =>
-        if (row.getBoolean(isDoc)) {
-          val g = row.getArray(gamma).toDoubleArray()
-          if (stats.isEmpty) stats = new Array[Double](g.length + 1)
-          stats(0) += row.getDouble(docLl)
-          val dgSum = dg(g.sum)
-          for (i <- g.indices) stats(i + 1) += dg(g(i)) - dgSum
-        } else {
-          val lp = row.getArray(logphi).toDoubleArray()
-          if (fold == null) fold = new LseFold(lp.length)
-          fold.addRow(key(lang.fold(0)(row.getInt), row.getInt(termId)), lp, 0)
+      math.max(1, math.min(partials.getNumPartitions, partials.sparkContext.defaultParallelism)))
+    val n = reducers.numPartitions
+    val merged = partials.mapPartitionsWithIndex { (part, ps) =>
+      ps.flatMap { p =>
+        val k = if (p.keys.isEmpty) 0 else p.logphi.length / p.keys.length
+        val (ks, lps) = (Array.fill(n)(Array.newBuilder[Long]), Array.fill(n)(Array.newBuilder[Double]))
+        for (j <- p.keys.indices) {
+          val r = reducers.getPartition(p.keys(j))
+          ks(r) += p.keys(j)
+          lps(r).addAll(p.logphi, j * k, k)
         }
+        Iterator.tabulate(n)(r => r -> Block(part, ks(r).result(), lps(r).result(), if (r == 0) p.stats else Array.empty))
       }
-      val n = reducers.numPartitions
-      val (ks, lps) = (Array.fill(n)(Array.newBuilder[Long]), Array.fill(n)(Array.newBuilder[Double]))
-      if (fold != null) fold.entries().foreach { case (w, v) =>
-        val r = reducers.getPartition(w)
-        ks(r) += w
-        lps(r) ++= v
-      }
-      Iterator.tabulate(n)(r => r -> Block(part, ks(r).result(), lps(r).result(), if (r == 0) stats else Array.empty))
-    }
-    val merged = blocks.partitionBy(reducers).mapPartitions { it =>
+    }.partitionBy(reducers).mapPartitions { it =>
       var fold: LseFold = null
       var stats = Array.empty[Double]
       it.map(_._2).toArray.sortBy(_.part).foreach { b =>
@@ -699,22 +774,49 @@ private[graft] object EmCore {
           for (i <- stats.indices) stats(i) += b.stats(i)
         }
       }
-      Option(fold).iterator.flatMap(_.entries()) ++ Option.when(stats.nonEmpty)(StatsKey -> stats)
+      val (ks, lambda) = Option(fold).fold((Array.emptyLongArray, Array.emptyDoubleArray))(_.result())
+      Iterator((ks, lambda, stats))
     }.collect()
-    val stats = merged.find(_._1 == StatsKey).fold(Array(0.0))(_._2)
-    val byKey = new java.util.HashMap[Long, Array[Double]](merged.length * 2)
-    merged.foreach { case (w, v) => if (w != StatsKey) byKey.put(w, v) }
-    val ks = byKey.keySet.asScala.toArray
-    java.util.Arrays.sort(ks)
-    Reduced(stats(0), stats.tail, ks, ks.flatMap(byKey.get))
+    val stats = merged.map(_._3).find(_.nonEmpty).getOrElse(Array(0.0))
+    val k = stats.length - 1
+    val lambda = PackedBeta.of(merged.iterator.flatMap { case (ks, lps, _) =>
+      ks.indices.iterator.map(j => ks(j) -> lps.slice(j * k, (j + 1) * k)) }, k)
+    Reduced(stats(0), stats.tail, lambda.keys, lambda.values)
+  }
+
+  /** A broadcast model's M-step reduce over E-step rows: each partition's
+    * rows fold into one [[Partial]] (a key the kernel flushed
+    * mid-partition arrives in several rows), then [[merge]]. */
+  def reduce(estep: DataFrame, keys: Keys): Reduced = {
+    val at = estep.schema.fieldIndex _
+    val (isDoc, gamma, docLl, termId, logphi) =
+      (at("isDoc"), at("gamma"), at("ll"), at("termId"), at("logphi"))
+    val lang = keys.langCols.headOption.map(at)
+    merge(estep.queryExecution.toRdd.mapPartitions { rows =>
+      var fold: LseFold = null
+      var stats = Array.empty[Double] // Σ ll, then ss
+      rows.foreach { row =>
+        if (row.getBoolean(isDoc)) {
+          val g = row.getArray(gamma).toDoubleArray()
+          if (stats.isEmpty) stats = new Array[Double](g.length + 1)
+          addStats(stats, g, row.getDouble(docLl))
+        } else {
+          val lp = row.getArray(logphi).toDoubleArray()
+          if (fold == null) fold = new LseFold(lp.length)
+          fold.addRow(key(lang.fold(0)(row.getInt), row.getInt(termId)), lp, 0)
+        }
+      }
+      val (ks, lps) = Option(fold).fold((Array.emptyLongArray, Array.emptyDoubleArray))(_.result())
+      Iterator(Partial(ks, lps, stats))
+    })
   }
 
   /** Smoothing and [[normalizeTopic]] over a broadcast model's λ (`keys`
-    * ascending, K values each), one (lang, topic) at a time → the packed
-    * key → topic-array map the next E-step looks up. */
+    * ascending, K values each), one (lang, topic) at a time → the model
+    * the next E-step looks up. */
   private[graft] def betaOf(keys: Array[Long], lambda: Array[Double], k: Int,
-      smoothing: Smoothing): scala.collection.Map[Long, Array[Double]] = {
-    val beta = Array.fill(keys.length)(new Array[Double](k))
+      smoothing: Smoothing): PackedBeta = {
+    val beta = new Array[Double](keys.length * k)
     var a = 0
     while (a < keys.length) {
       val lang = langOf(keys(a))
@@ -724,11 +826,11 @@ private[graft] object EmCore {
       for (t <- 0 until k) {
         for (j <- v.indices) v(j) = smoothing(t + 1, termOf(keys(a + j)), lambda((a + j) * k + t))
         normalizeTopic(v)
-        for (j <- v.indices) beta(a + j)(t) = v(j)
+        for (j <- v.indices) beta((a + j) * k + t) = v(j)
       }
       a = b
     }
-    keys.iterator.zip(beta.iterator).toMap
+    PackedBeta(keys, beta, k)
   }
 
   /** The broadcast M-step's tail over (lang, topic, termId, log λ) rows:
@@ -739,110 +841,125 @@ private[graft] object EmCore {
     val fold = new LseFold(numTopics)
     lambda.foreach { case (lang, topic, w, v) => fold.add(key(lang, w), topic - 1, v) }
     val (keys, values) = fold.result()
-    betaOf(keys, values, numTopics, smoothing)
+    betaOf(keys, values, numTopics, smoothing).iterator.toMap
   }
 
   /** One iteration's M-step outcome: corpus LL, alpha statistics, and the
-    * E-step's doc rows, readable until `release`. */
-  private final case class Step(ll: Double, ss: Array[Double], docs: DataFrame, release: () => Unit)
+    * blocks' next gamma state, readable until `release`. */
+  private final case class Step(ll: Double, ss: Array[Double], gammas: RDD[Array[Double]], release: () => Unit)
 
   /**
    * A model's beta between EM iterations, held in the form its path looks
    * it up in, together with everything that depends on that form: the
-   * E-step's supply, the M-step, the snapshot rows, the resume load (the
-   * constructor's checkpointed rows), the final map and the release.
+   * iteration's E-step and M-step, the snapshot rows, the resume load (the
+   * constructor's checkpointed rows), the final model and the release.
    * [[fit]] picks the path once; its loop never branches on it.
    */
   private sealed trait BetaPath {
-    /** the E-step's supply for the coming iteration; releases what the
-      * finished iteration's supply held */
-    def supply(): BetaSupply
-    /** the M-step over one E-step's rows, replacing beta with the next one */
-    def mstep(estep: DataFrame): Step
+    /** One EM iteration over the corpus blocks, gamma warm-started from
+      * their gamma state `gammas`; replaces beta with the next one. */
+    def step(blocks: RDD[DocBlock], gammas: RDD[Array[Double]], alpha: Array[Double], sweeps: Sweeps): Step
     /** (lang…, topic, termId, elogbeta) rows: the beta-<i> snapshot */
     def rows: DataFrame
-    /** the final packed key → topic-array map; releases the path */
-    def finish(): scala.collection.Map[Long, Array[Double]]
+    /** the final model; releases the path */
+    def finish(): PackedBeta
   }
 
-  /** Beta collected and broadcast (the reference's DistributedCache path,
-    * DocumentMapper.java:116). The iteration is one job: the E-step rows
-    * are checkpointed lazily and [[reduce]]'s first stage materializes them
-    * while it folds them, so the doc rows the next corpus reads cost no job
-    * of their own; the tail runs on the driver. */
-  private final class BroadcastBeta(spark: SparkSession, keys: Keys, k: Int,
-      smoothing: Smoothing, resumed: Option[DataFrame]) extends BetaPath {
-    private var beta = resumed.map(rows => collectPacked(packBeta(rows, keys), keys))
-      .getOrElse(Map.empty[Long, Array[Double]])
-    // kept so the (model-sized) broadcast is destroyed once its iteration
-    // is done — otherwise broadcast memory grows linearly with iterations
-    // on the driver and every executor
-    private var bc: Option[Broadcast[scala.collection.Map[Long, Array[Double]]]] = None
+  /** Beta collected and broadcast as a [[PackedBeta]] (the reference's
+    * DistributedCache path, DocumentMapper.java:116). The iteration is one
+    * job: each block's E-step emits its new gamma state and its [[Partial]],
+    * checkpointed lazily ([[graft.util.Ckpt.RddCkptOps.ckptLazy]]), and
+    * [[merge]]'s first stage materializes them while it ships the partials,
+    * so the gammas the next iteration reads cost no job of their own; the
+    * tail runs on the driver. */
+  private final class BroadcastBeta[D, R](spark: SparkSession, model: Model[D, R], k: Int,
+      resumed: Option[DataFrame]) extends BetaPath {
+    private val keys = model.shape.keys
+    private var beta = resumed.fold(PackedBeta(Array.emptyLongArray, Array.emptyDoubleArray, k))(
+      rows => collectPacked(packBeta(rows, keys), keys, k))
 
-    // destroy() is non-blocking in Spark 4, so this adds no latency
-    private def release(): Unit = bc.foreach(_.destroy())
-    def supply(): BetaSupply = {
-      release()
-      val b = spark.sparkContext.broadcast(beta)
-      bc = Some(b)
-      Lookup.packed(b)
-    }
-    def mstep(estep: DataFrame): Step = {
-      // lazy is safe here: the reduce's first stage is the only reader
-      // until it has materialized the checkpoint
-      val out = estep.ckptLazy()
-      val r = reduce(out, keys)
-      beta = betaOf(r.keys, r.lambda, k, smoothing)
-      Step(r.ll, r.ss, out.filter(col("isDoc")), () => out.releaseCkpt())
+    def step(blocks: RDD[DocBlock], gammas: RDD[Array[Double]], alpha: Array[Double], sweeps: Sweeps): Step = {
+      // the model-sized broadcast is destroyed once its job is done;
+      // destroy() is non-blocking in Spark 4, so this adds no latency
+      val bc = spark.sparkContext.broadcast(beta)
+      val vocab = model.vocab
+      val stepped = blocks.zipPartitions(gammas) { (bs, gs) =>
+        val b = bs.next()
+        val fit = new Kernel[Unit](alpha, sweeps, vocab, (_, _) => ()).fitBlock(b, gs.next(), bc.value)
+        val stats = new Array[Double](alpha.length + 1)
+        for (d <- 0 until b.size) addStats(stats, b.gammaOf(fit.gamma, d), fit.ll(d))
+        Iterator((fit.gamma, Partial(b.distinct, fit.logphi, stats)))
+      }.ckptLazy()
+      val r = try merge(stepped.map(_._2)) finally bc.destroy()
+      beta = betaOf(r.keys, r.lambda, k, model.smoothing)
+      Step(r.ll, r.ss, stepped.map(_._1), () => stepped.unpersist(blocking = false))
     }
     def rows: DataFrame =
-      betaRows(spark, keys, beta.toSeq.map { case (w, arr) => (langOf(w), termOf(w), arr) })
-    def finish(): scala.collection.Map[Long, Array[Double]] = { release(); beta }
+      betaRows(spark, keys, beta.iterator.map { case (w, arr) => (langOf(w), termOf(w), arr) }.toSeq)
+    def finish(): PackedBeta = beta
   }
 
   /** Beta kept as a distributed (key columns…, elogbeta[K]) table, joined
     * each iteration to the corpus exploded once per run (`exploded`, owned
     * here): the scale path, where nothing model-sized moves through the
-    * driver until [[finish]]. */
-  private final class TableBeta(spark: SparkSession, keys: Keys, k: Int,
-      smoothing: Smoothing, exploded: DataFrame, resumed: Option[DataFrame]) extends BetaPath {
+    * driver until [[finish]]. Its E-step reads the blocks' documents as a
+    * Dataset ([[documents]]) and hands the gammas back as the blocks' next
+    * gamma state ([[gammaBlocks]]). */
+  private final class TableBeta[D, R](spark: SparkSession, model: Model[D, R], k: Int, parts: Int,
+      docs: Dataset[D], resumed: Option[DataFrame]) extends BetaPath {
+    private val keys = model.shape.keys
+    private val exploded = explodeDocs(docs.toDF(), model.shape).persist(StorageLevel.MEMORY_AND_DISK)
     private var table: DataFrame = resumed.fold(emptyBetaTable(spark, keys))(
       rows => packBeta(rows, keys).persist(StorageLevel.MEMORY_AND_DISK))
     // drops the blocks `table` reads
     private var releaseTable: () => Unit = { val t = table; () => t.unpersist() }
 
-    def supply(): BetaSupply = Join(table, Some(exploded))
-    /** One localCheckpoint holds the packed beta and the k-row ll/alpha
-      * statistics as union branches: the stats collect and every E-step
-      * join of the next iteration read it, and it truncates the lineage (a
-      * plain persist would nest each iteration's plan inside the next
-      * E-step join). Keeping the doc side out of it means the per-iteration
-      * beta scans never re-read corpus blocks. The doc rows are checkpointed
-      * eagerly (the two union branches read the E-step from concurrent
-      * stages); after that nothing reads the old beta table. */
-    def mstep(estep: DataFrame): Step = {
-      val held = estep.persist(StorageLevel.MEMORY_AND_DISK)
-      val next = packBeta(lambdaToBeta(explodePhi(held, keys), keys, smoothing), keys)
-        .withColumn("tag", lit(0))
-        .unionByName(
-          MStep.llAndAlphaStatsRows(held.filter(col("isDoc"))).withColumn("tag", lit(1)),
-          allowMissingColumns = true)
-        .ckptSer()
-      val (ll, ss) = MStep.statsOf(next.filter(col("tag") === 1).select("k", "ss", "llsum").collect(), k)
-      val docs = held.filter(col("isDoc")).ckptSer()
+    /** The packed next beta is one localCheckpoint: every E-step join of
+      * the next iteration reads it, and it truncates the lineage (a plain
+      * persist would nest each iteration's plan inside the next E-step
+      * join). The gammas and the ll/alpha statistics come from the held
+      * E-step rows in one eager pass ([[gammaStep]]); after that nothing
+      * reads the old beta table. */
+    def step(blocks: RDD[DocBlock], gammas: RDD[Array[Double]], alpha: Array[Double], sweeps: Sweeps): Step = {
+      val alphaBc = spark.sparkContext.broadcast(alpha)
+      val held = estep(documents(spark, blocks, gammas, model.shape), model.shape, alphaBc,
+        Join(table, Some(exploded)), model.vocab, sweeps).toDF().persist(StorageLevel.MEMORY_AND_DISK)
+      val next = packBeta(lambdaToBeta(explodePhi(held, keys), keys, model.smoothing), keys).ckptSer()
+      val step = gammaStep(held, parts, k)
       held.unpersist()
+      alphaBc.destroy()
       releaseTable()
       releaseTable = () => next.releaseCkpt()
-      table = next.filter(col("tag") === 0).select(keys.term.map(col) :+ col("elogbeta"): _*)
-      Step(ll, ss, docs, () => docs.releaseCkpt())
+      table = next
+      step
     }
     def rows: DataFrame = explodeTopics(table, keys, "elogbeta")
-    def finish(): scala.collection.Map[Long, Array[Double]] = {
+    def finish(): PackedBeta = {
       exploded.unpersist(blocking = false)
-      val beta = collectPacked(table, keys)
+      val beta = collectPacked(table, keys, k)
       releaseTable()
       beta
     }
+  }
+
+  /** A table model's iteration outcome from its E-step doc rows: the
+    * blocks' next gamma state — hashed by docId into the blocks' `parts`
+    * partitions and docId-ascending within each, as [[blocksOf]] lays the
+    * documents out — computed here, with the corpus LL and alpha
+    * statistics summed in that order, then over partitions in index order. */
+  private def gammaStep(estep: DataFrame, parts: Int, k: Int): Step = {
+    val spark = estep.sparkSession
+    import spark.implicits._
+    val g = estep.filter(col("isDoc")).select("docId", "gamma", "ll").as[(Long, Array[Double], Double)].rdd
+      .keyBy(_._1).partitionBy(new HashPartitioner(parts))
+      .mapPartitions { it =>
+        val docs = it.map(_._2).toArray.sortBy(_._1)
+        val stats = new Array[Double](k + 1)
+        docs.foreach { case (_, gamma, ll) => addStats(stats, gamma, ll) }
+        Iterator((docs.flatMap(_._2), stats))
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+    val stats = g.map(_._2).collect().transpose.map(_.sum)
+    Step(stats(0), stats.tail, g.map(_._1), () => g.unpersist(blocking = false))
   }
 
   // ---- EM loop ----
@@ -858,10 +975,10 @@ private[graft] object EmCore {
       /** Σ_l V_l: K × this above `betaBroadcastMaxEntries` takes the shuffle path */
       totalVocab: Long)
 
-  /** A trained model: beta maps packed (lang, termId) → E[log β] over topics. */
+  /** A trained model: E[log β] over topics per packed (lang, termId). */
   final case class Fit(
       alpha: Array[Double],
-      beta: scala.collection.Map[Long, Array[Double]],
+      beta: PackedBeta,
       logLikelihood: Double,
       iterations: Int,
       llHistory: Seq[Double])
@@ -871,14 +988,16 @@ private[graft] object EmCore {
     * measured below. */
   private[graft] val WorkPerTask = 1L << 22
   /** A broadcast iteration's work per (term, topic) outside the sweeps —
-    * row decoding, the shifted E[log β] rows, the final logs, the φ
-    * combiner and the partial fold, the checkpoint and shuffle writes —
-    * counted in sweeps. Measured as the intercept over the slope of one
-    * map task's CPU time against the sweep count (1 to 100; 400 documents
-    * of 156 distinct terms, K = 20, one core of a 4-core Xeon VM): 180–200
-    * ms plus 3.0–3.1 ms per sweep, 58–68 sweeps over three runs of 11
-    * repetitions. */
-  private[graft] val FoldSweeps = 60
+    * resolving the partition's keys, the final logs, the φ combiner, the
+    * partial and its shuffle write, the gamma checkpoint — counted in
+    * sweeps. Measured as the intercept over the slope of one map task's CPU
+    * time in the second iteration against the sweep count (1, 10, 25, 50,
+    * 75, 100; 400 documents of 156 distinct terms, K = 20, one core of a
+    * 4-core Xeon VM; medians of 11 repetitions): 102 ms plus 4.1 ms per
+    * sweep, 25 sweeps, 1.6 µs per (document, term); a second run beside a
+    * compile gave 28. Rows decoded and checkpointed per document made it
+    * 49 sweeps (3.3 µs) in the same window. */
+  private[graft] val FoldSweeps = 25
 
   /**
    * The corpus's partition count: its E-step work, Σ nnz · K · (sweeps +
@@ -892,65 +1011,62 @@ private[graft] object EmCore {
     math.max(1L, math.min(math.min(tasks, numDocs), Int.MaxValue)).toInt
   }
 
-  /** (documents, Σ nnz) of a corpus in one job. */
-  private def countTerms[D, R](docs: Dataset[D], shape: DocShape[D, R]): (Long, Long) = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.mapPartitions { it =>
-      var n = 0L
-      var nnz = 0L
-      it.foreach { d => n += 1; shape.langCounts(d).foreach(nnz += _._2.size) }
-      Iterator((n, nnz))
-    }.collect().foldLeft((0L, 0L)) { case ((n, z), (a, b)) => (n + a, z + b) }
-  }
+  /** The records hash-partitioned by docId into `parts` partitions,
+    * docId-ascending within each, as one [[DocBlock]] per partition, and
+    * persisted: the first job that reads it runs the exchange. */
+  private[graft] def blocksOf(records: RDD[DocRecord], parts: Int, alpha: Array[Double]): RDD[DocBlock] =
+    records.keyBy(_.docId).repartitionAndSortWithinPartitions(new HashPartitioner(parts))
+      .mapPartitions(rs => Iterator(DocBlock(rs.map(_._2), alpha)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
-  /** `docs` hash-partitioned by docId into `parts` partitions, docId-sorted
-    * within each, and persisted; returns it and its release. The first job
-    * that reads it runs the exchange: no job of its own. */
-  private def byWork[D, R](docs: Dataset[D], shape: DocShape[D, R], parts: Int)
-      : (Dataset[D], () => Unit) = {
-    implicit val tag: scala.reflect.ClassTag[D] = shape.docEncoder.clsTag
-    val rdd = docs.rdd.keyBy(shape.docId)
-      .repartitionAndSortWithinPartitions(new HashPartitioner(parts)).values
-    rdd.persist(StorageLevel.MEMORY_AND_DISK_SER)
-    (docs.sparkSession.createDataset(rdd)(shape.docEncoder), () => rdd.unpersist(blocking = false))
+  /** The blocks' documents carrying the gamma state `gammas`, as the
+    * model's Dataset: the gamma-<i> snapshot and the table path's E-step
+    * read it. */
+  private[graft] def documents[D, R](spark: SparkSession, blocks: RDD[DocBlock],
+      gammas: RDD[Array[Double]], shape: DocShape[D, R]): Dataset[D] = {
+    implicit val tag: ClassTag[D] = shape.docEncoder.clsTag
+    spark.createDataset(blocks.zipPartitions(gammas) { (bs, gs) =>
+      val (b, g) = (bs.next(), gs.next())
+      Iterator.tabulate(b.size)(d => shape.document(b.record(d), Some(b.gammaOf(g, d))))
+    })(shape.docEncoder)
   }
 
   /**
    * EM driver loop (reference: cc/mrlda/VariationalInference.java:181-394,
-   * polylda/VariationalInference.java:330-580). A broadcast model's
-   * iteration is one Spark job — the E-step with the per-partition M-step
-   * partials, then their keyed merge ([[reduce]]) — instead of one MR job
-   * + one merge job + JVM restarts. The corpus it starts from (fresh or
-   * resumed) is partitioned once by E-step work ([[partitionsFor]]), hashed
-   * by docId and docId-sorted within each partition, and every iteration's
-   * doc rows keep that layout, so the folds — and the model — do not depend
-   * on the host or on task timing.
+   * polylda/VariationalInference.java:330-580).
    *
-   * Scale posture: below `betaBroadcastMaxEntries` beta is collected and
-   * broadcast (the reference's DistributedCache path,
-   * DocumentMapper.java:116); above it beta stays a distributed table
-   * end-to-end and nothing model-sized moves through the driver. With
-   * `checkpointDir` set, alpha/beta/gamma snapshot to parquet after every
-   * iteration (the reference's alpha-i/beta-i/gamma-i rotation), and a
-   * resume re-reads gamma-<i> and partitions it the same way. Between
-   * iterations the corpus is the E-step's doc rows, cut from their lineage
-   * by a `localCheckpoint` (fast, not fault-tolerant: a lost executor's
-   * blocks fail the run, which then resumes from the last snapshot).
-   * Alpha takes one Newton update per iteration. Convergence: |ΔLL/LL| ≤
-   * `convergence` or `maxIterations` (Settings.java:56,43).
+   * The corpus it starts from (fresh, or gamma-<i> on resume) is read once
+   * into primitive [[DocRecord]]s, counted, and laid out once by E-step
+   * work ([[partitionsFor]]): hashed by docId and docId-sorted within each
+   * partition, one persisted [[DocBlock]] per partition. The blocks never
+   * change; the loop state is one gamma array per partition, zipped with
+   * its block. So the folds — and the model — do not depend on the host or
+   * on task timing, and no document row is encoded, checkpointed or
+   * decoded inside the loop.
    *
-   * The caller's `docs` are read by the count and by the partitioning; if
-   * the caller left them uncached, they are cached for those two reads and
-   * released after the first iteration.
+   * A broadcast model's iteration is one Spark job — each block's E-step
+   * with its M-step partial and next gammas, then the partials' keyed
+   * merge ([[merge]]) — instead of one MR job + one merge job + JVM
+   * restarts. Scale posture: below `betaBroadcastMaxEntries` beta is
+   * collected and broadcast as flat arrays (the reference's
+   * DistributedCache path, DocumentMapper.java:116); above it beta stays a
+   * distributed table end-to-end and nothing model-sized moves through the
+   * driver. With `checkpointDir` set, alpha/beta/gamma snapshot to parquet
+   * after every iteration (the reference's alpha-i/beta-i/gamma-i
+   * rotation; gamma-<i> is the blocks' documents with their gammas), and a
+   * resume re-reads gamma-<i> and lays it out the same way. The gamma
+   * state is checkpointed locally (fast, not fault-tolerant: a lost
+   * executor's blocks fail the run, which then resumes from the last
+   * snapshot). Alpha takes one Newton update per iteration. Convergence:
+   * |ΔLL/LL| ≤ `convergence` or `maxIterations` (Settings.java:56,43).
+   *
+   * The caller's `docs` are read once; the records are held until the
+   * first iteration has built the blocks from them.
    */
   def fit[D, R](docs: Dataset[D], model: Model[D, R], cfg: Settings): Fit = {
     val spark = docs.sparkSession
     val shape = model.shape
-    val keys = shape.keys
     val k = cfg.numTopics
-    def gammaDocs(df: DataFrame): Dataset[D] =
-      df.select(shape.docCols.map(col): _*).as[D](shape.docEncoder)
 
     var alpha = model.alphaInit
     var resumedBeta: Option[DataFrame] = None
@@ -968,46 +1084,45 @@ private[graft] object EmCore {
       resumedBeta = Some(LdaCheckpoint.loadBeta(spark, dir, i))
       // gamma-<i> is the full gamma-annotated corpus — resume reads it
       // directly (the reference resumes from the gamma-i document dir)
-      source = gammaDocs(LdaCheckpoint.loadGamma(spark, dir, i))
+      source = LdaCheckpoint.loadGamma(spark, dir, i).select(shape.docCols.map(col): _*)
+        .as[D](shape.docEncoder)
       history = LdaCheckpoint.loadLlHistory(spark, dir, i).reverse.toList
       startIter = i
     }
 
-    // an uncached source is held until the first iteration has read it
-    // into the partitioned corpus: the count and the exchange read it once
-    var releaseSource: () => Unit = () => ()
-    if (source.storageLevel == StorageLevel.NONE) {
-      val held = source.persist(StorageLevel.MEMORY_AND_DISK)
-      releaseSource = () => { held.unpersist(blocking = false); releaseSource = () => () }
-    }
-    val (numDocs, nnz) = countTerms(source, shape)
+    val records = source.rdd.map(shape.record).persist(StorageLevel.MEMORY_AND_DISK)
+    val (numDocs, nnz) =
+      records.map(r => (1L, r.cnt.length.toLong)).fold((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
     // with no document the alpha update divides by zero and training would
     // return NaN alpha and a flat zero likelihood
-    if (numDocs == 0)
+    if (numDocs == 0) {
+      records.unpersist(blocking = false)
       throw new IllegalArgumentException("cannot train a topic model on an empty corpus (0 documents)")
+    }
     val parts = partitionsFor(numDocs, nnz, k, cfg.localIterations)
-    var (corpus, releaseCorpus) = byWork(source, shape, parts)
-    // the one place the beta path is chosen. The table path's explode is
-    // loop-invariant (gamma rotation never touches counts): materialized
-    // once, partitioned by the beta join key, so each iteration's E-step
-    // shuffles only the model-sized beta table
+    val blocks = blocksOf(records, parts, alpha)
+    var gammas = blocks.map(_.gamma)
+    // the one place the beta path is chosen
     val beta: BetaPath =
       if (k.toLong * model.totalVocab > cfg.betaBroadcastMaxEntries)
-        new TableBeta(spark, keys, k, model.smoothing,
-          explodeDocs(corpus.toDF(), shape).persist(StorageLevel.MEMORY_AND_DISK), resumedBeta)
-      else new BroadcastBeta(spark, keys, k, model.smoothing, resumedBeta)
+        new TableBeta(spark, model, k, parts, documents(spark, blocks, gammas, shape), resumedBeta)
+      else new BroadcastBeta(spark, model, k, resumedBeta)
+    // what the finished iteration no longer needs: at first the records,
+    // which the first iteration's job reads into the blocks
+    var release: () => Unit = () => records.unpersist(blocking = false)
     var lastLL = history.headOption.getOrElse(0.0)
     var iter = startIter
     var converged = false
 
     while (iter < cfg.maxIterations && !converged) {
-      val alphaBc = spark.sparkContext.broadcast(alpha)
-      val estep = EmCore.estep(corpus, shape, alphaBc, beta.supply(), model.vocab,
+      // E-step + M-step + likelihood + alpha sufficient statistics
+      val step = beta.step(blocks, gammas, alpha,
         Sweeps(cfg.localIterations, cfg.randomStartGamma, learning = true, cfg.seed))
-
-      // M-step + likelihood + alpha sufficient statistics
-      val step = beta.mstep(estep.toDF())
-      releaseSource()
+      release()
+      release = step.release
+      // the next iteration's warm start (the E-step ignores it under
+      // randomStartGamma; gamma-<i> holds it either way)
+      gammas = step.gammas
       val ll = step.ll
       alpha =
         if (model.symmetricAlpha) {
@@ -1024,54 +1139,50 @@ private[graft] object EmCore {
       cfg.checkpointDir.foreach { dir =>
         LdaCheckpoint.saveAlpha(spark, dir, snapIdx, alpha)
         LdaCheckpoint.saveBeta(beta.rows, dir, snapIdx)
-        LdaCheckpoint.saveGamma(step.docs.select(shape.docCols.map(col): _*), dir, snapIdx)
+        LdaCheckpoint.saveGamma(documents(spark, blocks, gammas, shape).toDF()
+          .select(shape.docCols.map(col): _*), dir, snapIdx)
         LdaCheckpoint.saveState(spark, dir, snapIdx, history.reverse)
       }
-
-      // rotate gamma into the corpus for the next iteration's warm start:
-      // the doc rows carry the full document, in the corpus's partitions
-      // and order, so the next corpus is a projection of them — no
-      // per-iteration join or exchange, with or without `checkpointDir`
-      // (gamma-<i> holds the same values; only a resume re-reads it).
-      // Skipped under randomStartGamma (the E-step would ignore the stored
-      // gamma; the reference gates the side-output the same way).
-      if (cfg.randomStartGamma) step.release()
-      else {
-        releaseCorpus()
-        corpus = gammaDocs(step.docs)
-        releaseCorpus = step.release
-      }
-      alphaBc.destroy()
 
       converged = (iter > startIter || cfg.resumeFrom.isDefined) &&
         math.abs((ll - lastLL) / lastLL) <= cfg.convergence
       lastLL = ll
       iter += 1
     }
-    // a table model's map is collected once, at the end (callers needing
-    // beta bigger than driver memory read the checkpointed beta-<i>
-    // parquet instead)
-    val betaMap = beta.finish()
-    releaseCorpus()
-    releaseSource()
+    // a table model is collected once, at the end (callers needing beta
+    // bigger than driver memory read the checkpointed beta-<i> parquet
+    // instead)
+    val packed = beta.finish()
+    release()
+    blocks.unpersist(blocking = false)
 
-    Fit(alpha, betaMap, lastLL, iter, history.reverse)
+    Fit(alpha, packed, lastLL, iter, history.reverse)
   }
 
   /** Seed of held-out inference's random E[log β] for terms the model has
     * never seen. */
   private val InferenceSeed = 42L
 
-  /** Held-out inference (reference D5): frozen model, one map-only E-step;
-    * returns per-doc (docId, gamma) and the held-out log-likelihood. */
+  /** Held-out inference (reference D5): frozen model, one map-only E-step
+    * over the documents as blocks, in the caller's partitions. Returns the
+    * (docId, gamma) rows, cached — the caller drops them with `unpersist` —
+    * and the held-out log-likelihood, both from that one pass: each
+    * partition's LL is summed in document order, then the partitions in
+    * index order. The model's broadcast stays with the rows' lineage. */
   def infer[D, R](docs: Dataset[D], shape: DocShape[D, R], alpha: Array[Double],
-      beta: BetaSupply, vocab: Int => Int, localIterations: Int): (DataFrame, Double) = {
+      beta: PackedBeta, vocab: Int => Int, localIterations: Int): (DataFrame, Double) = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val out = estep(docs, shape, spark.sparkContext.broadcast(alpha), beta, vocab,
-      Sweeps(localIterations, randomStartGamma = false, learning = false, InferenceSeed))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-      .toDF().filter($"isDoc")
-    (out.select($"docId", $"gamma"), out.agg(sum($"ll")).as[Double].head())
+    val bc = spark.sparkContext.broadcast(beta)
+    val lls = spark.sparkContext.collectionAccumulator[(Int, Double)]("held-out LL")
+    val sweeps = Sweeps(localIterations, randomStartGamma = false, learning = false, InferenceSeed)
+    val gamma = docs.rdd.map(shape.record).mapPartitionsWithIndex { (p, rs) =>
+      val b = DocBlock(rs, alpha)
+      val fit = new Kernel[Unit](alpha, sweeps, vocab, (_, _) => ()).fitBlock(b, b.gamma, bc.value)
+      lls.add(p -> fit.ll.sum)
+      Iterator.tabulate(b.size)(d => (b.docIds(d), b.gammaOf(fit.gamma, d)))
+    }.toDF("docId", "gamma").persist(StorageLevel.MEMORY_AND_DISK)
+    gamma.count()
+    (gamma, lls.value.asScala.sortBy(_._1).map(_._2).sum)
   }
 }

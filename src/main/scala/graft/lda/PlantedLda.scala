@@ -77,11 +77,11 @@ object PlantedLda {
     * both engines compute from the same closed form (replaces the
     * reference's unseeded Math.random init, which no engine replay
     * could reproduce). Vanilla is the one-language case. */
-  private[graft] def initBeta(numLangs: Int, vocabPerLang: Int): Map[Long, Array[Double]] =
-    (for (l <- 0 until numLangs; w <- 0 until vocabPerLang) yield
+  private[graft] def initBeta(numLangs: Int, vocabPerLang: Int): EmCore.PackedBeta =
+    EmCore.PackedBeta.of((for (l <- 0 until numLangs; w <- 0 until vocabPerLang) yield
       EmCore.key(l, w) -> Array.tabulate(K)(t =>
         rnd(-math.log(vocabPerLang.toDouble) + ((w * 7 + t * 3 + l * 5) % 11 - 5) / 100.0,
-          BetaDp))).toMap
+          BetaDp))).iterator, K)
 
   /** The planted corpus: docs with doc_id < MaxDocId, whitespace-split
     * lowercased words, each in the language `lang` gives it; per language,
@@ -136,10 +136,10 @@ object PlantedLda {
    */
   private[graft] def anchoredEm[D, R](spark: SparkSession, corpus: Seq[D],
       shape: EmCore.DocShape[D, R], smoothing: EmCore.Smoothing,
-      init: scala.collection.Map[Long, Array[Double]], vocab: Int => Int,
+      init: EmCore.PackedBeta, vocab: Int => Int,
       withGamma: (D, Map[Long, Array[Double]]) => D, alpha: Array[Double], emIters: Int,
       sweeps: EmCore.Sweeps, betaDp: Int, useShuffle: Boolean)
-      : (scala.collection.Map[Long, Array[Double]], Array[(Long, Array[Double], Double)]) = {
+      : (EmCore.PackedBeta, Array[(Long, Array[Double], Double)]) = {
     import spark.implicits._
     val k = alpha.length
     val keys = shape.keys
@@ -151,15 +151,15 @@ object PlantedLda {
     for (iter <- 1 to emIters) {
       val betaBc = spark.sparkContext.broadcast(beta)
       val supply =
-        if (useShuffle) EmCore.Join(beta.toSeq.map { case (w, arr) =>
+        if (useShuffle) EmCore.Join(beta.iterator.map { case (w, arr) =>
           (EmCore.langOf(w), EmCore.termOf(w), arr)
-        }.toDF("lang", "termId", "elogbeta"), None)
-        else EmCore.Lookup.packed(betaBc)
+        }.toSeq.toDF("lang", "termId", "elogbeta"), None)
+        else EmCore.Lookup(betaBc)
       val estep = EmCore.estep(spark.createDataset(docs)(shape.docEncoder), shape, alphaBc,
         supply, vocab, sweeps).persist()
       val r = EmCore.reduce(estep.toDF(), keys)
-      beta = EmCore.betaOf(r.keys, r.lambda.map(rnd(_, betaDp)), k, smoothing)
-        .map { case (w, arr) => w -> arr.map(rnd(_, betaDp)) }
+      val next = EmCore.betaOf(r.keys, r.lambda.map(rnd(_, betaDp)), k, smoothing)
+      beta = next.copy(values = next.values.map(rnd(_, betaDp)))
       val docRows = estep.filter($"isDoc")
         .select($"docId", $"gamma", $"ll")
         .as[(Long, Array[Double], Double)].collect()
@@ -174,7 +174,7 @@ object PlantedLda {
 
   /** The vanilla planted run: final (packed-key beta, last E-step rows). */
   private def emState(spark: SparkSession, dir: String, useShuffle: Boolean)
-      : (scala.collection.Map[Long, Array[Double]], Array[(Long, Array[Double], Double)]) =
+      : (EmCore.PackedBeta, Array[(Long, Array[Double], Double)]) =
     anchoredEm(spark, corpus(spark, dir), VanillaDocs, EmCore.Smoothing.eta(None),
       initBeta(1, Vocab), _ => Vocab,
       (d: Doc, g: Map[Long, Array[Double]]) => d.copy(gamma = Some(g(d.docId))),
@@ -187,7 +187,7 @@ object PlantedLda {
   def run(spark: SparkSession, dir: String, useShuffle: Boolean = false): DataFrame = {
     import spark.implicits._
     val (beta, finalRows) = emState(spark, dir, useShuffle)
-    val betaRows = beta.toSeq.flatMap { case (w, arr) =>
+    val betaRows = beta.iterator.toSeq.flatMap { case (w, arr) =>
       arr.zipWithIndex.map { case (e, t) => ("beta", t + 1, EmCore.termOf(w).toLong, e) }
     }
     val gammaRows = finalRows.toSeq.flatMap { case (d, g, _) =>
@@ -214,7 +214,7 @@ object PlantedLda {
     val betaBc = spark.sparkContext.broadcast(beta)
     val fresh = corpus(spark, dir) // no carried gamma: fresh init
     val estep = EmCore.estep(fresh.toDS(), VanillaDocs, alphaBc,
-      EmCore.Lookup.packed(betaBc), _ => Vocab, sweeps(learning = false))
+      EmCore.Lookup(betaBc), _ => Vocab, sweeps(learning = false))
     val rows = estep.filter($"isDoc")
       .select($"docId", $"gamma").as[(Long, Array[Double])].collect()
       .sortBy(_._1)

@@ -1,6 +1,6 @@
 package graft.lda
 
-import graft.lda.EmCore.{Lookup, Model, Smoothing}
+import graft.lda.EmCore.{Model, PackedBeta, Smoothing}
 import graft.model.Doc
 import org.apache.spark.sql.{DataFrame, Dataset}
 
@@ -55,10 +55,10 @@ object Trainer {
   }
 
   /** Held-out inference (reference D5): frozen model, one map-only E-step,
-    * returns per-doc gamma and the held-out log-likelihood. */
-  def infer(docs: Dataset[Doc], model: LdaModel, localIterations: Int = 100): (DataFrame, Double) = {
-    val betaBc = docs.sparkSession.sparkContext.broadcast(model.beta)
-    EmCore.infer(docs, VanillaDocs, model.alpha, Lookup.terms(betaBc), _ => model.numTerms,
-      localIterations)
-  }
+    * returns per-doc (docId, gamma), cached until the caller's
+    * `unpersist`, and the held-out log-likelihood. */
+  def infer(docs: Dataset[Doc], model: LdaModel, localIterations: Int = 100): (DataFrame, Double) =
+    EmCore.infer(docs, VanillaDocs, model.alpha,
+      PackedBeta.of(model.beta.iterator.map { case (w, arr) => EmCore.key(0, w) -> arr }, model.numTopics),
+      _ => model.numTerms, localIterations)
 }

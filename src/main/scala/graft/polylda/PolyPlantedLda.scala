@@ -35,7 +35,7 @@ object PolyPlantedLda {
       (d: PolyDoc, g: Map[Long, Array[Double]]) => d.copy(gamma = Some(g(d.docId))),
       Array.fill(K)(Alpha), EmIters, sweeps(learning = true), BetaDp, useShuffle)
 
-    val betaRows = beta.toSeq.flatMap { case (w, arr) =>
+    val betaRows = beta.iterator.toSeq.flatMap { case (w, arr) =>
       arr.zipWithIndex.map { case (e, t) =>
         ("beta", EmCore.langOf(w), t + 1, EmCore.termOf(w).toLong, e)
       }

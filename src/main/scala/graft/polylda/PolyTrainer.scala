@@ -1,9 +1,8 @@
 package graft.polylda
 
-import graft.lda.{Display, EmCore, TermBeta}
-import graft.lda.EmCore.{DocShape, Keys, Lookup, Model, Smoothing}
+import graft.lda.{Display, EmCore}
+import graft.lda.EmCore.{DocRecord, DocShape, Keys, Model, PackedBeta, Smoothing}
 import graft.model.PolyDoc
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 
@@ -33,12 +32,7 @@ case class PolyEStepRow(
     ll: Double,
     lang: Int,
     termId: Int,
-    logphi: Array[Double],
-    /** doc rows carry the full document (like the reference's gamma side
-      * output) so next iteration's corpus needs no rotation join. */
-    counts: Map[Int, Map[Int, Int]] = null,
-    numTokens: Map[Int, Long] = null,
-    totalTokens: Long = 0L)
+    logphi: Array[Double])
 
 /** Polylingual documents and E-step rows as the EM core sees them: terms
   * keyed (lang, termId), one tied gamma per document. */
@@ -49,20 +43,20 @@ private[graft] object PolyDocs extends DocShape[PolyDoc, PolyEStepRow](
   lazy val rowEncoder: Encoder[PolyEStepRow] = Encoders.product[PolyEStepRow]
   def langCountsColumns(docs: DataFrame): DataFrame =
     docs.select(col("docId"), explode_outer(col("counts")).as(Seq("lang", "langCounts")))
-  def langCounts(d: PolyDoc): Iterable[(Int, Map[Int, Int])] = d.counts.toSeq.sortBy(_._1)
-  def docId(d: PolyDoc): Long = d.docId
-  def tokens(d: PolyDoc): Long = d.totalTokens
-  def gamma(d: PolyDoc): Option[Array[Double]] = d.gamma
-  def fromTerms(docId: Long, tokens: Long, terms: Seq[TermBeta]): PolyDoc = {
-    val byLang = terms.groupBy(_.lang)
-    PolyDoc(docId,
-      byLang.map { case (l, ts) => l -> ts.map(t => t.termId -> t.cnt).toMap },
-      byLang.map { case (l, ts) => l -> ts.map(_.cnt.toLong).sum },
-      tokens)
+  /** `meta`: the count maps' languages in iteration order, after their
+    * number, then the per-language token totals as (lang, tokens) pairs */
+  def record(d: PolyDoc): DocRecord = {
+    val (keys, cnt) = EmCore.terms(d.counts.toSeq.sortBy(_._1))
+    DocRecord(d.docId, d.totalTokens, keys, cnt, (d.counts.size.toLong +: d.counts.keys.map(_.toLong).toArray) ++
+      d.numTokens.iterator.flatMap { case (l, n) => Iterator(l.toLong, n) }, d.gamma.orNull)
   }
-  def docRow(d: PolyDoc, gamma: Array[Double], ll: Double): PolyEStepRow =
-    PolyEStepRow(isDoc = true, d.docId, gamma, ll, -1, -1, null, d.counts, d.numTokens,
-      d.totalTokens)
+  def document(r: DocRecord, gamma: Option[Array[Double]]): PolyDoc = {
+    val langs = r.meta.slice(1, 1 + r.meta(0).toInt).map(_.toInt)
+    PolyDoc(r.docId, langs.map(l => l -> EmCore.counts(r, l)).toMap,
+      r.meta.drop(1 + langs.length).grouped(2).map(p => p(0).toInt -> p(1)).toMap, r.tokens, gamma)
+  }
+  def docRow(r: DocRecord, gamma: Array[Double], ll: Double): PolyEStepRow =
+    PolyEStepRow(isDoc = true, r.docId, gamma, ll, -1, -1, null)
   def phiRow(key: Long, logphi: Array[Double]): PolyEStepRow =
     PolyEStepRow(isDoc = false, -1L, null, 0.0, EmCore.langOf(key), EmCore.termOf(key), logphi)
 }
@@ -106,30 +100,31 @@ object PolyTrainer {
   private[graft] def vocab(numTermsPerLang: Map[Int, Int]): Int => Int =
     l => numTermsPerLang.getOrElse(l, 1).max(1)
 
-  /** A broadcast lang -> termId -> row model as the E-step's lookup. */
-  private[graft] def lookup(bc: Broadcast[Map[Int, scala.collection.Map[Int, Array[Double]]]]): Lookup =
-    Lookup(w => bc.value.get(EmCore.langOf(w)).flatMap(_.get(EmCore.termOf(w))).orNull)
+  /** A lang -> termId -> row model as the E-step's packed lookup. */
+  private[graft] def packed(beta: Map[Int, scala.collection.Map[Int, Array[Double]]], k: Int): PackedBeta =
+    PackedBeta.of(beta.iterator.flatMap { case (l, m) =>
+      m.iterator.map { case (w, arr) => EmCore.key(l, w) -> arr } }, k)
 
   def train(docs: Dataset[PolyDoc], numTermsPerLang: Map[Int, Int], cfg: Config): PolyLdaModel = {
     val rng = new java.util.Random(cfg.seed)
     val fit = EmCore.fit(docs, Model(PolyDocs, Smoothing.floor,
       Array.fill(cfg.numTopics)(rng.nextDouble()), symmetricAlpha = false,
       vocab(numTermsPerLang), numTermsPerLang.values.map(_.toLong).sum), cfg)
-    val beta = fit.beta.groupBy { case (w, _) => EmCore.langOf(w) }.map { case (l, m) =>
-      l -> (m.map { case (w, arr) => EmCore.termOf(w) -> arr }: scala.collection.Map[Int, Array[Double]])
+    val beta = fit.beta.iterator.toSeq.groupBy { case (w, _) => EmCore.langOf(w) }.map { case (l, m) =>
+      l -> (m.map { case (w, arr) => EmCore.termOf(w) -> arr }.toMap: scala.collection.Map[Int, Array[Double]])
     }
     PolyLdaModel(cfg.numTopics, numTermsPerLang, fit.alpha, beta, fit.logLikelihood,
       fit.iterations, fit.llHistory)
   }
 
   /** Held-out inference with a frozen polylingual model (map-only,
-    * reference: training=false path of polylda/VariationalInference.java). */
+    * reference: training=false path of polylda/VariationalInference.java):
+    * per-doc (docId, gamma), cached until the caller's `unpersist`, and the
+    * held-out log-likelihood. */
   def infer(docs: Dataset[PolyDoc], model: PolyLdaModel,
-      localIterations: Int = 100): (DataFrame, Double) = {
-    val betaBc = docs.sparkSession.sparkContext.broadcast(model.beta)
-    EmCore.infer(docs, PolyDocs, model.alpha, lookup(betaBc),
+      localIterations: Int = 100): (DataFrame, Double) =
+    EmCore.infer(docs, PolyDocs, model.alpha, packed(model.beta, model.numTopics),
       vocab(model.numTermsPerLang), localIterations)
-  }
 
   /** Top-k terms per (language, topic) — the polylingual DisplayTopic
     * (reference surfaces 1-based language ids in file names; we surface the

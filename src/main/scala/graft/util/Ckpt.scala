@@ -1,5 +1,6 @@
 package graft.util
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
@@ -24,17 +25,12 @@ import org.apache.spark.storage.StorageLevel
   * Eagerness: eager by default — a LAZY localCheckpoint materialized
   * concurrently by two consumers can deadlock inside Spark's
   * checkpoint locking (the r13 ABBA deadlock, Dedup posture note).
-  * [[CkptOps.ckptLazy]] is for a dataset whose first reader is a single
+  * [[RddCkptOps.ckptLazy]] is for an RDD whose first reader is a single
   * stage: that stage materializes it, with no job of its own. */
 object Ckpt {
   implicit final class CkptOps[T](private val ds: Dataset[T]) extends AnyVal {
     def ckptSer(): Dataset[T] =
       ds.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-
-    /** `ckptSer` materialized by the first job that reads it. Only for a
-      * dataset exactly one stage reads until then. */
-    def ckptLazy(): Dataset[T] =
-      ds.localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
 
     /** Drops the blocks of a dataset `ckptSer` or `ckptLazy` returned
       * (`unpersist` does not reach them); a no-op on any other dataset. */
@@ -42,5 +38,15 @@ object Ckpt {
       case r: LogicalRDD => r.rdd.unpersist(blocking = false)
       case _ =>
     }
+  }
+
+  implicit final class RddCkptOps[T](private val rdd: RDD[T]) extends AnyVal {
+    /** A lazy local checkpoint of an RDD of ONE element per partition (a
+      * primitive block, say), kept deserialized at MEMORY_AND_DISK: the
+      * unroll overshoot above needs many values per partition, and one
+      * value is already on the heap when the store sizes it. Materialized
+      * by the first job that reads it; only for an RDD exactly one stage
+      * reads until then. Dropped with `unpersist`. */
+    def ckptLazy(): RDD[T] = rdd.localCheckpoint()
   }
 }

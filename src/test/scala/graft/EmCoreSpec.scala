@@ -77,8 +77,8 @@ class EmCoreSpec extends SparkSpec {
       spark.sparkContext.broadcast(beta: scala.collection.Map[Int, Array[Double]]),
       numTerms, localIterations = 15, seed = 5L)
     val polyBc = spark.sparkContext.broadcast(
-      Map(0 -> (beta: scala.collection.Map[Int, Array[Double]])))
-    val poly = EmCore.estep(polyDocs, PolyDocs, alphaBc, PolyTrainer.lookup(polyBc),
+      PolyTrainer.packed(Map(0 -> (beta: scala.collection.Map[Int, Array[Double]])), k))
+    val poly = EmCore.estep(polyDocs, PolyDocs, alphaBc, EmCore.Lookup(polyBc),
       PolyTrainer.vocab(Map(0 -> numTerms)), sweeps)
     assertSame(vanilla.toDF(), poly.toDF())
   }

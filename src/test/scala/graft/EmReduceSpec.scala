@@ -31,21 +31,27 @@ class EmReduceSpec extends SparkSpec {
   }
 
   test("the partial-merge reduce equals the SQL logsumexp fold, a flushed partition included") {
-    // one partition of 40 documents with ~29k distinct terms: past the
-    // kernel's flush threshold (2^20 (topic, term) entries at K = 50), so
-    // it drains mid-partition and some keys arrive in two rows; three
+    // a broadcast E-step combines its whole partition (the combiner is the
+    // model's size, so it never flushes); the table path's kernel flushes
+    // past 2^20 (topic, term) entries, and then a key arrives in several
+    // rows of one partition. One such partition: the E-steps of two sets
+    // of 20 documents with ~1000 terms each out of 60k, coalesced; three
     // more partitions of small documents
     val vocab = 60000
-    val input = docs(0 until 40, 1000, vocab, 1L).toDS().coalesce(1)
-      .union(docs(40 until 70, 20, 200, 2L).toDS().repartition(3))
-    val estep = EStep.run(input, spark.sparkContext.broadcast(Array.tabulate(k)(i => 0.05 + i * 0.01)),
+    def estepOf(input: Seq[Doc]) = EStep.run(input.toDS().coalesce(1),
+      spark.sparkContext.broadcast(Array.tabulate(k)(i => 0.05 + i * 0.01)),
       spark.sparkContext.broadcast(Map.empty: scala.collection.Map[Int, Array[Double]]), vocab,
-      localIterations = 3, seed = 11L).persist(StorageLevel.MEMORY_AND_DISK)
+      localIterations = 3, seed = 11L)
+    val big = docs(0 until 40, 1000, vocab, 1L)
+    val small = docs(40 until 70, 20, 200, 2L)
+    val estep = spark.createDataset(estepOf(big.take(20)).rdd.union(estepOf(big.drop(20)).rdd).coalesce(1)
+      .union(Seq(small.take(10), small.slice(10, 20), small.drop(20)).map(estepOf(_).rdd).reduce(_ union _)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val phi = estep.toDF().filter(!$"isDoc")
       assert(estep.rdd.getNumPartitions == 4)
       assert(phi.groupBy(spark_partition_id(), $"termId").count().filter($"count" > 1).count() > 0,
-        "no key arrived in two rows of one partition: the kernel did not flush")
+        "no key arrived in two rows of one partition")
 
       val reference = EmCore.explodePhi(estep.toDF(), VanillaDocs.keys)
         .groupBy($"topic", $"termId").agg(logsumexp($"logphi").as("lp"))
