@@ -1,33 +1,42 @@
 package graft.corpus
 
-import graft.model.{CorpusStats, Doc, TermEntry, TitleEntry}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import graft.model.{CorpusStats, Doc, PolyTermEntry, TermEntry, TitleEntry}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.collection.immutable.ArraySeq
+import scala.reflect.ClassTag
 
 /**
  * Corpus → dictionary-encoded bag-of-words pipeline; Spark-native rebuild of
  * the reference's three-MR-job ParseCorpus (reference:
  * cc/mrlda/ParseCorpus.java:81-142 and SURVEY.md §3.1).
  *
- * The reference's job structure collapses to one declarative plan:
- * tokenize+count (P1-P5) is cached once, the term and title indices are two
- * small aggregates over it, and encoding (J1/J2/P7) is a broadcast join back.
- * Catalyst supplies partial aggregation, predicate pushdown, and column
- * pruning that the reference hand-wired with combiners and custom key types.
+ * The reference's job structure keeps its shape and loses its jobs: the
+ * task that reads a document counts its terms and caches the counts, one
+ * keyed reduce gives every (language, term) its df and tf, the driver
+ * bands and ranks the dictionary, and one narrow map encodes the cached
+ * counts against the broadcast dictionary ([[parse]]). Raw lines are
+ * sorted once, to number them.
  *
- * The plan is the one parse core ([[parse]]) for both topic models, the way
- * Mr.LDA's polylda parser generalizes the vanilla one: it works on
- * (docId, lang, text) rows, and vanilla parsing is polylingual parsing with
- * every document in language 0. [[graft.polylda.PolyParseCorpus]] is only
- * the per-language fan-out in front of it and the regrouping behind it.
+ * [[parse]] is the one parse core for both topic models, the way Mr.LDA's
+ * polylda parser generalizes the vanilla one: it works on documents with
+ * one text slot per language, and vanilla parsing is polylingual parsing
+ * with every document in language 0. [[graft.polylda.PolyParseCorpus]] is
+ * only the per-language slots in front of it.
  *
- * Scale posture (100 TB): the only global sort is the dictionary ranking
- * over the *aggregated* term table (size = |V|, not corpus size); it uses
- * sort + per-partition offsets rather than the reference's single-reducer
- * ranking (ParseCorpus.java:475-490) so no single task sees the whole
- * vocabulary.
+ * Scale posture (100 TB): no exchange carries tokens — the line sort moves
+ * documents, the reduce moves each partition's distinct (language, term)
+ * pairs. The driver holds the whole dictionary, like the reference's
+ * single ranking reducer (ParseCorpus.java:475-490) and every encode task
+ * (the broadcast, as the reference's DistributedCache copy): |V| entries,
+ * a few hundred MB at 20M+ terms.
  */
 object ParseCorpus {
 
@@ -45,12 +54,7 @@ object ParseCorpus {
       maxDfFraction: Double = 1.0,
       stopwords: Seq[String] = Seq.empty,
       lowercase: Boolean = false,
-      analyzer: Option[String => Seq[String]] = None,
-      /** Vocabulary size above which the dictionary-encode join drops its
-        * broadcast hint and lets the planner shuffle-join instead (a 20M+
-        * term dict is no longer comfortably executor-resident). Lowered in
-        * tests to pin the fallback plan shape. */
-      dictBroadcastMaxTerms: Long = 20_000_000L)
+      analyzer: Option[String => Seq[String]] = None)
 
   /** Built-in analyzers plus the reference's reflection-by-class-name
     * loading surface (ParseCorpus.java:191-207,244-293 instantiates any
@@ -183,163 +187,291 @@ object ParseCorpus {
 
   /**
    * Parse raw one-doc-per-line text: `title \t w1 w2 ...`
-   * (reference input format, README.md:38-43, ParseCorpus.java:174-179).
+   * (reference input format, README.md:38-43, ParseCorpus.java:174-179);
+   * a line without a tab is dropped (the reference throws). Documents are
+   * numbered 1.. over one sort of the lines by (title, text): one id per
+   * LINE, so duplicate titles stay distinct documents (the reference
+   * assigns ids in merge-encounter order and tolerates duplicate titles,
+   * ParseCorpus.java:698-710; sorted order is the deterministic stand-in
+   * for encounter order). The title index is kept from the same pass.
    */
   def fromRawLines(spark: SparkSession, path: String, cfg: Config = Config()): Result = {
     import spark.implicits._
-    val lines = spark.read.text(path)
-      .select(split($"value", "\t", 2).as("parts"))
-      .filter(size($"parts") === 2) // reference throws on missing tab; we drop
-      .select($"parts" (0).as("title"), $"parts" (1).as("text"))
-    // docIds assigned 1-based over the full (title, text) rows — one id per
-    // LINE, so duplicate titles stay distinct documents (the reference
-    // assigns ids in merge-encounter order and tolerates duplicate titles,
-    // ParseCorpus.java:698-710; a join back on the non-unique title would
-    // conflate them). Sorted order is the deterministic stand-in for
-    // encounter order.
-    val (withIds, rankCache) = rankByIndexWithCache(lines, Seq($"title".asc, $"text".asc), "docId")
-    val result = run(withIds.select($"docId", $"title", $"text"), cfg)
-    // run() persisted AND counted docs/terms, so the ranking's internal
-    // sorted cache is no longer load-bearing
-    rankCache.unpersist()
-    result
+    val p = parse(spark, numberedLines(spark, path, fields = 2, limit = 2), numbered = true,
+      titles = true, numLanguages = 1, cfg, vanillaDoc)
+    result(spark, p, p.titles.get)
   }
 
-  /** Parse a (docId, title, text) DataFrame (e.g. the `documents` table):
-    * the parse core with every document in language 0. */
+  /** Parse a (docId, title, text) DataFrame, one row per document (e.g.
+    * the `documents` table): the parse core with every document in
+    * language 0; a null text is an empty document. */
   def run(input: DataFrame, cfg: Config = Config()): Result = {
     val spark = input.sparkSession
     import spark.implicits._
     val base = input.select($"docId".cast("long"), $"title", $"text")
-    val p = parse(base.select($"docId", lit(0).as("lang"), $"text"), numLanguages = 1, cfg,
-      Shapes[Doc, TermEntry](
-        _.select($"docId", $"langCounts".as("counts"), $"langTokens".as("numTokens"),
-          lit(null).cast("array<double>").as("gamma")).as[Doc],
-        _.select($"termId", $"term", $"df", $"tf").as[TermEntry],
-        _.select(lit(0).as("lang"), $"termId", $"term")))
-    Result(p.docs, p.terms, base.select($"docId", $"title").as[TitleEntry],
-      CorpusStats(p.numDocs, p.numTerms, p.docsPerLanguage.sum - p.numDocs, p.lowDf, p.highDf))
+    val lines = base.select($"docId", $"text").as[(Long, String)].rdd
+      .map { case (id, text) => Line(id, null, Array(if (text == null) "" else text)) }
+    result(spark, parse(spark, lines, numbered = false, titles = false, numLanguages = 1, cfg, vanillaDoc),
+      base.select($"docId", $"title").as[TitleEntry])
   }
 
-  /** How one model reads the parse core's rows back: (docId, lang,
-    * langCounts, langTokens) rows → its documents, (lang, termId, term, df,
-    * tf) rows → its dictionary, and that dictionary → the (lang, termId,
-    * term) rows the encode joins. */
-  private[graft] final case class Shapes[D, T](
-      docs: DataFrame => Dataset[D],
-      terms: DataFrame => Dataset[T],
-      encodeKeys: Dataset[T] => DataFrame)
+  private val vanillaDoc: (Long, Seq[(Int, Map[Int, Int], Long)]) => Doc =
+    (id, langs) => Doc(id, langs.head._2, langs.head._3)
 
-  /** The parse core's output: the shaped documents and dictionary, both
-    * persisted and computed, and the pipeline's counters. */
-  private[graft] final case class Parsed[D, T](
+  private def result(spark: SparkSession, p: Parsed[Doc], titles: Dataset[TitleEntry]): Result = {
+    import spark.implicits._
+    Result(p.docs, spark.createDataset(p.terms.map(t => TermEntry(t.termId, t.term, t.df, t.tf))), titles,
+      CorpusStats(p.numDocs, p.terms.length, p.docsPerLanguage.sum - p.numDocs, p.lowDf, p.highDf))
+  }
+
+  /** One document as the parse core reads it: its id — or, when the core
+    * numbers the documents, its index within its partition — its title
+    * (read only for a title index) and its text per language, null where
+    * the document lacks the language. */
+  private[graft] final case class Line(id: Long, title: String, texts: Array[String])
+
+  /** One partition's documents, their tokens counted per language, as
+    * flat arrays: document d's language l is slot s = d·langs + l, absent
+    * when `!present(s)`, its distinct terms and their counts at `start(s)
+    * until start(s + 1)` of `terms` and `counts`; `titles` is empty unless
+    * a title index is kept. One object of a few arrays per partition, so
+    * caching it sizes samples instead of walking every string. */
+  private final case class Counted(langs: Int, ids: Array[Long], titles: Array[String],
+      present: Array[Boolean], start: Array[Int], terms: Array[String], counts: Array[Int]) {
+    /** Document d's languages, ascending, each with its slice of `terms`. */
+    def slots(d: Int): Iterator[(Int, Range)] = (0 until langs).iterator.map(l => (l, d * langs + l))
+      .collect { case (l, s) if present(s) => l -> (start(s) until start(s + 1)) }
+  }
+
+  /** (lang, term, df, tf) sums as parallel arrays, as one partition ships
+    * them to one reducer. */
+  private final case class Sums(langs: Array[Int], terms: Array[String], df: Array[Long], tf: Array[Long])
+
+  private object Sums {
+    type Builder = scala.collection.mutable.HashMap[(Int, String), Array[Long]]
+    def add(m: Builder, l: Int, w: String, df: Long, tf: Long): Unit = {
+      val a = m.getOrElseUpdate((l, w), new Array[Long](2))
+      a(0) += df
+      a(1) += tf
+    }
+    def of(m: Builder): Sums = {
+      val es = m.toArray
+      Sums(es.map(_._1._1), es.map(_._1._2), es.map(_._2(0)), es.map(_._2(1)))
+    }
+  }
+
+  /** The ranked dictionary as tasks receive it: each language's terms in
+    * termId order (termId = index + 1), and their ids, indexed once per JVM. */
+  private final class Dictionary(val terms: Array[Array[String]]) extends Serializable {
+    @transient lazy val ids: Array[java.util.HashMap[String, Integer]] = terms.map { ts =>
+      val m = new java.util.HashMap[String, Integer](ts.length * 2)
+      ts.indices.foreach(i => m.put(ts(i), i + 1))
+      m
+    }
+  }
+
+  /** The parse core's output: the documents, persisted and computed; the
+    * (lang, termId, term, df, tf) dictionary by (lang, termId), ids dense
+    * and 1-based within each language; the title index of numbered input
+    * when asked for; and the pipeline's counters. */
+  private[graft] final case class Parsed[D](
       docs: Dataset[D],
       numDocs: Long,
-      terms: Dataset[T],
-      numTerms: Long,
-      /** input rows per language, 0 until numLanguages */
+      terms: Seq[PolyTermEntry],
+      titles: Option[Dataset[TitleEntry]],
+      /** documents per language, 0 until numLanguages */
       docsPerLanguage: Seq[Long],
       lowDf: Long,
       highDf: Long)
 
-  /**
-   * The one parse core. Input: (docId, lang, text) rows, lang in
-   * [0, numLanguages), one row per (document, language). Output, through
-   * the caller's [[Shapes]]: (docId, lang, langCounts, langTokens) rows — a
-   * document's count map and token total in one language, for every
-   * (document, language) with a term left — and the (lang, termId, term,
-   * df, tf) dictionary with ids dense and 1-based within each language.
-   * The df band is a fraction of each language's document count (reference
-   * polylda/ParseCorpus.java:242-245; with one language it is the vanilla
-   * corpus-wide rule, ParseCorpus.java:455-467).
-   */
-  private[graft] def parse[D, T](input: DataFrame, numLanguages: Int, cfg: Config,
-      shapes: Shapes[D, T]): Parsed[D, T] = {
-    val spark = input.sparkSession
-    import spark.implicits._
-
-    // documents per language: one aggregate with no grouping (count, so
-    // zero input rows give 0, not null; a constant lang folds to count(1))
-    val docsPerLanguage = {
-      val r = input.select((0 until numLanguages).map(l => count(when($"lang" === l, 1))): _*).head()
-      (0 until numLanguages).map(r.getLong)
+  /** Spark's string order, UTF-8 bytes compared unsigned, on well-formed
+    * strings: code point order, which `String.compareTo` (UTF-16 units) is
+    * not — it puts U+FF21 after U+1F600. */
+  private[graft] val Utf8Order: Ordering[String] = (a, b) => {
+    var i = 0
+    var r = 0
+    while (r == 0 && i < a.length && i < b.length) {
+      val x = a.codePointAt(i)
+      r = Integer.compare(x, b.codePointAt(i))
+      i += Character.charCount(x)
     }
+    if (r != 0) r else Integer.compare(a.length, b.length)
+  }
 
-    // P1-P5: tokenize (pluggable analyzer or whitespace split), optional
-    // lowercase, stopword filter, per-(doc, language) tf. Leading or
-    // trailing whitespace splits off empty strings: they are not tokens
-    val rawTok = (cfg.analyzer match {
-      case Some(an) =>
-        val tokenize = udf((text: String) => if (text == null) Seq.empty[String] else an(text))
-        input.select($"docId", $"lang", explode(tokenize($"text")).as("term"))
-      case None =>
-        input.select($"docId", $"lang",
-          explode(split(if (cfg.lowercase) lower($"text") else $"text", "\\s+")).as("term"))
-    })
-      .filter($"term" =!= "")
-    val tokens = (if (cfg.stopwords.nonEmpty) {
-      val sw = cfg.stopwords.toDF("term")
-      rawTok.join(broadcast(sw), Seq("term"), "left_anti")
-    } else rawTok)
-      .groupBy($"docId", $"lang", $"term").agg(count(lit(1)).as("cnt"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  /** Dictionary order within a language: df desc, tf desc, then the term
+    * (the tiebreak makes the dictionary deterministic where the reference
+    * depended on shuffle order). */
+  private val RankOrder: Ordering[(String, Long, Long)] =
+    Ordering.by((t: (String, Long, Long)) => (-t._2, -t._3, t._1))(Ordering.Tuple3(Ordering.Long, Ordering.Long, Utf8Order))
 
-    // A1/A2: per-(language, term) document frequency / collection frequency;
-    // cached only when the band counters below read it a second time
+  /** Spark SQL's `lower` (UTF8_BINARY, the session's ICU case-mapping
+    * setting) as a function a task can run. */
+  private[graft] def sqlLower(spark: SparkSession): String => String = {
+    val icu = spark.conf.get(SQLConf.ICU_CASE_MAPPINGS_ENABLED.key).toBoolean
+    s => CollationSupport.Lower.exec(UTF8String.fromString(s), CollationFactory.UTF8_BINARY_COLLATION_ID, icu)
+      .toString
+  }
+
+  /** The lines of `path` split on tabs as Spark SQL's `split(value, "\t",
+    * limit)` does, those of `fields` fields kept, sorted once by their
+    * fields in Spark's string order and numbered from 0 within each
+    * partition: the core's numbered input. */
+  private[graft] def numberedLines(spark: SparkSession, path: String, fields: Int, limit: Int): RDD[Line] = {
+    implicit val byFields: Ordering[Array[String]] =
+      Ordering.by((a: Array[String]) => ArraySeq.unsafeWrapArray(a))(Ordering.Implicits.seqOrdering(Utf8Order))
+    spark.read.textFile(path).rdd.map(_.split("\t", limit)).filter(_.length == fields)
+      .sortBy(identity)
+      .mapPartitions { ls =>
+        var i = -1L
+        ls.map { f => i += 1; Line(i, f.head, f.tail) }
+      }
+  }
+
+  /**
+   * The one parse core: both models' documents are [[Line]]s with
+   * `numLanguages` text slots, and vanilla parsing is polylingual parsing
+   * with every document in language 0. Two passes over the documents:
+   *
+   *  1. Each task counts its documents' tokens per language (P1-P5:
+   *     pluggable analyzer or whitespace split, optional lowercase,
+   *     stopwords; reference ParseCorpus.java:180-207 counts in the
+   *     mapper too) and keeps the counts cached. One keyed reduce sums
+   *     them to (lang, term) → (df, tf) (A1/A2) along with the documents
+   *     per language and per partition; its result comes to the driver,
+   *     which applies each language's df band (P6, a fraction of the
+   *     language's document count: reference polylda/ParseCorpus.java
+   *     :242-245; with one language the vanilla rule, ParseCorpus.java
+   *     :455-467) and ranks each language 1.. by (df desc, tf desc, term)
+   *     (O1/O3, the reference's one ranking reducer, ParseCorpus.java
+   *     :480-490).
+   *  2. One narrow map encodes each document with the broadcast
+   *     dictionary (J1/P7, the reference's DistributedCache dictionary,
+   *     ParseCorpus.java:661-663) and builds it with `doc` from its
+   *     languages that kept a term, ascending: (lang, termId → count,
+   *     tokens). A document with none is collapsed.
+   *
+   * Numbered input gets docIds 1.. in partition order; `titles` then also
+   * keeps the (docId, title) index, from the cached counts.
+   */
+  private[graft] def parse[D](spark: SparkSession, lines: RDD[Line], numbered: Boolean, titles: Boolean,
+      numLanguages: Int, cfg: Config, doc: (Long, Seq[(Int, Map[Int, Int], Long)]) => D)
+      (implicit enc: Encoder[D]): Parsed[D] = {
+    import spark.implicits._
+    implicit val tag: ClassTag[D] = enc.clsTag
+    val tokenize: String => Iterator[String] = cfg.analyzer match {
+      case Some(an) => an(_).iterator
+      case None if cfg.lowercase =>
+        val lower = sqlLower(spark)
+        t => lower(t).split("\\s+", -1).iterator
+      case None => _.split("\\s+", -1).iterator
+    }
+    val stop = cfg.stopwords.toSet
+    val counted = lines.mapPartitions { ls =>
+      val (ids, names, present) = (Array.newBuilder[Long], Array.newBuilder[String], Array.newBuilder[Boolean])
+      val (start, terms, counts) = (Array.newBuilder[Int], Array.newBuilder[String], Array.newBuilder[Int])
+      val m = scala.collection.mutable.HashMap.empty[String, Int]
+      var n = 0
+      start += 0
+      ls.foreach { l =>
+        ids += l.id
+        if (titles) names += l.title
+        l.texts.foreach { t =>
+          present += t != null
+          m.clear()
+          if (t != null) tokenize(t).foreach(w => if (w.nonEmpty && !stop(w)) m(w) = m.getOrElse(w, 0) + 1)
+          m.foreach { case (w, c) => terms += w; counts += c }
+          n += m.size
+          start += n
+        }
+      }
+      Iterator(Counted(numLanguages, ids.result(), names.result(), present.result(), start.result(),
+        terms.result(), counts.result()))
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+
+    // one keyed reduce: each partition's sums per (lang, term), hashed by
+    // term to one block per reducer; counter rows have a null term,
+    // (lang, null) → documents in lang and, in reducer 0's block,
+    // (-1 - p, null) → documents in partition p
+    val reducers = new HashPartitioner(
+      math.max(1, math.min(counted.getNumPartitions, spark.sparkContext.defaultParallelism)))
+    val summed = counted.mapPartitionsWithIndex { (p, bs) =>
+      val blocks = Array.fill(reducers.numPartitions)(new Sums.Builder)
+      bs.foreach { b =>
+        Sums.add(blocks(0), -1 - p, null, b.ids.length, 0L)
+        for (d <- b.ids.indices; (l, is) <- b.slots(d)) {
+          Sums.add(blocks(0), l, null, 1L, 0L)
+          is.foreach(i => Sums.add(blocks(reducers.getPartition(b.terms(i))), l, b.terms(i), 1L, b.counts(i)))
+        }
+      }
+      blocks.indices.iterator.map(r => r -> Sums.of(blocks(r)))
+    }.partitionBy(reducers).mapPartitions { bs =>
+      val m = new Sums.Builder
+      bs.foreach { case (_, b) => b.terms.indices.foreach(i => Sums.add(m, b.langs(i), b.terms(i), b.df(i), b.tf(i))) }
+      Iterator(Sums.of(m))
+    }.collect()
+
+    val docsPerLanguage = new Array[Long](numLanguages)
+    val perPartition = new Array[Long](counted.getNumPartitions)
+    val byLang = Array.fill(numLanguages)(Array.newBuilder[(String, Long, Long)])
+    for (b <- summed; i <- b.terms.indices) (b.langs(i), b.terms(i)) match {
+      case (p, null) if p < 0 => perPartition(-1 - p) = b.df(i)
+      case (l, null) => docsPerLanguage(l) = b.df(i)
+      case (l, w) => byLang(l) += ((w, b.df(i), b.tf(i)))
+    }
+    // with the default full-width band nothing is dropped or counted
     val banding = cfg.minDfFraction > 0.0 || cfg.maxDfFraction < 1.0
-    val termAgg = tokens.groupBy($"lang", $"term")
-      .agg(count(lit(1)).as("df"), sum($"cnt").as("tf"))
-    if (banding) termAgg.persist(StorageLevel.MEMORY_AND_DISK)
+    var lowDf, highDf = 0L
+    val ranked = byLang.indices.map { l =>
+      val all = byLang(l).result()
+      val (lo, hi) = (cfg.minDfFraction * docsPerLanguage(l), cfg.maxDfFraction * docsPerLanguage(l))
+      if (banding) {
+        lowDf += all.count(_._2 < lo)
+        highDf += all.count(_._2 > hi)
+      }
+      (if (banding) all.filter(t => t._2 >= lo && t._2 <= hi) else all).sorted(RankOrder)
+    }
+    val terms = ranked.zipWithIndex.flatMap { case (ts, l) =>
+      ts.iterator.zipWithIndex.map { case ((w, df, tf), i) => PolyTermEntry(l, i + 1, w, df, tf) }
+    }
+    val dict = spark.sparkContext.broadcast(new Dictionary(ranked.map(_.map(_._1)).toArray))
 
-    // P6: df band filter, bounds per language. With the default full-width
-    // band this is a no-op — skip the filter and the counter job entirely.
-    // Otherwise both band counters come from ONE aggregation pass.
-    def bound(fraction: Double): Column =
-      element_at(typedLit(docsPerLanguage.map(fraction * _)), $"lang" + 1)
-    val lo = bound(cfg.minDfFraction)
-    val hi = bound(cfg.maxDfFraction)
-    val banded = if (banding) termAgg.filter($"df" >= lo && $"df" <= hi) else termAgg
-    val (lowDf, highDf) = if (banding) {
-      val r = termAgg.agg(count_if($"df" < lo), count_if($"df" > hi)).head()
-      (r.getLong(0), r.getLong(1))
-    } else (0L, 0L)
+    // the first docId of each partition, for numbered input
+    val offsets = perPartition.scanLeft(1L)(_ + _)
+    val docs = spark.createDataset(counted.mapPartitionsWithIndex { (p, bs) =>
+      val ids = dict.value.ids
+      bs.flatMap(b => b.ids.indices.iterator.flatMap { d =>
+        val langs = b.slots(d).flatMap { case (l, is) =>
+          val kept = is.flatMap(i => Option(ids(l).get(b.terms(i))).map(id => (id.intValue, b.counts(i)))).sortBy(_._1)
+          if (kept.isEmpty) None else Some((l, kept.toMap, kept.iterator.map(_._2.toLong).sum))
+        }.toSeq
+        if (langs.isEmpty) None else Some(doc(if (numbered) offsets(p) + b.ids(d) else b.ids(d), langs))
+      })
+    })
+    val numDocs = materialize(docs)
+    val titleIndex = if (!titles) None else {
+      val t = spark.createDataset(counted.mapPartitionsWithIndex { (p, bs) =>
+        bs.flatMap(b => b.ids.indices.iterator.map(d => TitleEntry(offsets(p) + b.ids(d), b.titles(d))))
+      })
+      materialize(t)
+      Some(t)
+    }
+    counted.unpersist()
+    dict.unpersist()
+    Parsed(docs, numDocs, terms, titleIndex, docsPerLanguage.toSeq, lowDf, highDf)
+  }
 
-    // O1/O3: dense 1-based ranking within each language by (df desc, tf
-    // desc, term asc — the term tiebreak makes the dictionary deterministic
-    // where the reference depended on shuffle order)
-    val (rankedTerms, termRankCache) = rankByIndexWithCache(banded,
-      Seq($"df".desc, $"tf".desc, $"term".asc), "termId", group = Some("lang"))
-    val terms = shapes.terms(rankedTerms.select($"lang", $"termId".cast("int").as("termId"),
-        $"term", $"df", $"tf"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val numTerms = terms.count() // materializes terms → rank cache droppable
-    termRankCache.unpersist()
-
-    // J1/P7: dictionary-encode on (term, lang); broadcast for any realistic
-    // vocabulary (a few hundred MB — beyond `dictBroadcastMaxTerms` drop the
-    // hint and let AQE pick a shuffle join)
-    val dict = shapes.encodeKeys(terms)
-    val encoded = tokens
-      .join(if (numTerms <= cfg.dictBroadcastMaxTerms) broadcast(dict) else dict, Seq("term", "lang"))
-      .groupBy($"docId", $"lang")
-      .agg(
-        map_from_entries(array_sort(collect_list(struct($"termId", $"cnt".cast("int"))))).as("langCounts"),
-        sum($"cnt").as("langTokens"))
-    val docs = shapes.docs(encoded).persist(StorageLevel.MEMORY_AND_DISK)
-    val numDocs = docs.count()
-
-    tokens.unpersist()
-    termAgg.unpersist()
-    Parsed(docs, numDocs, terms, numTerms, docsPerLanguage, lowDf, highDf)
+  /** Persists `ds` and computes it in one job, its row count: a
+    * Dataset's `count` plans an aggregation exchange, which adaptive
+    * execution runs as jobs of their own. */
+  private def materialize(ds: Dataset[_]): Long = {
+    ds.persist(StorageLevel.MEMORY_AND_DISK)
+    ds.toDF().queryExecution.toRdd.count()
   }
 
   /**
    * Dense 1-based ranking without a single-partition window: global sort
    * (range-partitioned shuffle), then per-partition offsets. Deterministic
-   * given a total ordering. With a `group` column the ids are dense and
-   * 1-based within each group value (the sort then leads with the group, so
-   * a group's rows are contiguous in every partition); the group column
-   * must not be null.
+   * given a total ordering.
    *
    * Stays in Tungsten end to end (the old shape dropped to
    * `rdd.zipWithIndex` + `createDataFrame`, paying InternalRow↔Row
@@ -352,11 +484,10 @@ object ParseCorpus {
    * on eviction recomputes through the same exchange, whose shuffle
    * output is reused). The local index comes from
    * `monotonically_increasing_id`, consecutive within a partition. One
-   * collect counts the rows and takes the first id per (partition, group);
-   * a row's id is then the group's rows in earlier partitions + its id −
-   * that first id + 1, joined from a broadcast table of one row per
-   * (partition, group) — same role as zipWithIndex's internal count job,
-   * minus the row conversions.
+   * collect counts the rows and takes the first id per partition; a row's
+   * id is then the rows in earlier partitions + its id − that first id + 1,
+   * joined from a broadcast table of one row per partition — same role as
+   * zipWithIndex's internal count job, minus the row conversions.
    */
   private[graft] def rankByIndex(df: DataFrame, order: Seq[Column],
       idName: String): DataFrame =
@@ -368,29 +499,21 @@ object ParseCorpus {
     * cleanup). Unpersisting is determinism-safe: an eviction-triggered
     * recompute replays the same physical exchange and reuses its shuffle
     * output, so partitions — and therefore the assigned ids — repeat. */
-  private[graft] def rankByIndexWithCache(df: DataFrame, order: Seq[Column], idName: String,
-      group: Option[String] = None): (DataFrame, DataFrame) = {
-    val spark = df.sparkSession
-    val marked = df.orderBy(group.map(col(_).asc).toSeq ++ order: _*)
+  private[graft] def rankByIndexWithCache(df: DataFrame, order: Seq[Column], idName: String)
+      : (DataFrame, DataFrame) = {
+    import df.sparkSession.implicits._
+    val marked = df.orderBy(order: _*)
       .withColumn("__pid", spark_partition_id())
       .withColumn("__mid", monotonically_increasing_id())
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val keys = "__pid" +: group.toSeq
-    val firsts = marked.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("__n"), min(col("__mid")).as("__first"))
-      .collect().sortBy(_.getInt(0))
-    val earlier = scala.collection.mutable.Map.empty[Option[Any], Long].withDefaultValue(0L)
-    val offsets = firsts.map { r =>
-      val g = group.map(_ => r.get(1))
-      val off = earlier(g) - r.getAs[Long]("__first") + 1L
-      earlier(g) += r.getAs[Long]("__n")
-      Row.fromSeq(keys.indices.map(r.get) :+ off)
+    val firsts = marked.groupBy($"__pid").agg(count(lit(1)), min($"__mid")).as[(Int, Long, Long)]
+      .collect().sortBy(_._1)
+    val offsets = firsts.zip(firsts.map(_._2).scanLeft(0L)(_ + _)).map { case ((p, _, first), before) =>
+      (p, before - first + 1L)
     }
-    val offsetTable = spark.createDataFrame(java.util.Arrays.asList(offsets: _*),
-      StructType(keys.map(marked.schema(_)) :+ StructField("__off", LongType)))
-    val ranked = marked.join(broadcast(offsetTable), keys)
-      .withColumn(idName, col("__mid") + col("__off"))
-      .select(col(idName) +: df.columns.map(col): _*)
+    val ranked = marked.join(broadcast(offsets.toSeq.toDF("__pid", "__off")), "__pid")
+      .withColumn(idName, $"__mid" + $"__off")
+      .select(col(idName) +: df.columns.toSeq.map(col): _*)
     (ranked, marked)
   }
 }

@@ -128,17 +128,27 @@ object PolyTrainer {
 
   /** Top-k terms per (language, topic) — the polylingual DisplayTopic
     * (reference surfaces 1-based language ids in file names; we surface the
-    * lang column). */
+    * lang column) → a local (lang, topic, rnk, term, score) DataFrame,
+    * ordered, scores rounded to 6 dp. */
   def topTermsPerTopic(spark: org.apache.spark.sql.SparkSession, model: PolyLdaModel,
       terms: Dataset[graft.model.PolyTermEntry], k: Int): DataFrame =
-    topTermsFromRows(EmCore.betaRows(spark, PolyDocs.keys, model.beta.toSeq.flatMap { case (l, m) =>
-      m.map { case (w, arr) => (l, w, arr) } }), terms, k)
+    topTerms(model.beta.view.flatMap { case (l, m) =>
+      m.view.flatMap { case (w, arr) => arr.indices.map(t => (l, t + 1, w, arr(t))) }
+    }, terms, k)
 
   /** Same over (lang, topic, termId, elogbeta) rows — e.g. a checkpointed
-    * beta-<i> snapshot. Scores are rounded to 6 dp. */
+    * beta-<i> snapshot, collected. */
   def topTermsFromRows(beta: DataFrame,
-      terms: Dataset[graft.model.PolyTermEntry], k: Int): DataFrame =
-    Display.rankTerms(beta, terms.toDF(), PolyDocs.keys, k)
-      .select(col("lang"), col("topic"), col("rank").as("rnk"), col("term"),
-        round(col("score"), 6).as("score"))
+      terms: Dataset[graft.model.PolyTermEntry], k: Int): DataFrame = {
+    import beta.sparkSession.implicits._
+    topTerms(beta.select($"lang", $"topic", $"termId", $"elogbeta").as[(Int, Int, Int, Double)].collect(),
+      terms, k)
+  }
+
+  private def topTerms(beta: Iterable[(Int, Int, Int, Double)],
+      terms: Dataset[graft.model.PolyTermEntry], k: Int): DataFrame = {
+    import terms.sparkSession.implicits._
+    Display.rankTerms(beta, terms.toDF(), PolyDocs.keys, k).toDF("lang", "topic", "rnk", "term", "score")
+      .withColumn("score", round($"score", 6))
+  }
 }

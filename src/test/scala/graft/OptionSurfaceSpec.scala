@@ -21,10 +21,6 @@ class OptionSurfaceSpec extends AnyFunSuite {
     ("ParseCorpus.Config", "corpus/ParseCorpus.scala", ParseCorpus.Config()),
     ("PolyParseCorpus.Config", "polylda/PolyParseCorpus.scala", PolyParseCorpus.Config(numLanguages = 1)))
 
-  /** `dictBroadcastMaxTerms` is a test seam: only PlanShapeSpec lowers it,
-    * to pin the shuffle-join plan a 20M-term dictionary would get. */
-  private val testSeams = Set("ParseCorpus.Config.dictBroadcastMaxTerms")
-
   private def sources: Seq[Path] = Seq("src/main/scala", "ldabench/src/main/scala").flatMap { dir =>
     Files.walk(Paths.get(dir)).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
   }
@@ -41,8 +37,8 @@ class OptionSurfaceSpec extends AnyFunSuite {
   test("every trainer and parser option is set by a caller outside its own file (source gate)") {
     val files = sources.map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
     val unset = configs.flatMap { case (config, definedIn, instance) =>
-      instance.productElementNames.toSeq.map(f => (s"$config.$f", f)).filterNot { case (name, f) =>
-        testSeams(name) || files.exists { case (file, text) =>
+      instance.productElementNames.toSeq.map(f => (s"$config.$f", f)).filterNot { case (_, f) =>
+        files.exists { case (file, text) =>
           file != Paths.get("src/main/scala/graft", definedIn) && text.linesIterator.exists(assigns(f))
         }
       }.map(_._1)

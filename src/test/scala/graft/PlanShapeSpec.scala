@@ -2,6 +2,8 @@ package graft
 
 import graft.queries.Registry
 
+import scala.jdk.CollectionConverters._
+
 /** Physical-plan pins for the headline relational queries: filters reach
   * the parquet scan, scans read only referenced columns, small dimensions
   * broadcast. A regression in any of these silently multiplies scan bytes
@@ -150,48 +152,50 @@ class PlanShapeSpec extends SparkSpec {
     assert(!plan.contains("Join"), plan)
   }
 
-  test("dictionary encode degrades to a shuffle join above the broadcast cap") {
+  test("a raw-lines parse runs at most 6 jobs and no exchange carries tokens") {
     import graft.corpus.ParseCorpus
-    import org.apache.spark.sql.functions.{array, col}
-    val docs = Registry.t(spark, dir, "documents")
-      .selectExpr("doc_id as docId", "cast(doc_id as string) as title", "text")
-    // pin the planner: no size-based auto-broadcast and no AQE runtime
-    // rewrite, so the ONLY source of a broadcast is ParseCorpus's hint —
-    // exactly what a 20M+ term vocabulary sees (its size estimate is far
-    // past any auto threshold)
-    val saved = Seq("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.enabled")
-      .map(k => k -> spark.conf.get(k))
+    import graft.polylda.PolyParseCorpus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+    import org.apache.spark.sql.graftshim.shim
+    // 400 lines of 50 tokens over 100 words per language: a token-level
+    // exchange writes at least the distinct (document, term) pairs, about
+    // 16,000 here, while the line sort writes 400 records and the dictionary
+    // reduce at most 100 terms + 3 counters per language and partition
+    val rnd = new scala.util.Random(11)
+    def text(prefix: String) = Seq.fill(50)(s"$prefix${rnd.nextInt(100)}").mkString(" ")
+    val tokens = 400 * 50
+    val dir = java.nio.file.Files.createTempDirectory("graft_parse_jobs_")
+    val vanillaFile = java.nio.file.Files.write(dir.resolve("vanilla.txt"),
+      (0 until 400).map(i => s"d$i\t${text("w")}").asJava)
+    val polyFile = java.nio.file.Files.write(dir.resolve("poly.txt"),
+      (0 until 400).map(i => s"d$i\t${text("w")}\t${if (i % 7 == 0) "null" else text("m")}").asJava)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val shuffleRecords = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        shuffleRecords.add(e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    def measured(parse: => Long): (Long, Int, Long) = {
+      shim.drainListenerBus(spark, 10000)
+      jobs.set(0)
+      shuffleRecords.clear()
+      val docs = parse
+      shim.drainListenerBus(spark, 10000)
+      (docs, jobs.get, shuffleRecords.asScala.max)
+    }
+    spark.sparkContext.addSparkListener(listener)
     try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val hintedRun = ParseCorpus.run(docs)
-      val hinted = hintedRun.docs.queryExecution.executedPlan.toString
-      assert(hinted.contains("BroadcastHashJoin"), hinted)
-      val a = hintedRun.docs.collect().map(_.toString).sorted
-      // drop the hinted run's cache entry: cache matching ignores join
-      // hints, so the hint-free fallback plan would otherwise resolve to
-      // this (broadcast-built) materialization instead of planning fresh
-      hintedRun.docs.unpersist(blocking = true)
-      val fallback = ParseCorpus.run(docs,
-        ParseCorpus.Config(dictBroadcastMaxTerms = 0L))
-      val plan = fallback.docs.queryExecution.executedPlan.toString
-      // the TERM join must no longer broadcast (rankByIndex's per-partition
-      // offset join keeps its intentional one-row-per-partition broadcast)
-      assert(!plan.contains("BroadcastHashJoin [term"), plan)
-      assert(plan.contains("SortMergeJoin [term") || plan.contains("ShuffledHashJoin [term"),
-        plan)
-      // and the fallback path produces the identical corpus
-      val b = fallback.docs.collect().map(_.toString).sorted
-      assert(a.toSeq == b.toSeq)
-      // the polylingual parse runs the same core: below the cap its
-      // dictionary join on (term, lang) broadcasts too
-      val poly = graft.polylda.PolyParseCorpus.run(docs.select(col("docId"), col("title"),
-        array(col("text"), col("text")).as("texts")),
-        graft.polylda.PolyParseCorpus.Config(numLanguages = 2))
-      val polyPlan = poly.docs.queryExecution.executedPlan.toString
-      assert("BroadcastHashJoin \\[term#\\d+, lang#\\d+\\]".r.findFirstIn(polyPlan).isDefined,
-        polyPlan)
-    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+      for ((name, run) <- Seq(
+          "vanilla" -> (() => ParseCorpus.fromRawLines(spark, vanillaFile.toString).stats.numDocs),
+          "poly" -> (() => PolyParseCorpus.fromRawLines(spark, polyFile.toString,
+            PolyParseCorpus.Config(numLanguages = 2)).docsPerLanguage(0)))) {
+        val (docs, n, records) = measured(run())
+        assert(docs == 400, name)
+        assert(n <= 6, s"$name: $n jobs")
+        assert(records < tokens / 10, s"$name: a stage wrote $records shuffle records for $tokens tokens")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("bpe/unigram encode is map-only: scan + mapPartitions, no exchange") {

@@ -63,6 +63,11 @@ class PolyldaSpec extends SparkSpec {
     assert(docs(3L).totalTokens == 4) // lang-0 tokens only
     // same multiset of counts in both languages for translated docs
     assert(docs(0L).counts(0).values.toSeq.sorted == docs(0L).counts(1).values.toSeq.sorted)
+    // both maps iterate the languages ascending, whatever the scheduling
+    docs.values.foreach { d =>
+      assert(d.counts.keys.toSeq == d.counts.keys.toSeq.sorted, s"doc ${d.docId}: ${d.counts.keys}")
+      assert(d.numTokens.keys.toSeq == d.counts.keys.toSeq, s"doc ${d.docId}: ${d.numTokens.keys}")
+    }
   }
 
   test("tied-gamma training aligns topics across languages") {
