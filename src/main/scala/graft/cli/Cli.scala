@@ -204,11 +204,11 @@ object DisplayTopicCli {
     import spark.implicits._
     import graft.model.{PolyTermEntry, TermEntry}
     val topK = a.getOrElse("top", "10").toInt
+    val beta = LdaCheckpoint.loadBeta(spark, a("model"), a("index").toInt)
+    // both rankings return their rows ordered by (lang…, topic, rank)
     if (a.getOrElse("languages", "1").toInt > 1) {
-      val beta = LdaCheckpoint.loadBeta(spark, a("model"), a("index").toInt)
       val terms = spark.read.parquet(s"${a("corpus")}/term").as[PolyTermEntry]
       graft.polylda.PolyTrainer.topTermsFromRows(beta, terms, topK)
-        .orderBy($"lang", $"topic", $"rnk")
         .collect().groupBy(r => (r.getAs[Int]("lang"), r.getAs[Int]("topic")))
         .toSeq.sortBy(_._1)
         .foreach { case ((lang, topic), rows) =>
@@ -216,13 +216,11 @@ object DisplayTopicCli {
           rows.foreach(r => println(s"${r.getAs[String]("term")}\t\t${r.getAs[Double]("score")}"))
         }
     } else {
-      val beta = LdaCheckpoint.loadBeta(spark, a("model"), a("index").toInt)
       val terms = spark.read.parquet(s"${a("corpus")}/term").as[TermEntry]
-      val top = Display.topTermsPerTopic(beta, terms, topK)
       // stdout parity with the reference's DisplayTopic
       // (DisplayTopic.java:114-137, README.md:371-381): a '=' banner per
       // topic, then one "term\t\tscore" line per ranked term
-      top.orderBy($"topic", $"rank").collect().groupBy(_.getAs[Int]("topic")).toSeq.sortBy(_._1)
+      Display.topTermsPerTopic(beta, terms, topK).collect().groupBy(_.getAs[Int]("topic")).toSeq.sortBy(_._1)
         .foreach { case (topic, rows) =>
           println("==============================")
           println(s"Top ranked $topK terms for Topic $topic")

@@ -46,7 +46,8 @@ class ParseEquivalenceSpec extends SparkSpec {
   }
 
   private def write(lines: Seq[String]): String = {
-    val f = Files.createTempDirectory("graft_equiv_").resolve("corpus.txt")
+    val f = Files.createTempFile("graft_equiv_", ".txt")
+    f.toFile.deleteOnExit()
     Files.writeString(f, lines.mkString("\n")).toString
   }
 

@@ -164,11 +164,13 @@ class PlanShapeSpec extends SparkSpec {
     val rnd = new scala.util.Random(11)
     def text(prefix: String) = Seq.fill(50)(s"$prefix${rnd.nextInt(100)}").mkString(" ")
     val tokens = 400 * 50
-    val dir = java.nio.file.Files.createTempDirectory("graft_parse_jobs_")
-    val vanillaFile = java.nio.file.Files.write(dir.resolve("vanilla.txt"),
-      (0 until 400).map(i => s"d$i\t${text("w")}").asJava)
-    val polyFile = java.nio.file.Files.write(dir.resolve("poly.txt"),
-      (0 until 400).map(i => s"d$i\t${text("w")}\t${if (i % 7 == 0) "null" else text("m")}").asJava)
+    def write(lines: Seq[String]) = {
+      val f = java.nio.file.Files.createTempFile("graft_parse_jobs_", ".txt")
+      f.toFile.deleteOnExit()
+      java.nio.file.Files.write(f, lines.asJava)
+    }
+    val vanillaFile = write((0 until 400).map(i => s"d$i\t${text("w")}"))
+    val polyFile = write((0 until 400).map(i => s"d$i\t${text("w")}\t${if (i % 7 == 0) "null" else text("m")}"))
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val shuffleRecords = new java.util.concurrent.ConcurrentLinkedQueue[Long]
     val listener = new SparkListener {
