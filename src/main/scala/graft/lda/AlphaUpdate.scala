@@ -31,7 +31,7 @@ import graft.functions.GammaFuncs.{digamma, trigamma}
 object AlphaUpdate {
 
   // constants from reference cc/mrlda/Settings.java:60-63 (note: float-typed there)
-  private val ConvergeThreshold: Double = 0.000001f.toDouble
+  private[graft] val ConvergeThreshold: Double = 0.000001f.toDouble
   private val MaxIterations = 1000
   private val MaxDecay = 10
   private val DecayFactor: Double = 0.8f.toDouble

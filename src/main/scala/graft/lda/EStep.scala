@@ -1,11 +1,10 @@
 package graft.lda
 
 import graft.functions.GammaFuncs.logAdd
-import graft.lda.EmCore.{DocRecord, DocShape, Join, Keys, Lookup, PackedBeta, Sweeps}
+import graft.lda.EmCore.{DocRecord, DocShape, Keys, Lookup, PackedBeta, Sweeps}
 import graft.model.Doc
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
-import org.apache.spark.sql.functions.{col, lit}
 
 /**
  * One row of vanilla E-step output. Two shapes share the schema (the
@@ -34,11 +33,9 @@ case class EStepRow(
 /** Vanilla LDA's documents and E-step rows as the EM core sees them: one
   * language, lang 0, keyed by `termId` alone. */
 private[graft] object VanillaDocs extends DocShape[Doc, EStepRow](
-    Keys(Nil), Seq("docId", "counts", "numTokens", "gamma"), "numTokens") {
+    Keys(Nil), Seq("docId", "counts", "numTokens", "gamma")) {
   lazy val docEncoder: Encoder[Doc] = Encoders.product[Doc]
   lazy val rowEncoder: Encoder[EStepRow] = Encoders.product[EStepRow]
-  def langCountsColumns(docs: DataFrame): DataFrame =
-    docs.select(col("docId"), lit(0).as("lang"), col("counts").as("langCounts"))
   def record(d: Doc): DocRecord = {
     val (keys, cnt) = EmCore.terms(Seq(0 -> d.counts))
     DocRecord(d.docId, d.numTokens, keys, cnt, Array.emptyLongArray, d.gamma.orNull)
@@ -130,20 +127,24 @@ object EStep {
 
 /**
  * The vanilla E-step with beta as a distributed `(termId, elogbeta
- * array<double>)` table: the scale path for models too large to broadcast
+ * array<double>)` table: the lookup of models too large to broadcast
  * (SURVEY.md §7.5 — at V=1M, K=100 the K×V beta is ~800 MB; the reference
  * hits the same wall loading whole beta per mapper, DocumentMapper.java:116).
- * The corpus is exploded to (doc, term) rows, shuffle-joined with beta on
- * termId and regrouped per doc; the kernel is [[EmCore.estep]]'s. Cost: two
- * extra shuffles per iteration (join + regroup).
+ * Each corpus partition gets a slice of beta, the rows of its own terms
+ * ([[EmCore.Slices]]), and runs [[EmCore.estep]]'s kernel.
  */
 object EStepShuffle {
 
-  /** The corpus exploded to its beta-join shape: (docId, termId, cnt),
-    * hash-partitioned by termId. EM-loop-invariant: pass it back via
-    * `run(preExploded = ...)` so the corpus-nnz-sized exchange happens once
-    * per training run instead of once per iteration. */
-  def explodeDocs(docs: Dataset[Doc]): DataFrame = EmCore.explodeDocs(docs.toDF(), VanillaDocs)
+  /** The corpus's (termId, partition) routing: each partition of `docs`
+    * and the distinct terms of its documents. EM-loop-invariant: pass it
+    * back via `run(preExploded = ...)` so it is built once per training
+    * run instead of once per iteration. */
+  def explodeDocs(docs: Dataset[Doc]): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    EmCore.routing(docs.rdd.map(VanillaDocs.record(_).keys)).map { case (w, p) => (EmCore.termOf(w), p) }
+      .toDF("termId", "partition")
+  }
 
   /** @param beta (termId INT, elogbeta ARRAY<DOUBLE> length K) */
   def run(
@@ -155,7 +156,15 @@ object EStepShuffle {
       randomStartGamma: Boolean = false,
       learning: Boolean = true,
       seed: Long = 42L,
-      preExploded: Option[DataFrame] = None): Dataset[EStepRow] =
-    EmCore.estep(docs, VanillaDocs, alphaBc, Join(beta, preExploded), _ => numTerms,
+      preExploded: Option[DataFrame] = None): Dataset[EStepRow] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val routing = preExploded.getOrElse(explodeDocs(docs)).select($"termId", $"partition").as[(Int, Int)].rdd
+      .map { case (w, p) => (EmCore.key(0, w), p) }
+    val rows = beta.select($"termId", $"elogbeta").as[(Int, Array[Double])].rdd
+      .map { case (w, arr) => (EmCore.key(0, w), arr) }
+    EmCore.estep(docs, VanillaDocs, alphaBc,
+      EmCore.slicesFor(routing, docs.rdd.getNumPartitions, rows, alphaBc.value.length), _ => numTerms,
       Sweeps(localIterations, randomStartGamma, learning, seed))
+  }
 }

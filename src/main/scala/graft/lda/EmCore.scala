@@ -3,22 +3,15 @@ package graft.lda
 import graft.functions.GammaFuncs.{digamma => dg, logAdd, logGamma}
 import graft.functions.{LogSumExpAgg, LseBuf}
 import graft.util.Ckpt._
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, Partitioner, SparkContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
-
-/** One joined term of a document on the shuffle path (lang, termId) →
-  * its count and E[log β] row (None for a term the model has not seen). */
-private[graft] case class TermBeta(lang: Int, termId: Int, cnt: Int, elogbeta: Option[Array[Double]])
-/** One document regrouped with its terms' beta rows (shuffle E-step input). */
-private[graft] case class DocWithBeta(
-    docId: Long, tokens: Long, gamma: Option[Array[Double]], terms: Seq[TermBeta])
 
 /**
  * The variational EM core shared by vanilla and polylingual LDA. Mr.LDA's
@@ -34,27 +27,20 @@ private[graft] case class DocWithBeta(
  *    (polylingual);
  *  - [[Model]]: the alpha init, symmetric-alpha update and vocabulary sizes.
  *
- * Broadcast vs shuffle is the [[BetaPath]] that [[fit]] picks once: a
- * broadcast [[PackedBeta]] resolved once per partition against the
- * corpus's primitive [[DocBlock]]s, or the corpus exploded and joined with
- * a distributed beta table ([[BetaSupply]]), feeding the one kernel; and
- * one per-topic M-step tail ([[normalizeTopic]]), run on the driver
- * ([[betaOf]]) or in a keyed reducer ([[topicTail]]).
+ * One EM iteration serves every model size: each corpus [[DocBlock]]'s
+ * E-step ([[Kernel.fitBlock]]) against the β rows of its own keys, and one
+ * M-step whose reducers fold λ, smooth it and finish β = ψ(λ) − ψ(Σλ)
+ * ([[tail]], [[normalizers]], [[finishBeta]]). Broadcast vs shuffle is only how
+ * a block looks its rows up ([[BetaSupply]]): a broadcast [[PackedBeta]]
+ * for a small model, or, for a large one, a slice per corpus partition
+ * routed from the reducers ([[Slices]]; model slicing, Smola &
+ * Narayanamurthy, VLDB 2010). [[fit]] picks the lookup once.
  */
 private[graft] object EmCore {
 
   def key(lang: Int, termId: Int): Long = (lang.toLong << 32) | (termId.toLong & 0xFFFFFFFFL)
   def langOf(key: Long): Int = (key >>> 32).toInt
   def termOf(key: Long): Int = key.toInt
-
-  /** Flush threshold in (topic, term) entries of the streamed kernel's
-    * partition combiner ([[Kernel.run]], the table path): the reference
-    * flushes its in-mapper combiner under memory pressure
-    * (DocumentMapper.java:263-313, Settings.java:76); the downstream fold
-    * re-combines flush chunks. A [[DocBlock]]'s combiner holds K values per
-    * distinct key of the partition, no more than the broadcast model, and
-    * never flushes. */
-  private val PhiFlushEntries = 1 << 20
 
   /** Shifted exponent below which the E-step's linear sweep takes
     * exp(E[log β_wk] − m_w) or exp(ψ(γ_k) − max ψ(γ)) as exactly 0. Every
@@ -99,12 +85,9 @@ private[graft] object EmCore {
   abstract class DocShape[D, R](
       val keys: Keys,
       /** gamma-<i> snapshot columns: the full gamma-annotated document */
-      val docCols: Seq[String],
-      val tokensCol: String) extends Serializable {
+      val docCols: Seq[String]) extends Serializable {
     def docEncoder: Encoder[D]
     def rowEncoder: Encoder[R]
-    /** (docId, lang, langCounts) rows: the per-language count maps */
-    def langCountsColumns(docs: DataFrame): DataFrame
     /** the document as primitive arrays, its terms in sweep order
       * ([[terms]]) */
     def record(d: D): DocRecord
@@ -116,8 +99,8 @@ private[graft] object EmCore {
   }
 
   /** How the M-step smooths one folded log λ before normalizing:
-    * (topic, termId, log λ) → smoothed log λ. Both beta paths apply it in
-    * [[topicTail]]. */
+    * (topic, termId, log λ) → smoothed log λ, applied by the M-step's
+    * [[tail]]. */
   type Smoothing = (Int, Int, Double) => Double
 
   object Smoothing {
@@ -189,15 +172,30 @@ private[graft] object EmCore {
     }
   }
 
-  /** Where each task gets its terms' E[log β] rows. */
-  sealed trait BetaSupply
-  /** A broadcast model; a term it lacks takes the seeded random init. */
-  final case class Lookup(beta: Broadcast[PackedBeta]) extends BetaSupply
-  /** Beta stays a distributed (key columns…, elogbeta ARRAY<DOUBLE>[K])
-    * table, joined to the exploded corpus (`exploded`, or [[explodeDocs]]
-    * of the docs when None) — the scale path for models too large to
-    * broadcast: each task holds only the rows its documents reference. */
-  final case class Join(table: DataFrame, exploded: Option[DataFrame]) extends BetaSupply
+  /** Where each corpus partition gets the E[log β] rows of its keys: a
+    * term the rows lack takes the seeded random init. */
+  sealed trait BetaSupply {
+    /** One lookup per partition of a corpus of `parts` partitions, which
+      * the E-step zips with it. Zipped, not captured by the E-step's
+      * closure: a checkpointed zip drops its parents and its function, so
+      * later jobs over its output do not serialize the model. */
+    def per(sc: SparkContext, parts: Int): RDD[PackedBeta]
+  }
+  /** A broadcast model (the reference's DistributedCache lookup,
+    * DocumentMapper.java:116): every partition reads the whole model. */
+  final case class Lookup(beta: Broadcast[PackedBeta]) extends BetaSupply {
+    def per(sc: SparkContext, parts: Int): RDD[PackedBeta] =
+      sc.parallelize(0 until parts, parts).map(_ => beta.value)
+  }
+  /** One slice of the model per partition ([[slicesFor]]), holding the
+    * rows of that partition's keys only: the lookup of a model too large
+    * to broadcast. */
+  final case class Slices(slices: RDD[PackedBeta]) extends BetaSupply {
+    def per(sc: SparkContext, parts: Int): RDD[PackedBeta] = {
+      require(slices.getNumPartitions == parts, s"${slices.getNumPartitions} slices for $parts partitions")
+      slices
+    }
+  }
 
   /** One document as primitive arrays: its packed keys and counts in sweep
     * order, its token total, the model's own fields the core does not read
@@ -250,14 +248,10 @@ private[graft] object EmCore {
   private[graft] final class Resolved(val rows: Array[Array[Double]], val max: Array[Double],
       val exp: Array[Double], val phi: Array[Double])
 
-  /** A document flattened for the fixed point, in sweep order: its keys,
-    * counts and E[log β] rows (null for a term the model has not seen). A
-    * [[DocBlock]]'s document instead names each term by its `slot` in the
-    * partition's [[Resolved]] `table`, and has no keys. */
-  private[graft] final class Flat(
-      val keys: Array[Long], val cnt: Array[Int], val elogbeta: Array[Array[Double]],
-      val tokens: Long, val gamma: Option[Array[Double]],
-      val slot: Array[Int] = null, val table: Resolved = null)
+  /** A block's document for the fixed point, in sweep order: its counts
+    * and each term's `slot` in the partition's [[Resolved]] `table`. */
+  private final class Flat(val cnt: Array[Int], val slot: Array[Int], val table: Resolved,
+      val tokens: Long, val gamma: Array[Double])
 
   /** One [[DocBlock]]'s E-step: the new gammas and each document's LL, in
     * block order, and — when learning — the log φ of each distinct key (K
@@ -269,19 +263,17 @@ private[graft] object EmCore {
    * cc/mrlda/DocumentMapper.java:180-260, polylda/DocumentMapper.java:185-305):
    * per document, the gamma/phi fixed point over every language's terms
    * against that language's beta, the document log-likelihood, and the
-   * partition-level phi combiner — (lang, termId) → K-length log-space phi
-   * sums (slot i ↔ topic i+1), the reference's in-mapper combiner
+   * partition-level phi combiner — K log-space phi sums per distinct key of
+   * the block (slot i ↔ topic i+1), the reference's in-mapper combiner
    * (DocumentMapper.java:263-339) generalized to whole-partition combining.
    */
-  private[graft] final class Kernel[R](alpha: Array[Double], sweeps: Sweeps, vocab: Int => Int,
-      phiRow: (Long, Array[Double]) => R) {
+  private[graft] final class Kernel(alpha: Array[Double], sweeps: Sweeps, vocab: Int => Int) {
     import sweeps._
     private val k = alpha.length
     // L_α = lnΓ(Σα) − Σ lnΓ(α_k), added once per document
     // (reference DocumentMapper.java:121-126)
     private val likelihoodAlpha = logGamma(alpha.sum) - alpha.map(logGamma).sum
     private val unseen = new java.util.HashMap[Long, Array[Double]]()
-    private val phiAcc = new java.util.HashMap[Long, Array[Double]]()
 
     private def anchor(v: Double, dp: Int): Double =
       if (dp > 0) BigDecimal(v).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble else v
@@ -289,20 +281,6 @@ private[graft] object EmCore {
     /** Random init for a term absent from the model, cached per partition. */
     private def fallback(key: Long): Array[Double] = unseen.computeIfAbsent(key, w =>
       EStep.randomElogBeta(k, termOf(w), vocab(langOf(w)), seed ^ (langOf(w).toLong << 17)))
-
-    private def drain(): Vector[R] = {
-      val rows = phiAcc.asScala.iterator.map { case (key, arr) => phiRow(key, arr) }.toVector
-      phiAcc.clear()
-      rows
-    }
-
-    /** Doc rows in input order, each partition's phi rows after them (`++`
-      * drains the combiner once the documents are done). */
-    def run[D](docs: Iterator[(D, Flat)], docRow: (D, Array[Double], Double) => R): Iterator[R] =
-      docs.flatMap { case (d, f) =>
-        val row = fitDoc(f, docRow(d, _, _))
-        if (phiAcc.size.toLong * k > PhiFlushEntries) row +: drain() else Vector(row)
-      } ++ drain()
 
     private def resolve(keys: Array[Long], beta: PackedBeta): Resolved = {
       val rows = keys.map { w => val i = beta.indexOf(w); if (i < 0) fallback(w) else beta.row(i) }
@@ -317,9 +295,8 @@ private[graft] object EmCore {
       val table = resolve(b.distinct, beta)
       val gammas = new Array[Double](b.size * k)
       val ll = Array.tabulate(b.size) { d =>
-        val slot = b.slot.slice(b.offsets(d), b.offsets(d + 1))
-        fitDoc(new Flat(null, b.cnt.slice(b.offsets(d), b.offsets(d + 1)), slot.map(table.rows),
-          b.tokens(d), Some(b.gammaOf(gamma, d)), slot, table),
+        fitDoc(new Flat(b.cnt.slice(b.offsets(d), b.offsets(d + 1)),
+          b.slot.slice(b.offsets(d), b.offsets(d + 1)), table, b.tokens(d), b.gammaOf(gamma, d)),
           (g, l) => { System.arraycopy(g, 0, gammas, d * k, k); l })
       }
       new BlockFit(gammas, ll, table.phi)
@@ -356,38 +333,31 @@ private[graft] object EmCore {
      *
      * The sweep and the row shift are methods of their own, called many
      * times per document, so the JIT compiles them early: as loops inside a
-     * once-per-document method they ran two to four times slower. A block's
+     * once-per-document method they ran two to four times slower. A
      * document copies its shifted rows from the partition's [[Resolved]]
-     * table, which holds the same values.
+     * table.
      */
     private final class DocFit(f: Flat) {
       private val nnz = f.cnt.length
       private val cnt = f.cnt
-      private val lb = f.elogbeta
-      // sweep-invariant, resolved once: each term's E[log β] row, its
-      // maximum m_w, ln(count) and eb_wk (term-major, at w·K + k)
+      private val lb = f.slot.map(f.table.rows)
+      // sweep-invariant, resolved once: each term's maximum m_w, ln(count)
+      // and eb_wk (term-major, at w·K + k)
       private val rowMax = new Array[Double](nnz)
       private val logCnt = new Array[Double](nnz)
       private val expBeta = new Array[Double](nnz * k)
       locally {
         var j = 0
         while (j < nnz) {
-          if (f.table != null) {
-            rowMax(j) = f.table.max(f.slot(j))
-            System.arraycopy(f.table.exp, f.slot(j) * k, expBeta, j * k, k)
-          } else {
-            if (lb(j) == null) lb(j) = fallback(f.keys(j))
-            rowMax(j) = shiftRow(lb(j), expBeta, j * k)
-          }
+          rowMax(j) = f.table.max(f.slot(j))
+          System.arraycopy(f.table.exp, f.slot(j) * k, expBeta, j * k, k)
           logCnt(j) = math.log(cnt(j).toDouble)
           j += 1
         }
       }
 
-      val gamma: Array[Double] = f.gamma match {
-        case Some(g) if g.length == k && !randomStartGamma => g.clone()
-        case _ => Array.tabulate(k)(i => alpha(i) + f.tokens.toDouble / k)
-      }
+      val gamma: Array[Double] =
+        if (randomStartGamma) Array.tabulate(k)(i => alpha(i) + f.tokens.toDouble / k) else f.gamma.clone()
       // ψ(γ) of the latest sweep, its maximum and ed_k
       private val dgamma = new Array[Double](k)
       private var maxDg = 0.0
@@ -458,9 +428,8 @@ private[graft] object EmCore {
           if (learning) {
             i = 0
             while (i < k) { scratch(i) = anchor(scratch(i), anchorPhiDp); i += 1 }
-            val sums = if (f.table != null) f.table.phi
-              else phiAcc.computeIfAbsent(f.keys(w), _ => Array.fill(k)(Double.NegativeInfinity))
-            val base = if (f.table != null) f.slot(w) * k else 0
+            val sums = f.table.phi
+            val base = f.slot(w) * k
             i = 0
             while (i < k) { sums(base + i) = logAdd(sums(base + i), scratch(i)); i += 1 }
           }
@@ -494,82 +463,95 @@ private[graft] object EmCore {
     }
   }
 
-  /** The corpus exploded to its beta-join shape (docId, key columns…, cnt),
-    * hash-partitioned by the join key. It depends only on the counts, so it
-    * is EM-loop-invariant: [[fit]] materializes it once per training run.
-    * explode_outer + the -1 sentinel keep documents with no terms (or no
-    * language slots) in the pipeline; term ids are 1-based, so -1 is free. */
-  def explodeDocs[D, R](docs: DataFrame, shape: DocShape[D, R]): DataFrame =
-    shape.langCountsColumns(docs)
-      .select(col("docId"), col("lang"), explode_outer(col("langCounts")).as(Seq("termId", "cnt")))
-      .select(col("docId"),
-        coalesce(col("lang"), lit(-1)).as("lang"),
-        coalesce(col("termId"), lit(-1)).as("termId"),
-        coalesce(col("cnt"), lit(0)).as("cnt"))
-      .select((col("docId") +: shape.keys.term.map(col)) :+ col("cnt"): _*)
-      .repartition(shape.keys.term.map(col): _*)
-
-  /** One E-step over `docs`: doc rows (updated gamma, document LL) and,
-    * when learning, the partition-combined phi rows. */
+  /** One E-step over `docs`, each partition fitted as one [[DocBlock]] in
+    * the caller's partitions, against the rows `beta` supplies it: doc rows
+    * (updated gamma, document LL) in record order and, when learning, the
+    * block's phi rows, one per distinct key, keys ascending. */
   def estep[D, R](docs: Dataset[D], shape: DocShape[D, R], alphaBc: Broadcast[Array[Double]],
       beta: BetaSupply, vocab: Int => Int, sweeps: Sweeps): Dataset[R] = {
-    val phiRow = shape.phiRow _
-    val docRow = shape.docRow _
-    beta match {
-      case Lookup(bc) =>
-        docs.mapPartitions { it =>
-          val alpha = alphaBc.value
-          val k = alpha.length
-          val b = DocBlock(it.map(shape.record), alpha)
-          val fit = new Kernel(alpha, sweeps, vocab, phiRow).fitBlock(b, b.gamma, bc.value)
-          Iterator.tabulate(b.size)(d => docRow(b.record(d), b.gammaOf(fit.gamma, d), fit.ll(d))) ++
-            Option(fit.logphi).iterator.flatMap(lp =>
-              b.distinct.indices.iterator.map(s => phiRow(b.distinct(s), lp.slice(s * k, (s + 1) * k))))
-        }(shape.rowEncoder)
-      case Join(table, exploded) =>
-        val spark = docs.sparkSession
-        import spark.implicits._
-        val keys = shape.keys
-        // Only (docId, key, cnt) rides the term-keyed shuffle; gamma (K
-        // doubles) and the token total join back per DOC — on the exploded
-        // rows they would multiply the gamma payload by nnz across two
-        // shuffles. Left join: unseen terms take the random init.
-        val bundles = exploded.getOrElse(explodeDocs(docs.toDF(), shape))
-          .join(table.select(keys.term.map(col) :+ $"elogbeta": _*), keys.term, "left")
-          .groupBy($"docId")
-          .agg(collect_list(struct(keys.lang.as("lang"), $"termId", $"cnt", $"elogbeta")).as("terms"))
-        // bundles is already hash-partitioned by docId from the agg, so
-        // this join only shuffles the slim (docId, tokens, gamma) side.
-        // Documents are swept in docId order within each partition: the
-        // partition's phi fold is order-dependent, and the join strategy
-        // (and so its output order) is picked by AQE at run time
-        val grouped = docs.toDF()
-          .select($"docId", col(shape.tokensCol).as("tokens"), $"gamma")
-          .join(bundles, Seq("docId"))
-          .select($"docId", $"tokens", $"gamma", $"terms")
-          .sortWithinPartitions($"docId")
-          .as[DocWithBeta]
-        grouped.mapPartitions { it =>
-          new Kernel(alphaBc.value, sweeps, vocab, phiRow).run(
-            it.map { g =>
-              // sorted: collect_list order is task-scheduling-dependent and
-              // the log-space folds are not FP-associative
-              val terms = g.terms.filter(t => t.lang >= 0 && t.termId >= 0)
-                .sortBy(t => key(t.lang, t.termId))
-              val (keys, cnt) = (terms.map(t => key(t.lang, t.termId)).toArray, terms.map(_.cnt).toArray)
-              (DocRecord(g.docId, g.tokens, keys, cnt, Array.emptyLongArray, null),
-                new Flat(keys, cnt, terms.map(_.elogbeta.orNull).toArray, g.tokens, g.gamma))
-            },
-            docRow)
-        }(shape.rowEncoder)
+    implicit val tag: ClassTag[R] = shape.rowEncoder.clsTag
+    val (docRow, phiRow) = (shape.docRow _, shape.phiRow _)
+    val records = docs.rdd.map(shape.record)
+    val lookups = beta.per(records.sparkContext, records.getNumPartitions)
+    docs.sparkSession.createDataset(records.zipPartitions(lookups) { (rs, ls) =>
+      val alpha = alphaBc.value
+      val k = alpha.length
+      val b = DocBlock(rs, alpha)
+      val fit = new Kernel(alpha, sweeps, vocab).fitBlock(b, b.gamma, ls.next())
+      Iterator.tabulate(b.size)(d => docRow(b.record(d), b.gammaOf(fit.gamma, d), fit.ll(d))) ++
+        Option(fit.logphi).iterator.flatMap(lp =>
+          b.distinct.indices.iterator.map(s => phiRow(b.distinct(s), lp.slice(s * k, (s + 1) * k))))
+    })(shape.rowEncoder)
+  }
+
+  // ---- model slicing ----
+
+  /** (key, partition) for each distinct key of each partition, given the
+    * keys of its documents: the routing [[Slices]] send β rows by. It
+    * depends only on the counts, so [[fit]] builds it once per run. */
+  def routing(keys: RDD[Array[Long]]): RDD[(Long, Int)] =
+    keys.mapPartitionsWithIndex((p, ks) => ks.flatMap(_.iterator).distinct.map(_ -> p))
+
+  /** One reducer's share of the routing table: its keys ascending, and for
+    * key j the corpus partitions `parts(offsets(j) until offsets(j + 1))`
+    * that hold it. */
+  private final class Route(val keys: Array[Long], val offsets: Array[Int], val parts: Array[Int])
+      extends Serializable
+
+  /** The routing hashed to the M-step's reducers: reducer r holds the
+    * route of each key it folds. */
+  private def routes(routing: RDD[(Long, Int)], reducers: Partitioner): RDD[Route] =
+    routing.partitionBy(reducers).mapPartitions { it =>
+      val byKey = it.toArray.groupBy(_._1)
+      val keys = byKey.keys.toArray
+      java.util.Arrays.sort(keys)
+      val parts = keys.map(w => byKey(w).map(_._2))
+      Iterator(new Route(keys, parts.scanLeft(0)(_ + _.length), parts.flatten))
     }
+
+  /**
+   * β held by the reducers — one [[PackedBeta]] run of its keys per
+   * reducer, co-partitioned with `route` — sent to the `parts` corpus
+   * partitions that hold each key: one slice per partition, the rows of
+   * its own keys. A key β lacks is left out, so the E-step takes its
+   * random init, as with a broadcast model that lacks it.
+   */
+  private def sliced(beta: RDD[PackedBeta], route: RDD[Route], parts: Int, k: Int): RDD[PackedBeta] =
+    beta.zipPartitions(route) { (bs, rs) =>
+      val (b, r) = (bs.next(), rs.next())
+      val out = new java.util.HashMap[Int, (mutable.ArrayBuilder[Long], mutable.ArrayBuilder[Double])]()
+      for (j <- r.keys.indices; i = b.indexOf(r.keys(j)) if i >= 0; x <- r.offsets(j) until r.offsets(j + 1)) {
+        val (ks, vs) = out.computeIfAbsent(r.parts(x), _ => (Array.newBuilder[Long], Array.newBuilder[Double]))
+        ks += r.keys(j)
+        vs.addAll(b.values, i * k, k)
+      }
+      out.asScala.iterator.map { case (p, (ks, vs)) => p -> PackedBeta(ks.result(), vs.result(), k) }
+    }.partitionBy(new HashPartitioner(parts))
+      .mapPartitions(chunks => Iterator(PackedBeta.of(chunks.flatMap(_._2.iterator), k)))
+
+  /** (key, K-array) rows as one [[PackedBeta]] run per reducer. */
+  private def runs(beta: RDD[(Long, Array[Double])], reducers: Partitioner, k: Int): RDD[PackedBeta] =
+    beta.partitionBy(reducers).mapPartitions(rows => Iterator(PackedBeta.of(rows, k)))
+
+  /** `beta`'s (key, K-array) rows as [[Slices]] for the `parts` partitions
+    * that `routing` describes. */
+  def slicesFor(routing: RDD[(Long, Int)], parts: Int, beta: RDD[(Long, Array[Double])], k: Int): Slices = {
+    val reducers = new HashPartitioner(routing.getNumPartitions)
+    Slices(sliced(runs(beta, reducers, k), routes(routing, reducers), parts, k))
+  }
+
+  /** `beta` as [[Slices]] for the partitions of `docs` that [[estep]]
+    * fits. */
+  def slicesFor[D](docs: Dataset[D], shape: DocShape[D, _], beta: RDD[(Long, Array[Double])], k: Int): Slices = {
+    val rdd = docs.rdd
+    slicesFor(routing(rdd.map(shape.record(_).keys)), rdd.getNumPartitions, beta, k)
   }
 
   // ---- M-step ----
 
   /** K-array phi rows (one row per key with `logphi(i)` ↔ topic i+1) →
-    * scalar (lang…, topic, termId, logphi) rows for the cross-partition
-    * fold; the per-key value multiset is unchanged. */
+    * scalar (lang…, topic, termId, logphi) rows; the per-key value
+    * multiset is unchanged. */
   def explodePhi(estep: DataFrame, keys: Keys): DataFrame =
     explodeTopics(estep.filter(!col("isDoc")), keys, "logphi")
 
@@ -588,103 +570,35 @@ private[graft] object EmCore {
     explodeTopics(packed.toDF("lang", "termId", "elogbeta"), keys, "elogbeta")
   }
 
-  /**
-   * One (lang, topic)'s E[log β] from its smoothed log λ in termId order,
-   * in place: E[log β_w] = ψ(λ_w) − ψ(Σ_w λ_w), the normalizer a
-   * sequential log-add in that order. This is the reference's reducer
-   * (TermReducer.java:134-238), the tail both beta paths run: on the
-   * driver for a broadcast model ([[betaOf]]) and in the keyed reducer of
-   * a table model ([[topicTail]]).
-   */
-  private def normalizeTopic(v: Array[Double]): Unit = {
-    var lognorm = Double.NegativeInfinity
-    var j = 0
-    while (j < v.length) { lognorm = logAdd(lognorm, v(j)); j += 1 }
-    val dgNorm = dg(math.exp(lognorm))
-    j = 0
-    while (j < v.length) { v(j) = dg(math.exp(v(j))) - dgNorm; j += 1 }
-  }
-
-  /**
-   * The table model's per-(lang, topic) tail over (lang, topic, termId,
-   * value) rows sorted by (lang, topic, termId): each term's values fold
-   * into log λ with [[graft.functions.LogSumExpAgg]]'s arithmetic (a
-   * single value passes through unchanged), then [[normalizeTopic]] after
-   * the smoothing. Emits (lang, topic, termId, E[log β]) in input order.
-   */
-  def topicTail(rows: BufferedIterator[(Int, Int, Int, Double)], smoothing: Smoothing)
-      : Iterator[(Int, Int, Int, Double)] = {
-    val lse = new LogSumExpAgg
-    Iterator.continually(rows).takeWhile(_.hasNext).flatMap { _ =>
-      val (lang, topic, _, _) = rows.head
-      def inTopic = rows.hasNext && rows.head._1 == lang && rows.head._2 == topic
-      val terms = Array.newBuilder[Int]
-      val smoothed = Array.newBuilder[Double]
-      while (inTopic) {
-        val w = rows.head._3
-        var buf = lse.zero
-        while (inTopic && rows.head._3 == w) buf = lse.reduce(buf, rows.next()._4)
-        terms += w
-        smoothed += smoothing(topic, w, lse.finish(buf))
-      }
-      val beta = smoothed.result()
-      normalizeTopic(beta)
-      terms.result().iterator.zip(beta.iterator).map { case (w, e) => (lang, topic, w, e) }
-    }
-  }
-
-  /**
-   * The table model's M-step, shaped like the reference's reducer
-   * (TermReducer.java:134-238, polylda/TermReducer.java:84-119): the phi
-   * rows take one exchange, partitioned by (lang…, topic) and sorted by
-   * termId, then by value, largest first, so the λ fold does not depend on
-   * the shuffle's fetch order; [[topicTail]] finishes each (lang, topic).
-   *
-   * @param phi (lang…, topic, termId, logphi) rows ([[explodePhi]])
-   * @return    (lang…, topic, termId, elogbeta)
-   */
-  def lambdaToBeta(phi: DataFrame, keys: Keys, smoothing: Smoothing): DataFrame = {
-    val spark = phi.sparkSession
+  /** β runs as (lang…, topic, termId, elogbeta) rows: the beta-<i>
+    * snapshot. */
+  private def rowsOf(spark: SparkSession, beta: RDD[PackedBeta], keys: Keys): DataFrame = {
     import spark.implicits._
-    phi.select(keys.lambda.map(col) :+ col("logphi"): _*)
-      .repartition(keys.norm.map(col): _*)
-      .sortWithinPartitions(keys.lambda.map(col) :+ col("logphi").desc: _*)
-      .select(keys.lang, col("topic"), col("termId"), col("logphi"))
-      .as[(Int, Int, Int, Double)]
-      .mapPartitions(rows => topicTail(rows.buffered, smoothing))
-      .toDF("lang", "topic", "termId", "elogbeta")
-      .select(keys.lambda.map(col) :+ col("elogbeta"): _*)
+    beta.flatMap(b => b.keys.indices.iterator.flatMap { j =>
+      (0 until b.k).iterator.map(t => (langOf(b.keys(j)), t + 1, termOf(b.keys(j)), b.values(j * b.k + t)))
+    }).toDF("lang", "topic", "termId", "elogbeta").select(keys.lambda.map(col) :+ col("elogbeta"): _*)
   }
 
-  /** (lang…, topic, termId, elogbeta) rows → (key columns…, elogbeta[K]),
-    * the shuffle E-step's beta table. Every observed term carries all K
-    * topics, so the packed array is dense. */
-  def packBeta(betaRows: DataFrame, keys: Keys): DataFrame =
-    betaRows.groupBy(keys.term.map(col): _*)
-      .agg(array_sort(collect_list(struct(col("topic"), col("elogbeta")))).as("te"))
-      .select(keys.term.map(col) :+ transform(col("te"), _.getField("elogbeta")).as("elogbeta"): _*)
-
-  def emptyBetaTable(spark: SparkSession, keys: Keys): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(
-      keys.term.map(StructField(_, IntegerType, nullable = false)) :+
-        StructField("elogbeta", ArrayType(DoubleType), nullable = true)))
-
-  /** A packed (key columns…, elogbeta[K]) table as a [[PackedBeta]], on
-    * the driver. */
-  private def collectPacked(table: DataFrame, keys: Keys, k: Int): PackedBeta = {
-    val spark = table.sparkSession
+  /** Checkpointed (lang…, topic, termId, elogbeta) rows as β runs, one per
+    * reducer. */
+  private def loadRuns(rows: DataFrame, keys: Keys, reducers: Partitioner, k: Int): RDD[PackedBeta] = {
+    val spark = rows.sparkSession
     import spark.implicits._
-    PackedBeta.of(table.select(keys.lang, col("termId"), col("elogbeta")).as[(Int, Int, Array[Double])]
-      .collect().iterator.map { case (l, w, arr) => key(l, w) -> arr }, k)
+    rows.select(keys.lang, col("topic"), col("termId"), col("elogbeta")).as[(Int, Int, Int, Double)].rdd
+      .map { case (l, t, w, e) => (key(l, w), (t, e)) }
+      .groupByKey(reducers)
+      .mapPartitions(it => Iterator(PackedBeta.of(it.map { case (w, te) =>
+        val row = new Array[Double](k)
+        te.foreach { case (t, e) => row(t - 1) = e }
+        w -> row
+      }, k)))
   }
 
   /**
    * Per packed key, K [[graft.functions.LogSumExpAgg]] buffers, each
-   * reduced in the order its values arrive: the λ fold of a broadcast
-   * model. [[reduce]] folds one partition's E-step rows into one (a key
-   * the kernel flushed mid-partition arrives in several rows), and a
-   * reducer folds the partitions' partials of its keys in partition-index
-   * order.
+   * reduced in the order its values arrive: the λ fold. [[reduce]] folds
+   * one partition's E-step rows into one, and a reducer folds the
+   * partitions' partials of its keys in partition-index order.
    */
   private[graft] final class LseFold(k: Int) {
     private val lse = new LogSumExpAgg
@@ -710,7 +624,7 @@ private[graft] object EmCore {
     }
   }
 
-  /** A broadcast model's M-step input, merged: corpus LL, alpha statistics
+  /** The M-step input merged on the driver: corpus LL, alpha statistics
     * (K = `ss.length`) and log λ for each key, keys ascending. */
   final case class Reduced(ll: Double, ss: Array[Double], keys: Array[Long], lambda: Array[Double])
 
@@ -725,31 +639,29 @@ private[graft] object EmCore {
     for (i <- g.indices) stats(i + 1) += dg(g(i)) - dgSum
   }
 
-  /** One map partition's share of [[merge]] bound for one reducer: the
+  /** One map partition's share of [[fold]] bound for one reducer: the
     * partition's index, its keys that hash to that reducer with their log
     * φ (K per key, `logphi(j·K + i)` ↔ key j), and — on reducer 0 only —
     * its Σ ll followed by ss. */
   private final case class Block(part: Int, keys: Array[Long], logphi: Array[Double], stats: Array[Double])
 
   /**
-   * The reducer half of a broadcast model's M-step, the reference's
-   * reducer behind its in-mapper combiner (DocumentMapper.java:177,
-   * 263-339): one job of two stages over one [[Partial]] per partition,
-   * which collects only the model.
+   * The reducer half of the M-step's λ fold, the reference's reducer
+   * behind its in-mapper combiner (DocumentMapper.java:177, 263-339): one
+   * [[Partial]] per partition in, per reducer its keys ascending, their
+   * log λ (K per key) and — on reducer 0 — Σ ll and ss out.
    *
    * Each partition ships its partial as one [[Block]] per reducer, its
    * keys hashed to reducers. A reducer folds its blocks in partition-index
-   * order — λ with [[LseFold]], the statistics summed — so the result never
+   * order — λ with [[LseFold]], the statistics summed — so no value
    * depends on which task finished first or on the shuffle's fetch order
    * (Spark's combiners, `RDD.reduce` and `treeAggregate` merge in arrival
-   * order), nor on the number of reducers. The driver merges the reducers'
-   * primitive key runs.
+   * order). Each key's λ does not depend on the number of reducers either.
    */
-  private def merge(partials: RDD[Partial]): Reduced = {
-    val reducers = new HashPartitioner(
-      math.max(1, math.min(partials.getNumPartitions, partials.sparkContext.defaultParallelism)))
+  private def fold(partials: RDD[Partial], reducers: Partitioner)
+      : RDD[(Array[Long], Array[Double], Array[Double])] = {
     val n = reducers.numPartitions
-    val merged = partials.mapPartitionsWithIndex { (part, ps) =>
+    partials.mapPartitionsWithIndex { (part, ps) =>
       ps.flatMap { p =>
         val k = if (p.keys.isEmpty) 0 else p.logphi.length / p.keys.length
         val (ks, lps) = (Array.fill(n)(Array.newBuilder[Long]), Array.fill(n)(Array.newBuilder[Double]))
@@ -776,23 +688,18 @@ private[graft] object EmCore {
       }
       val (ks, lambda) = Option(fold).fold((Array.emptyLongArray, Array.emptyDoubleArray))(_.result())
       Iterator((ks, lambda, stats))
-    }.collect()
-    val stats = merged.map(_._3).find(_.nonEmpty).getOrElse(Array(0.0))
-    val k = stats.length - 1
-    val lambda = PackedBeta.of(merged.iterator.flatMap { case (ks, lps, _) =>
-      ks.indices.iterator.map(j => ks(j) -> lps.slice(j * k, (j + 1) * k)) }, k)
-    Reduced(stats(0), stats.tail, lambda.keys, lambda.values)
+    }
   }
 
-  /** A broadcast model's M-step reduce over E-step rows: each partition's
-    * rows fold into one [[Partial]] (a key the kernel flushed
-    * mid-partition arrives in several rows), then [[merge]]. */
+  /** The λ fold over E-step rows, merged on the driver: each partition's
+    * rows fold into one [[Partial]], then [[fold]] with one reducer per
+    * partition. */
   def reduce(estep: DataFrame, keys: Keys): Reduced = {
     val at = estep.schema.fieldIndex _
     val (isDoc, gamma, docLl, termId, logphi) =
       (at("isDoc"), at("gamma"), at("ll"), at("termId"), at("logphi"))
     val lang = keys.langCols.headOption.map(at)
-    merge(estep.queryExecution.toRdd.mapPartitions { rows =>
+    val partials = estep.queryExecution.toRdd.mapPartitions { rows =>
       var fold: LseFold = null
       var stats = Array.empty[Double] // Σ ll, then ss
       rows.foreach { row =>
@@ -808,34 +715,90 @@ private[graft] object EmCore {
       }
       val (ks, lps) = Option(fold).fold((Array.emptyLongArray, Array.emptyDoubleArray))(_.result())
       Iterator(Partial(ks, lps, stats))
-    })
+    }
+    val merged = fold(partials, new HashPartitioner(math.max(1, partials.getNumPartitions))).collect()
+    val stats = merged.map(_._3).find(_.nonEmpty).getOrElse(Array(0.0))
+    val k = stats.length - 1
+    val lambda = PackedBeta.of(merged.iterator.flatMap { case (ks, lps, _) =>
+      ks.indices.iterator.map(j => ks(j) -> lps.slice(j * k, (j + 1) * k)) }, k)
+    Reduced(stats(0), stats.tail, lambda.keys, lambda.values)
   }
 
-  /** Smoothing and [[normalizeTopic]] over a broadcast model's λ (`keys`
-    * ascending, K values each), one (lang, topic) at a time → the model
-    * the next E-step looks up. */
+  /** One reducer's M-step tail: its keys ascending, ψ(λ_w) of each key's
+    * smoothed λ (K per key), for each language among its keys the partial
+    * normaliser log Σ_w λ_w per topic over its keys in key order (K per
+    * language), and its share of Σ ll and ss. */
+  private[graft] final case class Tail(keys: Array[Long], psi: Array[Double], langs: Array[Int],
+      lognorm: Array[Double], stats: Array[Double])
+
+  /** Smoothing, ψ and the partial normalisers over one reducer's folded
+    * log λ (`keys` ascending, K values each). */
+  private[graft] def tail(keys: Array[Long], lambda: Array[Double], k: Int, smoothing: Smoothing,
+      stats: Array[Double]): Tail = {
+    val psi = new Array[Double](keys.length * k)
+    val (langs, norms) = (Array.newBuilder[Int], Array.newBuilder[Double])
+    var j = 0
+    while (j < keys.length) {
+      val lang = langOf(keys(j))
+      val norm = Array.fill(k)(Double.NegativeInfinity)
+      while (j < keys.length && langOf(keys(j)) == lang) {
+        for (t <- 0 until k) {
+          val v = smoothing(t + 1, termOf(keys(j)), lambda(j * k + t))
+          norm(t) = logAdd(norm(t), v)
+          psi(j * k + t) = dg(math.exp(v))
+        }
+        j += 1
+      }
+      langs += lang
+      norms ++= norm
+    }
+    Tail(keys, psi, langs.result(), norms.result(), stats)
+  }
+
+  /** ψ(Σ_w λ_w) per language and topic from the reducers' partial
+    * normalisers, log-added in reducer-index order. With one reducer this
+    * is the sequential sum over all keys in key order. */
+  private[graft] def normalizers(parts: Iterable[(Array[Int], Array[Double])], k: Int): Map[Int, Array[Double]] = {
+    val total = mutable.Map.empty[Int, Array[Double]]
+    for ((langs, norms) <- parts; i <- langs.indices) {
+      val t = total.getOrElseUpdate(langs(i), Array.fill(k)(Double.NegativeInfinity))
+      for (j <- 0 until k) t(j) = logAdd(t(j), norms(i * k + j))
+    }
+    total.map { case (l, t) => l -> t.map(x => dg(math.exp(x))) }.toMap
+  }
+
+  /** The one function that finishes β, E[log β_w] = ψ(λ_w) − ψ(Σ_w λ_w)
+    * (the reference's reducer, TermReducer.java:134-238), over one tail's
+    * keys: on the driver for a broadcast model, in the reducers for a
+    * sliced one. */
+  private[graft] def finishBeta(t: Tail, psiNorm: Map[Int, Array[Double]], k: Int): PackedBeta = {
+    val beta = new Array[Double](t.keys.length * k)
+    for (j <- t.keys.indices) {
+      val n = psiNorm(langOf(t.keys(j)))
+      for (i <- 0 until k) beta(j * k + i) = t.psi(j * k + i) - n(i)
+    }
+    PackedBeta(t.keys, beta, k)
+  }
+
+  /** The M-step's reducers: [[fold]], then each reducer's [[tail]]. */
+  private def tails(partials: RDD[Partial], reducers: Partitioner, k: Int, smoothing: Smoothing): RDD[Tail] =
+    fold(partials, reducers).map { case (ks, lambda, stats) => tail(ks, lambda, k, smoothing, stats) }
+
+  /** Σ ll, then ss, from the tails (reducer 0 carries them). */
+  private def statsOf(stats: Iterable[Array[Double]], k: Int): Array[Double] =
+    stats.find(_.nonEmpty).getOrElse(new Array[Double](k + 1))
+
+  /** The M-step's tail over a broadcast model's λ (`keys` ascending, K
+    * values each) on the driver, as one reducer → the model the next
+    * E-step looks up. */
   private[graft] def betaOf(keys: Array[Long], lambda: Array[Double], k: Int,
       smoothing: Smoothing): PackedBeta = {
-    val beta = new Array[Double](keys.length * k)
-    var a = 0
-    while (a < keys.length) {
-      val lang = langOf(keys(a))
-      var b = a
-      while (b < keys.length && langOf(keys(b)) == lang) b += 1
-      val v = new Array[Double](b - a)
-      for (t <- 0 until k) {
-        for (j <- v.indices) v(j) = smoothing(t + 1, termOf(keys(a + j)), lambda((a + j) * k + t))
-        normalizeTopic(v)
-        for (j <- v.indices) beta((a + j) * k + t) = v(j)
-      }
-      a = b
-    }
-    PackedBeta(keys, beta, k)
+    val t = tail(keys, lambda, k, smoothing, Array.empty)
+    finishBeta(t, normalizers(Seq(t.langs -> t.lognorm), k), k)
   }
 
-  /** The broadcast M-step's tail over (lang, topic, termId, log λ) rows:
-    * values of one (lang, topic, termId) fold with [[LseFold]], then
-    * [[betaOf]]. */
+  /** The M-step's tail over (lang, topic, termId, log λ) rows: values of
+    * one (lang, topic, termId) fold with [[LseFold]], then [[betaOf]]. */
   def finishBetaOnDriver(lambda: Array[(Int, Int, Int, Double)], numTopics: Int,
       smoothing: Smoothing): scala.collection.Map[Long, Array[Double]] = {
     val fold = new LseFold(numTopics)
@@ -844,122 +807,104 @@ private[graft] object EmCore {
     betaOf(keys, values, numTopics, smoothing).iterator.toMap
   }
 
-  /** One iteration's M-step outcome: corpus LL, alpha statistics, and the
-    * blocks' next gamma state, readable until `release`. */
-  private final case class Step(ll: Double, ss: Array[Double], gammas: RDD[Array[Double]], release: () => Unit)
+  /**
+   * The M-step over scalar (lang…, topic, termId, logphi) φ rows
+   * ([[explodePhi]]): each partition's rows fold into one [[Partial]] in
+   * row order, and the reducers ([[reducersFor]] the rows) finish β as a
+   * sliced model's do. Returns (lang…, topic, termId, elogbeta) rows.
+   */
+  def mstepRows(phi: DataFrame, keys: Keys, smoothing: Smoothing): DataFrame = {
+    val spark = phi.sparkSession
+    import spark.implicits._
+    val sizes = phi.agg(max(col("topic")), count(lit(1))).head()
+    val k = sizes.getInt(0)
+    val partials = phi.select(keys.lang, col("topic"), col("termId"), col("logphi"))
+      .as[(Int, Int, Int, Double)].rdd.mapPartitions { rows =>
+        val fold = new LseFold(k)
+        rows.foreach { case (l, t, w, v) => fold.add(key(l, w), t - 1, v) }
+        val (ks, lps) = fold.result()
+        Iterator(Partial(ks, lps, Array.empty))
+      }
+    val ts = tails(partials, new HashPartitioner(reducersFor(sizes.getLong(1), partials.getNumPartitions)), k,
+      smoothing)
+    val psiNorm = normalizers(ts.map(t => (t.langs, t.lognorm)).collect(), k)
+    rowsOf(spark, ts.map(finishBeta(_, psiNorm, k)), keys)
+  }
 
   /**
-   * A model's beta between EM iterations, held in the form its path looks
-   * it up in, together with everything that depends on that form: the
-   * iteration's E-step and M-step, the snapshot rows, the resume load (the
-   * constructor's checkpointed rows), the final model and the release.
-   * [[fit]] picks the path once; its loop never branches on it.
+   * How [[fit]] holds β between iterations for the lookup it picked: the
+   * E-step's [[BetaSupply]], the next β from an iteration's M-step tails,
+   * the beta-<i> snapshot rows and the final model. An iteration is one
+   * job either way: its E-step, then the reducers' [[tails]], whose
+   * normalisers (and, for a broadcast model, β) reach the driver.
    */
-  private sealed trait BetaPath {
-    /** One EM iteration over the corpus blocks, gamma warm-started from
-      * their gamma state `gammas`; replaces beta with the next one. */
-    def step(blocks: RDD[DocBlock], gammas: RDD[Array[Double]], alpha: Array[Double], sweeps: Sweeps): Step
+  private sealed trait BetaLookup {
+    def supply(): BetaSupply
+    /** β from one iteration's tails, computed here; returns Σ ll, then ss */
+    def next(tails: RDD[Tail]): Array[Double]
     /** (lang…, topic, termId, elogbeta) rows: the beta-<i> snapshot */
     def rows: DataFrame
-    /** the final model; releases the path */
+    /** the final model; releases what the lookup holds */
     def finish(): PackedBeta
   }
 
-  /** Beta collected and broadcast as a [[PackedBeta]] (the reference's
-    * DistributedCache path, DocumentMapper.java:116). The iteration is one
-    * job: each block's E-step emits its new gamma state and its [[Partial]],
-    * checkpointed lazily ([[graft.util.Ckpt.RddCkptOps.ckptLazy]]), and
-    * [[merge]]'s first stage materializes them while it ships the partials,
-    * so the gammas the next iteration reads cost no job of their own; the
-    * tail runs on the driver. */
-  private final class BroadcastBeta[D, R](spark: SparkSession, model: Model[D, R], k: Int,
-      resumed: Option[DataFrame]) extends BetaPath {
-    private val keys = model.shape.keys
+  /** A small model, collected and broadcast as a [[PackedBeta]] (the
+    * reference's DistributedCache path, DocumentMapper.java:116): the
+    * tails reach the driver, which adds the normalisers and finishes β. */
+  private final class Broadcasted(spark: SparkSession, keys: Keys, k: Int,
+      resumed: Option[RDD[PackedBeta]]) extends BetaLookup {
     private var beta = resumed.fold(PackedBeta(Array.emptyLongArray, Array.emptyDoubleArray, k))(
-      rows => collectPacked(packBeta(rows, keys), keys, k))
+      r => PackedBeta.of(r.collect().iterator.flatMap(_.iterator), k))
+    private var bc: Broadcast[PackedBeta] = _
 
-    def step(blocks: RDD[DocBlock], gammas: RDD[Array[Double]], alpha: Array[Double], sweeps: Sweeps): Step = {
+    def supply(): BetaSupply = { bc = spark.sparkContext.broadcast(beta); Lookup(bc) }
+    def next(tails: RDD[Tail]): Array[Double] = {
       // the model-sized broadcast is destroyed once its job is done;
       // destroy() is non-blocking in Spark 4, so this adds no latency
-      val bc = spark.sparkContext.broadcast(beta)
-      val vocab = model.vocab
-      val stepped = blocks.zipPartitions(gammas) { (bs, gs) =>
-        val b = bs.next()
-        val fit = new Kernel[Unit](alpha, sweeps, vocab, (_, _) => ()).fitBlock(b, gs.next(), bc.value)
-        val stats = new Array[Double](alpha.length + 1)
-        for (d <- 0 until b.size) addStats(stats, b.gammaOf(fit.gamma, d), fit.ll(d))
-        Iterator((fit.gamma, Partial(b.distinct, fit.logphi, stats)))
-      }.ckptLazy()
-      val r = try merge(stepped.map(_._2)) finally bc.destroy()
-      beta = betaOf(r.keys, r.lambda, k, model.smoothing)
-      Step(r.ll, r.ss, stepped.map(_._1), () => stepped.unpersist(blocking = false))
+      val ts = try tails.collect() finally bc.destroy()
+      val psiNorm = normalizers(ts.map(t => (t.langs, t.lognorm)), k)
+      beta = PackedBeta.of(ts.iterator.flatMap(finishBeta(_, psiNorm, k).iterator), k)
+      statsOf(ts.map(_.stats), k)
     }
-    def rows: DataFrame =
-      betaRows(spark, keys, beta.iterator.map { case (w, arr) => (langOf(w), termOf(w), arr) }.toSeq)
+    def rows: DataFrame = rowsOf(spark, spark.sparkContext.parallelize(Seq(beta), 1), keys)
     def finish(): PackedBeta = beta
   }
 
-  /** Beta kept as a distributed (key columns…, elogbeta[K]) table, joined
-    * each iteration to the corpus exploded once per run (`exploded`, owned
-    * here): the scale path, where nothing model-sized moves through the
-    * driver until [[finish]]. Its E-step reads the blocks' documents as a
-    * Dataset ([[documents]]) and hands the gammas back as the blocks' next
-    * gamma state ([[gammaBlocks]]). */
-  private final class TableBeta[D, R](spark: SparkSession, model: Model[D, R], k: Int, parts: Int,
-      docs: Dataset[D], resumed: Option[DataFrame]) extends BetaPath {
-    private val keys = model.shape.keys
-    private val exploded = explodeDocs(docs.toDF(), model.shape).persist(StorageLevel.MEMORY_AND_DISK)
-    private var table: DataFrame = resumed.fold(emptyBetaTable(spark, keys))(
-      rows => packBeta(rows, keys).persist(StorageLevel.MEMORY_AND_DISK))
-    // drops the blocks `table` reads
-    private var releaseTable: () => Unit = { val t = table; () => t.unpersist() }
+  /** A large model, held by the reducers as one β run each: only the
+    * per-(lang, topic) normalisers and the statistics reach the driver;
+    * the reducers finish β and send each key's row to the corpus
+    * partitions whose blocks hold it (`route`, built once per run), and
+    * the next E-step zips each block with its slice. The model reaches the
+    * driver once, at [[finish]]. */
+  private final class Sliced(spark: SparkSession, keys: Keys, k: Int, parts: Int, route: RDD[Route],
+      reducers: Int, resumed: Option[RDD[PackedBeta]]) extends BetaLookup {
+    private val sc = spark.sparkContext
+    private var beta: RDD[PackedBeta] = resumed.getOrElse(
+      sc.parallelize(Seq.fill(reducers)(PackedBeta(Array.emptyLongArray, Array.emptyDoubleArray, k)), reducers))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // the tails `beta` is finished from
+    private var held: Option[RDD[Tail]] = None
 
-    /** The packed next beta is one localCheckpoint: every E-step join of
-      * the next iteration reads it, and it truncates the lineage (a plain
-      * persist would nest each iteration's plan inside the next E-step
-      * join). The gammas and the ll/alpha statistics come from the held
-      * E-step rows in one eager pass ([[gammaStep]]); after that nothing
-      * reads the old beta table. */
-    def step(blocks: RDD[DocBlock], gammas: RDD[Array[Double]], alpha: Array[Double], sweeps: Sweeps): Step = {
-      val alphaBc = spark.sparkContext.broadcast(alpha)
-      val held = estep(documents(spark, blocks, gammas, model.shape), model.shape, alphaBc,
-        Join(table, Some(exploded)), model.vocab, sweeps).toDF().persist(StorageLevel.MEMORY_AND_DISK)
-      val next = packBeta(lambdaToBeta(explodePhi(held, keys), keys, model.smoothing), keys).ckptSer()
-      val step = gammaStep(held, parts, k)
-      held.unpersist()
-      alphaBc.destroy()
-      releaseTable()
-      releaseTable = () => next.releaseCkpt()
-      table = next
-      step
+    private def release(): Unit = { beta.unpersist(blocking = false); held.foreach(_.unpersist(blocking = false)) }
+
+    def supply(): BetaSupply = Slices(sliced(beta, route, parts, k))
+    def next(tails: RDD[Tail]): Array[Double] = {
+      val ts = tails.persist(StorageLevel.MEMORY_AND_DISK)
+      val sums = ts.map(t => (t.langs, t.lognorm, t.stats)).collect()
+      val psiNorm = normalizers(sums.map(s => (s._1, s._2)), k)
+      release()
+      held = Some(ts)
+      val topics = k
+      beta = ts.map(finishBeta(_, psiNorm, topics)).persist(StorageLevel.MEMORY_AND_DISK)
+      statsOf(sums.map(_._3), k)
     }
-    def rows: DataFrame = explodeTopics(table, keys, "elogbeta")
+    def rows: DataFrame = rowsOf(spark, beta, keys)
     def finish(): PackedBeta = {
-      exploded.unpersist(blocking = false)
-      val beta = collectPacked(table, keys, k)
-      releaseTable()
-      beta
+      val model = PackedBeta.of(beta.collect().iterator.flatMap(_.iterator), k)
+      release()
+      route.unpersist(blocking = false)
+      model
     }
-  }
-
-  /** A table model's iteration outcome from its E-step doc rows: the
-    * blocks' next gamma state — hashed by docId into the blocks' `parts`
-    * partitions and docId-ascending within each, as [[blocksOf]] lays the
-    * documents out — computed here, with the corpus LL and alpha
-    * statistics summed in that order, then over partitions in index order. */
-  private def gammaStep(estep: DataFrame, parts: Int, k: Int): Step = {
-    val spark = estep.sparkSession
-    import spark.implicits._
-    val g = estep.filter(col("isDoc")).select("docId", "gamma", "ll").as[(Long, Array[Double], Double)].rdd
-      .keyBy(_._1).partitionBy(new HashPartitioner(parts))
-      .mapPartitions { it =>
-        val docs = it.map(_._2).toArray.sortBy(_._1)
-        val stats = new Array[Double](k + 1)
-        docs.foreach { case (_, gamma, ll) => addStats(stats, gamma, ll) }
-        Iterator((docs.flatMap(_._2), stats))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    val stats = g.map(_._2).collect().transpose.map(_.sum)
-    Step(stats(0), stats.tail, g.map(_._1), () => g.unpersist(blocking = false))
   }
 
   // ---- EM loop ----
@@ -972,7 +917,7 @@ private[graft] object EmCore {
       symmetricAlpha: Boolean,
       /** language → vocabulary size (the random-init scale of unseen terms) */
       vocab: Int => Int,
-      /** Σ_l V_l: K × this above `betaBroadcastMaxEntries` takes the shuffle path */
+      /** Σ_l V_l: K × this above `betaBroadcastMaxEntries` takes the sliced lookup */
       totalVocab: Long)
 
   /** A trained model: E[log β] over topics per packed (lang, termId). */
@@ -1011,6 +956,27 @@ private[graft] object EmCore {
     math.max(1L, math.min(math.min(tasks, numDocs), Int.MaxValue)).toInt
   }
 
+  /** (key, topic) entries of the partials one M-step reducer is sized to
+    * fold. At 2^17, `ap_dense` (Σ nnz · K = 456,240) runs 4 reducers. The
+    * measured `train_s` medians (3 untraced 15-s ldabench runs per side,
+    * seeds 1–3, alternated in one window on a 4-core VM) were 0.473 s on
+    * `ap_dense` and 0.518 s on `poly_ingest` at 2^17, against 0.490 and
+    * 0.505 s at 2^18 and 0.500 and 0.557 s with one reducer per core
+    * (4): the same within the runs' spread. */
+  private[graft] val FoldPerReducer = 1L << 17
+
+  /**
+   * The M-step's reducer count for `entries` (key, topic) partial entries
+   * over `parts` partitions ([[fit]] counts Σ nnz · K, an upper bound: a
+   * partition's partial holds each of its distinct keys once): one per
+   * [[FoldPerReducer]], at least one, at most one per partition. A function
+   * of the data and the settings only, never of the host's cores: β's
+   * normaliser is log-added per reducer, then over reducers in index order
+   * ([[normalizers]]), so the model depends on this count.
+   */
+  def reducersFor(entries: Long, parts: Int): Int =
+    math.max(1L, math.min(parts.toLong, math.ceil(entries.toDouble / FoldPerReducer).toLong)).toInt
+
   /** The records hash-partitioned by docId into `parts` partitions,
     * docId-ascending within each, as one [[DocBlock]] per partition, and
     * persisted: the first job that reads it runs the exchange. */
@@ -1020,8 +986,7 @@ private[graft] object EmCore {
       .persist(StorageLevel.MEMORY_AND_DISK)
 
   /** The blocks' documents carrying the gamma state `gammas`, as the
-    * model's Dataset: the gamma-<i> snapshot and the table path's E-step
-    * read it. */
+    * model's Dataset: the gamma-<i> snapshot. */
   private[graft] def documents[D, R](spark: SparkSession, blocks: RDD[DocBlock],
       gammas: RDD[Array[Double]], shape: DocShape[D, R]): Dataset[D] = {
     implicit val tag: ClassTag[D] = shape.docEncoder.clsTag
@@ -1044,21 +1009,24 @@ private[graft] object EmCore {
    * on task timing, and no document row is encoded, checkpointed or
    * decoded inside the loop.
    *
-   * A broadcast model's iteration is one Spark job — each block's E-step
-   * with its M-step partial and next gammas, then the partials' keyed
-   * merge ([[merge]]) — instead of one MR job + one merge job + JVM
-   * restarts. Scale posture: below `betaBroadcastMaxEntries` beta is
-   * collected and broadcast as flat arrays (the reference's
-   * DistributedCache path, DocumentMapper.java:116); above it beta stays a
-   * distributed table end-to-end and nothing model-sized moves through the
-   * driver. With `checkpointDir` set, alpha/beta/gamma snapshot to parquet
-   * after every iteration (the reference's alpha-i/beta-i/gamma-i
-   * rotation; gamma-<i> is the blocks' documents with their gammas), and a
-   * resume re-reads gamma-<i> and lays it out the same way. The gamma
-   * state is checkpointed locally (fast, not fault-tolerant: a lost
-   * executor's blocks fail the run, which then resumes from the last
-   * snapshot). Alpha takes one Newton update per iteration. Convergence:
-   * |ΔLL/LL| ≤ `convergence` or `maxIterations` (Settings.java:56,43).
+   * Every iteration is the same Spark job — each block's E-step against
+   * the β rows its [[BetaSupply]] gives it, emitting its next gammas and
+   * its M-step [[Partial]], then the keyed fold and tail of
+   * [[reducersFor]] reducers ([[tails]]) — instead of one MR job + one
+   * merge job + JVM restarts. Only the lookup differs: up to
+   * `betaBroadcastMaxEntries` β is finished on the driver and broadcast as
+   * flat arrays (the reference's DistributedCache path,
+   * DocumentMapper.java:116); above it the reducers finish β and route
+   * each block its slice, and only L·K normalisers per reducer reach the
+   * driver. Both lookups give bit-identical models. With `checkpointDir`
+   * set, alpha/beta/gamma snapshot to parquet after every iteration (the
+   * reference's alpha-i/beta-i/gamma-i rotation; gamma-<i> is the blocks'
+   * documents with their gammas), and a resume re-reads gamma-<i> and lays
+   * it out the same way. The gamma state is checkpointed locally (fast, not
+   * fault-tolerant: a lost executor's blocks fail the run, which then
+   * resumes from the last snapshot). Alpha takes one Newton update per
+   * iteration. Convergence: |ΔLL/LL| ≤ `convergence` or `maxIterations`
+   * (Settings.java:56,43).
    *
    * The caller's `docs` are read once; the records are held until the
    * first iteration has built the blocks from them.
@@ -1100,13 +1068,17 @@ private[graft] object EmCore {
       throw new IllegalArgumentException("cannot train a topic model on an empty corpus (0 documents)")
     }
     val parts = partitionsFor(numDocs, nnz, k, cfg.localIterations)
+    val reducers = new HashPartitioner(reducersFor(nnz * k, parts))
     val blocks = blocksOf(records, parts, alpha)
     var gammas = blocks.map(_.gamma)
-    // the one place the beta path is chosen
-    val beta: BetaPath =
+    val resumed = resumedBeta.map(loadRuns(_, shape.keys, reducers, k))
+    // the one place the lookup is chosen
+    val beta: BetaLookup =
       if (k.toLong * model.totalVocab > cfg.betaBroadcastMaxEntries)
-        new TableBeta(spark, model, k, parts, documents(spark, blocks, gammas, shape), resumedBeta)
-      else new BroadcastBeta(spark, model, k, resumedBeta)
+        new Sliced(spark, shape.keys, k, parts,
+          routes(routing(blocks.map(_.distinct)), reducers).persist(StorageLevel.MEMORY_AND_DISK),
+          reducers.numPartitions, resumed)
+      else new Broadcasted(spark, shape.keys, k, resumed)
     // what the finished iteration no longer needs: at first the records,
     // which the first iteration's job reads into the blocks
     var release: () => Unit = () => records.unpersist(blocking = false)
@@ -1115,20 +1087,34 @@ private[graft] object EmCore {
     var converged = false
 
     while (iter < cfg.maxIterations && !converged) {
-      // E-step + M-step + likelihood + alpha sufficient statistics
-      val step = beta.step(blocks, gammas, alpha,
-        Sweeps(cfg.localIterations, cfg.randomStartGamma, learning = true, cfg.seed))
+      // E-step + M-step + likelihood + alpha sufficient statistics: each
+      // block's E-step emits its new gamma state and its partial,
+      // checkpointed lazily ([[graft.util.Ckpt.RddCkptOps.ckptLazy]]), and
+      // the M-step's first stage materializes them while it ships the
+      // partials, so the gammas the next iteration reads cost no job of
+      // their own
+      val (a, vocab) = (alpha, model.vocab)
+      val sweeps = Sweeps(cfg.localIterations, cfg.randomStartGamma, learning = true, cfg.seed)
+      val stepped = blocks.zipPartitions(gammas, beta.supply().per(spark.sparkContext, parts)) {
+        (bs, gs, ls) =>
+          val (b, g) = (bs.next(), gs.next())
+          val fit = new Kernel(a, sweeps, vocab).fitBlock(b, g, ls.next())
+          val stats = new Array[Double](k + 1)
+          for (d <- 0 until b.size) addStats(stats, b.gammaOf(fit.gamma, d), fit.ll(d))
+          Iterator((fit.gamma, Partial(b.distinct, fit.logphi, stats)))
+      }.ckptLazy()
+      val stats = beta.next(tails(stepped.map(_._2), reducers, k, model.smoothing))
       release()
-      release = step.release
+      release = () => stepped.unpersist(blocking = false)
       // the next iteration's warm start (the E-step ignores it under
       // randomStartGamma; gamma-<i> holds it either way)
-      gammas = step.gammas
-      val ll = step.ll
+      gammas = stepped.map(_._1)
+      val ll = stats(0)
       alpha =
         if (model.symmetricAlpha) {
-          val a = AlphaUpdate.updateScalarAlpha(k, numDocs, alpha(0), step.ss.sum)
+          val a = AlphaUpdate.updateScalarAlpha(k, numDocs, alpha(0), stats.tail.sum)
           Array.fill(k)(a)
-        } else AlphaUpdate.updateVectorAlpha(k, numDocs, alpha, step.ss)
+        } else AlphaUpdate.updateVectorAlpha(k, numDocs, alpha, stats.tail)
       history = ll :: history
 
       // snapshot i+1 after iteration i (the reference's alpha-(i+1)).
@@ -1149,7 +1135,7 @@ private[graft] object EmCore {
       lastLL = ll
       iter += 1
     }
-    // a table model is collected once, at the end (callers needing beta
+    // a sliced model is collected once, at the end (callers needing beta
     // bigger than driver memory read the checkpointed beta-<i> parquet
     // instead)
     val packed = beta.finish()
@@ -1178,7 +1164,7 @@ private[graft] object EmCore {
     val sweeps = Sweeps(localIterations, randomStartGamma = false, learning = false, InferenceSeed)
     val gamma = docs.rdd.map(shape.record).mapPartitionsWithIndex { (p, rs) =>
       val b = DocBlock(rs, alpha)
-      val fit = new Kernel[Unit](alpha, sweeps, vocab, (_, _) => ()).fitBlock(b, b.gamma, bc.value)
+      val fit = new Kernel(alpha, sweeps, vocab).fitBlock(b, b.gamma, bc.value)
       lls.add(p -> fit.ll.sum)
       Iterator.tabulate(b.size)(d => (b.docIds(d), b.gammaOf(fit.gamma, d)))
     }.toDF("docId", "gamma").persist(StorageLevel.MEMORY_AND_DISK)

@@ -25,8 +25,9 @@ object MStep {
   def explodePhi(estep: DataFrame): DataFrame = EmCore.explodePhi(estep, keys)
 
   /**
-   * The table path's M-step ([[EmCore.lambdaToBeta]]): one exchange by
-   * topic, λ folded per term, then the per-topic tail.
+   * The M-step over scalar φ rows ([[EmCore.mstepRows]]): each partition's
+   * rows fold into one partial, and the reducers fold λ, smooth it and
+   * finish β as the sliced lookup's do.
    *
    * @param phi   (topic, termId, logphi) partition-combined E-step rows
    *              (use [[explodePhi]] to unpack the E-step's K-array rows)
@@ -34,9 +35,9 @@ object MStep {
    * @return      (topic, termId, elogbeta)
    */
   def run(phi: DataFrame, prior: Option[DataFrame] = None): DataFrame =
-    EmCore.lambdaToBeta(phi, keys, Smoothing.eta(prior.map(Smoothing.seeds)))
+    EmCore.mstepRows(phi, keys, Smoothing.eta(prior.map(Smoothing.seeds)))
 
-  /** The broadcast M-step's reduce ([[EmCore.reduce]]: one job of
+  /** The M-step's λ fold ([[EmCore.reduce]]: one job of
     * per-partition partials, merged by key in partition order) as local rows: tag 0 =
     * (termId, log λ per topic in v); tag 1 = (alpha stats in v, corpus LL
     * in ll). The reduce runs when this is called. */

@@ -37,8 +37,9 @@ import org.apache.spark.sql.functions._
  * The fixture has one shape, the constants below: both replays
  * ([[run]] and [[graft.polylda.PolyPlantedLda.run]]) and their DuckDB
  * oracles read them. The only choice a caller makes is `useShuffle`:
- * supply beta to the E-step as a joined table (the 100 TB beta-as-table
- * path) instead of a broadcast lookup. The anchored trajectory is
+ * supply beta to the E-step as per-partition slices of the rows each
+ * partition's terms need (the lookup of a model too large to broadcast)
+ * instead of a broadcast lookup. The anchored trajectory is
  * execution-path-independent, so the SAME oracle verifies both — and
  * broadcast ≡ shuffle equality is pinned in PlantedLdaSpec.
  */
@@ -126,7 +127,7 @@ object PlantedLda {
   /**
    * The anchored EM loop both planted replays run, over packed (lang,
    * termId) keys — vanilla is lang 0 with eta smoothing: broadcast or
-   * joined beta → the anchored E-step → the trainer's phi fold
+   * sliced beta → the anchored E-step → the trainer's phi fold
    * ([[EmCore.reduce]]), rounded on the driver → the real M-step tail
    * ([[EmCore.betaOf]]) with the handoff re-anchored → the
    * anchored gammas carried forward (reference semantics: the next
@@ -150,13 +151,11 @@ object PlantedLda {
 
     for (iter <- 1 to emIters) {
       val betaBc = spark.sparkContext.broadcast(beta)
+      val ds = spark.createDataset(docs)(shape.docEncoder)
       val supply =
-        if (useShuffle) EmCore.Join(beta.iterator.map { case (w, arr) =>
-          (EmCore.langOf(w), EmCore.termOf(w), arr)
-        }.toSeq.toDF("lang", "termId", "elogbeta"), None)
+        if (useShuffle) EmCore.slicesFor(ds, shape, spark.sparkContext.parallelize(beta.iterator.toSeq), k)
         else EmCore.Lookup(betaBc)
-      val estep = EmCore.estep(spark.createDataset(docs)(shape.docEncoder), shape, alphaBc,
-        supply, vocab, sweeps).persist()
+      val estep = EmCore.estep(ds, shape, alphaBc, supply, vocab, sweeps).persist()
       val r = EmCore.reduce(estep.toDF(), keys)
       val next = EmCore.betaOf(r.keys, r.lambda.map(rnd(_, betaDp)), k, smoothing)
       beta = next.copy(values = next.values.map(rnd(_, betaDp)))

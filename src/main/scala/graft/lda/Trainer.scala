@@ -36,8 +36,10 @@ object Trainer {
       randomStartGamma: Boolean = false,
       seed: Long = 42L,
       prior: Option[DataFrame] = None,
-      /** K×V threshold above which beta is NOT collected/broadcast and the
-        * shuffle-join E-step runs instead (SURVEY §7.5 scale path). */
+      /** K×V threshold above which beta is not collected and broadcast:
+        * the M-step's reducers finish it and send each corpus partition
+        * the rows of its own terms (SURVEY §7.5 scale path). The same EM
+        * iteration either way, and a bit-identical model. */
       betaBroadcastMaxEntries: Long = 4L << 20,
       /** Snapshot alpha/beta/gamma to parquet under this dir after every
         * iteration (reference D4). */

@@ -37,12 +37,9 @@ case class PolyEStepRow(
 /** Polylingual documents and E-step rows as the EM core sees them: terms
   * keyed (lang, termId), one tied gamma per document. */
 private[graft] object PolyDocs extends DocShape[PolyDoc, PolyEStepRow](
-    Keys(Seq("lang")), Seq("docId", "counts", "numTokens", "totalTokens", "gamma"),
-    "totalTokens") {
+    Keys(Seq("lang")), Seq("docId", "counts", "numTokens", "totalTokens", "gamma")) {
   lazy val docEncoder: Encoder[PolyDoc] = Encoders.product[PolyDoc]
   lazy val rowEncoder: Encoder[PolyEStepRow] = Encoders.product[PolyEStepRow]
-  def langCountsColumns(docs: DataFrame): DataFrame =
-    docs.select(col("docId"), explode_outer(col("counts")).as(Seq("lang", "langCounts")))
   /** `meta`: the count maps' languages in iteration order, after their
     * number, then the per-language token totals as (lang, tokens) pairs */
   def record(d: PolyDoc): DocRecord = {
@@ -90,9 +87,12 @@ object PolyTrainer {
       /** Resume from `(dir, iteration)` — the polylda driver's resume path
         * (polylda/VariationalInference.java:396-404). */
       resumeFrom: Option[(String, Int)] = None,
-      /** Σ_l K×V_l threshold above which per-language beta is NOT collected
-        * and broadcast; the shuffle-join E-step runs instead. The reference
-        * loads every language's beta per mapper — L× the vanilla wall. */
+      /** Σ_l K×V_l threshold above which per-language beta is not
+        * collected and broadcast: the M-step's reducers finish it and send
+        * each corpus partition the (lang, term) rows of its own terms. The
+        * reference loads every language's beta per mapper — L× the vanilla
+        * wall. The same EM iteration either way, and a bit-identical
+        * model. */
       betaBroadcastMaxEntries: Long = 4L << 20) extends EmCore.Settings
 
   /** language → vocabulary size: the random-init scale of unseen terms, per

@@ -197,11 +197,12 @@ object CorpusQueries {
       },
       None, bench = true),
 
-    /** Same training run forced down the shuffle-join E-step
-      * (`betaBroadcastMaxEntries = 0`) — the 100 TB path where beta never
-      * touches the driver. Benched so the scale path has a timed row;
-      * output parity with the broadcast path is pinned in sbt
-      * (TrainerPathsSpec / LdaGoldenSpec). Deliberately NOT cached: the
+    /** Same training run forced onto the sliced beta lookup
+      * (`betaBroadcastMaxEntries = 0`) — the 100 TB path where only L·K
+      * normalisers per reducer reach the driver in an iteration and each
+      * corpus partition gets the beta rows of its own terms. Benched so
+      * the scale path has a timed row; bit-identity with the broadcast
+      * lookup is pinned in sbt (TrainerPathsSpec / FitDeterminismSpec). Deliberately NOT cached: the
       * bench must time a full shuffle-mode training run. */
     "lda_top_terms_shuffle" -> QueryDef(
       (s, dir) => {
@@ -222,9 +223,9 @@ object CorpusQueries {
       (s, dir) => graft.lda.PlantedLda.run(s, dir),
       Some(LdaPlantedOracle.sql)),
 
-    /** The SAME planted trajectory through the SHUFFLE-JOIN E-step
-      * (EStepShuffle — the 100 TB beta-as-table path behind
-      * lda_top_terms_shuffle): the anchored handoffs make the
+    /** The SAME planted trajectory through the SLICED beta lookup (the
+      * 100 TB path behind lda_top_terms_shuffle: each corpus partition
+      * gets the rows of its own terms): the anchored handoffs make the
       * trajectory execution-path-independent, so the identical DuckDB
       * oracle verifies the scale path too. */
     "q_lda_planted_em_shuffle" -> QueryDef(

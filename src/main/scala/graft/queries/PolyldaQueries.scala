@@ -101,9 +101,9 @@ object PolyldaQueries {
       },
       None),
 
-    /** The same polylingual training through the SHUFFLE-JOIN E-step
-      * (per-language beta-as-table, the Σ_l K×V_l
-      * scale path), forced via betaBroadcastMaxEntries = 0. Benched so
+    /** The same polylingual training through the SLICED beta lookup
+      * (each corpus partition gets the (lang, term) rows of its own terms,
+      * the Σ_l K×V_l scale path), forced via betaBroadcastMaxEntries = 0. Benched so
       * the poly scale path has a timed row (the poly twin of
       * lda_top_terms_shuffle); path parity with the broadcast E-step is
       * pinned by PolyldaSpec and the planted shuffle replay below. */
@@ -129,9 +129,9 @@ object PolyldaQueries {
       (s, dir) => PolyPlantedLda.run(s, dir),
       Some(LdaPlantedOracle.polySql)),
 
-    /** Same planted trajectory through the polylingual SHUFFLE-JOIN
-      * E-step (the per-language beta-as-table scale
-      * path) — identical oracle by anchored path-independence. */
+    /** Same planted trajectory through the polylingual SLICED beta
+      * lookup (the Σ_l K×V_l scale path) — identical oracle by anchored
+      * path-independence. */
     "q_polylda_planted_em_shuffle" -> QueryDef(
       (s, dir) => PolyPlantedLda.run(s, dir, useShuffle = true),
       Some(LdaPlantedOracle.polySql)))

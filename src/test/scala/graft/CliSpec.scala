@@ -8,7 +8,7 @@ import java.nio.file.Files
 class CliSpec extends SparkSpec {
 
   private def writeRaw(lines: Seq[String]): String = {
-    val f = Files.createTempDirectory("graft_cli_").resolve("corpus.txt")
+    val f = TempDirs.create("graft_cli_").resolve("corpus.txt")
     Files.writeString(f, lines.mkString("\n") + "\n")
     f.toString
   }
@@ -20,8 +20,8 @@ class CliSpec extends SparkSpec {
       "d3\tapple fruit fruit cherry", "d4\tbanana banana apple",
       "d5\tiron copper zinc", "d6\tcopper iron iron", "d7\tzinc copper metal",
       "d8\tiron metal metal zinc", "d9\tcopper copper zinc"))
-    val corpusDir = Files.createTempDirectory("graft_cli_corpus_").toString
-    val modelDir = Files.createTempDirectory("graft_cli_model_").toString
+    val corpusDir = TempDirs.create("graft_cli_corpus_").toString
+    val modelDir = TempDirs.create("graft_cli_model_").toString
 
     cli.ParseCorpusCli.main(Array("--input", raw, "--output", corpusDir))
     assert(spark.read.parquet(s"$corpusDir/document").count() == 10)
@@ -92,8 +92,8 @@ class CliSpec extends SparkSpec {
     val raw = writeRaw(Seq(
       "d0\tapple banana\tpomme banane", "d1\tbanana apple\tbanane pomme",
       "d2\tiron copper\tnull", "d3\tcopper iron\tcuivre fer"))
-    val corpusDir = Files.createTempDirectory("graft_cli_poly_").toString
-    val modelDir = Files.createTempDirectory("graft_cli_polym_").toString
+    val corpusDir = TempDirs.create("graft_cli_poly_").toString
+    val modelDir = TempDirs.create("graft_cli_polym_").toString
     cli.ParseCorpusCli.main(Array("--input", raw, "--output", corpusDir,
       "--languages", "2"))
     assert(spark.read.parquet(s"$corpusDir/document").count() == 4)

@@ -12,7 +12,7 @@ class DocSerdeSpec extends SparkSpec {
   import spark.implicits._
 
   private def roundTrip[T <: Product : org.apache.spark.sql.Encoder](rows: Seq[T]): Seq[T] = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_serde_").toString
+    val dir = TempDirs.create("graft_serde_").toString
     rows.toDS().write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir).as[T].collect().toSeq
   }

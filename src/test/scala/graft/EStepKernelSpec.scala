@@ -52,17 +52,18 @@ class EStepKernelSpec extends AnyFunSuite {
     (gamma, likelihoodAlpha + likelihoodGamma + likelihoodPhi, logPhi)
   }
 
-  /** Runs the kernel on one document: (gamma, ll, termId → emitted log φ). */
+  /** Runs the kernel on a block of one document, against a model of its
+    * non-null rows: (gamma, ll, termId → emitted log φ). */
   private def kernelFit(c: DocCase): (Array[Double], Double, Map[Int, Array[Double]]) = {
-    type Out = Either[(Array[Double], Double), (Int, Array[Double])]
-    val kernel = new EmCore.Kernel[Out](c.alpha,
-      EmCore.Sweeps(Sweeps, randomStartGamma = false, learning = true, Seed),
-      _ => Vocab, (key, lp) => Right((EmCore.termOf(key), lp)))
-    val flat = new EmCore.Flat(c.terms.map(EmCore.key(0, _)), c.cnt.clone(), c.rows.clone(),
-      c.tokens, c.gamma.map(_.clone()))
-    val out = kernel.run[Unit](Iterator(((), flat)), (_, g, ll) => Left((g, ll))).toVector
-    val Left((gamma, ll)) = out.head
-    (gamma, ll, out.tail.collect { case Right(p) => p }.toMap)
+    val kernel = new EmCore.Kernel(c.alpha,
+      EmCore.Sweeps(Sweeps, randomStartGamma = false, learning = true, Seed), _ => Vocab)
+    val block = EmCore.DocBlock(Iterator(EmCore.DocRecord(1L, c.tokens, c.terms.map(EmCore.key(0, _)),
+      c.cnt.clone(), Array.emptyLongArray, c.gamma.map(_.clone()).orNull)), c.alpha)
+    val beta = EmCore.PackedBeta.of(c.terms.indices.iterator.filter(c.rows(_) != null)
+      .map(j => EmCore.key(0, c.terms(j)) -> c.rows(j).clone()), c.k)
+    val fit = kernel.fitBlock(block, block.gamma, beta)
+    (fit.gamma, fit.ll(0), block.distinct.indices.map(s =>
+      EmCore.termOf(block.distinct(s)) -> fit.logphi.slice(s * c.k, (s + 1) * c.k)).toMap)
   }
 
   private def relClose(a: Double, b: Double, tol: Double): Boolean =

@@ -5,7 +5,6 @@ import graft.lda.{Display, EStep, EStepShuffle, EmCore, LdaModel, Trainer}
 import graft.model.{Doc, PolyDoc, PolyTermEntry}
 import graft.polylda.{PolyDocs, PolyLdaModel, PolyTrainer}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.functions.lit
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -90,7 +89,8 @@ class EmCoreSpec extends SparkSpec {
     val vanilla = EStepShuffle.run(docs, alphaBc, betaDf, numTerms,
       localIterations = 15, seed = 5L)
     val poly = EmCore.estep(polyDocs, PolyDocs, alphaBc,
-      EmCore.Join(betaDf.select(lit(0).as("lang"), $"termId", $"elogbeta"), None),
+      EmCore.slicesFor(polyDocs, PolyDocs, spark.sparkContext.parallelize(beta.toSeq.map {
+        case (w, arr) => EmCore.key(0, w) -> arr }), k),
       PolyTrainer.vocab(Map(0 -> numTerms)), sweeps)
     assertSame(vanilla.toDF(), poly.toDF())
   }
@@ -171,7 +171,7 @@ class EmCoreSpec extends SparkSpec {
     for ((path, ceiling) <- Seq("broadcast" -> (4L << 20), "shuffle" -> 0L);
          (saved, asked) <- Seq(2 -> 3, 3 -> 2)) {
       def refused(resume: String => Unit): Unit = {
-        val dir = java.nio.file.Files.createTempDirectory("graft_resume_k_").toString
+        val dir = TempDirs.create("graft_resume_k_").toString
         val e = intercept[IllegalArgumentException](resume(dir))
         assert(e.getMessage.contains(dir) && e.getMessage.contains(s"K=$saved") &&
           e.getMessage.contains(s"numTopics=$asked"), s"$path: ${e.getMessage}")

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.LogSumExp.logsumexp
-import graft.lda.{EStep, EmCore, MStep, VanillaDocs}
+import graft.lda.{EStep, EmCore, MStep, Trainer, VanillaDocs}
 import graft.model.Doc
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions.spark_partition_id
@@ -104,6 +104,44 @@ class EmReduceSpec extends SparkSpec {
       assert(received.get <= 2 * modelBytes,
         s"task results ${received.get} B for a model of $modelBytes B (phi $phiBytes B)")
     } finally estep.unpersist()
+  }
+
+  test("a sliced iteration sends the driver the normalisers, not the model") {
+    // 4000 terms at K = 50: a 1.6 MB model. Result bytes per iteration,
+    // from the difference of a 3- and a 1-iteration run (the set-up jobs
+    // and the final collect of the model cancel out), of the jobs' result
+    // tasks: the broadcast lookup collects the model each iteration; the
+    // sliced one collects per reducer L·K partial normalisers and K + 1
+    // statistics, whatever the vocabulary
+    val vocab = 4000
+    val input = docs(0 until 320, 100, vocab, 4L).toDS()
+    val nnz = 320L * 100
+    val reducers = EmCore.reducersFor(nnz * k, EmCore.partitionsFor(320, nnz, k, 2))
+    def resultBytes(iterations: Int, ceiling: Long): Long = {
+      shim.drainListenerBus(spark, 10000)
+      val received = new java.util.concurrent.atomic.AtomicLong
+      val listener = new SparkListener {
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (e.taskType == "ResultTask") Option(e.taskMetrics).foreach(m => received.addAndGet(m.resultSize))
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try Trainer.train(input, vocab, Trainer.Config(numTopics = k, maxIterations = iterations,
+        localIterations = 2, convergence = 0.0, betaBroadcastMaxEntries = ceiling))
+      finally {
+        shim.drainListenerBus(spark, 10000)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      received.get
+    }
+    val modelBytes = vocab.toLong * k * 8
+    val broadcast = (resultBytes(3, 4L << 20) - resultBytes(1, 4L << 20)) / 2
+    val sliced = (resultBytes(3, 0L) - resultBytes(1, 0L)) / 2
+    assert(broadcast >= modelBytes, s"broadcast: $broadcast B per iteration for a model of $modelBytes B")
+    // per reducer: L·K normalisers and K + 1 statistics, plus the task's
+    // own metrics (a few kB)
+    val bound = reducers * ((1L + k + 1) * 8 + 8192)
+    assert(sliced <= bound && sliced * 10 < modelBytes,
+      s"sliced: $sliced B per iteration over $reducers reducers (bound $bound B, model $modelBytes B)")
   }
 
   test("partition count: from the E-step work, not the host") {

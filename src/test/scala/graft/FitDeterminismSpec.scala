@@ -40,13 +40,16 @@ class FitDeterminismSpec extends AnyFunSuite {
   /** (LL history, alpha, beta) of one trainer */
   private type Trained = (Seq[Double], Seq[Double], Map[(Int, Int), Seq[Double]])
 
-  private def train(spark: SparkSession): Seq[Trained] = {
+  private def train(spark: SparkSession): Seq[Trained] = trainWith(spark, 4L << 20)
+
+  /** `ceiling`: the trainers' `betaBroadcastMaxEntries` (0: the sliced lookup) */
+  private def trainWith(spark: SparkSession, ceiling: Long): Seq[Trained] = {
     import spark.implicits._
     val v = Trainer.train(corpus.toDS(), vocab, Trainer.Config(numTopics = topics,
-      maxIterations = 3, localIterations = sweeps, convergence = 0.0))
+      maxIterations = 3, localIterations = sweeps, convergence = 0.0, betaBroadcastMaxEntries = ceiling))
     val p = PolyTrainer.train(polyCorpus.toDS(), Map(0 -> vocab, 1 -> vocab),
       PolyTrainer.Config(numTopics = topics, maxIterations = 3, localIterations = sweeps,
-        convergence = 0.0))
+        convergence = 0.0, betaBroadcastMaxEntries = ceiling))
     Seq(
       (v.llHistory, v.alpha.toSeq, v.beta.map { case (w, arr) => (0, w) -> arr.toSeq }.toMap),
       (p.llHistory, p.alpha.toSeq,
@@ -79,5 +82,14 @@ class FitDeterminismSpec extends AnyFunSuite {
     assert(one.head._1.length == 3 && one.forall(_._3.nonEmpty))
     assertSame(one, four, "local[1] vs local[4]")
     assertSame(four, again, "two runs in one session")
+  }
+
+  test("sliced beta lookup: bit-identical on local[1] and local[4], and to the broadcast lookup") {
+    val nnz = corpus.map(_.counts.size.toLong).sum
+    assert(EmCore.reducersFor(nnz * topics, EmCore.partitionsFor(corpus.size, nnz, topics, sweeps)) > 1)
+    val one = inSession(1)(trainWith(_, 0L))
+    val (four, broadcast) = inSession(4)(s => (trainWith(s, 0L), train(s)))
+    assertSame(one, four, "sliced, local[1] vs local[4]")
+    assertSame(four, broadcast, "sliced vs broadcast lookup on local[4]")
   }
 }

@@ -98,7 +98,7 @@ class FusedMStepSpec extends SparkSpec {
         .select(($"termId" % 2).as("lang"), $"topic", $"termId",
           when($"topic" === 2 && $"termId" % 2 === 0, $"logphi" - 800.0)
             .otherwise($"logphi").as("logphi"))
-      val table = EmCore.lambdaToBeta(phi, PolyDocs.keys, Smoothing.floor)
+      val table = EmCore.mstepRows(phi, PolyDocs.keys, Smoothing.floor)
         .select($"lang", $"topic", $"termId", $"elogbeta").as[(Int, Int, Int, Double)].collect()
       val lambda = phi.groupBy($"lang", $"topic", $"termId").agg(logsumexp($"logphi").as("lp"))
         .as[(Int, Int, Int, Double)].collect()

@@ -17,7 +17,7 @@ import graft.sources.{MrldaModelFiles, MrldaSequenceFile}
 class MrldaModelFilesSpec extends SparkSpec {
 
   private def tmpDir(name: String): String = {
-    val d = Files.createTempDirectory(s"mrlda_model_$name").toFile
+    val d = TempDirs.create(s"mrlda_model_$name").toFile
     d.deleteOnExit()
     d.getAbsolutePath
   }

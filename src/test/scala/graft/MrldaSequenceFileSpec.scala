@@ -16,7 +16,7 @@ import graft.sources.MrldaSequenceFile
 class MrldaSequenceFileSpec extends SparkSpec {
 
   private def tmpDir(name: String): String = {
-    val d = Files.createTempDirectory(s"mrlda_$name").toFile
+    val d = TempDirs.create(s"mrlda_$name").toFile
     d.deleteOnExit()
     d.getAbsolutePath
   }

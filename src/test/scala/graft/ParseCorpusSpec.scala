@@ -50,7 +50,7 @@ class ParseCorpusSpec extends SparkSpec {
   }
 
   test("fromRawLines keeps duplicate-title lines as distinct documents") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_raw_")
+    val dir = TempDirs.create("graft_raw_")
     val f = dir.resolve("corpus.txt")
     java.nio.file.Files.writeString(f,
       "Re: hello\tapple banana\nRe: hello\tcherry cherry\nother\tbanana\n")
@@ -155,7 +155,7 @@ class ParseCorpusSpec extends SparkSpec {
     }
 
     test(s"vanilla fromRawLines == polylingual fromRawLines with one language, $name") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_raw_")
+      val dir = TempDirs.create("graft_raw_")
       val f = java.nio.file.Files.writeString(dir.resolve("corpus.txt"),
         corpusRows.map { case (_, title, text) => s"$title\t$text" }.mkString("\n"))
       assertSameParse(ParseCorpus.fromRawLines(spark, f.toString, band),

@@ -794,7 +794,7 @@ class PipelineSpec extends SparkSpec {
     val newBatch = docs.filter($"doc_id" < 10)
       .select(($"doc_id" + 900000).as("doc_id"), $"text")
     val fresh = Dedup.buildMinhashIndex(docs, "doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("graft_mh_idx").toString
+    val path = TempDirs.create("graft_mh_idx").toString
     Dedup.saveMinhashIndex(fresh, path)
     val loaded = Dedup.loadMinhashIndex(spark, path)
     assert(loaded.shingleSize == fresh.shingleSize &&

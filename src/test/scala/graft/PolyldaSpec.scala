@@ -1,6 +1,6 @@
 package graft
 
-import graft.polylda.{PolyParseCorpus, PolyTrainer}
+import graft.polylda.{PolyLdaModel, PolyParseCorpus, PolyTrainer}
 
 /**
  * Polylingual LDA: per-language corpus pipeline + tied-gamma training
@@ -125,27 +125,46 @@ class PolyldaSpec extends SparkSpec {
     }
   }
 
+  /** a beta-<i> snapshot: (lang, topic, termId) → the bits of E[log β] */
+  private def snapshot(dir: String, i: Int): Map[(Int, Int, Int), Long] =
+    graft.lda.LdaCheckpoint.loadBeta(spark, dir, i).select($"lang", $"topic", $"termId", $"elogbeta")
+      .as[(Int, Int, Int, Double)].collect()
+      .map { case (l, t, w, e) => (l, t, w) -> java.lang.Double.doubleToRawLongBits(e) }.toMap
+
+  private def bits(m: PolyLdaModel): Map[(Int, Int), Seq[Long]] = m.beta.flatMap { case (l, tm) =>
+    tm.map { case (w, arr) => (l, w) -> arr.toSeq.map(java.lang.Double.doubleToRawLongBits) } }
+
+  /** Both lookups share one λ fold and one normaliser, so their beta-<i>
+    * snapshots and final models agree bit for bit. */
+  private def assertBitIdentical(broadcastM: PolyLdaModel, broadcastDir: String,
+      slicedM: PolyLdaModel, slicedDir: String, iterations: Int): Unit = {
+    for (i <- 1 to iterations) {
+      val b = snapshot(broadcastDir, i)
+      assert(b.nonEmpty && b == snapshot(slicedDir, i), s"beta-$i")
+    }
+    assert(bits(broadcastM) == bits(slicedM), "final beta")
+  }
+
   test("a document with no language slots trains alike on both beta paths") {
-    // the shuffle path keeps it through the explode_outer sentinel, the
-    // broadcast path as an empty term list. Beta is checked for
-    // finiteness only: the eta-free M-step's E[log β] = ψ(λ) − ψ(Σλ) is
-    // ≈ −1/λ for the tiny λ this corpus leaves some (lang, topic, term)
-    // entries, so the paths' different partition folds can put those
-    // entries far apart in absolute terms
+    // both lookups keep it as an empty term list. The eta-free M-step's
+    // E[log β] = ψ(λ) − ψ(Σλ) is ≈ −1/λ for the tiny λ this corpus leaves
+    // some (lang, topic, term) entries, so a λ fold or normaliser that
+    // differed by an ulp would put those entries far apart in absolute
+    // terms: the lookups share both, and agree bit for bit
     val r = PolyParseCorpus.run(corpus, PolyParseCorpus.Config(numLanguages = 2))
     val numTerms = r.terms.collect().groupBy(_.lang).map { case (l, ts) => l -> ts.length }
     val docs = r.docs.union(Seq(graft.model.PolyDoc(99L, Map.empty, Map.empty, 0L, None)).toDS())
     val base = PolyTrainer.Config(numTopics = 2, maxIterations = 3, localIterations = 15,
       seed = 3L, convergence = 0.0)
     def trainTo(cfg: PolyTrainer.Config) = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_poly_nolang_").toString
+      val dir = TempDirs.create("graft_poly_nolang_").toString
       val m = PolyTrainer.train(docs, numTerms, cfg.copy(checkpointDir = Some(dir)))
       val gamma = graft.lda.LdaCheckpoint.loadGamma(spark, dir, 3)
         .select($"docId", $"gamma").as[(Long, Array[Double])].collect().toMap
-      (m, gamma)
+      (m, gamma, dir)
     }
-    val (broadcastM, broadcastG) = trainTo(base)
-    val (shuffleM, shuffleG) = trainTo(base.copy(betaBroadcastMaxEntries = 0L))
+    val (broadcastM, broadcastG, broadcastDir) = trainTo(base)
+    val (shuffleM, shuffleG, shuffleDir) = trainTo(base.copy(betaBroadcastMaxEntries = 0L))
     assert(broadcastM.llHistory.length == 3 && shuffleM.llHistory.length == 3)
     broadcastM.llHistory.zip(shuffleM.llHistory).foreach { case (a, b) =>
       assert(!a.isNaN && !a.isInfinite && math.abs((a - b) / a) < 1e-8,
@@ -162,12 +181,40 @@ class PolyldaSpec extends SparkSpec {
       tm.foreach { case (w, arr) =>
         assert(arr.forall(v => !v.isNaN && !v.isInfinite && v <= 0), s"beta lang=$l term=$w") }
     })
+    assertBitIdentical(broadcastM, broadcastDir, shuffleM, shuffleDir, 3)
+  }
+
+  test("both beta lookups are bit-identical over several partitions and reducers") {
+    // two languages by term parity, and every seventh document without
+    // its language 1
+    val (k, sweeps, vocab) = (20, 20, 3000)
+    val rng = new scala.util.Random(13L)
+    val docs = (0 until 400).map { d =>
+      val counts = Iterator.continually(1 + rng.nextInt(vocab)).distinct.take(60)
+        .map(_ -> (1 + rng.nextInt(4))).toMap.groupBy(_._1 % 2).filter { case (l, _) => l == 0 || d % 7 != 0 }
+      val tokens = counts.map { case (l, c) => l -> c.valuesIterator.map(_.toLong).sum }
+      graft.model.PolyDoc(d.toLong, counts, tokens, tokens.valuesIterator.sum)
+    }
+    val nnz = docs.map(_.counts.valuesIterator.map(_.size.toLong).sum).sum
+    val parts = graft.lda.EmCore.partitionsFor(docs.size, nnz, k, sweeps)
+    assert(parts > 1 && graft.lda.EmCore.reducersFor(nnz * k, parts) > 1)
+    def trainTo(ceiling: Long) = {
+      val dir = TempDirs.create("graft_poly_lookups_").toString
+      (PolyTrainer.train(docs.toDS(), Map(0 -> vocab, 1 -> vocab), PolyTrainer.Config(numTopics = k,
+        maxIterations = 3, localIterations = sweeps, convergence = 0.0,
+        betaBroadcastMaxEntries = ceiling, checkpointDir = Some(dir))), dir)
+    }
+    val (broadcastM, broadcastDir) = trainTo(4L << 20)
+    val (slicedM, slicedDir) = trainTo(0L)
+    assert(broadcastM.llHistory.map(java.lang.Double.doubleToRawLongBits) ==
+      slicedM.llHistory.map(java.lang.Double.doubleToRawLongBits))
+    assertBitIdentical(broadcastM, broadcastDir, slicedM, slicedDir, 3)
   }
 
   test("polylingual train 2 + resume 2 ≡ train 4 straight") {
     val r = PolyParseCorpus.run(corpus, PolyParseCorpus.Config(numLanguages = 2))
     val numTerms = r.terms.collect().groupBy(_.lang).map { case (l, ts) => l -> ts.length }
-    val dir = java.nio.file.Files.createTempDirectory("graft_poly_ckpt_").toString
+    val dir = TempDirs.create("graft_poly_ckpt_").toString
     val base = PolyTrainer.Config(numTopics = 2, maxIterations = 4, localIterations = 15,
       seed = 3L, convergence = 0.0)
     val straight = PolyTrainer.train(r.docs, numTerms, base)
@@ -187,7 +234,7 @@ class PolyldaSpec extends SparkSpec {
     // beta unpacked via posexplode) and the shuffle-mode resume loader
     val r = PolyParseCorpus.run(corpus, PolyParseCorpus.Config(numLanguages = 2))
     val numTerms = r.terms.collect().groupBy(_.lang).map { case (l, ts) => l -> ts.length }
-    val dir = java.nio.file.Files.createTempDirectory("graft_poly_ckpt_sh_").toString
+    val dir = TempDirs.create("graft_poly_ckpt_sh_").toString
     val base = PolyTrainer.Config(numTopics = 2, maxIterations = 4, localIterations = 15,
       seed = 3L, convergence = 0.0, betaBroadcastMaxEntries = 0L)
     val straight = PolyTrainer.train(r.docs, numTerms, base)

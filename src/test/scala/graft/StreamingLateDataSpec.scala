@@ -31,7 +31,7 @@ class StreamingLateDataSpec extends SparkSpec {
   private def addBatch(srcDir: Path, name: String,
       rows: Seq[(String, Long, String, Double, Timestamp)]): Unit = {
     import spark.implicits._
-    val staging = Files.createTempDirectory("late_stage_")
+    val staging = TempDirs.create("late_stage_")
     rows.toDF("event_id", "user_id", "event_type", "value", "ts")
       .coalesce(1).write.mode("overwrite").parquet(staging.toString)
     val part = Files.list(staging).filter(_.getFileName.toString.endsWith(".parquet"))
@@ -43,11 +43,11 @@ class StreamingLateDataSpec extends SparkSpec {
       batch1: Seq[(String, Long, String, Double, Timestamp)],
       batch2: Seq[(String, Long, String, Double, Timestamp)]): Seq[String] = {
     import spark.implicits._
-    val srcDir = Files.createTempDirectory("late_src_")
+    val srcDir = TempDirs.create("late_src_")
     addBatch(srcDir, "b1", batch1)
     val schema = spark.read.parquet(srcDir.toString).schema
     val name = s"late_replay_${System.nanoTime()}"
-    val sinkDir = Files.createTempDirectory("late_sink_").toString
+    val sinkDir = TempDirs.create("late_sink_").toString
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
     val writer = transform(stream).writeStream.outputMode(outputMode)
@@ -78,7 +78,7 @@ class StreamingLateDataSpec extends SparkSpec {
       ("4", 1L, "purchase", 8.0, ts("11:00")),
       ("5", 2L, "purchase", 0.0, ts("11:05")))
 
-    val srcDir = Files.createTempDirectory("ewma_src_")
+    val srcDir = TempDirs.create("ewma_src_")
     addBatch(srcDir, "b1", batch1.map(r => (r._1, r._2, r._3, r._4, r._5)))
     val schema = spark.read.parquet(srcDir.toString).schema
     val name = s"ewma_replay_${System.nanoTime()}"
@@ -114,7 +114,7 @@ class StreamingLateDataSpec extends SparkSpec {
     val batch1 = (1 to 6).map(i =>
       (i.toString, 1L, "purchase", 10.0 + (i % 2), ts(f"10:0$i")))
     val batch2 = Seq(("7", 1L, "purchase", 1000.0, ts("10:10")))
-    val srcDir = Files.createTempDirectory("zs_src_")
+    val srcDir = TempDirs.create("zs_src_")
     addBatch(srcDir, "b1", batch1)
     val schema = spark.read.parquet(srcDir.toString).schema
     val name = s"zs_replay_${System.nanoTime()}"

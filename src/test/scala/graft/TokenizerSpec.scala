@@ -77,7 +77,7 @@ class TokenizerSpec extends SparkSpec {
 
   test("save/load round-trips the model and id assignment") {
     val model = Tokenizer.trainBpe(paperDf, "text", numMerges = 6)
-    val dir = java.nio.file.Files.createTempDirectory("bpe_model_spec").toString
+    val dir = TempDirs.create("bpe_model_spec").toString
     Tokenizer.saveModel(spark, model, dir)
     val loaded = Tokenizer.loadModel(spark, dir)
     assert(loaded == model)
@@ -199,7 +199,7 @@ class TokenizerSpec extends SparkSpec {
   test("wordpiece vocab save/load round-trips and encodes identically") {
     val docs = paperDf
     val vocab = Tokenizer.trainWordpiece(docs, "text", numMerges = 6)
-    val dir = java.nio.file.Files.createTempDirectory("graft_wp_test").toString
+    val dir = TempDirs.create("graft_wp_test").toString
     Tokenizer.saveWordpiece(spark, vocab, dir)
     val loaded = Tokenizer.loadWordpiece(spark, dir)
     assert(loaded == vocab)

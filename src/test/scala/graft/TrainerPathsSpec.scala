@@ -1,11 +1,13 @@
 package graft
 
 import graft.corpus.ParseCorpus
-import graft.lda.Trainer
+import graft.lda.{EmCore, LdaCheckpoint, Trainer}
+import graft.model.Doc
 
 /**
  * The two Trainer scale paths and persistence:
- *  - shuffle-join E-step ≡ broadcast E-step (same LL trajectory/model);
+ *  - sliced-β E-step ≡ broadcast E-step (same LL trajectory/model; bit for
+ *    bit over a corpus of several partitions and reducers);
  *  - checkpoint + resume ≡ an uninterrupted run (reference `-modelindex`).
  */
 class TrainerPathsSpec extends SparkSpec {
@@ -39,11 +41,56 @@ class TrainerPathsSpec extends SparkSpec {
       arr.zip(shuffleM.beta(w)).foreach { case (a, b) =>
         assert(math.abs(a - b) < 1e-6, s"beta drift for term $w: $a vs $b") }
     }
+    // and bit for bit: both lookups share one λ fold and one normaliser
+    assert(bits(broadcastM.llHistory) == bits(shuffleM.llHistory))
+    broadcastM.beta.foreach { case (w, arr) => assert(bits(arr) == bits(shuffleM.beta(w)), s"beta of term $w") }
+  }
+
+  /** `n` documents of 60 distinct terms each out of `vocab` */
+  private def wide(n: Int, vocab: Int): Seq[Doc] = {
+    val rng = new scala.util.Random(11L)
+    (0 until n).map { d =>
+      val counts = Iterator.continually(1 + rng.nextInt(vocab)).distinct.take(60)
+        .map(_ -> (1 + rng.nextInt(4))).toMap
+      Doc(d.toLong, counts, counts.valuesIterator.map(_.toLong).sum)
+    }
+  }
+
+  private def bits(xs: Seq[Double]): Seq[Long] = xs.map(java.lang.Double.doubleToRawLongBits)
+
+  /** a beta-<i> snapshot: (topic, termId) → the bits of E[log β] */
+  private def snapshot(dir: String, i: Int): Map[(Int, Int), Long] =
+    LdaCheckpoint.loadBeta(spark, dir, i).select($"topic", $"termId", $"elogbeta")
+      .as[(Int, Int, Double)].collect()
+      .map { case (t, w, e) => (t, w) -> java.lang.Double.doubleToRawLongBits(e) }.toMap
+
+  test("both beta lookups are bit-identical over several partitions and reducers") {
+    val (k, sweeps, vocab) = (20, 20, 3000)
+    val docs = wide(400, vocab)
+    val nnz = docs.map(_.counts.size.toLong).sum
+    val parts = EmCore.partitionsFor(docs.size, nnz, k, sweeps)
+    assert(parts > 1 && EmCore.reducersFor(nnz * k, parts) > 1)
+    def trainTo(ceiling: Long) = {
+      val dir = TempDirs.create("graft_lookups_").toString
+      (Trainer.train(docs.toDS(), vocab, Trainer.Config(numTopics = k, maxIterations = 3,
+        localIterations = sweeps, convergence = 0.0, betaBroadcastMaxEntries = ceiling,
+        checkpointDir = Some(dir))), dir)
+    }
+    val (broadcastM, broadcastDir) = trainTo(4L << 20)
+    val (slicedM, slicedDir) = trainTo(0L)
+    assert(bits(broadcastM.llHistory) == bits(slicedM.llHistory))
+    assert(bits(broadcastM.alpha) == bits(slicedM.alpha))
+    for (i <- 1 to 3) {
+      val b = snapshot(broadcastDir, i)
+      assert(b.size == broadcastM.beta.size * k && b == snapshot(slicedDir, i), s"beta-$i")
+    }
+    assert(broadcastM.beta.keySet == slicedM.beta.keySet)
+    broadcastM.beta.foreach { case (w, arr) => assert(bits(arr) == bits(slicedM.beta(w)), s"beta of term $w") }
   }
 
   test("train 3 + resume 2 ≡ train 5 straight (checkpoint round-trip)") {
     val parsed = ParseCorpus.run(corpus)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
+    val dir = TempDirs.create("graft_ckpt_").toString
     val base = Trainer.Config(numTopics = 2, maxIterations = 5, localIterations = 15,
       seed = 42L, convergence = 0.0) // disable early stop so both run all 5
     val straight = Trainer.train(parsed.docs, parsed.stats.numTerms.toInt, base)
@@ -67,7 +114,7 @@ class TrainerPathsSpec extends SparkSpec {
     // unpacked back to (topic, termId, elogbeta) rows via posexplode) and
     // the shuffle-mode resume loader that re-packs it
     val parsed = ParseCorpus.run(corpus)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_sh_").toString
+    val dir = TempDirs.create("graft_ckpt_sh_").toString
     val base = Trainer.Config(numTopics = 2, maxIterations = 5, localIterations = 15,
       seed = 42L, convergence = 0.0, betaBroadcastMaxEntries = 0L)
     val straight = Trainer.train(parsed.docs, parsed.stats.numTerms.toInt, base)
@@ -103,7 +150,7 @@ class TrainerPathsSpec extends SparkSpec {
 
   test("early convergence still writes a final snapshot") {
     val parsed = ParseCorpus.run(corpus)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_early_").toString
+    val dir = TempDirs.create("graft_ckpt_early_").toString
     // convergence=1.0 stops at the first comparable iteration (iteration 2),
     // long before maxIterations
     val m = Trainer.train(parsed.docs, parsed.stats.numTerms.toInt,

@@ -80,7 +80,7 @@ class UnigramSpec extends SparkSpec {
   test("save/load round-trips the model and encode output exactly") {
     val cfg = Unigram.Config(targetVocab = 9, seedSize = 50, maxPieceLen = 4)
     val model = Unigram.train(comboDf, "text", cfg)
-    val dir = java.nio.file.Files.createTempDirectory("unigram_model_spec").toString
+    val dir = TempDirs.create("unigram_model_spec").toString
     Unigram.saveModel(spark, model, dir)
     val loaded = Unigram.loadModel(spark, dir)
     assert(loaded.logProbs == model.logProbs)

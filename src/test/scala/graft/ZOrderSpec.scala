@@ -12,8 +12,8 @@ class ZOrderSpec extends SparkSpec {
   test("z-order tiles prune files on both dimensions; single sort on one") {
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select($"l_partkey", $"l_suppkey")
-    val zdir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
-    val sdir = java.nio.file.Files.createTempDirectory("graft_sorted").toString
+    val zdir = TempDirs.create("graft_zorder").toString
+    val sdir = TempDirs.create("graft_sorted").toString
     ZOrder.zorderWrite(li, "l_partkey", "l_suppkey", zdir, numFiles = 16)
     li.repartitionByRange(16, $"l_partkey").sortWithinPartitions($"l_partkey")
       .write.mode("overwrite").parquet(sdir)

@@ -1,5 +1,7 @@
 package graft.sources
 
+import graft.TempDirs
+
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.nio.file.Files
 
@@ -54,7 +56,7 @@ class MrldaWireFormatPropertySpec extends SparkSpec {
       val c = randomCounts()
       Doc(id, c, c.values.map(_.toLong).sum, randomGamma())
     }
-    val dir = Files.createTempDirectory("mrlda_prop").toString
+    val dir = TempDirs.create("mrlda_prop").toString
     MrldaSequenceFile.writeDocs(docs.toDS().repartition(3), dir, syncIntervalBytes = 128)
 
     for (split <- Seq(Long.MaxValue, 700L, 4096L)) {

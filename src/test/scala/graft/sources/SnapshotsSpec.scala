@@ -1,5 +1,7 @@
 package graft.sources
 
+import graft.TempDirs
+
 import java.nio.file.Files
 
 import graft.SparkSpec
@@ -13,7 +15,7 @@ import org.apache.spark.sql.functions._
 class SnapshotsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshDir() = Files.createTempDirectory("snapspec").toString
+  private def freshDir() = TempDirs.create("snapspec").toString
 
   test("commit/append/overwrite and time travel back to every version") {
     val dir = freshDir()

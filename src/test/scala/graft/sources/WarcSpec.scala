@@ -1,5 +1,7 @@
 package graft.sources
 
+import graft.TempDirs
+
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.GZIPOutputStream
@@ -55,7 +57,7 @@ class WarcSpec extends SparkSpec {
       (3L, "", "web"), (4L, "accenté", "web"))
       .toDF("doc_id", "text", "source")
     for (gz <- Seq(true, false)) {
-      val path = java.nio.file.Files.createTempDirectory("warc_rt").toString
+      val path = TempDirs.create("warc_rt").toString
       Warc.write(Warc.fromDocuments(docs.repartition(2, $"doc_id"),
         "doc_id", "text", "source"), path, gzipPerRecord = gz)
       val back = Warc.read(spark, path)
